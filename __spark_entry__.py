@@ -824,9 +824,9 @@ def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_group_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairs -> groups: connected components (iterative min-label
-    propagation) over the exact n-gram Jaccard pairs, then every doc
-    mapped to its group keeper. Oracle: transitive closure via
+    """Pairs -> groups: connected components (driver union-find at the
+    gate's pair count) over the exact n-gram Jaccard pairs, then every
+    doc mapped to its group keeper. Oracle: transitive closure via
     recursive CTE."""
     from deltalake_poc_spark.pipeline.dedup import (
         dedup_groups, ngram_jaccard_pairs,
@@ -845,15 +845,12 @@ def _dedup_groups_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     without this entry the regime a 100 TB corpus's pair set actually
     uses (the 1000x derivative's edges cross the 1M threshold —
     SCALE.md) would only ever be exercised by local tests. Forcing
-    ``driver_threshold=0`` runs the distributed loop here — since r7
-    that default is alternating large-star/small-star (the public
-    MapReduce CC algorithm; measured at parity with min-label
-    propagation on the real sf100 pair graph and convergent on deep
-    chains where min-label raises, SCALE_RUN_CC.json) — and the
-    oracle — the SAME
-    transitive-closure recursive CTE as dedup_group_assign — pins
-    that the regimes produce the identical assignment (min-label and
-    union-find agreement is pinned by tests/test_pipeline.py and
+    ``driver_threshold=0`` runs the distributed loop here — alternating
+    large-star/small-star (the public MapReduce CC algorithm;
+    convergent on deep chains, SCALE_RUN_CC.json) — and the oracle —
+    the SAME transitive-closure recursive CTE as dedup_group_assign —
+    pins that the regimes produce the identical assignment (star and
+    union-find agreement is also pinned by tests/test_pipeline.py and
     tests/test_soak.py). Reference parity: duplicate-group closure
     semantics per SURVEY §2 dedup suite (no reference counterpart;
     Spark-native design)."""
@@ -1441,21 +1438,19 @@ def _kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kmeans_ivf_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME iterative Lloyd contract as ``kmeans_clusters``, but at
-    k=64 = cluster.TWO_LEVEL_MIN_K — forcing every assignment (both
+    k=64 = cluster.ARROW_MIN_K — forcing every assignment (both
     Lloyd rounds and the final profile) through the large-k production
     path (Arrow-batched vectorized brute force; identical arithmetic
     in identical order, see cluster._assign_arrow). The oracle is the
     plain flat-argmin Lloyd at k=64: hash equality IS the proof that
     the fast path changes nothing — the property that lets SemDeDup
     grow k ∝ n (k≈n/10⁴) without the interpreted-HOF assignment wall
-    measured in SCALE.md (746 s at k=800, sf10). The exact two-level
-    pruned search (the zero-Python JVM alternative) is pinned
-    bit-identical in tests/test_cluster.py."""
-    from deltalake_poc_spark.pipeline.cluster import (TWO_LEVEL_MIN_K,
+    measured in SCALE.md (746 s at k=800, sf10)."""
+    from deltalake_poc_spark.pipeline.cluster import (ARROW_MIN_K,
                                                       kmeans_profile)
 
     return kmeans_profile(load_table(spark, sf_dir, "embeddings"),
-                          k=TWO_LEVEL_MIN_K, iters=_KMEANS_ITERS)
+                          k=ARROW_MIN_K, iters=_KMEANS_ITERS)
 
 
 def _semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3039,7 +3034,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_dedup_prod": _simhash_dedup_prod,   # xxhash64, identity-set oracle
         "winnow_dedup_prod": _winnow_dedup_prod,     # xxhash64, exact-8gram oracle
         "pq_fitted_topk": _pq_fitted_topk,           # fitted PQ, exact-topk oracle
-        "kmeans_ivf_clusters": _kmeans_ivf_clusters, # two-level pruned assignment
+        "kmeans_ivf_clusters": _kmeans_ivf_clusters, # Arrow large-k assignment
         "dsir_select": _dsir_select,                 # DSIR importance selection
         "bm25_search": _bm25_search,                 # Okapi BM25 retrieval
         "dataset_split": _dataset_split,             # deterministic train/val/test
@@ -3694,7 +3689,7 @@ def _pq_batch_oracle() -> str:
 
 # Transitive-closure connected-components oracle, shared by BOTH
 # regimes of the engine's connected_components (driver union-find in
-# dedup_group_assign, forced min-label propagation in
+# dedup_group_assign, forced large-star/small-star in
 # dedup_groups_distributed): the assignment is regime-independent by
 # contract, so both gate queries must hash-match this one SQL.
 def _pca_oracle() -> str:

@@ -44,33 +44,25 @@ partial aggregation — k·dim·cores bytes, not data-sized; the
 within-cluster self-join shuffles once on cluster id (size the
 cluster count so clusters stay ~10³-10⁴ members); duplicate-group
 closure reuses :func:`..dedup.connected_components` (bounded driver
-union-find with a distributed min-label fallback).
+union-find with a distributed large-star/small-star fallback).
 
 Because SemDeDup grows k with the corpus (k ≈ n/10⁴), assignment cost
 dominates once k is large, and the flat HOF argmin pays interpreted
 lambda steps for every one of its k·dim operations per row (measured
 ~250 s per assignment pass at k=800 over 200k vectors, SCALE.md).
-Above ``TWO_LEVEL_MIN_K`` centroids, :func:`with_cluster` therefore
+At ``ARROW_MIN_K`` centroids and above, :func:`with_cluster` therefore
 switches to an Arrow-batched vectorized brute force that performs the
 IDENTICAL arithmetic in the identical order (dim-ascending
 accumulation, first-min ties) at memory bandwidth — bit-identical
 results, so the DuckDB oracle contract below is untouched; the
 centroid matrix is a task-local k·dim float64 array, never
-data-sized. An exact triangle-inequality two-level search (√k coarse
-pivots, broadcast cell structure, conservative strict-with-epsilon
-pruning bound) is also provided as the zero-Python JVM-side
-alternative — equally bit-identical, but measurement shows distance
-concentration defeats its pruning on near-iid embeddings (795.8 of
-800 centroids still evaluated), so it only pays off on corpora with
-real cluster structure. All three modes are interchangeable at any
-point because none of them changes a single output bit.
+data-sized. The two modes are interchangeable at any point because
+neither changes a single output bit.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -79,9 +71,9 @@ from deltalake_poc_spark.exprlit import lit_double_matrix
 QUANT_SCALE = 1 << 20  # float -> exact integer grid; 2^20·2^23 docs
 # of ±1-ish components keeps every sum far inside int64
 
-TWO_LEVEL_MIN_K = 64  # below this the flat k-literal argmin is cheaper
-# than a broadcast join + pivot search (and the oracle-gated queries
-# at k=8 keep their historical plan shape)
+ARROW_MIN_K = 64  # below this the flat k-literal argmin is cheaper
+# than an Arrow round trip (and the oracle-gated queries at k=8 keep
+# their historical plan shape)
 
 
 def quantize_expr(vec_col: Column | str) -> Column:
@@ -132,128 +124,9 @@ def assign_expr(qcol: Column, centroids: list[tuple[list[int], int]]) -> Column:
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
-def _dist2(qcol: Column, c: Column) -> Column:
-    """Squared distance fold — the EXACT expression ``assign_expr``
-    uses per centroid (same operand order, same casts), so two-level
-    and flat assignment produce bit-identical doubles."""
-    return F.aggregate(
-        F.zip_with(qcol, c,
-                   lambda x, y: (x.cast("double") - y)
-                   * (x.cast("double") - y)),
-        F.lit(0.0), lambda acc, t: acc + t)
-
-
-def _coarse_cells(
-        centroids: list[tuple[list[int], int]], m: int | None = None,
-        iters: int = 4) -> list[tuple[list[float], float, list[tuple[int, list[float]]]]]:
-    """Driver-side coarse quantizer over the k centroid means:
-    ~√k pivots via a few numpy Lloyd rounds (k·dim doubles — KB-MB at
-    any corpus size; k=10⁵·dim=64 is 51 MB and a few matmuls).
-
-    Returns [(pivot, radius, [(cid, centroid_mean), ...]), ...] with
-    empty cells dropped. Pivot quality affects only how much the
-    triangle-inequality bound prunes — NEVER the assignment result —
-    so numpy's fp behavior needs no cross-engine determinism. The
-    member centroid means are the same Python ``s / n`` doubles
-    ``_centroid_lit`` embeds, and the radius is inflated by 1e-9
-    relative so fp rounding can only make pruning more conservative."""
-    import numpy as np
-
-    means_py = [[s / n for s in sums] for sums, n in centroids]
-    x = np.asarray(means_py, dtype=np.float64)
-    k = len(centroids)
-    if m is None:
-        m = max(2, math.isqrt(k))
-    m = min(m, k)
-    piv = x[:m].copy()
-
-    def _assign() -> "np.ndarray":
-        d2 = ((x * x).sum(1)[:, None] + (piv * piv).sum(1)[None, :]
-              - 2.0 * (x @ piv.T))
-        return d2.argmin(1)
-
-    for _ in range(iters):
-        a = _assign()
-        for j in range(m):
-            sel = x[a == j]
-            if len(sel):
-                piv[j] = sel.mean(0)
-    a = _assign()
-    cells = []
-    for j in range(m):
-        idx = [int(i) for i in np.nonzero(a == j)[0]]
-        if not idx:
-            continue
-        rad = max(math.sqrt(sum((means_py[i][d] - piv[j][d]) ** 2
-                                for d in range(x.shape[1]))) for i in idx)
-        cells.append((piv[j].tolist(), rad * (1.0 + 1e-9) + 1e-12,
-                      [(i, means_py[i]) for i in idx]))
-    return cells
-
-
-_CELLS_SCHEMA = T.StructType([T.StructField("__cells", T.ArrayType(
-    T.StructType([
-        T.StructField("p", T.ArrayType(T.DoubleType(), False), False),
-        T.StructField("r", T.DoubleType(), False),
-        T.StructField("ms", T.ArrayType(T.StructType([
-            T.StructField("cid", T.IntegerType(), False),
-            T.StructField("c", T.ArrayType(T.DoubleType(), False), False),
-        ]), False), False),
-    ]), False), False)])
-
-
-def _cells_df(spark: SparkSession, cells) -> DataFrame:
-    """The coarse-quantizer structure as ONE broadcastable row — data,
-    not a k·dim-literal expression tree, so analysis/codegen cost
-    stays constant in k (the janino lesson in ``assign_expr``, one
-    level up)."""
-    row = [(p, r, [(cid, c) for cid, c in ms]) for p, r, ms in cells]
-    return spark.createDataFrame([(row,)], _CELLS_SCHEMA)
-
-
-def assign_over_cells(qcol: Column, cells: Column) -> Column:
-    """Exact nearest-centroid id via the two-level pruned search.
-
-    Per row: distances to the ~√k pivots; the nearest pivot's cell is
-    scanned in full to seed the running best; every cell then folds
-    under the triangle-inequality guard lb = max(0, √pd − r)², scanned
-    only when lb·(1−1e-9) ≤ best (strict-greater skip ⇒ equal-bound
-    cells are scanned, preserving the lowest-cid tie rule; the 1e-9
-    slack absorbs sqrt rounding and can only cause extra scans). The
-    pivot-distance array is evaluated ONCE by threading it through a
-    1-element-array transform — referencing a computed array from
-    several sub-expressions would otherwise inline and re-evaluate it
-    (the documented HOF-recompute trap)."""
-    def best_in(ms: Column) -> Column:
-        return F.array_min(F.transform(
-            ms, lambda mem: F.struct(_dist2(qcol, mem["c"]).alias("d"),
-                                     mem["cid"].alias("cid"))))
-
-    pd = F.transform(cells, lambda cell: _dist2(qcol, cell["p"]))
-
-    def inner(pdv: Column) -> Column:
-        j = F.array_position(pdv, F.array_min(pdv)).cast("int")
-        seed = best_in(F.element_at(cells, j)["ms"])
-        zipped = F.zip_with(
-            cells, pdv,
-            lambda cell, d: F.struct(d.alias("pd"), cell["r"].alias("r"),
-                                     cell["ms"].alias("ms")))
-
-        def step(acc: Column, cell: Column) -> Column:
-            g = F.greatest(F.sqrt(cell["pd"]) - cell["r"], F.lit(0.0))
-            return F.when(g * g * F.lit(1.0 - 1e-9) > acc["d"], acc) \
-                    .otherwise(F.least(acc, best_in(cell["ms"])))
-
-        return F.aggregate(zipped, seed, step)
-
-    best = F.element_at(F.transform(F.array(pd), inner), 1)
-    return best["cid"].cast("int")
-
-
 def _assign_arrow(df: DataFrame, centroids: list[tuple[list[int], int]],
                   qname: str = "__q", out: str = "__cl",
-                  exact_order: bool = True,
-                  gemm_dtype: str = "float64") -> DataFrame:
+                  exact_order: bool = True) -> DataFrame:
     """Arrow-batched brute-force assignment — the large-k production
     path. BIT-IDENTICAL to the flat fold: squared-difference terms are
     elementwise IEEE float64 ops accumulated in the SAME dim-ascending
@@ -262,13 +135,10 @@ def _assign_arrow(df: DataFrame, centroids: list[tuple[list[int], int]],
     takes the FIRST minimum = lowest cid, and the quantized int64
     inputs are exactly representable as float64 (|q| ≈ 2²⁰ ≪ 2⁵³).
 
-    Why this beats the JVM paths at large k: the HOF fold interprets
+    Why this beats the JVM path at large k: the HOF fold interprets
     k·dim lambda steps per row (~µs-scale each — measured ~250 s per
-    assignment pass at k=800 over 200k rows), and measured pruning on
-    embedding-style data is nil (795.8 of 800 centroids evaluated —
-    distance concentration defeats the triangle inequality on
-    near-iid vectors; see SCALE.md). The vectorized loop does the
-    same arithmetic at memory bandwidth: the centroid matrix is a
+    assignment pass at k=800 over 200k rows). The vectorized loop does
+    the same arithmetic at memory bandwidth: the centroid matrix is a
     task-local k·dim float64 array (50 MB even at k=10⁵), and row
     blocks are sized so the rows×k accumulator stays ≤ ~256 MB.
 
@@ -284,14 +154,7 @@ def _assign_arrow(df: DataFrame, centroids: list[tuple[list[int], int]],
     (kmeans_clusters / kmeans_ivf_clusters pin the fold order), fine
     for the sketch regime whose centroids are themselves approximate
     (minibatch fit). Exactness of the ranking is otherwise the same
-    brute force — every centroid is still evaluated.
-
-    ``gemm_dtype='float32'`` (gemm mode only) runs the expansion in
-    single precision: sgemm halves memory traffic and doubles the
-    FLOP rate over dgemm. The additional argmin flips are bounded by
-    the same near-tie argument with a wider (~1e-7 relative) tie
-    window — measured agreement vs the fp64 gemm pass is recorded in
-    SCALE_RUN_MB_ASSIGN_FP32.json before this is used anywhere."""
+    brute force — every centroid is still evaluated."""
     import numpy as np
 
     means = np.asarray([[s / n for s in sums] for sums, n in centroids],
@@ -300,10 +163,8 @@ def _assign_arrow(df: DataFrame, centroids: list[tuple[list[int], int]],
     max_rows = max(1, (32 << 20) // k)  # rows×k accumulator ≤ 256 MB
     out_schema = T.StructType(list(df.schema.fields)
                               + [T.StructField(out, T.IntegerType(), False)])
-    gdt = np.dtype(gemm_dtype)
-    means_t = means.T.astype(gdt).copy()          # dim×k, gemm layout
-    mg = means.astype(gdt)
-    c_sq = (mg * mg).sum(axis=1, dtype=gdt)       # ||C||² per centroid
+    means_t = means.T.copy()                      # dim×k, gemm layout
+    c_sq = (means * means).sum(axis=1)            # ||C||² per centroid
 
     def fn(batches):
         for pdf in batches:
@@ -311,8 +172,7 @@ def _assign_arrow(df: DataFrame, centroids: list[tuple[list[int], int]],
             if n == 0:
                 yield pdf.assign(**{out: np.empty(0, dtype=np.int32)})
                 continue
-            q = np.stack(pdf[qname].to_numpy()).astype(
-                np.float64 if exact_order else gdt)
+            q = np.stack(pdf[qname].to_numpy()).astype(np.float64)
             cls = np.empty(n, dtype=np.int32)
             for lo in range(0, n, max_rows):
                 hi = min(lo + max_rows, n)
@@ -324,7 +184,7 @@ def _assign_arrow(df: DataFrame, centroids: list[tuple[list[int], int]],
                 else:
                     # ||q||² is constant per row — argmin ignores it
                     acc = q[lo:hi] @ means_t
-                    acc *= gdt.type(-2.0)
+                    acc *= -2.0
                     acc += c_sq[None, :]
                 cls[lo:hi] = acc.argmin(1)
             yield pdf.assign(**{out: cls})
@@ -332,56 +192,10 @@ def _assign_arrow(df: DataFrame, centroids: list[tuple[list[int], int]],
     return df.mapInPandas(fn, schema=out_schema)
 
 
-def coarse_pruning_stats(centroids: list[tuple[list[int], int]],
-                         sample: list[list[float]],
-                         m: int | None = None) -> dict:
-    """The go/no-go check for ``mode='twolevel'``: simulate the pruned
-    search driver-side over a SAMPLE of (unquantized) vectors and
-    report how many centroid distances the triangle-inequality bound
-    would actually evaluate per row. On corpora with real cluster
-    structure this is ≪ k and twolevel pays off as the zero-Python
-    path; on near-iid embeddings distance concentration leaves it ≈ k
-    (measured 795.8 of 800 on the SCALE.md derivative) and the arrow
-    mode is the right choice. Returns {"k", "m", "avg_evals",
-    "avg_cells", "frac_of_flat"}."""
-    import numpy as np
-
-    cells = _coarse_cells(centroids, m=m)
-    x = np.asarray(sample, dtype=np.float64) * QUANT_SCALE
-    k = len(centroids)
-    evals = cellv = 0
-    pivots = np.asarray([c[0] for c in cells])
-    rads = np.asarray([c[1] for c in cells])
-    members = [np.asarray([mean for _, mean in ms]) for _, _, ms in cells]
-    pd_ = ((x * x).sum(1)[:, None] + (pivots * pivots).sum(1)[None, :]
-           - 2.0 * (x @ pivots.T))
-    spd = np.sqrt(np.maximum(pd_, 0.0))
-    for i in range(len(x)):
-        j0 = int(pd_[i].argmin())
-        best = float(((x[i] - members[j0]) ** 2).sum(1).min())
-        evals += len(members[j0])
-        cellv += 1
-        for j in range(len(cells)):
-            if j == j0:
-                continue
-            lb = max(spd[i, j] - rads[j], 0.0) ** 2
-            if lb * (1.0 - 1e-9) > best:
-                continue
-            d = float(((x[i] - members[j]) ** 2).sum(1).min())
-            best = min(best, d)
-            evals += len(members[j])
-            cellv += 1
-    n = max(1, len(x))
-    return {"k": k, "m": len(cells),
-            "avg_evals": round(evals / n, 1),
-            "avg_cells": round(cellv / n, 1),
-            "frac_of_flat": round(evals / (n * k), 4)}
-
-
 def with_cluster(df: DataFrame, centroids: list[tuple[list[int], int]],
                  qname: str = "__q", out: str = "__cl",
                  mode: str = "auto") -> DataFrame:
-    """``df`` + nearest-centroid column. Every mode produces
+    """``df`` + nearest-centroid column. ``flat`` and ``arrow`` produce
     bit-identical values (same fold order, same first-min tie rule) —
     the mode only picks the execution strategy:
 
@@ -389,24 +203,16 @@ def with_cluster(df: DataFrame, centroids: list[tuple[list[int], int]],
       the historical plan shape the k=8 oracle gates pin;
     - ``arrow``: Arrow-batched vectorized brute force — the large-k
       production path (see :func:`_assign_arrow`);
-    - ``twolevel``: the exact pruned pivot search — the zero-Python
-      JVM-side alternative; wins only when the corpus is genuinely
-      clustered so the triangle inequality actually prunes (measured:
-      nil pruning on iid-style embeddings, SCALE.md);
-    - ``auto``: flat below ``TWO_LEVEL_MIN_K``, arrow at or above.
+    - ``auto``: flat below ``ARROW_MIN_K``, arrow at or above.
 
     Exception to the bit-identical rule: ``gemm`` — the arrow path
     with BLAS distance expansion (see :func:`_assign_arrow`). Same
     brute-force ranking but IEEE-reassociated sums, so assignments
     can differ on reassociation-scale near-ties; reserved for the
     sketch regime (minibatch-fitted centroids) where no bit-exact
-    oracle exists and the O(n·k·dim) pass is the dominant cost.
-    ``gemm32`` is the same expansion through sgemm (halved bandwidth,
-    doubled FLOP rate; wider ~1e-7-relative tie window — measured
-    agreement in SCALE_RUN_MB_ASSIGN_FP32.json)."""
-    k = len(centroids)
+    oracle exists and the O(n·k·dim) pass is the dominant cost."""
     if mode == "auto":
-        mode = "flat" if k < TWO_LEVEL_MIN_K else "arrow"
+        mode = "flat" if len(centroids) < ARROW_MIN_K else "arrow"
     if mode == "flat":
         return df.withColumn(out, assign_expr(F.col(qname), centroids))
     if mode == "arrow":
@@ -414,16 +220,7 @@ def with_cluster(df: DataFrame, centroids: list[tuple[list[int], int]],
     if mode == "gemm":
         return _assign_arrow(df, centroids, qname=qname, out=out,
                              exact_order=False)
-    if mode == "gemm32":
-        return _assign_arrow(df, centroids, qname=qname, out=out,
-                             exact_order=False, gemm_dtype="float32")
-    if mode != "twolevel":
-        raise ValueError(f"unknown assignment mode {mode!r}")
-    cdf = _cells_df(df.sparkSession, _coarse_cells(centroids))
-    return (df.crossJoin(F.broadcast(cdf))
-            .withColumn(out, assign_over_cells(F.col(qname),
-                                               F.col("__cells")))
-            .drop("__cells"))
+    raise ValueError(f"unknown assignment mode {mode!r}")
 
 
 def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 2,
@@ -574,8 +371,8 @@ def kmeans_assign(emb: DataFrame, centroids: list[tuple[list[int], int]],
                   id_col: str = "vec_id",
                   vec_col: str = "embedding",
                   mode: str = "auto") -> DataFrame:
-    """(id, cluster) for every vector — one row-local projection (plus
-    a single broadcast row when k triggers the two-level path).
+    """(id, cluster) for every vector — one row-local projection
+    (Arrow-batched at or above ``ARROW_MIN_K`` centroids).
     ``mode`` passes through to :func:`with_cluster` (``gemm`` for the
     large-k sketch regime)."""
     q = emb.select(F.col(id_col), quantize_expr(vec_col).alias("__q"))

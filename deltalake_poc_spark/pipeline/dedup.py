@@ -658,7 +658,6 @@ LAST_CC_INFO: dict = {}
 
 def connected_components(pairs: DataFrame, max_iterations: int = 20,
                          driver_threshold: int = 1_000_000,
-                         distributed_algorithm: str = "star",
                          ) -> DataFrame:
     """Collapse near-dup PAIRS into duplicate GROUPS: connected
     components; (doc_id, group_id) where group_id = min doc_id of the
@@ -673,32 +672,16 @@ def connected_components(pairs: DataFrame, max_iterations: int = 20,
       1M-edge ceiling (vs ~100 bytes/edge as Row objects), far inside
       the 8 GB driver budget; the union-find dict peaks at
       O(distinct members) boxed ints, bounded by 2x edges.
-    - larger: ``distributed_algorithm`` picks the iteration shape —
-      "star" (default): alternating large-star/small-star
-      (_alternating_star) — O(log n) rounds with path doubling AND a
-      shrinking edge set. Measured at the sf100 tier (SCALE.md /
-      SCALE_RUN_CC.json): parity with min-label on the real shallow
-      near-dup pair graph (5.9 vs 6.2 s warm) and the only
-      distributed regime that converges on deep-chain shapes
-      (diameter >> max_iterations) — the worst-case guarantee costs
-      nothing on the common case.
-      "minlabel": min-label propagation — each round one join + one
-      min-aggregation over the STATIC edge set; O(diameter) rounds.
-      Kept as the comparison regime; raises loudly if the diameter
-      exceeds max_iterations (an unconverged label frame is silently
-      wrong).
+    - larger: alternating large-star/small-star (_alternating_star) —
+      O(log n) rounds with path doubling AND a shrinking edge set.
+      Measured at the sf100 tier (SCALE.md / SCALE_RUN_CC.json): it
+      converges on deep-chain shapes (diameter >> max_iterations) at
+      no cost on the real shallow near-dup pair graph.
     Both must produce the identical assignment (pinned by
     tests/test_pipeline.py and the dedup_groups_distributed gate).
 
     Input: columns doc_a, doc_b (as produced by the *_pairs functions).
     """
-    if distributed_algorithm not in ("star", "minlabel"):
-        # an unrecognized value must not silently fall through to the
-        # min-label path — a caller who typo'd the deep-chain-safe
-        # regime would hit its non-convergence ValueError instead
-        raise ValueError(
-            f"distributed_algorithm must be 'star' or 'minlabel', "
-            f"got {distributed_algorithm!r}")
     spark = pairs.sparkSession
     pairs = pairs.persist()  # edge-count probe + collect/iteration reuse
     # Full count, not limit(threshold+1).count(): a limited count can
@@ -739,90 +722,19 @@ def connected_components(pairs: DataFrame, max_iterations: int = 20,
         # a local relation and plans SortMergeJoins in every consumer
         # (dedup_groups / canonical_selection / semantic_dedup join it
         # against the docs), shuffling the corpus side by doc_id just
-        # to attach group ids. The distributed regimes return unhinted
-        # frames — their components can be corpus-sized. The hint is
-        # capped INDEPENDENTLY of the caller-tunable driver_threshold
-        # (a forced broadcast bypasses the planner's size check, so a
-        # raised threshold must degrade to a planner-chosen join, not
-        # a mandatory executor broadcast): 8M rows ~= 128 MB built.
+        # to attach group ids. The distributed regime returns an
+        # unhinted frame — its components can be corpus-sized. The
+        # hint is capped INDEPENDENTLY of the caller-tunable
+        # driver_threshold (a forced broadcast bypasses the planner's
+        # size check, so a raised threshold must degrade to a
+        # planner-chosen join, not a mandatory executor broadcast):
+        # 8M rows ~= 128 MB built.
         out = spark.createDataFrame(data, "doc_id long, group_id long")
         return F.broadcast(out) if len(data) <= 8_000_000 else out
-    if distributed_algorithm == "star":
-        try:
-            return _alternating_star(pairs, max_iterations, n_edges)
-        finally:
-            pairs.unpersist()
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    pairs.unpersist()
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("group_id", F.col("doc_id"))
-        .persist()
-    )
     try:
-        rounds = 0
-        changed = 1
-        for _ in range(max_iterations):
-            rounds += 1
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.doc_id)
-                .groupBy("src")
-                .agg(F.min("group_id").alias("nbr_min"))
-            )
-            # localCheckpoint, not persist: persist caches DATA but the
-            # LOGICAL plan still nests one round deeper each iteration
-            # — Catalyst re-optimizes the whole chain every round
-            # (O(rounds²) planning) and task binaries carry the full
-            # serialized plan (measured 1.5 -> 5.7 MiB by round ~15).
-            # Checkpointing truncates lineage to the materialized RDD.
-            # convergence count rides the checkpoint's materialize job
-            # via observe() (2 jobs/round -> 1, same as the star loop)
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            updated = (
-                labels.join(neighbor_min,
-                            labels.doc_id == neighbor_min.src, "left")
-                .select(
-                    "doc_id",
-                    F.least(F.col("group_id"),
-                            F.coalesce(F.col("nbr_min"), F.col("group_id")))
-                    .alias("group_id"),
-                    (F.col("nbr_min") < F.col("group_id")).alias("__changed"),
-                )
-                .observe(obs, F.coalesce(
-                    F.sum(F.when(F.col("__changed"), 1)),
-                    F.lit(0)).alias("nc"))
-                .localCheckpoint()
-            )
-            changed = int(obs.get["nc"])
-            old = labels
-            labels = updated.drop("__changed")
-            old.unpersist()
-            if changed == 0:
-                break
-        if changed != 0:
-            # an unconverged label frame is silently WRONG (nodes still
-            # carry non-minimal labels) — deep components (diameter >
-            # max_iterations) must fail loudly; the star algorithm is
-            # the regime built for those shapes (O(log n) rounds)
-            raise ValueError(
-                f"min-label propagation did not converge in "
-                f"{max_iterations} rounds (component diameter too "
-                f"large) — raise max_iterations or use "
-                f"distributed_algorithm='star'")
-        LAST_CC_INFO.update(regime="minlabel", rounds=rounds,
-                            n_edges=n_edges)
-        return labels
+        return _alternating_star(pairs, max_iterations, n_edges)
     finally:
-        edges.unpersist()
+        pairs.unpersist()
 
 
 def _alternating_star(pairs: DataFrame, max_iterations: int,
@@ -923,9 +835,10 @@ def dedup_groups(docs: DataFrame, pairs: DataFrame,
     its group keeper; docs in no pair keep themselves.
 
     ``driver_threshold`` passes through to
-    :func:`connected_components`; 0 forces the distributed min-label
-    regime regardless of edge count (the regime a 100 TB corpus's
-    pair set lands in), which must produce the identical assignment.
+    :func:`connected_components`; 0 forces the distributed
+    large-star/small-star regime regardless of edge count (the regime
+    a 100 TB corpus's pair set lands in), which must produce the
+    identical assignment.
     """
     comp = connected_components(pairs, driver_threshold=driver_threshold)
     return (
@@ -952,9 +865,9 @@ def canonical_selection(docs: DataFrame, pairs: DataFrame,
     max over (z, -doc_id) — one map-side-combinable aggregate, no
     per-group sort).
 
-    Scale shape: components come from the bounded union-find /
-    min-label propagation in :func:`connected_components`; the argmax
-    is one groupBy(group) over slim (group, z, doc_id) rows.
+    Scale shape: components come from the bounded union-find or the
+    distributed large-star/small-star in :func:`connected_components`;
+    the argmax is one groupBy(group) over slim (group, z, doc_id) rows.
 
     Returns one row per document: (doc_id, group_id, keep_doc_id,
     is_kept, n_members).

@@ -319,8 +319,8 @@ def leakage_safe_split(docs: DataFrame, pairs: DataFrame,
 
     Scale shape: the pair set and component assignment are the same
     machinery the dedup operators already run at corpus scale
-    (bounded driver union-find / distributed min-label); the split
-    itself is one hash on the keeper column — row-local.
+    (bounded driver union-find / distributed large-star/small-star);
+    the split itself is one hash on the keeper column — row-local.
 
     Returns (id, keep_doc_id, split)."""
     from .dedup import dedup_groups

@@ -67,7 +67,6 @@ class MergeBuilder:
         self.keys: list[str] = [on] if isinstance(on, str) else list(on)
         if not self.keys:
             raise ValueError("merge needs at least one key column")
-        self.key = self.keys[0]  # back-compat for single-key callers
         self._update_all = False
         self._update_cond: Column | None = None
         self._delete = False
@@ -244,9 +243,8 @@ class MergeBuilder:
         # partitioning (cached plans skip AQE output coalescing unless
         # canChangeCachedPlanOutputPartitioning is on), which turned a
         # 172-row merge output into 32 near-empty files
-        cache_classified = t.cdf_enabled(snap)
-        obs = None
-        if cache_classified:
+        cdf = t.cdf_enabled(snap)
+        if cdf:
             classified = classified.persist()
         else:
             from pyspark.sql import Observation
@@ -260,7 +258,7 @@ class MergeBuilder:
             # write + materialize) leaks one ExecutionListenerBus per
             # merge on the listener bus — unbounded growth at one
             # merge per micro-batch. On the cached path the counts
-            # come from a cheap agg over the filled cache instead.
+            # ride the change-file write instead (below).
             obs = Observation()
             classified = classified.observe(
                 obs,
@@ -288,27 +286,23 @@ class MergeBuilder:
             result = enforce(result, snap.properties, schema)
 
             staged_changes = None
-            ch_obs = None
-            if t.cdf_enabled(snap):
-                changes = self._change_rows(classified, schema, aligned, t_cols)
-                if changes is not None:
-                    # U/I/D ride the change-file write via observe()
-                    # (the write is the changes frame's only action);
-                    # C falls out of the materialize's numOutputRows
-                    # below — the historical separate groupBy-agg job
-                    # over the cache disappears
-                    from pyspark.sql import Observation
+            if cdf:
+                # U/I/D ride the change-file write via observe() (the
+                # write is the changes frame's only action); C falls
+                # out of the materialize's numOutputRows below
+                from pyspark.sql import Observation
 
-                    ch_obs = Observation()
-                    changes = changes.observe(
-                        ch_obs,
-                        *[F.coalesce(
-                            F.sum(F.when(F.col("_change_type") == ct, 1)),
-                            F.lit(0)).alias(a)
-                          for a, ct in (("U", "update_preimage"),
-                                        ("I", "insert"),
-                                        ("D", "delete"))])
-                    staged_changes = t._stage_changes(changes)
+                ch_obs = Observation()
+                changes = self._change_rows(classified, schema, aligned,
+                                            t_cols).observe(
+                    ch_obs,
+                    *[F.coalesce(
+                        F.sum(F.when(F.col("_change_type") == ct, 1)),
+                        F.lit(0)).alias(a)
+                      for a, ct in (("U", "update_preimage"),
+                                    ("I", "insert"),
+                                    ("D", "delete"))])
+                staged_changes = t._stage_changes(changes)
 
             entries = t._materialize(
                 result, stats_cols=None,
@@ -316,23 +310,15 @@ class MergeBuilder:
                 mapping=({f.name: t._physical(f) for f in schema.fields}
                          if evolved_json else None))
             n_out = sum(e.num_records for e in entries)
-            if obs is not None:
-                # single-action path: the materialize streamed every
-                # row through the observe node exactly once
-                counts = obs.get
-            elif ch_obs is not None:
-                # cached CDF path: the change write counted U/I/D; the
-                # materialized row count C+U+I closes the system
+            if cdf:
+                # the change write counted U/I/D; the materialized row
+                # count C+U+I closes the system
                 counts = dict(ch_obs.get)
                 counts["C"] = n_out - counts["U"] - counts["I"]
             else:
-                # cached path without change rows: one tiny agg job
-                # (cache scan + partial count), no join recompute
-                counts = {
-                    r["__action"]: r["cnt"]
-                    for r in classified.groupBy("__action")
-                    .agg(F.count(F.lit(1)).alias("cnt")).collect()
-                }
+                # single-action path: the materialize streamed every
+                # row through the observe node exactly once
+                counts = obs.get
             commit = Commit(
                 version=snap.version + 1,
                 timestamp=t.log.monotonic_now_ms(),
@@ -362,7 +348,7 @@ class MergeBuilder:
                 commit, snap,
                 cleanup_on_fail=(staged_changes,) if staged_changes else ())
         finally:
-            if cache_classified:
+            if cdf:
                 classified.unpersist()
 
     def _finish_dv(self, snap, schema, classified, aligned, t_cols,
@@ -399,10 +385,8 @@ class MergeBuilder:
                 snap.properties, schema)
             staged_changes = None
             if t.cdf_enabled(snap):
-                changes = self._change_rows(classified, schema,
-                                            aligned, t_cols)
-                if changes is not None:
-                    staged_changes = t._stage_changes(changes)
+                staged_changes = t._stage_changes(self._change_rows(
+                    classified, schema, aligned, t_cols))
             dv_rel, dv_files, n_total = None, [], 0
             if n_upd + n_del > 0:
                 dv_matches = classified.filter(

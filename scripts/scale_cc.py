@@ -8,15 +8,16 @@ CC step to grade the iteration algorithms on their own:
 1. REAL pairs: ngram_jaccard_pairs over the sf100 derivative (the
    2.56M-edge set that crossed the distributed threshold), written
    once to parquet, then each regime timed on the same file —
-   min-label propagation vs alternating large-star/small-star vs the
-   driver union-find reference (forced past its 1M ceiling for the
-   comparison; assignment checksums must agree three ways).
-2. ADVERSARIAL shape: deep chain components (where min-label's
-   O(diameter) rounds are the failure mode the star algorithm
-   exists for) — 2,000 chains x 2,500 nodes = 5M nodes / ~5M edges,
-   diameter 2,500. min-label at its default 20 rounds now RAISES
-   (unconverged labels were silently wrong before r7); the star
-   algorithm converges in O(log n) rounds.
+   alternating large-star/small-star vs the driver union-find
+   reference (forced past its 1M ceiling for the comparison;
+   assignment checksums must agree).
+2. ADVERSARIAL shape: deep chain components (where O(diameter)
+   label propagation fails and the star algorithm converges in
+   O(log n) rounds) — 2,000 chains x 2,500 nodes = 5M nodes / ~5M
+   edges, diameter 2,500.
+
+The committed SCALE_RUN_CC.json also carries the min-label legs of
+the run that retired that regime.
 
 Emits one JSON line per (graph, regime) with wall, rounds, label
 checksum; summary JSON to SPARK_GRAFT_SCALE_JSON.
@@ -99,12 +100,9 @@ def main() -> None:
 
     run("sf100_real", real, "union-find",
         driver_threshold=1 << 40)
-    run("sf100_real", real, "minlabel",
-        driver_threshold=0, distributed_algorithm="minlabel")
-    run("sf100_real", real, "star",
-        driver_threshold=0, distributed_algorithm="star")
+    run("sf100_real", real, "star", driver_threshold=0)
 
-    # ---- graph 2: deep chains (adversarial for min-label) ------------
+    # ---- graph 2: deep chains (adversarial for label propagation) ----
     if SKIP_CHAINS:
         with open(OUT_JSON, "w") as f:
             json.dump({"edges_real": n_real, "results": results}, f,
@@ -116,11 +114,8 @@ def main() -> None:
              .select(F.col("id").alias("doc_a"),
                      (F.col("id") + 1).alias("doc_b"))
              .filter((F.col("id") + 1) % chain_len != 0))
-    run("chains_5M", chain, "star",
-        driver_threshold=0, distributed_algorithm="star",
+    run("chains_5M", chain, "star", driver_threshold=0,
         max_iterations=40)
-    run("chains_5M", chain, "minlabel_default20",
-        driver_threshold=0, distributed_algorithm="minlabel")
     run("chains_5M", chain, "union-find",
         driver_threshold=1 << 40)
 

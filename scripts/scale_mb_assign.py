@@ -3,15 +3,16 @@
 dominant term of the k∝n sketch regime — the single O(n·k·dim)
 assignment pass (1,112 s at 2M x k=8000).
 
-Three measurements on the fitted sf100 minibatch centroids:
-1. cluster.coarse_pruning_stats — the r6 two-level diagnostic, re-run
-   as the verdict ordered: minibatch centroids over this corpus may
-   (or may not) give the triangle inequality something to prune.
-2. The 'gemm' assignment pass (BLAS expansion, same brute force) vs
+Two measurements on the fitted sf100 minibatch centroids:
+1. The 'gemm' assignment pass (BLAS expansion, same brute force) vs
    the exact-order 'arrow' pass, both full-corpus, same session.
-3. Agreement between the two on a deterministic 200k-row slice (the
+2. Agreement between the two on a deterministic 200k-row slice (the
    gemm mode's reassociation can only flip reassociation-scale
    near-ties; expected 0 disagreements).
+
+The committed SCALE_RUN_MB_ASSIGN.json also carries the retired
+two-level pruning diagnostic ("pruning_diag") from the run that
+produced it.
 
 Writes SCALE_RUN_MB_ASSIGN.json.
 """
@@ -49,16 +50,7 @@ def main() -> None:
     res["minibatch_fit_sec"] = round(time.time() - t0, 1)
     print(json.dumps({"stage": "fit", **res}), flush=True)
 
-    # 1. pruning diagnostic over a deterministic 500-vector sample
-    sample = [list(r["embedding"]) for r in
-              emb.orderBy("vec_id").limit(500).collect()]
-    t0 = time.time()
-    diag = C.coarse_pruning_stats(cents, sample)
-    res["pruning_diag"] = diag
-    res["pruning_diag_sec"] = round(time.time() - t0, 1)
-    print(json.dumps({"stage": "diag", "diag": diag}), flush=True)
-
-    # 2. full-corpus assignment passes (count() forces end-to-end)
+    # 1. full-corpus assignment passes (count() forces end-to-end)
     for mode in ("gemm", "arrow"):
         t0 = time.time()
         sizes = (C.kmeans_assign(emb, cents, mode=mode)
@@ -70,7 +62,7 @@ def main() -> None:
                           "sec": res[f"assign_{mode}_sec"],
                           "used": used}), flush=True)
 
-    # 3. agreement on a deterministic 200k slice
+    # 2. agreement on a deterministic 200k slice
     sl = emb.filter(F.col("vec_id") % 10 == 3)
     a = C.kmeans_assign(sl, cents, mode="arrow") \
         .withColumnRenamed("cluster", "a")

@@ -131,96 +131,32 @@ def test_hard_negatives_contract(spark, emb):
 
 
 def test_all_assignment_modes_bit_identical(spark, emb):
-    """flat / arrow / twolevel must agree on EVERY vector: identical
-    fold order and tie rule make them interchangeable, which is what
-    keeps the DuckDB oracle valid above the auto threshold."""
-    cents = C.kmeans_fit(emb, k=C.TWO_LEVEL_MIN_K, iters=2)
-    assert len(cents) == C.TWO_LEVEL_MIN_K
+    """flat / arrow must agree on EVERY vector: identical fold order
+    and tie rule make them interchangeable, which is what keeps the
+    DuckDB oracle valid above the auto threshold."""
+    cents = C.kmeans_fit(emb, k=C.ARROW_MIN_K, iters=2)
+    assert len(cents) == C.ARROW_MIN_K
     q = emb.select("vec_id", C.quantize_expr("embedding").alias("__q"))
     cols = {}
-    for mode in ("flat", "arrow", "twolevel"):
+    for mode in ("flat", "arrow"):
         cols[mode] = (C.with_cluster(q, cents, mode=mode)
                       .select("vec_id", F.col("__cl").alias(mode)))
-    j = cols["flat"].join(cols["arrow"], "vec_id") \
-                    .join(cols["twolevel"], "vec_id")
+    j = cols["flat"].join(cols["arrow"], "vec_id")
     assert j.count() == emb.count()
-    assert j.filter((F.col("flat") != F.col("arrow"))
-                    | (F.col("flat") != F.col("twolevel"))).count() == 0
+    assert j.filter(F.col("flat") != F.col("arrow")).count() == 0
 
 
 def test_auto_fit_matches_flat_fit(spark, emb):
     """Lloyd iterations routed through the auto (arrow) path converge
     to bit-identical centroids (exact int64 sums + identical argmin)."""
-    cents_auto = C.kmeans_fit(emb, k=C.TWO_LEVEL_MIN_K, iters=2)
-    orig = C.TWO_LEVEL_MIN_K
-    C.TWO_LEVEL_MIN_K = 10 ** 9  # force the flat literal path
+    cents_auto = C.kmeans_fit(emb, k=C.ARROW_MIN_K, iters=2)
+    orig = C.ARROW_MIN_K
+    C.ARROW_MIN_K = 10 ** 9  # force the flat literal path
     try:
         cents_flat = C.kmeans_fit(emb, k=orig, iters=2)
     finally:
-        C.TWO_LEVEL_MIN_K = orig
+        C.ARROW_MIN_K = orig
     assert cents_auto == cents_flat
-
-
-def test_two_level_plan_is_broadcast_not_literal(spark, emb):
-    """In twolevel mode the centroid set must travel as ONE broadcast
-    row, not a k·dim literal tree: the plan carries a broadcast join,
-    NO per-centroid literal arrays, and NO Python stage (it is the
-    zero-Python JVM path; constant plan size in k is the janino
-    lesson one level up)."""
-    cents = C.kmeans_fit(emb, k=C.TWO_LEVEL_MIN_K, iters=2)
-    q = emb.select("vec_id", C.quantize_expr("embedding").alias("__q"))
-    out = C.with_cluster(q, cents, mode="twolevel")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
-    # the flat path would embed ~k*dim literal doubles; the two-level
-    # plan string must stay small
-    assert len(plan) < 200_000
-
-
-def test_coarse_cells_partition_every_centroid(spark):
-    """Every centroid lands in exactly one cell, radii cover members."""
-    import random
-
-    rnd = random.Random(7)
-    cents = [([int(rnd.uniform(-1, 1) * C.QUANT_SCALE)
-               for _ in range(8)], 1) for _ in range(100)]
-    cells = C._coarse_cells(cents)
-    seen = sorted(cid for _, _, ms in cells for cid, _ in ms)
-    assert seen == list(range(100))
-    for pivot, rad, ms in cells:
-        for _, mean in ms:
-            d = sum((a - b) ** 2 for a, b in zip(mean, pivot)) ** 0.5
-            assert d <= rad
-
-
-def test_coarse_pruning_stats_go_no_go(spark):
-    """coarse_pruning_stats is the documented go/no-go check for the
-    twolevel mode: on data with REAL cluster structure the triangle
-    inequality prunes most centroid evaluations; on iid-style data it
-    prunes nearly nothing (the SCALE.md measurement) — the diagnostic
-    must expose that difference so the caller picks arrow instead."""
-    import random
-
-    rnd = random.Random(11)
-    dim, k = 16, 64
-    # clustered world: 64 well-separated centers, queries near centers
-    centers = [[rnd.uniform(-1, 1) * 10 for _ in range(dim)]
-               for _ in range(k)]
-    cents = [([int(v * C.QUANT_SCALE) for v in c], 1) for c in centers]
-    sample = [[v / 1.0 + rnd.gauss(0, 0.01) for v in rnd.choice(centers)]
-              for _ in range(200)]
-    clustered = C.coarse_pruning_stats(cents, sample)
-    assert clustered["frac_of_flat"] < 0.35, clustered
-
-    # iid world: everything concentrated at similar distances
-    iid_cents = [([int(rnd.gauss(0, 1) * C.QUANT_SCALE)
-                   for _ in range(dim)], 1) for _ in range(k)]
-    iid_sample = [[rnd.gauss(0, 1) for _ in range(dim)]
-                  for _ in range(200)]
-    iid = C.coarse_pruning_stats(iid_cents, iid_sample)
-    assert iid["frac_of_flat"] > 0.5, iid
-    assert iid["frac_of_flat"] > 2 * clustered["frac_of_flat"]
 
 
 def test_quantize_matches_money_convention(spark):
@@ -295,8 +231,8 @@ def test_gemm_mode_matches_arrow_on_real_data(spark, emb):
     exact-order arrow path everywhere except reassociation-scale
     near-ties, which this corpus has none of — full agreement is the
     expected (and here asserted) outcome. The mode is reserved for
-    the sketch regime; the oracle gates keep flat/arrow/twolevel."""
-    cents = C.kmeans_fit(emb, k=C.TWO_LEVEL_MIN_K, iters=2)
+    the sketch regime; the oracle gates keep flat/arrow."""
+    cents = C.kmeans_fit(emb, k=C.ARROW_MIN_K, iters=2)
     q = emb.select("vec_id", C.quantize_expr("embedding").alias("__q"))
     arrow = (C.with_cluster(q, cents, mode="arrow")
              .select("vec_id", F.col("__cl").alias("a")))
@@ -314,23 +250,3 @@ def test_gemm_mode_via_kmeans_assign(spark, emb):
     b = {r["vec_id"]: r["cluster"]
          for r in C.kmeans_assign(emb, cents, mode="arrow").collect()}
     assert a == b
-
-
-def test_gemm32_mode_matches_fp64_on_real_data(spark, emb):
-    """gemm32 (sgemm) widens the near-tie window from reassociation
-    scale to ~1e-7 relative; on real-valued embeddings with k-means
-    centroids that window is still empty, so fp32 must agree with the
-    fp64 gemm pass AND the exact-order arrow fold everywhere. The
-    sf100 tier measurement lives in SCALE_RUN_MB_ASSIGN_FP32.json."""
-    cents = C.kmeans_fit(emb, k=C.TWO_LEVEL_MIN_K, iters=2)
-    q = emb.select("vec_id", C.quantize_expr("embedding").alias("__q"))
-    g64 = (C.with_cluster(q, cents, mode="gemm")
-           .select("vec_id", F.col("__cl").alias("g64")))
-    g32 = (C.with_cluster(q, cents, mode="gemm32")
-           .select("vec_id", F.col("__cl").alias("g32")))
-    arrow = (C.with_cluster(q, cents, mode="arrow")
-             .select("vec_id", F.col("__cl").alias("a")))
-    j = g64.join(g32, "vec_id").join(arrow, "vec_id")
-    assert j.count() == emb.count()
-    assert j.filter(F.col("g32") != F.col("g64")).count() == 0
-    assert j.filter(F.col("g32") != F.col("a")).count() == 0

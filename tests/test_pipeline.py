@@ -237,10 +237,10 @@ def test_connected_components_and_groups(spark):
 
 
 def test_connected_components_regime_boundary(spark):
-    """Both union-find regimes (driver collect vs distributed min-label
-    propagation) must agree exactly at the threshold boundary: the same
-    edge set one edge under and one edge over ``driver_threshold``
-    yields identical components."""
+    """Both connected-components regimes (driver union-find vs
+    distributed large-star/small-star) must agree exactly at the
+    threshold boundary: the same edge set one edge under and one edge
+    over ``driver_threshold`` yields identical components."""
     # 3 chains of 4 nodes + one isolated pair = 11 edges
     edges = [(i, i + 1) for i in range(0, 3)] \
         + [(i, i + 1) for i in range(10, 13)] \
@@ -257,13 +257,8 @@ def test_connected_components_regime_boundary(spark):
     dist = {r["doc_id"]: r["group_id"] for r in
             dedup.connected_components(
                 pairs, driver_threshold=len(edges) - 1).collect()}
-    star = {r["doc_id"]: r["group_id"] for r in
-            dedup.connected_components(
-                pairs, driver_threshold=len(edges) - 1,
-                distributed_algorithm="star").collect()}
     assert driver == expect
     assert dist == expect
-    assert star == expect
     assert dedup.LAST_CC_INFO["regime"] == "star"
 
 
@@ -303,8 +298,8 @@ def test_alternating_star_matches_union_find_random_graphs(spark):
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
         got = {r["doc_id"]: r["group_id"] for r in
                dedup.connected_components(
-                   pairs, driver_threshold=0, max_iterations=30,
-                   distributed_algorithm="star").collect()}
+                   pairs, driver_threshold=0,
+                   max_iterations=30).collect()}
         assert got == uf(edges), f"graph {gi}"
         if gi == 0:
             assert dedup.LAST_CC_INFO["rounds"] <= 10
@@ -1493,17 +1488,6 @@ def test_heavy_hitters_empty_corpus_returns_empty(spark):
     got = text.heavy_hitters(df, k=3)
     assert got.collect() == []
     assert got.columns == ["source", "token", "freq", "rank"]
-
-
-def test_connected_components_rejects_unknown_algorithm(spark):
-    """A typo'd regime name must raise, not silently fall through to
-    min-label (whose non-convergence failure mode the caller thought
-    they had opted out of)."""
-    import pytest
-
-    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="distributed_algorithm"):
-        dedup.connected_components(pairs, distributed_algorithm="Star")
 
 
 def test_ivf_topk_exact_equals_bruteforce(spark):

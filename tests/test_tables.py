@@ -112,6 +112,39 @@ def test_merge_conditional_update_skips_unchanged(spark, table):
     assert c.metrics["numTargetRowsCopied"] == 1
 
 
+@pytest.mark.parametrize("cdf", [True, False], ids=["cdf", "no_cdf"])
+def test_merge_row_metrics_all_four_actions(spark, tmp_path, cdf):
+    """One merge with an update, an insert, a delete and copy rows must
+    report all four numTargetRows* counts. With CDF on the copy count
+    is derived (output rows minus updates and inserts); without CDF
+    every count comes from one observe on the materialize pass."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), SCHEMA,
+        properties={"enableChangeDataFeed": str(cdf).lower()})
+    t.write(make_df(spark, [(i, f"n{i}", f"n{i}@x")
+                            for i in range(1, 6)]).coalesce(1))
+    src = spark.createDataFrame(
+        [(1, "n1", "n1@x", False),     # unchanged -> copy
+         (2, "N2", "n2@x", False),     # changed -> update
+         (3, "n3", "n3@x", True),      # flagged -> delete
+         (6, "n6", "n6@x", False)],    # new -> insert
+        "id long, name string, email string, __delete boolean")
+    c = (t.merge(src, on="id")
+         .when_matched_delete(condition=F.col("s.__delete"))
+         .when_matched_update_all(
+             condition="NOT (t.name <=> s.name AND t.email <=> s.email)")
+         .when_not_matched_insert_all()
+         .execute())
+    assert c.metrics["numTargetFilesRemoved"] == 1
+    assert {k: c.metrics[f"numTargetRows{k}"]
+            for k in ("Updated", "Inserted", "Deleted", "Copied")} == {
+        "Updated": 1, "Inserted": 1, "Deleted": 1, "Copied": 3}
+    assert c.metrics["numOutputRows"] == 5
+    assert rows_of(t.read()) == [
+        (1, "n1", "n1@x"), (2, "N2", "n2@x"), (4, "n4", "n4@x"),
+        (5, "n5", "n5@x"), (6, "n6", "n6@x")]
+
+
 def test_delete_predicate(spark, table):
     table.write(make_df(spark, [(i, f"n{i}", f"n{i}@x") for i in range(10)]))
     c = table.delete("id >= 7")
