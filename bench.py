@@ -86,39 +86,7 @@ def main() -> None:
     # benched-but-not-driver-gated operators (non-SQL-recomputable
     # outputs, e.g. the minibatch k-means fit) still get timed here
     qs.update(entrymod.bench_extra_queries())
-    # warmup: JVM + parquet footer caches
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    # warmup: Python/Arrow worker pool — the session's FIRST mapInPandas
-    # pays ~6s of worker spawn + pandas import across cores, a one-time
-    # session cost that would otherwise be charged to whichever query
-    # touches Python first (multimodal_decode since the ANN queries
-    # moved to pure SQL)
-    spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode("overwrite").save()
-    # warmup: MERGE/CDF/commit machinery — first execution of the merge
-    # plan pays one-time JIT + whole-stage codegen (~8s observed), a
-    # session cost that otherwise lands on whichever write pipeline
-    # runs first (cdc_pipeline). A 100-row micro-merge JITs the same
-    # code paths; the timed entries then measure the engine, not HotSpot
-    import tempfile
-
-    from pyspark.sql import functions as F  # noqa: N812
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from deltalake_poc_spark.tables import VersionedTable
-
-    wroot = tempfile.mkdtemp(prefix="bench_warm_")
-    wt = VersionedTable.create(
-        spark, wroot, StructType([StructField("id", LongType()),
-                                  StructField("v", LongType())]),
-        properties={"enableChangeDataFeed": "true"})
-    wt.write(spark.range(100).select(F.col("id"), F.col("id").alias("v")),
-             "append")
-    (wt.merge(spark.range(50, 150).select(F.col("id"),
-                                          (F.col("id") * 2).alias("v")),
-              on="id")
-     .when_matched_update_all().when_not_matched_insert_all().execute())
-    wt.read_change_feed(0).write.format("noop").mode("overwrite").save()
+    warmup(spark, sf_dir, cpus)
 
     # median-of-N per query: single-shot numbers swing up to 3x when a
     # major GC / JIT compilation lands mid-query (observed: decontaminate
@@ -247,6 +215,45 @@ def main() -> None:
     except OSError:
         pass  # read-only checkout: stdout line is still complete
     spark.stop()
+
+
+def warmup(spark, sf_dir: str, cpus: str) -> None:
+    """Pay the session's one-time costs before anything is timed:
+    parquet footer caches, Python-worker spawn and the MERGE/CDF/commit
+    code paths. bench.py and scripts/profile_query.py both call it."""
+    # JVM + parquet footer caches
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    # Python/Arrow worker pool — the session's FIRST mapInPandas
+    # pays ~6s of worker spawn + pandas import across cores, a one-time
+    # session cost that would otherwise be charged to whichever query
+    # touches Python first (multimodal_decode since the ANN queries
+    # moved to pure SQL)
+    spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
+        lambda it: it, "id long").write.format("noop").mode("overwrite").save()
+    # MERGE/CDF/commit machinery — first execution of the merge
+    # plan pays one-time JIT + whole-stage codegen (~8s observed), a
+    # session cost that otherwise lands on whichever write pipeline
+    # runs first (cdc_pipeline). A 100-row micro-merge JITs the same
+    # code paths; the timed entries then measure the engine, not HotSpot
+    import tempfile
+
+    from pyspark.sql import functions as F  # noqa: N812
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from deltalake_poc_spark.tables import VersionedTable
+
+    wroot = tempfile.mkdtemp(prefix="bench_warm_")
+    wt = VersionedTable.create(
+        spark, wroot, StructType([StructField("id", LongType()),
+                                  StructField("v", LongType())]),
+        properties={"enableChangeDataFeed": "true"})
+    wt.write(spark.range(100).select(F.col("id"), F.col("id").alias("v")),
+             "append")
+    (wt.merge(spark.range(50, 150).select(F.col("id"),
+                                          (F.col("id") * 2).alias("v")),
+              on="id")
+     .when_matched_update_all().when_not_matched_insert_all().execute())
+    wt.read_change_feed(0).write.format("noop").mode("overwrite").save()
 
 
 if __name__ == "__main__":

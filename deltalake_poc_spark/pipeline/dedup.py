@@ -45,9 +45,13 @@ def spread_if_narrow(df: DataFrame, partitions: int | None = None) -> DataFrame:
     table's split count already covers the cluster — there the
     round-robin exchange spread() adds is pure cost (a full extra
     pass over the corpus) and is skipped. The probe is
-    ``df.rdd.getNumPartitions()`` — a driver-side plan conversion, no
-    job; use this variant where the frame is consumed once or twice
-    and the probe's ~10 ms is amortized by a 1-task -> N-task win."""
+    ``df.rdd.getNumPartitions()``. On a scan-rooted frame (no shuffle
+    upstream) it is a driver-side plan conversion with no job; under
+    AQE, a frame with upstream shuffles can run those shuffle stages as
+    jobs to learn its final partitioning, so probe such frames only
+    where that work is reused. Use this variant where the frame is
+    consumed once or twice and the probe's ~10 ms is amortized by a
+    1-task -> N-task win."""
     target = partitions or df.sparkSession.sparkContext.defaultParallelism
     try:
         if df.rdd.getNumPartitions() >= target:

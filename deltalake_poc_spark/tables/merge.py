@@ -10,21 +10,29 @@ Re-implements the Delta MERGE semantics the reference uses
   with a set-based delete clause
 - ``whenNotMatchedInsertAll()``
 
-Execution strategy (what Delta does, re-built on plain Spark):
+Execution strategy (what Delta does, re-built on plain Spark), shared
+by MERGE, DELETE and UPDATE:
 
-1. **File pruning.** Each data file carries [min, max] stats for the
-   merge key. Source keys are range-joined against the (tiny,
-   broadcast) file-stats list; only files that *could* contain a
-   source key are rewritten. At 100 TB with a clustered key this is
-   the difference between rewriting GBs and rewriting the table.
-2. **Single full-outer join** of touched-file rows with the source on
-   the key; each output row is classified copy/update/delete/insert.
-   Because pruning guarantees un-touched files cannot contain source
-   keys, not-matched detection only needs the touched rows.
-3. New files written distributed; one atomic log commit swaps
-   touched files for rewritten ones and records Delta-style metrics
-   (numTargetRowsUpdated/Inserted/Deleted/Copied — the reference
-   reads these from history, notebook cells 11/22/27).
+1. **Touched-file discovery.** MERGE: each data file carries [min,
+   max] stats for the merge key; source keys are range-joined against
+   the (tiny, broadcast) file-stats list, and only files that *could*
+   contain a source key are touched. At 100 TB with a clustered key
+   this is the difference between rewriting GBs and rewriting the
+   table. DELETE/UPDATE (table.py): stats prune candidate files for
+   the predicate, then a ``__file`` probe keeps the ones with a match.
+2. **Classification.** Every touched row is tagged copy/update/delete
+   (MERGE: one full-outer join of touched-file rows with the source on
+   the key, which also tags inserts). Because pruning guarantees
+   untouched files cannot contain source keys, not-matched detection
+   only needs the touched rows.
+3. **One executor** (``write_classified``) over the operation's one
+   pinned snapshot: rewrites the touched files (copy-on-write) or
+   records deletion vectors, stages CDF change rows, counts every
+   action with one ``observe()`` and publishes one atomic commit with
+   Delta-style metrics (numTargetRowsUpdated/Inserted/Deleted/Copied
+   for MERGE — the reference reads these from history, notebook cells
+   11/22/27; numDeletedRows/numUpdatedRows/numCopiedRows for
+   DELETE/UPDATE).
 
 Duplicate source keys raise (same contract as Delta MERGE; the
 reference's batches were simply small enough to dodge this —
@@ -33,6 +41,8 @@ window).
 """
 
 from __future__ import annotations
+
+import shutil
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -173,7 +183,7 @@ class MergeBuilder:
 
             from pyspark.sql.types import StructType
 
-            evolved_json = t._merged_schema_json(src)
+            evolved_json = t._merged_schema_json(src, snap)
             evolved = StructType.fromJson(_json.loads(evolved_json))
             if len(evolved.fields) != len(schema.fields):
                 schema = evolved  # target + new source columns
@@ -181,16 +191,10 @@ class MergeBuilder:
                 evolved_json = None  # nothing new: plain merge commit
 
         rel_touched = self._touched_files(snap) if snap.files else []
-        dv_mode = str(snap.properties.get(
-            "enableDeletionVectors", "false")).lower() == "true"
-        if dv_mode:
-            # merge-on-read: touched rows carry (file, position) so
-            # matched updates/deletes become vector entries instead of
-            # file rewrites (Delta's DV-enabled MERGE)
-            target = t._read_files(rel_touched, snap, with_position=True)
-        else:
-            target = t._plain_read(rel_touched, schema, dvs=snap.dvs) \
-                if rel_touched else t.spark.createDataFrame([], schema)
+        # in DV mode touched rows carry (file, position) so matched
+        # updates/deletes become vector entries instead of rewrites
+        target = t._read_files(rel_touched, snap, schema=schema,
+                               with_position=t._dv_enabled(snap))
 
         # align source to target schema (missing cols -> null)
         src_cols = {f.name for f in src.schema.fields}
@@ -231,220 +235,142 @@ class MergeBuilder:
             .when(ins_cond, F.lit("I"))
             .otherwise(F.lit("X"))  # source-only rows not inserted
         )
-        classified = joined.withColumn("__action", action)
-        if dv_mode:
-            t_cols = [F.col(f"t.{f.name}").alias(f.name)
-                      for f in schema.fields]
-            return self._finish_dv(snap, schema, classified, aligned,
-                                   t_cols, rel_touched, evolved_json)
-        # persist only when the CDF path will stream the frame twice
-        # (change-file write + materialize); in the single-consumer
-        # case the cache fill is pure overhead AND freezes the join's
-        # partitioning (cached plans skip AQE output coalescing unless
-        # canChangeCachedPlanOutputPartitioning is on), which turned a
-        # 172-row merge output into 32 near-empty files
-        cdf = t.cdf_enabled(snap)
-        if cdf:
-            classified = classified.persist()
-        else:
-            from pyspark.sql import Observation
+        params = {
+            "predicate": " AND ".join(f"t.{k} = s.{k}" for k in keys),
+            "matchedUpdateAll": self._update_all,
+            "matchedDelete": self._delete,
+            "notMatchedInsertAll": self._insert_all,
+        }
+        t_cols = [F.col(f"t.{f.name}").alias(f.name) for f in schema.fields]
+        return write_classified(
+            t, snap, "MERGE", params, joined.withColumn("__action", action),
+            schema, t_cols, aligned, rel_touched, evolved_json)
 
-            # metrics ride on the materialize pass via observe() — a
-            # separate groupBy-collect job was a full extra pass over
-            # the joined frame (r1: ~2s of the CDC pipeline's fixed
-            # cost). Only safe when exactly ONE action consumes the
-            # observed plan: an Observation whose node is executed by
-            # a second action (the CDF persist pattern: change-file
-            # write + materialize) leaks one ExecutionListenerBus per
-            # merge on the listener bus — unbounded growth at one
-            # merge per micro-batch. On the cached path the counts
-            # ride the change-file write instead (below).
-            obs = Observation()
-            classified = classified.observe(
-                obs,
-                *[
-                    F.coalesce(
-                        F.sum(F.when(F.col("__action") == a, 1)), F.lit(0)
-                    ).alias(a)
-                    for a in ("U", "I", "D", "C")
-                ],
-            )
-        try:
-            t_cols = [F.col(f"t.{f.name}").alias(f.name) for f in schema.fields]
-            result = classified.filter(F.col("__action").isin("C", "U", "I")).select(
-                *[
-                    F.when(F.col("__action").isin("U", "I"), a)
-                    .otherwise(tc)
-                    .alias(f.name)
-                    for a, tc, f in zip(aligned, t_cols, schema.fields)
-                ]
-            )
-            from deltalake_poc_spark.tables.constraints import enforce
 
-            # CHECK/NOT NULL guards ride the materialize pass (no extra
-            # job); post-image rows that violate fail the merge
-            result = enforce(result, snap.properties, schema)
+# operation -> {count: commit metric}: Delta's metric names for each
+# operation, filled from one set of counts. U/I/D/C are rows by
+# action, "out" rows written, "removed"/"added" data files.
+_METRICS = {
+    "MERGE": {"U": "numTargetRowsUpdated", "I": "numTargetRowsInserted",
+              "D": "numTargetRowsDeleted", "C": "numTargetRowsCopied",
+              "out": "numOutputRows", "removed": "numTargetFilesRemoved",
+              "added": "numTargetFilesAdded"},
+    "DELETE": {"D": "numDeletedRows", "C": "numCopiedRows",
+               "removed": "numRemovedFiles", "added": "numAddedFiles"},
+    "UPDATE": {"U": "numUpdatedRows", "C": "numCopiedRows",
+               "removed": "numRemovedFiles", "added": "numAddedFiles"},
+}
 
-            staged_changes = None
-            if cdf:
-                # U/I/D ride the change-file write via observe() (the
-                # write is the changes frame's only action); C falls
-                # out of the materialize's numOutputRows below
-                from pyspark.sql import Observation
 
-                ch_obs = Observation()
-                changes = self._change_rows(classified, schema, aligned,
-                                            t_cols).observe(
-                    ch_obs,
-                    *[F.coalesce(
-                        F.sum(F.when(F.col("_change_type") == ct, 1)),
-                        F.lit(0)).alias(a)
-                      for a, ct in (("U", "update_preimage"),
-                                    ("I", "insert"),
-                                    ("D", "delete"))])
-                staged_changes = t._stage_changes(changes)
+def write_classified(table, snap, op: str, params: dict,
+                     classified: DataFrame, schema, pre: list[Column],
+                     post: list[Column], touched: list[str],
+                     schema_json: str | None = None) -> Commit:
+    """The one row-level write behind MERGE, DELETE and UPDATE.
 
-            entries = t._materialize(
-                result, stats_cols=None,
-                partition_by=t.partition_columns(snap) or None,
-                mapping=({f.name: t._physical(f) for f in schema.fields}
-                         if evolved_json else None))
-            n_out = sum(e.num_records for e in entries)
-            if cdf:
-                # the change write counted U/I/D; the materialized row
-                # count C+U+I closes the system
-                counts = dict(ch_obs.get)
-                counts["C"] = n_out - counts["U"] - counts["I"]
-            else:
-                # single-action path: the materialize streamed every
-                # row through the observe node exactly once
-                counts = obs.get
-            commit = Commit(
-                version=snap.version + 1,
-                timestamp=t.log.monotonic_now_ms(),
-                operation="MERGE",
-                operation_parameters={
-                    "predicate": " AND ".join(
-                        f"t.{k} = s.{k}" for k in keys),
-                    "matchedUpdateAll": self._update_all,
-                    "matchedDelete": self._delete,
-                    "notMatchedInsertAll": self._insert_all,
-                },
-                add=entries,
-                remove=rel_touched,
-                schema_json=evolved_json,
-                metrics={
-                    "numTargetRowsUpdated": counts.get("U", 0),
-                    "numTargetRowsInserted": counts.get("I", 0),
-                    "numTargetRowsDeleted": counts.get("D", 0),
-                    "numTargetRowsCopied": counts.get("C", 0),
-                    "numOutputRows": n_out,
-                    "numTargetFilesRemoved": len(rel_touched),
-                    "numTargetFilesAdded": len(entries),
-                },
-                change_dir=staged_changes,
-            )
-            return t._publish(
-                commit, snap,
-                cleanup_on_fail=(staged_changes,) if staged_changes else ())
-        finally:
-            if cdf:
-                classified.unpersist()
+    ``classified`` holds the touched target rows (plus MERGE's source
+    rows), each tagged ``__action``: C copy, U update, D delete, I
+    insert, X ignore. ``pre``/``post`` are the pre- and post-image
+    columns over it, aligned to ``schema`` (the schema being written);
+    in DV mode the frame also carries the target's ``__file``/``__pos``.
+    ``touched`` lists the files a copy-on-write commit replaces.
+    Everything reads ``snap``, the operation's pinned snapshot.
 
-    def _finish_dv(self, snap, schema, classified, aligned, t_cols,
-                   rel_touched, evolved_json) -> Commit:
-        """Merge-on-read commit: matched updates/deletes go into a
-        consolidated deletion-vector sidecar addressing the TOUCHED
-        files' row positions; update post-images and inserts append as
-        new files; copy rows are never rewritten — a sparse CDC upsert
-        against big files costs a tiny sidecar plus the changed rows,
-        zero copy amplification (numTargetRowsCopied is structurally
-        0, like Delta's DV MERGE). One commit carries dv_updates + add
-        so readers flip atomically."""
-        t = self.table
-        from deltalake_poc_spark.tables.constraints import enforce
-        from deltalake_poc_spark.tables.log import Commit
+    - Copy-on-write: the C/U/I rows (post-image for U/I) are
+      materialized and replace ``touched``.
+    - Deletion vectors (``enableDeletionVectors``): the U/I
+      post-images append as new files and the U/D rows' positions go
+      into a consolidated sidecar; nothing is rewritten (copies count
+      0). A DV write that changes no row commits a no-op.
+    - With ``enableChangeDataFeed`` the D, U-pre, U-post and I rows are
+      staged as change files first.
 
+    One observe() on the data-file write counts U/I/D/C, so no job
+    exists just to count. The commit carries dv_updates + add + remove
+    so readers flip atomically; staged change files and sidecar are
+    removed if it loses a conflict."""
+    from pyspark.sql import Observation
+
+    from deltalake_poc_spark.tables.constraints import enforce
+
+    t = table
+    dv = t._dv_enabled(snap)
+    cdf = t.cdf_enabled(snap)
+    if dv:
+        params = {**params, "deletionVectors": True}
+    act = F.col("__action")
+    # MERGE's frame is a join: persist it when a second job reads it.
+    # DELETE/UPDATE's is a filter over a file scan, cheaper to re-read
+    # than to cache. A single consumer never persists: the cache fill
+    # is pure overhead there AND freezes the join's partitioning
+    # (cached plans skip AQE output coalescing), which turned a
+    # 172-row merge output into 32 near-empty files
+    shared = (cdf or dv) and op == "MERGE"
+    if shared:
         classified = classified.persist()
-        try:
-            counts = {
-                r["__action"]: r["cnt"]
-                for r in classified.groupBy("__action")
-                .agg(F.count(F.lit(1)).alias("cnt")).collect()
-            }
-            n_upd = counts.get("U", 0)
-            n_ins = counts.get("I", 0)
-            n_del = counts.get("D", 0)
-            if n_upd + n_ins + n_del == 0:
-                return t._noop_commit("MERGE", {
-                    "predicate": " AND ".join(
-                        f"t.{k} = s.{k}" for k in self.keys)})
-            new_rows = enforce(
-                classified.filter(F.col("__action").isin("U", "I"))
-                .select(*aligned),
-                snap.properties, schema)
-            staged_changes = None
-            if t.cdf_enabled(snap):
-                staged_changes = t._stage_changes(self._change_rows(
-                    classified, schema, aligned, t_cols))
-            dv_rel, dv_files, n_total = None, [], 0
-            if n_upd + n_del > 0:
-                dv_matches = classified.filter(
-                    F.col("__action").isin("U", "D")).select(
-                        F.col("t.__file").alias("__file"),
-                        F.col("t.__pos").alias("__pos"))
-                dv_rel, dv_files, n_total, _prior = t._dv_sidecar_from(
-                    dv_matches, snap)
-            entries = t._materialize(
-                new_rows, stats_cols=None,
-                partition_by=t.partition_columns(snap) or None,
-                mapping=({f.name: t._physical(f) for f in schema.fields}
-                         if evolved_json else None)) \
-                if n_upd + n_ins > 0 else []
-            commit = Commit(
-                version=snap.version + 1,
-                timestamp=t.log.monotonic_now_ms(),
-                operation="MERGE",
-                operation_parameters={
-                    "predicate": " AND ".join(
-                        f"t.{k} = s.{k}" for k in self.keys),
-                    "matchedUpdateAll": self._update_all,
-                    "matchedDelete": self._delete,
-                    "notMatchedInsertAll": self._insert_all,
-                    "deletionVectors": True,
-                },
-                add=entries,
-                dv_updates={f: dv_rel for f in dv_files},
-                schema_json=evolved_json,
-                metrics={
-                    "numTargetRowsUpdated": n_upd,
-                    "numTargetRowsInserted": n_ins,
-                    "numTargetRowsDeleted": n_del,
-                    "numTargetRowsCopied": 0,
-                    "numOutputRows": sum(e.num_records for e in entries),
-                    "numTargetFilesRemoved": 0,
-                    "numTargetFilesAdded": len(entries),
-                    "numDeletionVectorRows": n_total,
-                },
-                change_dir=staged_changes,
-            )
-            cleanup = tuple(x for x in (dv_rel, staged_changes) if x)
-            return t._publish(commit, snap, cleanup_on_fail=cleanup)
-        finally:
+    # U/I/D/C ride the data-file write via one observe(). Only that
+    # job reads the observed node: its filters and projections sit
+    # above it, so it sees every classified row, and no exchange above
+    # it can be dropped from the executed plan
+    obs = Observation()
+    counted = classified.observe(obs, *[
+        F.coalesce(F.sum(F.when(act == a, 1)), F.lit(0)).alias(a)
+        for a in ("U", "I", "D", "C")])
+    mapping = {f.name: t._physical(f) for f in schema.fields}
+    staged, dv_rel, dv_files, n_dv = None, None, [], 0
+    try:
+        if cdf:
+            # one leg per change type the operation can produce (the
+            # actions it reports): DELETE scans D only, UPDATE U only
+            changes = None
+            for a, cols, ct in (("I", post, "insert"), ("D", pre, "delete"),
+                                ("U", pre, "update_preimage"),
+                                ("U", post, "update_postimage")):
+                if a not in _METRICS[op]:
+                    continue
+                leg = classified.filter(act == a).select(*cols) \
+                    .withColumn("_change_type", F.lit(ct))
+                changes = leg if changes is None else changes.unionByName(leg)
+            staged = t._stage_changes(changes, mapping)
+        if dv:
+            rows = counted.filter(act.isin("U", "I")).select(*post)
+        else:
+            rows = counted.filter(act.isin("C", "U", "I")).select(*[
+                F.when(act.isin("U", "I"), b).otherwise(a).alias(f.name)
+                for a, b, f in zip(pre, post, schema.fields)])
+        # CHECK/NOT NULL guards ride the same pass (no extra job); rows
+        # that violate fail the write
+        entries = t._materialize(
+            enforce(rows, snap.properties, schema), snap,
+            partition_by=t.partition_columns(snap) or None, mapping=mapping)
+        n = dict(obs.get)
+        if dv and not (n["U"] or n["I"] or n["D"]):
+            if staged:
+                shutil.rmtree(t.log.abs_path(staged), ignore_errors=True)
+            return t._noop_commit(op, params)
+        if dv and (n["U"] or n["D"]):
+            dv_rel, dv_files, n_dv = t._dv_sidecar_from(
+                classified.filter(act.isin("U", "D")), snap)
+    finally:
+        if shared:
             classified.unpersist()
-
-    def _change_rows(self, classified, schema, aligned, t_cols):
-        """CDF rows for this merge: insert / delete / update_pre+postimage."""
-        parts = []
-        ins = classified.filter(F.col("__action") == "I").select(*aligned)
-        parts.append(ins.withColumn("_change_type", F.lit("insert")))
-        dele = classified.filter(F.col("__action") == "D").select(*t_cols)
-        parts.append(dele.withColumn("_change_type", F.lit("delete")))
-        pre = classified.filter(F.col("__action") == "U").select(*t_cols)
-        parts.append(pre.withColumn("_change_type", F.lit("update_preimage")))
-        post = classified.filter(F.col("__action") == "U").select(*aligned)
-        parts.append(post.withColumn("_change_type", F.lit("update_postimage")))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    removed = [] if dv else list(touched)
+    n.update(C=0 if dv else n["C"], out=sum(e.num_records for e in entries),
+             removed=len(removed), added=len(entries))
+    metrics = {name: n[k] for k, name in _METRICS[op].items()}
+    if dv:
+        metrics["numDeletionVectorRows"] = n_dv
+    commit = Commit(
+        version=snap.version + 1,
+        timestamp=t.log.monotonic_now_ms(),
+        operation=op,
+        operation_parameters=params,
+        add=entries,
+        remove=removed,
+        dv_updates={f: dv_rel for f in dv_files},
+        schema_json=schema_json,
+        metrics=metrics,
+        change_dir=staged,
+    )
+    return t._publish(commit, snap, cleanup_on_fail=tuple(
+        x for x in (dv_rel, staged) if x))

@@ -19,6 +19,7 @@ MERGE touching k of N files rewrites only those k (tables/merge.py).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import re
@@ -27,7 +28,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from deltalake_poc_spark.tables.log import (
     Commit, ConcurrentWriteError, FileEntry, Snapshot, TableLog,
@@ -150,6 +151,10 @@ class VersionedTable:
         snap = snap or self.snapshot()
         return str(snap.properties.get(CDF_PROP, "false")).lower() == "true"
 
+    @staticmethod
+    def _dv_enabled(snap: Snapshot) -> bool:
+        return str(snap.properties.get(DV_PROP, "false")).lower() == "true"
+
     def version(self) -> int:
         return self.log.latest_version()
 
@@ -203,12 +208,46 @@ class VersionedTable:
                 and file_may_match(e.stats, preds)
                 and bloom_may_match(e.bloom, preds)]
 
+    def _scan(self, paths: list[str], schema: StructType | None,
+              extra: tuple[StructField, ...] = (),
+              base_path: str | None = None,
+              with_position: bool = False) -> DataFrame:
+        """The one place a read maps physical column names to logical
+        ones. Files store PHYSICAL names (column mapping); the reader
+        gets the declared physical schema (no schema-inference or
+        mergeSchema footer job per read — the log already knows it),
+        so columns a file lacks (add-only evolution) read as null and
+        extra ones (dropped columns' data) are ignored natively. The
+        output carries the logical names, then the ``extra`` fields
+        unrenamed (CDF's ``_change_type``), then ``__file``/``__pos``
+        (absolute file URI + row index) when ``with_position``."""
+        reader = self.spark.read
+        if schema is None:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            reader = reader.schema(StructType(
+                [StructField(self._physical(f), f.dataType, True)
+                 for f in schema.fields] + list(extra)))
+        if base_path:
+            # Hive-layout files: partition values live in the directory
+            # names; basePath lets Spark recover (and prune on) them
+            reader = reader.option("basePath", base_path)
+        df = reader.parquet(*paths)
+        cols = ["*"] if schema is None else (
+            [F.col(self._physical(f)).cast(f.dataType).alias(f.name)
+             for f in schema.fields] + [f.name for f in extra])
+        if with_position:
+            cols += [F.col("_metadata.file_path").alias("__file"),
+                     F.col("_metadata.row_index").alias("__pos")]
+        return df.select(*cols)
+
     def _read_files(self, rel_paths: list[str], snap: Snapshot,
-                    with_position: bool = False) -> DataFrame:
+                    with_position: bool = False,
+                    schema: StructType | None = None) -> DataFrame:
         """Distributed scan of the given files, deletion-vector
-        filtered and schema-aligned. ``with_position=True`` keeps
-        ``__file``/``__pos`` columns (absolute file URI + row index)
-        for callers that address rows by position (DV delete).
+        filtered and aligned to ``schema`` (default: the snapshot's).
+        ``with_position=True`` keeps ``__file``/``__pos`` columns for
+        callers that address rows by position (DV writes).
 
         DV filtering is a LEFT ANTI join on (file, row position)
         against the active DV rows of exactly the requested files —
@@ -216,7 +255,7 @@ class VersionedTable:
         positions per file; tables where DVs grow large should purge),
         so AQE plans a broadcast anti-join: the scan stays one pass,
         no table-sized shuffle."""
-        schema = self.schema(snap)
+        schema = schema or self.schema(snap)
         if not rel_paths:
             if schema is None:
                 raise ValueError("empty table with no declared schema")
@@ -225,46 +264,13 @@ class VersionedTable:
                 df = (df.withColumn("__file", F.lit(None).cast("string"))
                         .withColumn("__pos", F.lit(None).cast("long")))
             return df
-        paths = [self.log.abs_path(p) for p in rel_paths]
-        reader = self.spark.read
-        if schema is not None:
-            # explicit PHYSICAL read schema from the snapshot: no
-            # schema-inference/mergeSchema footer job per read (at
-            # 1M files that merge was a distributed job per read; the
-            # log already knows the schema). Files missing a column
-            # (add-only evolution) read it as null natively; extra
-            # columns (dropped-column data) are ignored natively.
-            from pyspark.sql.types import StructField as _SF
-            from pyspark.sql.types import StructType as _ST
-            reader = reader.schema(_ST([
-                _SF(self._physical(f), f.dataType, True) for f in schema.fields]))
-        else:
-            reader = reader.option("mergeSchema", "true")
-        if self.partition_columns(snap):
-            # Hive-layout files: partition values live in the directory
-            # names; basePath lets Spark recover (and prune on) them
-            reader = reader.option("basePath", self.log.data_dir())
-        df = reader.parquet(*paths)
         dvs = ({p: snap.dvs[p] for p in rel_paths if p in snap.dvs}
                if snap.dvs else {})
-        if dvs or with_position:
-            df = (df.withColumn("__file", F.col("_metadata.file_path"))
-                    .withColumn("__pos", F.col("_metadata.row_index")))
-        if schema is not None:
-            # align to declared schema: files store PHYSICAL names
-            # (column mapping), output carries logical; missing -> null,
-            # extra (e.g. dropped columns' data) ignored
-            cols = []
-            present = {f.name for f in df.schema.fields}
-            for f in schema.fields:
-                phys = self._physical(f)
-                if phys in present:
-                    cols.append(F.col(phys).cast(f.dataType).alias(f.name))
-                else:
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-            if dvs or with_position:
-                cols += [F.col("__file"), F.col("__pos")]
-            df = df.select(*cols)
+        df = self._scan(
+            [self.log.abs_path(p) for p in rel_paths], schema,
+            base_path=(self.log.data_dir()
+                       if self.partition_columns(snap) else None),
+            with_position=bool(dvs) or with_position)
         if dvs:
             # anti-join on (file BASENAME, pos): basenames are
             # uuid-unique within a table, and unlike the full
@@ -282,8 +288,8 @@ class VersionedTable:
                           == F.col("__dvf"))
                          & (F.col("__pos") == F.col("__dvp")),
                          "left_anti")
-        if not with_position and dvs:
-            df = df.drop("__file", "__pos")
+            if not with_position:
+                df = df.drop("__file", "__pos")
         return df
 
     def read_change_feed(self, starting_version: int = 0,
@@ -296,55 +302,38 @@ class VersionedTable:
         UPDATE commits read explicit change files from _changes/v=N.
         Output: table columns + _change_type/_commit_version/_commit_timestamp.
         """
-        if not self.cdf_enabled():
-            raise ValueError(f"{CDF_PROP} is not set on table {self.log.root}")
         snap = self.snapshot()
+        if not self.cdf_enabled(snap):
+            raise ValueError(f"{CDF_PROP} is not set on table {self.log.root}")
         end = ending_version if ending_version is not None else snap.version
         schema = self.schema(snap)
+        # a past commit's files read whole (no current deletion
+        # vectors) under the current schema
+        whole = dataclasses.replace(snap, dvs={})
+
+        def _files(paths: list[str], change_type: str, c: Commit) -> DataFrame:
+            return self._stamp(self._read_files(paths, whole), change_type, c)
+
         pieces: list[DataFrame] = []
         for c in self.log.commits(starting_version, end):
             piece = None
             if c.operation in ("WRITE", "APPEND", "CREATE TABLE"):
                 if c.add:
-                    piece = self._stamp(self._plain_read([a.path for a in c.add], schema),
-                                        "insert", c)
+                    piece = _files([a.path for a in c.add], "insert", c)
             elif c.operation in ("OVERWRITE", "RESTORE"):
                 parts = []
                 if c.add:
-                    parts.append(self._stamp(
-                        self._plain_read([a.path for a in c.add], schema), "insert", c))
+                    parts.append(_files([a.path for a in c.add], "insert", c))
                 if c.remove:
-                    parts.append(self._stamp(
-                        self._plain_read(list(c.remove), schema), "delete", c))
+                    parts.append(_files(list(c.remove), "delete", c))
                 piece = self._union(parts)
             elif c.operation in ("MERGE", "DELETE", "UPDATE"):
                 cd = self.log.commit_changes_dir(c)
                 if os.path.isdir(cd) and any(
                     f.endswith(".parquet") for f in os.listdir(cd)
                 ):
-                    rd = self.spark.read
-                    if schema is not None:
-                        # explicit physical schema: no footer-inference
-                        # job per commit leg (same rule as _read_files)
-                        from pyspark.sql.types import StringType as _St
-                        from pyspark.sql.types import StructField as _SF
-                        from pyspark.sql.types import StructType as _ST
-                        rd = rd.schema(_ST(
-                            [_SF(self._physical(f), f.dataType, True)
-                             for f in schema.fields]
-                            + [_SF("_change_type", _St(), True)]))
-                    ch = rd.parquet(cd)
-                    if schema is not None:
-                        # change files carry physical names; realign to
-                        # the current logical schema (column mapping)
-                        present = set(ch.columns)
-                        cols = []
-                        for f in schema.fields:
-                            phys = self._physical(f)
-                            src = (F.col(phys) if phys in present
-                                   else F.lit(None))
-                            cols.append(src.cast(f.dataType).alias(f.name))
-                        ch = ch.select(*cols, "_change_type")
+                    ch = self._scan([cd], schema, extra=(
+                        StructField("_change_type", StringType(), True),))
                     piece = (
                         ch.withColumn("_commit_version", F.lit(c.version))
                         .withColumn("_commit_timestamp",
@@ -361,13 +350,6 @@ class VersionedTable:
                         .withColumn("_commit_version", F.lit(0).cast("long"))
                         .withColumn("_commit_timestamp", F.timestamp_millis(F.lit(0))))
         return self._union(pieces)
-
-    def _plain_read(self, rel_paths: list[str], schema: StructType | None,
-                    dvs: dict | None = None) -> DataFrame:
-        props = self.snapshot().properties if self.log.exists() else {}
-        snap = Snapshot(0, 0, [], schema.json() if schema else None, props,
-                        dvs or {})
-        return self._read_files(rel_paths, snap)
 
     def _stamp(self, df: DataFrame, change_type: str, c: Commit) -> DataFrame:
         return (
@@ -387,12 +369,14 @@ class VersionedTable:
 
     # --------------------------------------------------------------- writes
 
-    def _materialize(self, df: DataFrame, stats_cols: list[str] | None = None,
-                     sort_within_partitions_by: list[str] | None = None,
+    def _materialize(self, df: DataFrame, snap: Snapshot | None,
+                     stats_cols: list[str] | None = None,
                      partition_by: list[str] | None = None,
                      mapping: dict[str, str] | None = None) -> list[FileEntry]:
         """Write df's rows as new parquet files under data/ and return
-        their FileEntries (with footer-derived min/max stats). With
+        their FileEntries (with footer-derived min/max stats). ``snap``
+        is the operation's pinned snapshot (None: the table is being
+        created); its properties pick the bloom columns. With
         ``partition_by``, files land in Hive-style k=v directories under
         data/ and carry their partition values in the log entry."""
         import urllib.parse
@@ -403,7 +387,7 @@ class VersionedTable:
         # Callers committing a NEW schema (write() with evolution) pass
         # that schema's mapping — the snapshot's mapping lags one commit
         if mapping is None:
-            mapping = self.column_mapping() if self.log.exists() else {}
+            mapping = self.column_mapping(snap) if snap else {}
         nontrivial = {k: v for k, v in mapping.items() if k != v}
         inv = {v: k for k, v in mapping.items()}
         if nontrivial:
@@ -411,13 +395,11 @@ class VersionedTable:
                 F.col(c).alias(nontrivial.get(c, c)) for c in df.columns])
             if stats_cols:
                 stats_cols = [nontrivial.get(c, c) for c in stats_cols]
-        props = self.properties() if self.log.exists() else {}
+        props = snap.properties if snap else {}
         bloom_cols = [c.strip()
                       for c in str(props.get(BLOOM_COLS_PROP, "")).split(",")
                       if c.strip()]
         bloom_fpp = float(props.get(BLOOM_FPP_PROP, 0.01))
-        if sort_within_partitions_by:
-            df = df.sortWithinPartitions(*sort_within_partitions_by)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -495,15 +477,16 @@ class VersionedTable:
             pass
         return entries
 
-    def _merged_schema_json(self, df: DataFrame) -> str:
-        """Schema-merge an incoming frame with the table schema
-        (mergeSchema/autoMerge: SURVEY.md §1.4; spark_streaming.py:297)."""
-        current = self.schema() if self.log.exists() else None
+    def _merged_schema_json(self, df: DataFrame, snap: Snapshot | None) -> str:
+        """Schema-merge an incoming frame with the schema of ``snap``
+        (None: the table is being created) (mergeSchema/autoMerge:
+        SURVEY.md §1.4; spark_streaming.py:297)."""
+        current = self.schema(snap) if snap else None
         if current is None:
             return df.schema.json()
         names = {f.name for f in current.fields}
         new_fields = [f for f in df.schema.fields if f.name not in names]
-        if new_fields and self._mapping_enabled():
+        if new_fields and self._mapping_enabled(snap):
             # fresh physical names for columns added under mapping: the
             # logical name may collide with a renamed/dropped column's
             # physical data still present in old files
@@ -549,7 +532,7 @@ class VersionedTable:
             raise ValueError(f"bad mode {mode}")
         exists = self.log.exists()
         snap = self.snapshot() if exists else None
-        schema_json = self._merged_schema_json(df)
+        schema_json = self._merged_schema_json(df, snap)
         pb = self.partition_columns(snap) if snap else []
         committed = StructType.fromJson(json.loads(schema_json))
         mapping = {f.name: self._physical(f) for f in committed.fields}
@@ -560,8 +543,8 @@ class VersionedTable:
         df = apply_generated(df, committed)
         if snap is not None:
             df = enforce(df, snap.properties, self.schema(snap))
-        entries = self._materialize(df, stats_cols, partition_by=pb or None,
-                                    mapping=mapping)
+        entries = self._materialize(df, snap, stats_cols,
+                                    partition_by=pb or None, mapping=mapping)
         op = "APPEND" if (mode == "append" and exists) else (
             "OVERWRITE" if exists else "WRITE")
         os.makedirs(self.log.data_dir(), exist_ok=True)
@@ -756,170 +739,114 @@ class VersionedTable:
     def delete(self, predicate) -> Commit:
         """DELETE by predicate (J5/M3; reference: delta_table.delete
         spark_streaming.py:385, SQL DELETE spark_delta_handler.py:160-169).
+        Removes rows where the predicate IS TRUE (false/null rows stay).
 
-        One distributed pass finds the files containing matches
-        (pushdown-friendly), then only those files are rewritten —
-        unlike the reference's collect()-ids-to-driver approach
-        (spark_streaming.py:367-389), nothing large hits the driver.
+        Stats pruning picks candidate files; a distributed ``__file``
+        probe (copy-on-write) finds the ones holding matches, and only
+        those are rewritten — unlike the reference's collect()-ids-to-
+        driver approach (spark_streaming.py:367-389), nothing large hits
+        the driver. With ``enableDeletionVectors`` the matches' (file,
+        position) go into a deletion-vector sidecar instead and no data
+        file is rewritten. Writing, change rows, counts and the commit
+        are the shared row-level path (tables/merge.write_classified).
         """
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+        return self._row_level("DELETE", predicate)
+
+    def update(self, set_exprs: dict, predicate=None) -> Commit:
+        """UPDATE (M2 analogue — the reference expresses conditional
+        update through MERGE; provided for API completeness): rows
+        where ``predicate`` (default: every row) IS TRUE take
+        ``set_exprs`` (column -> SQL string or Column over the
+        pre-image). Copy-on-write rewrites the files holding matches;
+        with ``enableDeletionVectors`` the matched rows are DV'd in
+        place and their post-images append as new files — no rewrite of
+        the untouched rows (Delta's DV-enabled UPDATE). Same shared
+        row-level path as delete()."""
+        return self._row_level("UPDATE", predicate, set_exprs)
+
+    def _row_level(self, op: str, predicate,
+                   set_exprs: dict | None = None) -> Commit:
+        """DELETE/UPDATE discovery and classification over one pinned
+        snapshot: each row of the files read is tagged ``__action`` D/U
+        (predicate IS TRUE) or C (copy), then write_classified does the
+        rest."""
+        from deltalake_poc_spark.tables.merge import write_classified
+
+        params = {"predicate": str(predicate)}
         snap = self.snapshot()
-        if not snap.files:
-            return self._noop_commit("DELETE", {"predicate": str(predicate)})
-        cand = self._candidate_paths(snap, predicate)
+        cand = (self._candidate_paths(snap, predicate)
+                if predicate is not None else snap.file_paths)
         if not cand:
-            return self._noop_commit("DELETE", {"predicate": str(predicate)})
-        if str(snap.properties.get(DV_PROP, "false")).lower() == "true":
-            return self._delete_dv(pred, str(predicate), snap, cand)
-        df = self._read_files(cand, snap, with_position=True).drop("__pos")
-        touched_rows = df.filter(pred)
-        touched = [
-            r["__file"] for r in
-            touched_rows.select("__file").distinct().collect()
-        ]
-        if not touched:
-            return self._noop_commit("DELETE", {"predicate": str(predicate)})
-        rel_touched = [self._rel_of(p) for p in touched]
+            return self._noop_commit(op, params)
+        hit = F.lit(True) if predicate is None else F.coalesce(
+            F.expr(predicate) if isinstance(predicate, str) else predicate,
+            F.lit(False))
+        rows = self._read_files(cand, snap, with_position=True)
+        touched: list[str] = []
+        if self._dv_enabled(snap):
+            rows = rows.filter(hit)  # only matches are addressed
+        else:
+            # the __file probe: rewrite only files holding a match
+            touched = [r["file"] for r in rows.filter(hit).select(
+                self._rel_path().alias("file")).distinct().collect()]
+            if not touched:
+                return self._noop_commit(op, params)
+            rows = self._read_files(touched, snap)
         schema = self.schema(snap)
-        touched_df = self._plain_read(rel_touched, schema, dvs=snap.dvs)
-        # SQL DELETE semantics: remove rows where pred IS TRUE; keep false/null
-        keep = touched_df.filter(~F.coalesce(pred, F.lit(False)))
-        staged_changes = None
-        if self.cdf_enabled(snap):
-            deleted = touched_df.filter(pred)
-            staged_changes = self._stage_changes(
-                deleted.withColumn("_change_type", F.lit("delete")))
-        entries = self._materialize(
-            keep, partition_by=self.partition_columns(snap) or None)
-        touched_set = set(rel_touched)
-        n_before = sum(e.num_records for e in snap.files if e.path in touched_set)
-        n_after = sum(e.num_records for e in entries)
-        c = Commit(
-            version=snap.version + 1,
-            timestamp=self.log.monotonic_now_ms(),
-            operation="DELETE",
-            operation_parameters={"predicate": str(predicate)},
-            add=entries,
-            remove=rel_touched,
-            metrics={"numDeletedRows": n_before - n_after,
-                     "numRemovedFiles": len(rel_touched),
-                     "numAddedFiles": len(entries)},
-            change_dir=staged_changes,
-        )
-        return self._publish(
-            c, snap,
-            cleanup_on_fail=(staged_changes,) if staged_changes else ())
+        pre = [F.col(f.name) for f in schema.fields]
+        post = pre
+        if set_exprs is not None:
+            exprs = {c: F.expr(e) if isinstance(e, str) else e
+                     for c, e in set_exprs.items()}
+            post = [exprs[f.name].cast(f.dataType).alias(f.name)
+                    if f.name in exprs else F.col(f.name)
+                    for f in schema.fields]
+        classified = rows.withColumn("__action", F.when(
+            hit, F.lit("D" if set_exprs is None else "U")).otherwise(F.lit("C")))
+        return write_classified(self, snap, op, params, classified, schema,
+                                pre, post, touched)
 
     def _dv_sidecar_from(self, matches: DataFrame, snap: Snapshot
-                         ) -> tuple[str | None, list[str], int, int]:
+                         ) -> tuple[str | None, list[str], int]:
         """Build one consolidated DV sidecar from ``matches`` (a frame
         carrying ``__file``/``__pos``): the new (file, pos) rows plus
         every prior active DV row, written under a fresh unique dir.
-        Returns (dv_rel, dv'd file list, total rows, prior rows);
-        dv_files empty means nothing matched (caller no-ops and the
-        empty sidecar is removed).
+        Returns (dv_rel, dv'd file list, total rows); dv_files empty
+        means nothing matched (the empty sidecar is removed).
 
-        File URIs map back to log-relative paths by BASENAME
-        (uuid-unique within the table) joined against the snapshot's
-        file list — _metadata.file_path is URL-encoded, so any
-        prefix/substring arithmetic on the raw URI silently mismatches
-        for roots containing spaces etc. The unique sidecar dir (not
-        v=<planned>) keeps two racing DV writers from overwriting each
-        other's staged sidecar."""
-        base_map = self.spark.createDataFrame(
-            [(p.rsplit("/", 1)[-1], p) for p in snap.file_paths],
-            "__bname string, file string")
-        new_rows = (
-            matches.select(
-                F.element_at(F.split(F.col("__file"), "/"), -1)
-                .alias("__bname"),
-                F.col("__pos").cast("long").alias("pos"))
-            .join(F.broadcast(base_map), "__bname")
-            .select("file", "pos"))
+        Each DV commit CONSOLIDATES: every DV'd file re-maps to the new
+        sidecar — one active DV dir at a time, no fragment chain for
+        readers to union.
+
+        The unique sidecar dir (not v=<planned>) keeps two racing DV
+        writers from overwriting each other's staged sidecar."""
+        new_rows = matches.select(self._rel_path().alias("file"),
+                                  F.col("__pos").cast("long").alias("pos"))
         prior_dirs = sorted(set(snap.dvs.values()))
-        # tag provenance BEFORE the dedup so one cached frame serves
-        # the sidecar write AND every stat the commit needs — the
-        # historical shape re-read the written parquet twice and
-        # re-scanned the prior dirs a second time for n_prior: 4 jobs
-        # (plus 2 disk re-reads) where 2 suffice. A (file, pos) row
-        # present in both new and prior has __p=1, so sum(__p) is
-        # exactly |distinct(prior)| and count(*) is the consolidated
-        # total — identical numbers, one pass.
-        tagged = new_rows.withColumn("__p", F.lit(0))
         if prior_dirs:
             prior = (self.spark.read.schema("file string, pos long").parquet(
                         *[self.log.abs_path(d) for d in prior_dirs])
                      .filter(F.col("file").isin(list(snap.dvs)))
                      .select("file", F.col("pos").cast("long").alias("pos")))
-            tagged = tagged.unionByName(prior.withColumn("__p", F.lit(1)))
+            new_rows = new_rows.unionByName(prior)
         # stats ride the sidecar write via observe(): the write is the
-        # single consumer of the dedup'd frame, so the historical
-        # persist + separate stats-agg job (cache fill barrier + one
-        # extra job per DV commit) collapse into the one write pass
+        # single consumer of the dedup'd frame, so no persist and no
+        # separate stats job
         from pyspark.sql import Observation
 
         obs = Observation()
-        dedup = (tagged.groupBy("file", "pos")
-                 .agg(F.max("__p").alias("__p"))
-                 .observe(obs,
-                          F.count(F.lit(1)).alias("n"),
-                          F.coalesce(F.sum("__p"), F.lit(0)).alias("np"),
-                          F.collect_set("file").alias("fs")))
+        dedup = new_rows.distinct().observe(
+            obs, F.count(F.lit(1)).alias("n"),
+            F.collect_set("file").alias("fs"))
         dv_rel = f"{DV_DIR}/{uuid.uuid4().hex}"
         out_dir = self.log.abs_path(dv_rel)
-        dedup.select("file", "pos").coalesce(1) \
-            .write.mode("overwrite").parquet(out_dir)
+        dedup.coalesce(1).write.mode("overwrite").parquet(out_dir)
         stats = obs.get
         dv_files = list(stats["fs"])
         if not dv_files:
             shutil.rmtree(out_dir, ignore_errors=True)
-            return None, [], 0, 0
-        return dv_rel, dv_files, int(stats["n"]), int(stats["np"])
-
-    def _delete_dv(self, pred, pred_str: str, snap: Snapshot,
-                   paths: list[str] | None = None) -> Commit:
-        """DELETE via deletion vectors (Delta parity:
-        delta.enableDeletionVectors): record the (file, row position)
-        of every matching row in a sidecar parquet under ``_dv/v=N``
-        instead of rewriting data files — deleting 1 row from a 1 GB
-        file costs one tiny sidecar write, not a 1 GB rewrite. Readers
-        anti-join the DV rows during the scan (broadcast-sized until
-        purged); OPTIMIZE and purge_deletion_vectors() materialize.
-
-        Each DV commit CONSOLIDATES: the new sidecar carries the fresh
-        positions plus all prior active DV rows, and every DV'd file
-        re-maps to it — one active DV dir at a time, no fragment chain
-        for readers to union."""
-        df = self._read_files(paths if paths is not None
-                              else snap.file_paths, snap,
-                              with_position=True)
-        matches = df.filter(F.coalesce(pred, F.lit(False)))
-        staged_changes = None
-        if self.cdf_enabled(snap):
-            staged_changes = self._stage_changes(
-                matches.drop("__file", "__pos").withColumn(
-                    "_change_type", F.lit("delete")))
-        dv_rel, dv_files, n_total, n_prior = self._dv_sidecar_from(
-            matches, snap)
-        if not dv_files:
-            if staged_changes:
-                shutil.rmtree(self.log.abs_path(staged_changes),
-                              ignore_errors=True)
-            return self._noop_commit("DELETE", {"predicate": pred_str})
-        c = Commit(
-            version=snap.version + 1,
-            timestamp=self.log.monotonic_now_ms(),
-            operation="DELETE",
-            operation_parameters={"predicate": pred_str,
-                                  "deletionVectors": True},
-            dv_updates={f: dv_rel for f in dv_files},
-            metrics={"numDeletedRows": n_total - n_prior,
-                     "numRemovedFiles": 0, "numAddedFiles": 0,
-                     "numDeletionVectorRows": n_total},
-            change_dir=staged_changes,
-        )
-        cleanup = (dv_rel,) + ((staged_changes,) if staged_changes else ())
-        return self._publish(c, snap, cleanup_on_fail=cleanup)
+            return None, [], 0
+        return dv_rel, dv_files, int(stats["n"])
 
     def purge_deletion_vectors(self, target_file_rows: int = 1_000_000) -> Commit:
         """REORG TABLE ... APPLY (PURGE) parity: rewrite every DV'd
@@ -934,7 +861,7 @@ class VersionedTable:
         total = sum(e.num_records for e in snap.files if e.path in snap.dvs)
         nparts = max(1, (total + target_file_rows - 1) // target_file_rows)
         entries = self._materialize(
-            live.repartition(nparts),
+            live.repartition(nparts), snap,
             partition_by=self.partition_columns(snap) or None)
         c = Commit(
             version=self.log.next_version(),
@@ -948,156 +875,26 @@ class VersionedTable:
         )
         return self._publish(c, snap)
 
-    def update(self, set_exprs: dict, predicate=None) -> Commit:
-        """UPDATE (M2 analogue — the reference expresses conditional
-        update through MERGE; provided for API completeness). With
-        ``enableDeletionVectors``, matched rows are DV'd in place and
-        their updated images append as new files — no rewrite of the
-        untouched rows (Delta's DV-enabled UPDATE)."""
-        pred = (F.expr(predicate) if isinstance(predicate, str) else predicate) \
-            if predicate is not None else F.lit(True)
-        snap = self.snapshot()
-        if not snap.files:
-            return self._noop_commit("UPDATE", {})
-        cand = self._candidate_paths(snap, predicate) \
-            if predicate is not None else snap.file_paths
-        if not cand:
-            return self._noop_commit("UPDATE", {})
-        if str(snap.properties.get(DV_PROP, "false")).lower() == "true":
-            return self._update_dv(set_exprs, pred, str(predicate), snap,
-                                   cand)
-        df = self._read_files(cand, snap, with_position=True).drop("__pos")
-        touched = [r["__file"] for r in
-                   df.filter(pred).select("__file").distinct().collect()]
-        if not touched:
-            return self._noop_commit("UPDATE", {})
-        rel_touched = [self._rel_of(p) for p in touched]
-        schema = self.schema(snap)
-        touched_df = self._plain_read(rel_touched, schema, dvs=snap.dvs)
-        cols = []
-        for f in schema.fields:
-            if f.name in set_exprs:
-                expr = set_exprs[f.name]
-                expr = F.expr(expr) if isinstance(expr, str) else expr
-                cols.append(F.when(pred, expr).otherwise(F.col(f.name))
-                            .cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.col(f.name))
-        updated = touched_df.select(*cols)
-        from deltalake_poc_spark.tables.constraints import enforce
-
-        updated = enforce(updated, snap.properties, schema)
-        staged_changes = None
-        if self.cdf_enabled(snap):
-            pre = touched_df.filter(pred).withColumn("_change_type",
-                                                     F.lit("update_preimage"))
-            post = updated.filter(pred).withColumn("_change_type",
-                                                   F.lit("update_postimage"))
-            staged_changes = self._stage_changes(pre.unionByName(post))
-        entries = self._materialize(
-            updated, partition_by=self.partition_columns(snap) or None)
-        c = Commit(
-            version=snap.version + 1,
-            timestamp=self.log.monotonic_now_ms(),
-            operation="UPDATE",
-            operation_parameters={"predicate": str(predicate)},
-            add=entries,
-            remove=rel_touched,
-            metrics={"numAddedFiles": len(entries),
-                     "numRemovedFiles": len(rel_touched)},
-            change_dir=staged_changes,
-        )
-        return self._publish(
-            c, snap,
-            cleanup_on_fail=(staged_changes,) if staged_changes else ())
-
-    def _update_dv(self, set_exprs: dict, pred, pred_str: str,
-                   snap: Snapshot, paths: list[str] | None = None) -> Commit:
-        """UPDATE via deletion vectors: the matched rows' (file, pos)
-        go into a consolidated sidecar (same mechanism as _delete_dv)
-        and their post-images land as NEW appended files — updating 10
-        rows in a 1 GB file costs a tiny sidecar plus a 10-row file,
-        not a 1 GB rewrite. One commit: dv_updates + add, so readers
-        atomically see old rows vanish and new images appear; OCC
-        treats it like any DV-bearing commit (conflicts with rivals
-        whose read set it invalidates)."""
-        schema = self.schema(snap)
-        df = self._read_files(paths if paths is not None
-                              else snap.file_paths, snap,
-                              with_position=True)
-        # persisted: consumed by the sidecar write, the post-image
-        # materialize, and (optionally) the CDF stage — the matched
-        # set is the sparse-update case DVs exist for
-        matches = df.filter(F.coalesce(pred, F.lit(False))).persist()
-        try:
-            if matches.limit(1).count() == 0:
-                return self._noop_commit("UPDATE", {"predicate": pred_str})
-            cols = []
-            for f in schema.fields:
-                if f.name in set_exprs:
-                    expr = set_exprs[f.name]
-                    expr = F.expr(expr) if isinstance(expr, str) else expr
-                    cols.append(expr.cast(f.dataType).alias(f.name))
-                else:
-                    cols.append(F.col(f.name))
-            updated = matches.select(*cols)
-            from deltalake_poc_spark.tables.constraints import enforce
-
-            updated = enforce(updated, snap.properties, schema)
-            staged_changes = None
-            if self.cdf_enabled(snap):
-                pre = matches.drop("__file", "__pos").withColumn(
-                    "_change_type", F.lit("update_preimage"))
-                post = updated.withColumn(
-                    "_change_type", F.lit("update_postimage"))
-                staged_changes = self._stage_changes(pre.unionByName(post))
-            dv_rel, dv_files, n_total, n_prior = self._dv_sidecar_from(
-                matches, snap)
-            if not dv_files:  # unreachable after the match probe; safety
-                if staged_changes:
-                    shutil.rmtree(self.log.abs_path(staged_changes),
-                                  ignore_errors=True)
-                return self._noop_commit("UPDATE", {"predicate": pred_str})
-            entries = self._materialize(
-                updated, partition_by=self.partition_columns(snap) or None)
-            c = Commit(
-                version=snap.version + 1,
-                timestamp=self.log.monotonic_now_ms(),
-                operation="UPDATE",
-                operation_parameters={"predicate": pred_str,
-                                      "deletionVectors": True},
-                add=entries,
-                dv_updates={f: dv_rel for f in dv_files},
-                metrics={"numUpdatedRows": n_total - n_prior,
-                         "numRemovedFiles": 0,
-                         "numAddedFiles": len(entries),
-                         "numDeletionVectorRows": n_total},
-                change_dir=staged_changes,
-            )
-            cleanup = (dv_rel,) + ((staged_changes,)
-                                   if staged_changes else ())
-            return self._publish(c, snap, cleanup_on_fail=cleanup)
-        finally:
-            matches.unpersist()
-
-    def _read_files_with_filename(self, snap: Snapshot) -> DataFrame:
-        return self._read_files(snap.file_paths, snap,
-                                with_position=True).drop("__pos")
-
-    def _rel_of(self, abs_uri: str) -> str:
-        import urllib.parse
-
-        p = abs_uri
-        if p.startswith("file:"):
-            p = p[len("file:"):]
-            while p.startswith("//"):
-                p = p[1:]
-            # _metadata.file_path is a URI: percent-decode so roots
-            # with spaces etc. still resolve to real relative paths
-            # (unquote, not unquote_plus — '+' is literal in paths)
-            p = urllib.parse.unquote(p)
-        root = os.path.abspath(self.log.root)
-        return os.path.relpath(os.path.abspath(p), root)
+    def _rel_path(self):
+        """Column: the log-relative path of each row's ``__file`` URI
+        (``_metadata.file_path``), computed on the executors. Its path
+        part is percent-encoded exactly as Hadoop encodes the table
+        root's own qualified URI, so that encoded root path is stripped
+        and the rest decoded once ('+' is literal in paths, so it is
+        kept from URL-decoding to a space). Scheme and authority go
+        first: Hadoop spells a local root ``file:///r`` where scans
+        report ``file:/r``. A row outside the root fails the job
+        instead of mapping to no file."""
+        jroot = self.spark._jvm.org.apache.hadoop.fs.Path(self.log.root)
+        prefix = jroot.getFileSystem(
+            self.spark._jsc.hadoopConfiguration()).makeQualified(
+                jroot).toUri().getRawPath().rstrip("/") + "/"
+        path = F.regexp_replace(F.col("__file"), "^[A-Za-z][^:/]*:(//[^/]*)?", "")
+        rel = F.url_decode(F.regexp_replace(
+            path.substr(F.lit(len(prefix) + 1), F.length(path)), "\\+", "%2B"))
+        return F.when(path.startswith(prefix), rel).otherwise(F.raise_error(
+            F.concat(F.lit("data file outside the table root: "),
+                     F.col("__file"))))
 
     def _noop_commit(self, op: str, params: dict) -> Commit:
         # no data effects, so losing a version race just replans
@@ -1117,16 +914,17 @@ class VersionedTable:
         raise ConcurrentWriteError(
             f"{self.log.root}: lost the no-op commit race 20 times")
 
-    def _stage_changes(self, change_df: DataFrame) -> str:
+    def _stage_changes(self, change_df: DataFrame,
+                       mapping: dict[str, str]) -> str:
         """Write CDF change files into a UNIQUE staging dir under
         _changes/ and return its rel path — the caller records it in
         the commit (Commit.change_dir). Unique naming (not v=<planned>)
         is load-bearing for OCC: two writers racing for one version
         would otherwise mode('overwrite') the same contested directory
         and the winner's committed change files could be the loser's."""
-        # change files use PHYSICAL names too (like data files), so CDF
-        # reads across later renames realign via the same mapping
-        mapping = self.column_mapping() if self.log.exists() else {}
+        # change files use PHYSICAL names too (like data files; mapping
+        # is logical -> physical), so CDF reads across later renames
+        # realign via the same mapping
         nontrivial = {k: v for k, v in mapping.items() if k != v}
         if nontrivial:
             change_df = change_df.select(*[
@@ -1184,10 +982,9 @@ class VersionedTable:
             from deltalake_poc_spark.tables.zorder import apply_zorder
 
             df = apply_zorder(df, zorder_by, nparts)
-            entries = self._materialize(df, partition_by=pb)
         else:
             df = df.repartition(nparts)
-            entries = self._materialize(df, partition_by=pb)
+        entries = self._materialize(df, snap, partition_by=pb)
         c = Commit(
             version=self.log.next_version(),
             timestamp=self.log.monotonic_now_ms(),

@@ -46,28 +46,8 @@ def main() -> None:
     qs = dict(entrymod.queries())
     qs.update(entrymod.bench_extra_queries())
 
-    # same warmups as bench.py
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode("overwrite").save()
-    import tempfile
-
-    from pyspark.sql import functions as F  # noqa: N812
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from deltalake_poc_spark.tables import VersionedTable
-    wroot = tempfile.mkdtemp(prefix="prof_warm_")
-    wt = VersionedTable.create(
-        spark, wroot, StructType([StructField("id", LongType()),
-                                  StructField("v", LongType())]),
-        properties={"enableChangeDataFeed": "true"})
-    wt.write(spark.range(100).select(F.col("id"), F.col("id").alias("v")),
-             "append")
-    (wt.merge(spark.range(50, 150).select(F.col("id"),
-                                          (F.col("id") * 2).alias("v")),
-              on="id")
-     .when_matched_update_all().when_not_matched_insert_all().execute())
-    wt.read_change_feed(0).write.format("noop").mode("overwrite").save()
+    from bench import warmup
+    warmup(spark, sf_dir, cpus)
 
     results = {}
     for name in names:

@@ -55,7 +55,7 @@ def test_append_rebases_past_concurrent_append(spark, table):
         version=table.log.next_version(),
         timestamp=table.log.monotonic_now_ms(),
         operation="APPEND",
-        add=table._materialize(rows_df(spark, 10)),
+        add=table._materialize(rows_df(spark, 10), snap),
         schema_json=snap.schema_json,
     )
     _steal_version(table, spark, 20)
@@ -71,12 +71,12 @@ def test_delete_rebases_past_concurrent_append(spark, table):
     # re-examined — they did not exist in the delete's snapshot)
     snap = table.snapshot()
     files = snap.file_paths
-    keep = table._plain_read(files, SCHEMA).filter("id <> 2")
+    keep = table._read_files(files, snap).filter("id <> 2")
     planned = Commit(
         version=table.log.next_version(),
         timestamp=table.log.monotonic_now_ms(),
         operation="DELETE",
-        add=table._materialize(keep),
+        add=table._materialize(keep, snap),
         remove=files,
     )
     _steal_version(table, spark, 30)
@@ -89,12 +89,12 @@ def test_delete_rebases_past_concurrent_append(spark, table):
 def test_delete_delete_conflict(spark, table):
     snap = table.snapshot()
     files = snap.file_paths
-    keep = table._plain_read(files, SCHEMA).filter("id <> 2")
+    keep = table._read_files(files, snap).filter("id <> 2")
     planned = Commit(
         version=table.log.next_version(),
         timestamp=table.log.monotonic_now_ms(),
         operation="DELETE",
-        add=table._materialize(keep),
+        add=table._materialize(keep, snap),
         remove=files,
     )
     # rival DELETE rewrites (removes) the same files first
@@ -111,7 +111,7 @@ def test_schema_change_conflicts_stale_append(spark, table):
         version=table.log.next_version(),
         timestamp=table.log.monotonic_now_ms(),
         operation="APPEND",
-        add=table._materialize(rows_df(spark, 11)),
+        add=table._materialize(rows_df(spark, 11), snap),
         schema_json=snap.schema_json,
     )
     rival = VersionedTable.for_path(spark, table.log.root)
@@ -131,7 +131,7 @@ def test_overwrite_never_rebases(spark, table):
         version=table.log.next_version(),
         timestamp=table.log.monotonic_now_ms(),
         operation="OVERWRITE",
-        add=table._materialize(rows_df(spark, 99)),
+        add=table._materialize(rows_df(spark, 99), snap),
         remove=snap.file_paths,
         schema_json=snap.schema_json,
     )
@@ -146,7 +146,7 @@ def test_property_change_conflicts(spark, table):
         version=table.log.next_version(),
         timestamp=table.log.monotonic_now_ms(),
         operation="APPEND",
-        add=table._materialize(rows_df(spark, 12)),
+        add=table._materialize(rows_df(spark, 12), snap),
         schema_json=snap.schema_json,
     )
     VersionedTable.for_path(spark, table.log.root).set_properties(
@@ -215,8 +215,8 @@ def test_stale_plan_after_rival_commit_still_conflicts(spark, table):
     read_version+1 so the intervening commit is always examined."""
     snap = table.snapshot()
     files = snap.file_paths
-    keep = table._plain_read(files, SCHEMA).filter("id <> 2")
-    add = table._materialize(keep)
+    keep = table._read_files(files, snap).filter("id <> 2")
+    add = table._materialize(keep, snap)
     # rival DELETE rewrites the same files FIRST — before we plan our
     # commit version, so our planned version does not collide
     VersionedTable.for_path(spark, table.log.root).delete("id = 3")
@@ -298,7 +298,7 @@ def test_rebase_exhaustion(spark, table):
         version=table.log.next_version(),
         timestamp=table.log.monotonic_now_ms(),
         operation="APPEND",
-        add=table._materialize(rows_df(spark, 13)),
+        add=table._materialize(rows_df(spark, 13), snap),
         schema_json=snap.schema_json,
     )
     log = TableLog(table.log.root)

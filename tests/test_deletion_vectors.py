@@ -191,6 +191,35 @@ def test_dv_on_partitioned_table(spark, tmp_path):
     assert got == {(1, "eu"), (4, "us")}
 
 
+def test_dv_paths_with_uri_escaped_characters(spark, tmp_path):
+    """Sidecar rows name their data files by log-relative path, mapped
+    back from the scan's percent-encoded file URIs: a table root and
+    partition values holding ' ', '+', '%' and '#' must still resolve
+    to the exact files the log lists (a miss would drop or fail the
+    vector), through DELETE, UPDATE and MERGE."""
+    schema = StructType([
+        StructField("id", LongType()),
+        StructField("region", StringType()),
+        StructField("v", StringType()),
+    ])
+    t = VersionedTable.create(
+        spark, str(tmp_path / "a b+c%20d#e"), schema,
+        properties={"enableDeletionVectors": "true"},
+        partition_by=["region"])
+    t.write(spark.createDataFrame(
+        [(1, "e u+1%", "a"), (2, "e u+1%", "b"), (3, "u#s", "c"),
+         (4, "u#s", "d")], schema), "append")
+    t.delete("id = 2")
+    t.update({"v": F.lit("C")}, "id = 3")
+    (t.merge(spark.createDataFrame([(4, "u#s", "D")], schema), on="id")
+     .when_matched_update_all().execute())
+    snap = t.snapshot()
+    assert set(snap.dvs) <= set(snap.file_paths)
+    got = sorted((r["id"], r["region"], r["v"]) for r in t.read().collect())
+    assert got == [(1, "e u+1%", "a"), (3, "u#s", "C"), (4, "u#s", "D")]
+    assert t.count_rows() == 3
+
+
 def test_dv_update_appends_postimages_without_rewrite(spark, dvt):
     """DV-enabled UPDATE: old rows vanish via the vector, post-images
     append as new files; the original data files are untouched."""
@@ -301,6 +330,21 @@ def test_dv_merge_insert_only_writes_no_sidecar(spark, dvt):
     assert c.metrics["numTargetRowsInserted"] == 2
     assert not c.dv_updates and not os.path.isdir(dv_root)
     assert ids_of(dvt) == [1, 2, 3, 4, 5, 10, 11]
+
+
+def test_dv_merge_with_schema_evolution(spark, dvt):
+    """A DV merge that adds a source column reads the target under the
+    evolved schema (old rows show the new column as null)."""
+    src = spark.createDataFrame([(2, "B", "x"), (9, "v9", "y")],
+                                "id long, v string, extra string")
+    c = (dvt.merge(src, on="id").with_schema_evolution()
+         .when_matched_update_all().when_not_matched_insert_all()
+         .execute())
+    assert c.metrics["numTargetRowsUpdated"] == 1
+    assert c.metrics["numTargetRowsInserted"] == 1
+    got = sorted(tuple(r) for r in dvt.read().collect())
+    assert got == [(1, "v1", None), (2, "B", "x"), (3, "v3", None),
+                   (4, "v4", None), (5, "v5", None), (9, "v9", "y")]
 
 
 def test_dv_merge_cdf_parity(spark, tmp_path):

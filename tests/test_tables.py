@@ -115,9 +115,8 @@ def test_merge_conditional_update_skips_unchanged(spark, table):
 @pytest.mark.parametrize("cdf", [True, False], ids=["cdf", "no_cdf"])
 def test_merge_row_metrics_all_four_actions(spark, tmp_path, cdf):
     """One merge with an update, an insert, a delete and copy rows must
-    report all four numTargetRows* counts. With CDF on the copy count
-    is derived (output rows minus updates and inserts); without CDF
-    every count comes from one observe on the materialize pass."""
+    report all four numTargetRows* counts, with CDF on and off: every
+    count comes from the one observe on the data-file write."""
     t = VersionedTable.create(
         spark, str(tmp_path / "t"), SCHEMA,
         properties={"enableChangeDataFeed": str(cdf).lower()})
@@ -143,6 +142,150 @@ def test_merge_row_metrics_all_four_actions(spark, tmp_path, cdf):
     assert rows_of(t.read()) == [
         (1, "n1", "n1@x"), (2, "N2", "n2@x"), (4, "n4", "n4@x"),
         (5, "n5", "n5@x"), (6, "n6", "n6@x")]
+
+
+ROW_METRICS = {
+    ("DELETE", "cow"): {"numDeletedRows": 1, "numCopiedRows": 4,
+                        "numRemovedFiles": 1, "numAddedFiles": 1},
+    ("DELETE", "dv"): {"numDeletedRows": 1, "numCopiedRows": 0,
+                       "numRemovedFiles": 0, "numAddedFiles": 0,
+                       "numDeletionVectorRows": 1},
+    ("UPDATE", "cow"): {"numUpdatedRows": 1, "numCopiedRows": 4,
+                        "numRemovedFiles": 1, "numAddedFiles": 1},
+    ("UPDATE", "dv"): {"numUpdatedRows": 1, "numCopiedRows": 0,
+                       "numRemovedFiles": 0, "numAddedFiles": 1,
+                       "numDeletionVectorRows": 1},
+}
+
+
+@pytest.mark.parametrize("cdf", [True, False], ids=["cdf", "no_cdf"])
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+@pytest.mark.parametrize("op", ["DELETE", "UPDATE"])
+def test_delete_update_row_metrics(spark, tmp_path, op, mode, cdf):
+    """DELETE and UPDATE report Delta's metrics from the same counts as
+    MERGE: one touched row, four copies in copy-on-write (none with
+    deletion vectors), and the file and vector counts of each mode."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), SCHEMA,
+        properties={"enableChangeDataFeed": str(cdf).lower(),
+                    "enableDeletionVectors": str(mode == "dv").lower()})
+    t.write(make_df(spark, [(i, f"n{i}", f"n{i}@x")
+                            for i in range(1, 6)]).coalesce(1))
+    if op == "DELETE":
+        c = t.delete("id = 3")
+        want = [(i, f"n{i}", f"n{i}@x") for i in (1, 2, 4, 5)]
+    else:
+        c = t.update({"name": F.lit("X")}, "id = 3")
+        want = [(i, "X" if i == 3 else f"n{i}", f"n{i}@x")
+                for i in range(1, 6)]
+    assert c.operation == op
+    assert c.metrics == ROW_METRICS[op, mode]
+    assert rows_of(t.read()) == want
+    if cdf:
+        got = sorted((r["_change_type"], r["id"], r["name"])
+                     for r in t.read_change_feed(c.version).collect())
+        assert got == ([("delete", 3, "n3")] if op == "DELETE" else
+                       [("update_postimage", 3, "X"),
+                        ("update_preimage", 3, "n3")])
+
+
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+def test_update_of_predicate_column_keeps_postimage(spark, tmp_path, mode):
+    """An UPDATE that changes the column its predicate reads must still
+    emit the post-image: rows are classified once, on the pre-image."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), SCHEMA,
+        properties={"enableChangeDataFeed": "true",
+                    "enableDeletionVectors": str(mode == "dv").lower()})
+    t.write(make_df(spark, [(1, "a", "a@x"), (2, "b", "b@x")]))
+    c = t.update({"id": "id + 100"}, "id = 2")
+    got = sorted((r["_change_type"], r["id"])
+                 for r in t.read_change_feed(c.version).collect())
+    assert got == [("update_postimage", 102), ("update_preimage", 2)]
+    assert sorted(r["id"] for r in t.read().collect()) == [1, 102]
+
+
+def _row_level_table(spark, tmp_path, dv):
+    """CDF table of ids 1..30 in three files (1-10, 11-20, 21-30)."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "rl"), SCHEMA,
+        properties={"enableChangeDataFeed": "true",
+                    "enableDeletionVectors": str(dv).lower()})
+    for lo in (1, 11, 21):
+        t.write(make_df(spark, [(i, f"n{i}", f"n{i}@x")
+                                for i in range(lo, lo + 10)]).coalesce(1))
+    return t
+
+
+def _row_level_op(spark, t, op):
+    if op == "delete":
+        return t.delete("id = 5")
+    if op == "update":
+        return t.update({"name": F.lit("X")}, "id = 15")
+    src = spark.createDataFrame(
+        [(2, "N2", "n2@x", False), (3, "n3", "n3@x", True),
+         (40, "n40", "n40@x", False)],
+        "id long, name string, email string, __delete boolean")
+    return (t.merge(src, on="id")
+            .when_matched_delete(condition=F.col("s.__delete"))
+            .when_matched_update_all()
+            .when_not_matched_insert_all()
+            .execute())
+
+
+# Spark jobs per operation on _row_level_table with CDF on, measured
+# before DELETE, UPDATE and MERGE shared one executor. COW MERGE (what
+# the CDC applier runs) must stay equal; the others may only drop jobs.
+BASELINE_JOBS = {("delete", "cow"): 4, ("update", "cow"): 4,
+               ("merge", "cow"): 14, ("delete", "dv"): 4,
+               ("update", "dv"): 8, ("merge", "dv"): 16}
+
+
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_row_level_job_counts(spark, tmp_path, op, mode):
+    t = _row_level_table(spark, tmp_path, mode == "dv")
+    sc = spark.sparkContext
+    group = f"row-level-{op}-{mode}-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        _row_level_op(spark, t, op)
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    if (op, mode) == ("merge", "cow"):
+        assert jobs == BASELINE_JOBS[op, mode]
+    else:
+        assert jobs <= BASELINE_JOBS[op, mode]
+
+
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+def test_one_log_replay_per_operation(spark, tmp_path, monkeypatch, mode):
+    """Each append, MERGE, DELETE and UPDATE plans, writes and commits
+    against the one snapshot it pinned: a single TableLog.snapshot call
+    (no checkpoint due, no rival commit)."""
+    from deltalake_poc_spark.tables.log import TableLog
+
+    t = _row_level_table(spark, tmp_path, mode == "dv")
+    calls = []
+    real = TableLog.snapshot
+
+    def counting(self, *a, **kw):
+        calls.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(TableLog, "snapshot", counting)
+    ops = {"append": lambda: t.write(make_df(spark, [(50, "n", "n@x")])),
+           "merge": lambda: _row_level_op(spark, t, "merge"),
+           "delete": lambda: _row_level_op(spark, t, "delete"),
+           "update": lambda: _row_level_op(spark, t, "update")}
+    replays = {}
+    for name, run in ops.items():
+        calls.clear()
+        run()
+        replays[name] = len(calls)
+    assert replays == {name: 1 for name in ops}
 
 
 def test_delete_predicate(spark, table):
