@@ -42,6 +42,7 @@ window).
 
 from __future__ import annotations
 
+import functools
 import shutil
 
 from pyspark.sql import Column, DataFrame
@@ -241,15 +242,19 @@ class MergeBuilder:
             "matchedDelete": self._delete,
             "notMatchedInsertAll": self._insert_all,
         }
+        # the change actions this classification can tag
+        changes = ("U" * self._update_all + "I" * self._insert_all
+                   + "D" * self._delete)
         t_cols = [F.col(f"t.{f.name}").alias(f.name) for f in schema.fields]
         return write_classified(
             t, snap, "MERGE", params, joined.withColumn("__action", action),
-            schema, t_cols, aligned, rel_touched, evolved_json)
+            changes, schema, t_cols, aligned, rel_touched, evolved_json)
 
 
 # operation -> {count: commit metric}: Delta's metric names for each
 # operation, filled from one set of counts. U/I/D/C are rows by
-# action, "out" rows written, "removed"/"added" data files.
+# action, "out" rows written, "removed"/"added" data files. Names
+# only: what an operation writes follows its classification.
 _METRICS = {
     "MERGE": {"U": "numTargetRowsUpdated", "I": "numTargetRowsInserted",
               "D": "numTargetRowsDeleted", "C": "numTargetRowsCopied",
@@ -263,18 +268,25 @@ _METRICS = {
 
 
 def write_classified(table, snap, op: str, params: dict,
-                     classified: DataFrame, schema, pre: list[Column],
-                     post: list[Column], touched: list[str],
-                     schema_json: str | None = None) -> Commit:
+                     classified: DataFrame, changes: str, schema,
+                     pre: list[Column], post: list[Column],
+                     touched: list[str], schema_json: str | None = None,
+                     cache: bool = True) -> Commit:
     """The one row-level write behind MERGE, DELETE and UPDATE.
 
     ``classified`` holds the touched target rows (plus MERGE's source
     rows), each tagged ``__action``: C copy, U update, D delete, I
-    insert, X ignore. ``pre``/``post`` are the pre- and post-image
-    columns over it, aligned to ``schema`` (the schema being written);
-    in DV mode the frame also carries the target's ``__file``/``__pos``.
-    ``touched`` lists the files a copy-on-write commit replaces.
-    Everything reads ``snap``, the operation's pinned snapshot.
+    insert, X ignore. ``changes`` names the change actions (of U, I,
+    D) the classification can tag. ``pre``/``post`` are the pre- and
+    post-image columns over it, aligned to ``schema`` (the schema
+    being written); in DV mode the frame also carries the target's
+    ``__file``/``__pos``. ``touched`` lists the files a copy-on-write
+    commit replaces. Everything reads ``snap``, the operation's pinned
+    snapshot. ``cache=False`` marks a frame that re-reads cheaper than
+    it caches: every row of plain file scans (copy-on-write
+    DELETE/UPDATE). Otherwise a frame that a second job reads is
+    persisted: MERGE's join, and the DV DELETE/UPDATE matches, which
+    are a few rows filtered out of whole-file scans.
 
     - Copy-on-write: the C/U/I rows (post-image for U/I) are
       materialized and replace ``touched``.
@@ -285,10 +297,11 @@ def write_classified(table, snap, op: str, params: dict,
     - With ``enableChangeDataFeed`` the D, U-pre, U-post and I rows are
       staged as change files first.
 
-    One observe() on the data-file write counts U/I/D/C, so no job
-    exists just to count. The commit carries dv_updates + add + remove
-    so readers flip atomically; staged change files and sidecar are
-    removed if it loses a conflict."""
+    One observe() on the data-file write counts U/I/D/C; a DV DELETE
+    writes no data file and takes its count from the sidecar write's
+    own observe, so no job exists just to count. The commit carries dv_updates + add + remove so readers flip
+    atomically; staged change files and sidecar are removed if it
+    loses a conflict."""
     from pyspark.sql import Observation
 
     from deltalake_poc_spark.tables.constraints import enforce
@@ -299,58 +312,66 @@ def write_classified(table, snap, op: str, params: dict,
     if dv:
         params = {**params, "deletionVectors": True}
     act = F.col("__action")
-    # MERGE's frame is a join: persist it when a second job reads it.
-    # DELETE/UPDATE's is a filter over a file scan, cheaper to re-read
-    # than to cache. A single consumer never persists: the cache fill
-    # is pure overhead there AND freezes the join's partitioning
-    # (cached plans skip AQE output coalescing), which turned a
-    # 172-row merge output into 32 near-empty files
-    shared = (cdf or dv) and op == "MERGE"
+    # the jobs that read the frame: CDF staging, the data-file write
+    # (DV mode writes post-images only) and the DV sidecar
+    write_rows = not dv or bool(set(changes) & {"U", "I"})
+    write_dv = dv and bool(set(changes) & {"U", "D"})
+    # a single reader never persists: the cache fill is pure overhead
+    # there AND freezes a join's partitioning (cached plans skip AQE
+    # output coalescing), which turned a 172-row merge output into 32
+    # near-empty files. Medians of 6 runs, local[4], 4M rows in 8
+    # files, 1% of rows changed, CDF on: copy-on-write DELETE 5.4 s
+    # cached against 2.9 s re-read (UPDATE 5.5 against 3.2); DV UPDATE
+    # 1.8 s cached against 2.4 s for three scans (DELETE 1.3 against 1.4)
+    shared = cache and cdf + write_rows + write_dv > 1
     if shared:
         classified = classified.persist()
-    # U/I/D/C ride the data-file write via one observe(). Only that
-    # job reads the observed node: its filters and projections sit
-    # above it, so it sees every classified row, and no exchange above
-    # it can be dropped from the executed plan
-    obs = Observation()
-    counted = classified.observe(obs, *[
-        F.coalesce(F.sum(F.when(act == a, 1)), F.lit(0)).alias(a)
-        for a in ("U", "I", "D", "C")])
     mapping = {f.name: t._physical(f) for f in schema.fields}
-    staged, dv_rel, dv_files, n_dv = None, None, [], 0
+    staged, dv_rel, dv_files, n_dv, entries = None, None, [], 0, []
+    n = dict.fromkeys("UIDC", 0)
     try:
-        if cdf:
-            # one leg per change type the operation can produce (the
-            # actions it reports): DELETE scans D only, UPDATE U only
-            changes = None
-            for a, cols, ct in (("I", post, "insert"), ("D", pre, "delete"),
-                                ("U", pre, "update_preimage"),
-                                ("U", post, "update_postimage")):
-                if a not in _METRICS[op]:
-                    continue
-                leg = classified.filter(act == a).select(*cols) \
+        if cdf and changes:
+            legs = [classified.filter(act == a).select(*cols)
                     .withColumn("_change_type", F.lit(ct))
-                changes = leg if changes is None else changes.unionByName(leg)
-            staged = t._stage_changes(changes, mapping)
-        if dv:
-            rows = counted.filter(act.isin("U", "I")).select(*post)
-        else:
-            rows = counted.filter(act.isin("C", "U", "I")).select(*[
-                F.when(act.isin("U", "I"), b).otherwise(a).alias(f.name)
-                for a, b, f in zip(pre, post, schema.fields)])
-        # CHECK/NOT NULL guards ride the same pass (no extra job); rows
-        # that violate fail the write
-        entries = t._materialize(
-            enforce(rows, snap.properties, schema), snap,
-            partition_by=t.partition_columns(snap) or None, mapping=mapping)
-        n = dict(obs.get)
-        if dv and not (n["U"] or n["I"] or n["D"]):
-            if staged:
-                shutil.rmtree(t.log.abs_path(staged), ignore_errors=True)
-            return t._noop_commit(op, params)
-        if dv and (n["U"] or n["D"]):
-            dv_rel, dv_files, n_dv = t._dv_sidecar_from(
+                    for a, cols, ct in (("I", post, "insert"),
+                                        ("D", pre, "delete"),
+                                        ("U", pre, "update_preimage"),
+                                        ("U", post, "update_postimage"))
+                    if a in changes]
+            staged = t._stage_changes(
+                functools.reduce(DataFrame.unionByName, legs), mapping)
+        if write_rows:
+            # only this write reads the observed node: its filters and
+            # projections sit above it, so it sees every classified
+            # row, and no exchange above it can be dropped from the
+            # executed plan
+            obs = Observation()
+            counted = classified.observe(obs, *[
+                F.coalesce(F.sum(F.when(act == a, 1)), F.lit(0)).alias(a)
+                for a in ("U", "I", "D", "C")])
+            if dv:
+                rows = counted.filter(act.isin("U", "I")).select(*post)
+            else:
+                rows = counted.filter(act.isin("C", "U", "I")).select(*[
+                    F.when(act.isin("U", "I"), b).otherwise(a).alias(f.name)
+                    for a, b, f in zip(pre, post, schema.fields)])
+            # CHECK/NOT NULL guards ride the same pass (no extra job);
+            # rows that violate fail the write
+            entries = t._materialize(
+                enforce(rows, snap.properties, schema), snap,
+                partition_by=t.partition_columns(snap) or None,
+                mapping=mapping)
+            n = dict(obs.get)
+        if write_dv and (not write_rows or n["U"] or n["D"]):
+            dv_rel, dv_files, n_dv, n_new = t._dv_sidecar_from(
                 classified.filter(act.isin("U", "D")), snap)
+            if not write_rows:  # DV DELETE: each new position is a delete
+                n["D"] = n_new
+        if dv and not (n["U"] or n["I"] or n["D"]):
+            for d in (staged, dv_rel):
+                if d:
+                    shutil.rmtree(t.log.abs_path(d), ignore_errors=True)
+            return t._noop_commit(op, params)
     finally:
         if shared:
             classified.unpersist()

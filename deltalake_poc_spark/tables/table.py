@@ -272,22 +272,13 @@ class VersionedTable:
                        if self.partition_columns(snap) else None),
             with_position=bool(dvs) or with_position)
         if dvs:
-            # anti-join on (file BASENAME, pos): basenames are
-            # uuid-unique within a table, and unlike the full
-            # _metadata.file_path URI they carry no URL-encodable
-            # characters — matching on a reconstructed absolute URI
-            # breaks silently for table roots with spaces etc.
             dv_df = (self.spark.read.schema("file string, pos long").parquet(
                         *sorted({self.log.abs_path(d) for d in dvs.values()}))
                      .filter(F.col("file").isin(list(dvs)))
-                     .select(F.element_at(F.split(F.col("file"), "/"), -1)
-                             .alias("__dvf"),
+                     .select(F.col("file").alias("__dvf"),
                              F.col("pos").alias("__dvp")))
-            df = df.join(dv_df,
-                         (F.element_at(F.split(F.col("__file"), "/"), -1)
-                          == F.col("__dvf"))
-                         & (F.col("__pos") == F.col("__dvp")),
-                         "left_anti")
+            df = df.join(dv_df, (self._rel_path() == F.col("__dvf"))
+                         & (F.col("__pos") == F.col("__dvp")), "left_anti")
             if not with_position:
                 df = df.drop("__file", "__pos")
         return df
@@ -801,18 +792,21 @@ class VersionedTable:
             post = [exprs[f.name].cast(f.dataType).alias(f.name)
                     if f.name in exprs else F.col(f.name)
                     for f in schema.fields]
-        classified = rows.withColumn("__action", F.when(
-            hit, F.lit("D" if set_exprs is None else "U")).otherwise(F.lit("C")))
-        return write_classified(self, snap, op, params, classified, schema,
-                                pre, post, touched)
+        change = "D" if set_exprs is None else "U"
+        classified = rows.withColumn(
+            "__action", F.when(hit, F.lit(change)).otherwise(F.lit("C")))
+        return write_classified(self, snap, op, params, classified, change,
+                                schema, pre, post, touched,
+                                cache=self._dv_enabled(snap))
 
     def _dv_sidecar_from(self, matches: DataFrame, snap: Snapshot
-                         ) -> tuple[str | None, list[str], int]:
+                         ) -> tuple[str | None, list[str], int, int]:
         """Build one consolidated DV sidecar from ``matches`` (a frame
         carrying ``__file``/``__pos``): the new (file, pos) rows plus
         every prior active DV row, written under a fresh unique dir.
-        Returns (dv_rel, dv'd file list, total rows); dv_files empty
-        means nothing matched (the empty sidecar is removed).
+        Returns (dv_rel, dv'd file list, total rows, new rows);
+        dv_files empty means no vector at all (the empty sidecar is
+        removed).
 
         Each DV commit CONSOLIDATES: every DV'd file re-maps to the new
         sidecar — one active DV dir at a time, no fragment chain for
@@ -820,33 +814,40 @@ class VersionedTable:
 
         The unique sidecar dir (not v=<planned>) keeps two racing DV
         writers from overwriting each other's staged sidecar."""
-        new_rows = matches.select(self._rel_path().alias("file"),
-                                  F.col("__pos").cast("long").alias("pos"))
+        tagged = matches.select(self._rel_path().alias("file"),
+                                F.col("__pos").cast("long").alias("pos"),
+                                F.lit(1).alias("__new"))
         prior_dirs = sorted(set(snap.dvs.values()))
         if prior_dirs:
             prior = (self.spark.read.schema("file string, pos long").parquet(
                         *[self.log.abs_path(d) for d in prior_dirs])
                      .filter(F.col("file").isin(list(snap.dvs)))
-                     .select("file", F.col("pos").cast("long").alias("pos")))
-            new_rows = new_rows.unionByName(prior)
-        # stats ride the sidecar write via observe(): the write is the
-        # single consumer of the dedup'd frame, so no persist and no
-        # separate stats job
+                     .select("file", F.col("pos").cast("long").alias("pos"),
+                             F.lit(0).alias("__new")))
+            tagged = tagged.unionByName(prior)
+        # stats ride the sidecar write via observe(), above the dedup
+        # (an observe below it is lost when AQE drops an empty shuffle
+        # stage): the write is the single consumer of the dedup'd
+        # frame, so no persist and no separate stats job. A position
+        # already in a prior vector is not new
         from pyspark.sql import Observation
 
         obs = Observation()
-        dedup = new_rows.distinct().observe(
-            obs, F.count(F.lit(1)).alias("n"),
-            F.collect_set("file").alias("fs"))
+        dedup = tagged.groupBy("file", "pos").agg(
+            F.min("__new").alias("__new")).observe(
+                obs, F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum("__new"), F.lit(0)).alias("new"),
+                F.collect_set("file").alias("fs"))
         dv_rel = f"{DV_DIR}/{uuid.uuid4().hex}"
         out_dir = self.log.abs_path(dv_rel)
-        dedup.coalesce(1).write.mode("overwrite").parquet(out_dir)
+        dedup.drop("__new").coalesce(1).write.mode("overwrite").parquet(
+            out_dir)
         stats = obs.get
         dv_files = list(stats["fs"])
         if not dv_files:
             shutil.rmtree(out_dir, ignore_errors=True)
-            return None, [], 0
-        return dv_rel, dv_files, int(stats["n"])
+            return None, [], 0, 0
+        return dv_rel, dv_files, int(stats["n"]), int(stats["new"])
 
     def purge_deletion_vectors(self, target_file_rows: int = 1_000_000) -> Commit:
         """REORG TABLE ... APPLY (PURGE) parity: rewrite every DV'd

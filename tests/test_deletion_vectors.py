@@ -332,6 +332,32 @@ def test_dv_merge_insert_only_writes_no_sidecar(spark, dvt):
     assert ids_of(dvt) == [1, 2, 3, 4, 5, 10, 11]
 
 
+@pytest.mark.parametrize("cdf", [True, False], ids=["cdf", "nocdf"])
+def test_dv_delete_without_match_commits_noop(spark, dvt, cdf):
+    """A DV DELETE that matches no live row (none at all, or only rows
+    its vectors already hide) commits a no-op and leaves no sidecar or
+    staged change files behind."""
+    if cdf:
+        dvt.set_properties({"enableChangeDataFeed": "true"})
+    roots = [os.path.join(dvt.log.root, d) for d in ("_dv", "_changes")]
+
+    def listing():
+        return [sorted(os.listdir(d)) if os.path.isdir(d) else []
+                for d in roots]
+
+    def assert_noop(pred):
+        before = listing()
+        c = dvt.delete(pred)
+        assert c.metrics == {"numDeletedRows": 0} and not c.dv_updates
+        assert listing() == before
+
+    assert_noop("id % 100 = 99")  # no vectors yet; stats cannot prune it
+    dvt.delete("id = 1")
+    assert_noop("id = 1")
+    assert_noop("id % 100 = 99")
+    assert ids_of(dvt) == [2, 3, 4, 5]
+
+
 def test_dv_merge_with_schema_evolution(spark, dvt):
     """A DV merge that adds a source column reads the target under the
     evolved schema (old rows show the new column as null)."""

@@ -241,23 +241,62 @@ BASELINE_JOBS = {("delete", "cow"): 4, ("update", "cow"): 4,
                ("update", "dv"): 8, ("merge", "dv"): 16}
 
 
+def _job_ids(spark, group, run) -> list[int]:
+    """Run ``run()`` under job group ``group``; its Spark job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("mode", ["cow", "dv"])
 @pytest.mark.parametrize("op", ["delete", "update", "merge"])
 def test_row_level_job_counts(spark, tmp_path, op, mode):
     t = _row_level_table(spark, tmp_path, mode == "dv")
-    sc = spark.sparkContext
-    group = f"row-level-{op}-{mode}-{tmp_path.name}"
-    sc.setJobGroup(group, group)
-    try:
-        _row_level_op(spark, t, op)
-    finally:
-        for k in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(k, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = len(_job_ids(spark, f"row-level-{op}-{mode}-{tmp_path.name}",
+                        lambda: _row_level_op(spark, t, op)))
     if (op, mode) == ("merge", "cow"):
         assert jobs == BASELINE_JOBS[op, mode]
     else:
         assert jobs <= BASELINE_JOBS[op, mode]
+
+
+# Parquet rows read per operation on _row_level_table (every scan of
+# a data, change or sidecar file counts), measured before DELETE,
+# UPDATE and MERGE shared one executor. Job counts miss a second scan
+# of the same files inside one job or a job that replaced another.
+BASELINE_ROWS_READ = {
+    (True, "delete", "cow"): 30, (True, "update", "cow"): 40,
+    (True, "merge", "cow"): 15, (True, "delete", "dv"): 20,
+    (True, "update", "dv"): 15, (True, "merge", "dv"): 17,
+    (False, "delete", "cow"): 20, (False, "update", "cow"): 20,
+    (False, "merge", "cow"): 10, (False, "delete", "dv"): 10,
+    (False, "update", "dv"): 13, (False, "merge", "dv"): 13}
+
+
+@pytest.mark.parametrize("cdf", [True, False], ids=["cdf", "nocdf"])
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_row_level_rows_read(spark, tmp_path, op, mode, cdf):
+    t = _row_level_table(spark, tmp_path, mode == "dv")
+    if not cdf:
+        t.set_properties({"enableChangeDataFeed": "false"})
+    ids = _job_ids(spark, f"rows-read-{op}-{mode}-{cdf}-{tmp_path.name}",
+                   lambda: _row_level_op(spark, t, op))
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # stage metrics arrive async
+    read = 0
+    for j in ids:
+        for s in sc.statusTracker().getJobInfo(j).stageIds:
+            attempts = jsc.statusStore().stageData(s, False, None, False, None)
+            read += sum(attempts.apply(i).inputRecords()
+                        for i in range(attempts.size()))
+    assert read <= BASELINE_ROWS_READ[cdf, op, mode]
 
 
 @pytest.mark.parametrize("mode", ["cow", "dv"])
