@@ -71,9 +71,6 @@ class CDCApplier:
         self.standard_mirror_path = standard_mirror_path
         self._tables: dict[str, VersionedTable] = {}
         self._merges_since_compact: dict[str, int] = {}
-        # incremental applied-batch-id scan state (see applied_batch_ids)
-        self._applied_ids: set[str] = set()
-        self._applied_scanned_to: int = -1
 
     # ------------------------------------------------------------- tables
 
@@ -135,25 +132,10 @@ class CDCApplier:
     # -------------------------------------------------------------- apply
 
     def applied_batch_ids(self) -> set[str]:
-        """Batch ids already appended to the audit table (from commit
-        operationParameters) — the foreachBatch idempotence marker.
-
-        Incremental: commits are immutable once published, so only the
-        log tail SINCE the last scan is read. Without this, a
-        streaming job calling apply_batch per trigger re-reads the
-        whole commit history every batch — O(N²) metadata reads over
-        the job's lifetime (N = one commit per micro-batch)."""
-        audit = self.audit_table()
-        if not audit.log.exists():
-            return set(self._applied_ids)
-        latest = audit.log.latest_version()
-        for c in audit.log.commits(start=self._applied_scanned_to + 1,
-                                   end=latest):
-            bid = c.operation_parameters.get("batchId")
-            if bid is not None:
-                self._applied_ids.add(bid)
-        self._applied_scanned_to = latest
-        return set(self._applied_ids)
+        """Batch ids already appended to the audit table — the
+        foreachBatch idempotence marker (an incremental log-tail scan;
+        see VersionedTable.applied_batch_ids)."""
+        return self.audit_table().applied_batch_ids()
 
     def apply_batch(self, events: DataFrame,
                     tables: list[str] | None = None,
@@ -163,11 +145,12 @@ class CDCApplier:
         append all to the audit table, then MERGE per-table snapshots.
         Returns per-table merge metrics.
 
-        ``batch_id`` makes the AUDIT append exactly-once under
-        at-least-once delivery (Spark replays the last un-committed
-        micro-batch after a crash): the id is stamped into the append
-        commit and replays of an already-appended batch skip the
-        append. Snapshot MERGEs are idempotent by construction (same
+        The audit append is VersionedTable.append_batch, which sizes its
+        files and makes it exactly-once under at-least-once delivery
+        (Spark replays the last un-committed micro-batch after a
+        crash): ``batch_id`` is stamped into the append commit and a
+        replay of an already-appended batch skips the append. Snapshot
+        MERGEs are idempotent by construction (same
         latest-event-per-key result), so they simply re-converge.
         This closes the reference's replay-duplicates gap on the audit
         path (its audit table is plain append; T3 in SURVEY.md §2.9).
@@ -180,35 +163,7 @@ class CDCApplier:
         if own_persist:
             events = events.persist()
         try:
-            skip_audit = (batch_id is not None
-                          and str(batch_id) in self.applied_batch_ids())
-            if not skip_audit:
-                extra = {"batchId": str(batch_id)} if batch_id is not None else None
-                # Right-size the audit append WITHOUT a shuffle: the
-                # envelope frame keeps its upstream partitioning
-                # (spread/scan parallelism), so a small batch landed as
-                # one near-empty file PER CORE — 64 x 65 KB files for
-                # two micro-batches at sf0.1, each a commit-time footer
-                # read and a scan entry for every later audit read.
-                # r12 used a REBALANCE hint; its AQE exchange moved the
-                # whole envelope frame per batch and measured ~0.3 s/
-                # append slower than a plain coalesce to a bytes-
-                # derived file target (interleaved A/B, 5 pairs). The
-                # target comes from plan statistics (driver-side, no
-                # job): tiny batches coalesce to one file, big batches
-                # keep one partition per ~64 MB, so write parallelism
-                # returns exactly when the bytes justify it (guide §6).
-                to_write = events
-                try:
-                    nbytes = int(events._jdf.queryExecution()
-                                 .optimizedPlan().stats().sizeInBytes())
-                    target = max(1, nbytes // (64 << 20) + 1)
-                    if events.rdd.getNumPartitions() > target:
-                        to_write = events.coalesce(target)
-                except Exception:
-                    pass  # unsizable plan: append as-is
-                self.audit_table().write(to_write, "append",
-                                         extra_params=extra)
+            self.audit_table().append_batch(events, batch_id)
             if tables is None:
                 seen = [r["source_table"] for r in
                         events.select("source_table").distinct().collect()]

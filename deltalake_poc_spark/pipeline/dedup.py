@@ -1105,7 +1105,8 @@ def incremental_minhash_dedup(store, new_docs: DataFrame,
 
     Returns one row per judged new document:
     (doc_id, n_store_dups, n_peer_dups, kept). When ``commit`` is
-    true, kept signatures are appended to the store before returning;
+    true, kept signatures are appended to the store before returning
+    (VersionedTable.append_batch, which sizes the files);
     the decision plan reads the store at its pre-append version, so
     re-executing the returned DataFrame is stable.
 
@@ -1193,50 +1194,25 @@ def incremental_minhash_dedup(store, new_docs: DataFrame,
     n_peer = (_verify(cand_peer, "peer_id").groupBy("new_id")
               .agg(F.count(F.lit(1)).alias("n_peer_dups")))
     decisions = (
-        sigs_new.select(F.col("doc_id").alias("new_id"))
+        sigs_new.select(F.col("doc_id").alias("new_id"), "sig")
         .join(n_store, "new_id", "left")
         .join(n_peer, "new_id", "left")
         .select(
             F.col("new_id").alias("doc_id"),
             F.coalesce("n_store_dups", F.lit(0)).alias("n_store_dups"),
             F.coalesce("n_peer_dups", F.lit(0)).alias("n_peer_dups"),
+            "sig",
         )
         .withColumn("kept", (F.col("n_store_dups") == 0)
                     & (F.col("n_peer_dups") == 0))
     )
     if commit:
-        # decisions are one slim row per batch doc — persist so the
+        # one row per batch doc with its signature — persist so the
         # append job and the caller's later execution of the returned
-        # frame both skip re-running the candidate joins
+        # frame both skip re-running the candidate joins, and the
+        # append takes the kept signatures straight from it
         decisions = decisions.persist()
-        kept_ids = decisions.filter("kept").select(
-            F.col("doc_id").alias("_keep_id"))
-        # Right-size the append's file count from the ACTUAL kept
-        # rows (~64 MB target files): a micro-batch's survivors are
-        # often KBs while session parallelism is 32+, and one-tiny-
-        # file-per-task floods the store with 40 KB files while
-        # paying a commit rename + log add-action PER FILE (measured
-        # ~1/3 of this operator's gate wall). The count runs over the
-        # cached decision frame — work the append job was about to do
-        # anyway — and at production batch sizes the same formula
-        # yields many right-sized files, so write parallelism returns
-        # exactly when it matters. Bytes/row follows the schema (8
-        # for the long doc_id + 8 per sig element, plus another 8 of
-        # per-row parquet encoding-overhead headroom) instead of a
-        # hardcoded constant, so wider signatures still hit the 64 MB
-        # target; repartition (not coalesce) keeps the semi-join's
-        # post-shuffle stage at full parallelism — coalesce(1) would
-        # fold the whole final projection into one task, serializing
-        # mid-size batches, while the round-robin shuffle moves only
-        # the rows being written anyway.
-        n_kept = kept_ids.count()
-        row_bytes = 16 + 8 * num_hashes
-        n_files = max(1, -(-(n_kept * row_bytes) // (64 << 20)))
-        store.write(
-            sigs_new.join(kept_ids,
-                          F.col("doc_id") == F.col("_keep_id"), "left_semi")
-            .repartition(n_files),
-            "append")
+        store.append_batch(decisions.filter("kept").select("doc_id", "sig"))
         # the append materialized the decisions cache; release the
         # scratch caches NOW. This matters beyond memory: Spark's
         # CacheManager substitutes cached subtrees into ANY later query
@@ -1247,7 +1223,7 @@ def incremental_minhash_dedup(store, new_docs: DataFrame,
         sigs_new.unpersist()
         if grams is not None:
             grams.unpersist()
-    return decisions
+    return decisions.drop("sig")
 
 
 def streaming_dedup_minhash(docs_stream: DataFrame, store_root: str,

@@ -82,26 +82,26 @@ def moment_profile(emb: DataFrame, id_col: str = "vec_id",
             .agg(F.count(F.lit(1)).alias("__n"),
                  F.sum("__vi").alias("__sv"),
                  F.expr("array(" + ",".join(
-                     f"sum(__q[{j}] * __vi)" for j in range(dim))
+                     f"sum(get(__q, {j}) * __vi)" for j in range(dim))
                      + ") AS __m"))
             .collect())
-    seen_dim = 1 + max(int(r["__i"]) for r in rows)
-    if seen_dim != dim:
-        # ragged input: some vector was longer than the probed dim, so
-        # the __m arrays above truncated its cross-moments — the
-        # result would be silently wrong, not just incomplete
+    if len(rows) != dim or len({int(r["__n"]) for r in rows}) != 1:
+        # ragged input: a longer vector adds indexes past the probed
+        # dim (its cross-moments would be truncated); a shorter, empty
+        # or null one leaves some index short of rows and contributes
+        # NULL products (get() past its end) that sum() skips. Either
+        # way the moments would be silently wrong
         raise ValueError(
-            f"moment_profile: ragged embedding dims (probed {dim}, "
-            f"saw index up to {seen_dim - 1}); fixed-dimension "
-            "vectors required")
+            f"moment_profile: ragged embedding dims (probed {dim}); "
+            "fixed-dimension non-null vectors required")
     M = [[0] * dim for _ in range(dim)]
     S = [0] * dim
     n = 0
     for r in rows:
         i = int(r["__i"])
         vals = list(r["__m"])
-        if len(vals) != dim or any(v is None for v in vals):
-            # shorter vectors contribute NULL cells to the array sums
+        if any(v is None for v in vals):
+            # an index whose elements are all NULL sums to NULL
             raise ValueError(
                 "moment_profile: ragged/null embedding dims; "
                 "fixed-dimension non-null vectors required")

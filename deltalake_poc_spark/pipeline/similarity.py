@@ -650,11 +650,11 @@ def streaming_pq_ingest(emb_stream: DataFrame, store_root: str,
     writer pattern (streaming ingest + OCC commits + periodic
     OPTIMIZE; pipeline/dedup.py:streaming_dedup_minhash).
 
-    Exactly-once under at-least-once replay: the micro-batch id is
-    stamped into the append commit's operationParameters, and a
-    replayed batch whose id already appears in the log tail skips the
-    append (the cdc/apply.py:applied_batch_ids idiom — incremental
-    tail scan, not a full log replay per trigger).
+    Exactly-once under at-least-once replay and right-sized files:
+    each append is VersionedTable.append_batch with the micro-batch id,
+    so a replayed batch whose id is already in the log appends nothing.
+    One store object serves every batch, so its batch-id scan reads
+    only the log tail since the previous trigger.
 
     Readers are never torn: an ANN query sees the store at one
     version (OCC snapshot), so results are consistent-at-a-version
@@ -663,62 +663,15 @@ def streaming_pq_ingest(emb_stream: DataFrame, store_root: str,
     (compaction is one more OCC commit — concurrent queries pin
     their version, concurrent appends rebase past it).
     """
-    state = {"scanned_to": -1, "ids": set()}
-
-    def _applied(store) -> set[str]:
-        latest = store.log.latest_version()
-        for c in store.log.commits(start=state["scanned_to"] + 1,
-                                   end=latest):
-            bid = c.operation_parameters.get("batchId")
-            if bid is not None:
-                state["ids"].add(bid)
-        state["scanned_to"] = latest
-        return state["ids"]
+    store = pq_codes_store_init(
+        emb_stream.sparkSession, store_root,
+        dim=len(codebooks) * len(codebooks[0][0]), m=len(codebooks))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        dim = len(codebooks) * len(codebooks[0][0])
-        store = pq_codes_store_init(spark, store_root, dim=dim,
-                                    m=len(codebooks))
-        if str(batch_id) in _applied(store):
-            return  # replayed batch: already committed
         encoded = pq_encode(batch_df.select("vec_id", vec_col), codebooks,
                             vec_col)
-        # Right-size the append's file count from the batch's actual
-        # rows (~64 MB target files, the signature-store append rule):
-        # without this each micro-batch lands as session-parallelism
-        # near-empty files — at 32 cores a 667-row batch wrote 32
-        # ~2 KB files, each costing a commit-time footer-stats read
-        # and a listing/scan entry for every later batch and the
-        # OPTIMIZE pass (measured: 64-path listing jobs mid-stream).
-        # The row count comes from the batch files' parquet FOOTERS
-        # (driver-side metadata, exact for a file-source micro-batch —
-        # batches are whole files), so the sizing costs NO Spark job
-        # on the hot per-trigger path; non-file sources fall back to
-        # one count job. At production batch sizes the same formula
-        # yields many right-sized files so write parallelism returns
-        # exactly when the bytes justify it.
-        n_rows = -1
-        try:
-            infiles = batch_df.inputFiles()
-            if infiles:
-                import urllib.parse as _up
-
-                import pyarrow.parquet as _pq
-                n_rows = sum(
-                    _pq.read_metadata(
-                        _up.unquote(_up.urlparse(f).path)
-                        if "://" in f or f.startswith("file:") else f
-                    ).num_rows
-                    for f in infiles)
-        except Exception:
-            n_rows = -1
-        if n_rows < 0:
-            n_rows = batch_df.count()
-        row_bytes = 16 + 4 * len(codebooks)
-        n_files = max(1, -(-(n_rows * row_bytes) // (64 << 20)))
-        store.write(encoded.repartition(n_files), "append",
-                    extra_params={"batchId": str(batch_id)})
+        if store.append_batch(encoded, batch_id) is None:
+            return  # replayed batch: already committed
         if optimize_every and (batch_id + 1) % optimize_every == 0:
             store.optimize()
 

@@ -80,7 +80,8 @@ def _fields_of(schema: StructType) -> list[tuple[str, str, str]]:
 class _FilePartition(InputPartition):
     def __init__(self, abs_path: str, fields: list[tuple[str, str, str]],
                  partition_values: dict[str, str],
-                 constants: dict[str, object] | None = None):
+                 constants: dict[str, object] | None = None,
+                 drop_positions: list[int] | None = None):
         self.abs_path = abs_path
         # [(logical name, simpleString type, physical name)] — the type
         # drives partition-value casting, the physical name resolves
@@ -90,6 +91,24 @@ class _FilePartition(InputPartition):
         # column -> fixed value (CDF stamps: _change_type for derived
         # commits, _commit_version/_commit_timestamp always)
         self.constants = constants or {}
+        # deletion-vector row indexes to EXCLUDE (read driver-side from
+        # the snapshot's sidecars)
+        self.drop_positions = drop_positions or []
+
+
+def _dv_positions(root: str, dvs: dict[str, str]) -> dict[str, list[int]]:
+    """Active deletion-vector positions per data file: ``dvs`` maps a
+    file to the (file, pos) parquet sidecar dir holding its vector."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, list[int]] = {}
+    for d in sorted(set(dvs.values())):
+        rows = pq.read_table(os.path.join(root, d),
+                             columns=["file", "pos"]).to_pydict()
+        for f, p in zip(rows["file"], rows["pos"]):
+            if dvs.get(f) == d:
+                out.setdefault(f, []).append(p)
+    return out
 
 
 class VersionedTableStreamReader(DataSourceStreamReader):
@@ -122,7 +141,8 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         log = self._log()
         parts: list[InputPartition] = []
         for c in log.commits(start["version"] + 1, end["version"]):
-            if c.remove and not self.ignore_changes:
+            # a DV commit hides rows without removing a file
+            if (c.remove or c.dv_updates) and not self.ignore_changes:
                 raise ValueError(
                     f"commit v{c.version} ({c.operation}) rewrites data; "
                     "streaming a versioned table requires append-only "
@@ -188,6 +208,12 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         import pyarrow.parquet as pq
 
         table = pq.read_table(partition.abs_path)
+        if partition.drop_positions:
+            import pyarrow as pa
+
+            dead = set(partition.drop_positions)
+            table = table.filter(pa.array(
+                [i not in dead for i in range(table.num_rows)]))
         cols = {}
         n = table.num_rows
         present = set(table.schema.names)
@@ -227,10 +253,12 @@ class VersionedTableBatchReader(DataSourceReader):
 
     def partitions(self) -> Sequence[InputPartition]:
         snap = TableLog(self.root).snapshot(self.version, self.timestamp_ms)
+        dead = _dv_positions(self.root, snap.dvs)
         return [
             _FilePartition(os.path.join(self.root, e.path),
                            self.schema_fields,
-                           dict(e.partition) if e.partition else {})
+                           dict(e.partition) if e.partition else {},
+                           drop_positions=dead.get(e.path))
             for e in snap.files
         ]
 

@@ -47,6 +47,9 @@ class VersionedTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.log = TableLog(root)
+        # incremental batch-id tail scan state (see applied_batch_ids)
+        self._batch_ids: set[str] = set()
+        self._batch_ids_scanned_to = -1
 
     # ------------------------------------------------------------------ DDL
 
@@ -401,20 +404,22 @@ class VersionedTable:
         # staging write: shuffle-derived frames (merge sources, MV
         # aggregations) coalesce to the 64MB advisory target; frames
         # without a live shuffle (plain appends of scan-partitioned
-        # data) keep their scan parallelism.
+        # data) keep their scan parallelism. Set on the frame's session:
+        # a foreachBatch frame runs in the stream's clone of self.spark.
+        conf = df.sparkSession.conf
         pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
         try:
-            old_pf = self.spark.conf.get(pf_key)
+            old_pf = conf.get(pf_key)
         except Exception:
             old_pf = None
         try:
-            self.spark.conf.set(pf_key, "false")
+            conf.set(pf_key, "false")
             writer.parquet(staging)
         finally:
             if old_pf is None:
-                self.spark.conf.unset(pf_key)
+                conf.unset(pf_key)
             else:
-                self.spark.conf.set(pf_key, old_pf)
+                conf.set(pf_key, old_pf)
         # Per-file blooms are computed by ONE distributed job over the
         # staging dir BEFORE the files move to their final names —
         # write tasks read the data, the driver receives only the
@@ -558,6 +563,63 @@ class VersionedTable:
         # check in write_commit_with_rebase catches exactly that).
         # overwrite replaces the table it READ: never rebases.
         return self._publish(commit, snap, table_level=(op == "OVERWRITE"))
+
+    def applied_batch_ids(self) -> set[str]:
+        """Batch ids that :meth:`append_batch` stamped into this table's
+        log. Incremental: commits are immutable, so each call reads
+        only the log tail since the previous call on this object."""
+        if self.log.exists():
+            latest = self.log.latest_version()
+            for c in self.log.commits(start=self._batch_ids_scanned_to + 1,
+                                      end=latest):
+                bid = c.operation_parameters.get("batchId")
+                if bid is not None:
+                    self._batch_ids.add(bid)
+            self._batch_ids_scanned_to = latest
+        return set(self._batch_ids)
+
+    def append_batch(self, df: DataFrame, batch_id=None) -> Commit | None:
+        """Append one micro-batch, right-sized and replay-checked.
+
+        Replay: ``batch_id`` is stamped into the commit's
+        operationParameters (Delta's application transaction id); a
+        batch whose id is already in the log is not written and the
+        call returns None, so a replayed micro-batch appends once.
+
+        Sizing: ``df.coalesce(ceil(bytes / advisory))``, the bytes from
+        the optimized plan's statistics (driver-side, no job), advisory
+        = ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. A small
+        batch lands as one file; a coalesce never adds partitions.
+        Fallback: a plan with no estimate (its ``sizeInBytes``, or any
+        leaf's, >= ``spark.sql.defaultSizeInBytes``, e.g. an RDD-backed
+        or Kafka frame) takes ``df.hint("rebalance")``, which AQE sizes
+        to the same advisory target inside the write's
+        ``parallelismFirst=false`` scope. Callers that need their own
+        partitioning use :meth:`write`."""
+        extra = None
+        if batch_id is not None:
+            if str(batch_id) in self.applied_batch_ids():
+                return None
+            extra = {"batchId": str(batch_id)}
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        sql_conf = df.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
+        unknown = conf.defaultSizeInBytes()
+        qe = df._jdf.queryExecution()
+        nbytes = int(qe.optimizedPlan().stats().sizeInBytes())
+        # a leaf without an estimate reports defaultSizeInBytes, which
+        # the operators above it scale (a parsed RDD-backed frame came
+        # to ~0.7x of it): the total is then no size at all
+        leaves = qe.analyzed().collectLeaves()
+        if nbytes >= unknown or any(
+                int(leaves.apply(i).stats().sizeInBytes()) >= unknown
+                for i in range(leaves.size())):
+            sized = df.hint("rebalance")
+        else:
+            target = int(conf.getConf(
+                sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()))
+            sized = df.coalesce(min(max(1, -(-nbytes // target)),
+                                    2**31 - 1))
+        return self.write(sized, "append", extra_params=extra)
 
     def set_properties(self, props: dict) -> Commit:
         """M8 — ALTER TABLE SET TBLPROPERTIES (create-delta-tables.py:119-137)."""

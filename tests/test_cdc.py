@@ -179,6 +179,31 @@ def test_apply_idempotent_replay(spark, tmp_path):
     assert applier.audit_table().read().count() == 4
 
 
+def test_audit_append_of_unsized_batch_is_one_file_per_table(spark,
+                                                             tmp_path):
+    """An RDD-backed events frame has no plan size estimate; its audit
+    append must still land one file per source_table directory, not
+    one per input partition."""
+    from collections import Counter
+
+    tables = ["customers", "products", "orders"]
+    parsed = parse_debezium(_raw(spark, [
+        _msg("c", i, table=t, lsn=10 + i, after={"id": i})
+        for i in range(8) for t in tables])).collect()
+    # 8 slices of 3 consecutive rows: every partition holds every table
+    events = spark.createDataFrame(
+        spark.sparkContext.parallelize(parsed, 8), S.CDC_EVENTS_SCHEMA)
+    assert events.rdd.getNumPartitions() == 8
+    applier = CDCApplier(spark, str(tmp_path))
+    applier.apply_batch(events, tables=[], batch_id="b0")
+    audit = applier.audit_table()
+    per_dir = Counter(e.partition["source_table"]
+                      for e in audit.snapshot().files)
+    assert set(per_dir) == set(tables)
+    assert max(per_dir.values()) == 1, per_dir
+    assert audit.read().count() == 24
+
+
 def test_schema_evolution_mid_stream(spark, tmp_path):
     """SURVEY.md §7.6: a new column appearing in after_data mid-stream
     extends the snapshot schema (mergeSchema semantics); earlier rows

@@ -106,3 +106,23 @@ def test_degenerate_identical_vectors(spark):
     out = pca_project(df, iters=6).collect()
     # zero centered variance -> zero eigenvector -> all scores 0
     assert {r["pc1_score"] for r in out} == {0}
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_short_vector_raises(spark, ansi):
+    """A vector shorter than the first row's dimension contributes
+    NULL cross-products that sum() skips (or, under ANSI, fails with
+    an index error): moment_profile must refuse the input itself
+    rather than return silently wrong moments."""
+    df = spark.createDataFrame(
+        [(0, [0.5, -0.25, 0.125, 1.0])]
+        + [(i, [0.25 * i, 0.5, -1.0, 0.75]) for i in range(1, 8)]
+        + [(8, [1.0, 2.0])],
+        "vec_id: long, embedding: array<float>")
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        with pytest.raises(ValueError, match="ragged"):
+            moment_profile(df)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)

@@ -186,3 +186,39 @@ def test_stream_timestamp_decimal_partition_values_typed(spark, tmp_path):
     batch = spark.read.format("versioned_table").option("path", root).load()
     assert sorted((r["ts"], r["amt"]) for r in batch.collect()) == [
         (ts1, Decimal("10.50")), (ts2, Decimal("99.99"))]
+
+
+def _dv_deleted_table(spark, root):
+    """10 rows, then a deletion-vector DELETE of ids 0-2."""
+    t = VersionedTable.create(
+        spark, root, spark.createDataFrame([], "id long, v string").schema,
+        properties={"enableDeletionVectors": "true"})
+    t.write(spark.range(10).select(
+        "id", F.col("id").cast("string").alias("v")))
+    t.delete("id < 3")
+    assert t.snapshot().dvs  # a vector, not a rewrite
+    return t
+
+
+def test_batch_format_read_applies_deletion_vectors(spark, tmp_path):
+    register_stream_source(spark)
+    root = str(tmp_path / "t")
+    t = _dv_deleted_table(spark, root)
+    reader = spark.read.format("versioned_table").option("path", root)
+    got = sorted((r["id"], r["v"]) for r in reader.load().collect())
+    assert got == sorted((r["id"], r["v"]) for r in t.read().collect())
+    assert [i for i, _ in got] == list(range(3, 10))
+    before = reader.option("versionAsOf", t.version() - 1).load()
+    assert before.count() == 10
+
+
+def test_stream_rejects_dv_commit_without_ignore_changes(spark, tmp_path):
+    register_stream_source(spark)
+    root = str(tmp_path / "t")
+    _dv_deleted_table(spark, root)
+    with pytest.raises(Exception, match="ignoreChanges|rewrites"):
+        _run(spark, root, str(tmp_path / "o1"), str(tmp_path / "c1"))
+    # with ignoreChanges the DELETE adds no rows: the append's 10 stay
+    out = _run(spark, root, str(tmp_path / "o2"), str(tmp_path / "c2"),
+               ignore_changes=True)
+    assert out.count() == 10

@@ -58,6 +58,53 @@ def test_append_read_empty_schema(spark, table):
     assert rows_of(table.read()) == [(1, "a", "a@x"), (2, "b", "b@x"), (3, "c", "c@x")]
 
 
+def test_append_batch_replay_is_noop(spark, table):
+    df = make_df(spark, [(1, "a", "a@x"), (2, "b", "b@x")])
+    first = table.append_batch(df, batch_id="b1")
+    assert first.operation_parameters["batchId"] == "b1"
+    assert table.append_batch(df, batch_id="b1") is None
+    # the log, not the object, is the record: a fresh handle sees it
+    again = VersionedTable.for_path(spark, table.log.root)
+    assert again.append_batch(df, batch_id="b1") is None
+    assert [c.version for c in table.log.commits()] == [0, first.version]
+    assert table.applied_batch_ids() == {"b1"}
+    assert table.read().count() == 2
+
+
+def test_append_batch_sizes_files_write_keeps_partitioning(spark, table):
+    df = make_df(spark, [(i, f"n{i}", f"e{i}") for i in range(64)])
+    assert len(table.write(df.repartition(8)).add) == 8
+    # a few KB against the 64 MB advisory size: one file
+    assert len(table.append_batch(df.repartition(8)).add) == 1
+
+
+def test_append_batch_sizes_unsized_frame_inside_foreach_batch(spark,
+                                                                tmp_path):
+    """foreachBatch runs in the stream's clone of the session: the
+    write's AQE sizing scope must reach it, or the rebalance fallback
+    for a frame with no size estimate splits ~13 MB over every core."""
+    import os
+
+    src = spark.range(200_000).selectExpr(
+        "id", "sha2(cast(id AS string), 256) AS s")  # incompressible
+    t = VersionedTable.create(spark, str(tmp_path / "t"), src.schema)
+    os.makedirs(tmp_path / "in")
+    (tmp_path / "in" / "a.json").write_text('{"a": 1}\n')
+    added = []
+
+    def process(batch_df, batch_id):
+        bs = batch_df.sparkSession
+        rdd_backed = bs.createDataFrame(src.rdd, src.schema)
+        added.append(t.append_batch(rdd_backed, batch_id).add)
+
+    q = (spark.readStream.schema("a long").json(str(tmp_path / "in"))
+         .writeStream.foreachBatch(process).trigger(availableNow=True)
+         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
+    q.awaitTermination(120)
+    assert [len(a) for a in added] == [1]
+    assert t.read().count() == 200_000
+
+
 def test_overwrite_and_time_travel(spark, table):
     table.write(make_df(spark, [(1, "a", "a@x")]))            # v1
     table.write(make_df(spark, [(2, "b", "b@x")]), "overwrite")  # v2
@@ -263,6 +310,29 @@ def test_row_level_job_counts(spark, tmp_path, op, mode):
         assert jobs == BASELINE_JOBS[op, mode]
     else:
         assert jobs <= BASELINE_JOBS[op, mode]
+
+
+# Spark jobs for one committing incremental_minhash_dedup call below,
+# measured when the signature-store append counted its kept rows first
+BASELINE_DEDUP_COMMIT_JOBS = 25
+
+
+def test_incremental_dedup_commit_job_count(spark, tmp_path):
+    from deltalake_poc_spark.pipeline import dedup
+
+    # ingest batches arrive as files, so the plan carries a size
+    spark.createDataFrame(
+        [(i, " ".join(f"w{i % 5}_{k}" for k in range(12)) + f" tail{i}")
+         for i in range(20)], "doc_id long, text string"
+    ).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    store = dedup.signature_store_init(spark, str(tmp_path / "store"))
+    dedup.signature_store_append(store, docs.filter("doc_id < 10"))
+    ids = _job_ids(spark, f"dedup-commit-{tmp_path.name}",
+                   lambda: dedup.incremental_minhash_dedup(
+                       store, docs.filter("doc_id >= 10")))
+    assert store.version() == 2
+    assert len(ids) < BASELINE_DEDUP_COMMIT_JOBS
 
 
 # Parquet rows read per operation on _row_level_table (every scan of
