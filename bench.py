@@ -81,11 +81,18 @@ def main() -> None:
     ))
 
     import __spark_entry__ as entrymod
+    from tests.oracle_util import duck_connection
 
     qs = dict(entrymod.queries())
     # benched-but-not-driver-gated operators (non-SQL-recomputable
     # outputs, e.g. the minibatch k-means fit) still get timed here
     qs.update(entrymod.bench_extra_queries())
+    # delta_read reads a reference table that not every host has; its
+    # absence costs that one row, recorded with its reason
+    skipped: dict[str, str] = {}
+    if absent := entrymod._ref_delta_absent():
+        skipped["delta_read"] = absent
+        del qs["delta_read"]
     warmup(spark, sf_dir, cpus)
 
     # median-of-N per query: single-shot numbers swing up to 3x when a
@@ -135,26 +142,15 @@ def main() -> None:
     # DuckDB at the same scale (the reference publishes no numbers, so
     # the DuckDB-oracle runtime is the effective baseline; BASELINE.md)
     oracle_timings: dict[str, float] = {}
-    try:
-        import duckdb
-
-        con = duckdb.connect()
-        for t in ("region", "nation", "customer", "supplier", "part",
-                  "orders", "lineitem", "events", "documents", "embeddings"):
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(path):
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-        for name, sql in entrymod.oracle_sql().items():
-            runs = []
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                con.execute(sql).fetchall()
-                runs.append(time.perf_counter() - t0)
-            oracle_timings[name] = _median(runs)
-        con.close()
-    except Exception:
-        oracle_timings = {}
+    con = duck_connection(sf_dir)
+    for name, sql in entrymod.oracle_sql().items():
+        runs = []
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            con.execute(sql).fetchall()
+            runs.append(time.perf_counter() - t0)
+        oracle_timings[name] = _median(runs)
+    con.close()
 
     stat1 = _cpu_stat()
     regime1 = _host_regime()
@@ -184,6 +180,7 @@ def main() -> None:
         "total_min_sec": round(sum(timings_min.values()), 3),
         "queries": timings,
         "queries_min": timings_min,
+        "skipped": skipped,
         "oracle_duckdb_sec": oracle_timings,
         "oracle_total_sec": round(sum(oracle_timings.values()), 3),
         # these entries are full WRITE pipelines (ingest + merge + table

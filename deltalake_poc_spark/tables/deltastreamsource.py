@@ -47,7 +47,7 @@ from pyspark.sql.types import StructType
 from deltalake_poc_spark.tables import roaring
 from deltalake_poc_spark.tables.deltareader import DeltaLakeReader
 from deltalake_poc_spark.tables.streamsource import (
-    _cast_partition_value,
+    _cast_partition_value, _FilePartition, _read_live,
 )
 
 FORMAT_NAME = "standard_delta"
@@ -63,28 +63,10 @@ def _fields_of(schema: StructType) -> list[tuple[str, str, str]]:
     ]
 
 
-class _DeltaFilePartition(InputPartition):
-    def __init__(self, abs_path: str, fields: list[tuple[str, str, str]],
-                 partition_values: dict[str, str],
-                 drop_positions: list[int] | None = None):
-        self.abs_path = abs_path
-        self.fields = fields
-        self.partition_values = partition_values
-        # deletion-vector row indexes to EXCLUDE (decoded driver-side;
-        # DV cardinality is metadata-sized by purge policy)
-        self.drop_positions = drop_positions or []
-
-
-def _read_partition(partition: _DeltaFilePartition) -> Iterator[tuple]:
+def _read_partition(partition: _FilePartition) -> Iterator[tuple]:
     import datetime
 
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(partition.abs_path)
-    if partition.drop_positions:
-        dead = set(partition.drop_positions)
-        table = table.take(
-            [i for i in range(table.num_rows) if i not in dead])
+    table = _read_live(partition)
     n = table.num_rows
     present = set(table.schema.names)
     cols = {}
@@ -160,14 +142,14 @@ class StandardDeltaStreamReader(DataSourceStreamReader):
                 dv = a.get("deletionVector")
                 positions = (roaring.read_descriptor(self.root, dv)
                              if dv and dv.get("storageType") else None)
-                parts.append(_DeltaFilePartition(
+                parts.append(_FilePartition(
                     r._data_path(a["path"]),
                     self.schema_fields,
                     dict(a.get("partitionValues") or {}),
-                    positions))
+                    drop_positions=positions))
         return parts
 
-    def read(self, partition: _DeltaFilePartition) -> Iterator[tuple]:
+    def read(self, partition: _FilePartition) -> Iterator[tuple]:
         yield from _read_partition(partition)
 
     def commit(self, end: dict) -> None:
@@ -193,12 +175,12 @@ class StandardDeltaBatchReader(DataSourceReader):
             dv = snap.dvs.get(path)
             positions = (roaring.read_descriptor(self.root, dv)
                          if dv else None)
-            parts.append(_DeltaFilePartition(
+            parts.append(_FilePartition(
                 r._data_path(path), self.schema_fields,
-                dict(pvals), positions))
+                dict(pvals), drop_positions=positions))
         return parts
 
-    def read(self, partition: _DeltaFilePartition) -> Iterator[tuple]:
+    def read(self, partition: _FilePartition) -> Iterator[tuple]:
         yield from _read_partition(partition)
 
 

@@ -92,7 +92,8 @@ class _FilePartition(InputPartition):
         # commits, _commit_version/_commit_timestamp always)
         self.constants = constants or {}
         # deletion-vector row indexes to EXCLUDE (read driver-side from
-        # the snapshot's sidecars)
+        # the snapshot's sidecars, or decoded from a standard Delta
+        # table's vectors)
         self.drop_positions = drop_positions or []
 
 
@@ -109,6 +110,22 @@ def _dv_positions(root: str, dvs: dict[str, str]) -> dict[str, list[int]]:
             if dvs.get(f) == d:
                 out.setdefault(f, []).append(p)
     return out
+
+
+def _read_live(partition: _FilePartition):
+    """A partition's parquet file without its deletion-vector rows.
+    Dropped by boolean mask: a ``take`` of the live indexes breaks on a
+    file whose vector deletes every row (pyarrow has no kernel for the
+    empty, null-typed index list)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(partition.abs_path)
+    if partition.drop_positions:
+        dead = set(partition.drop_positions)
+        table = table.filter(pa.array(
+            [i not in dead for i in range(table.num_rows)]))
+    return table
 
 
 class VersionedTableStreamReader(DataSourceStreamReader):
@@ -205,15 +222,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.abs_path)
-        if partition.drop_positions:
-            import pyarrow as pa
-
-            dead = set(partition.drop_positions)
-            table = table.filter(pa.array(
-                [i not in dead for i in range(table.num_rows)]))
+        table = _read_live(partition)
         cols = {}
         n = table.num_rows
         present = set(table.schema.names)

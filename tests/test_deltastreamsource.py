@@ -149,3 +149,66 @@ def test_stream_reference_table_with_ignore_changes(spark, tmp_path):
     assert out.count() == expected
     # schema came through the protocol replay (incl. cdc metadata cols)
     assert "email" in out.columns and "__cdc_operation" in out.columns
+
+
+def _fully_deleted_fixture(root: str) -> str:
+    """A standard Delta table whose vectors delete whole files: v0 adds
+    file ``a`` (ids 0..4) and file ``b`` (ids 10..12) BORN with a vector
+    over every row; v1 gives ``a`` a vector over every row too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from deltalake_poc_spark.tables import roaring
+
+    ids = {"a.parquet": range(5), "b.parquet": range(10, 13)}
+    os.makedirs(os.path.join(root, "_delta_log"))
+    for name, rows in ids.items():
+        pq.write_table(pa.table({"id": pa.array(list(rows), pa.int64())}),
+                       os.path.join(root, name))
+    full = {n: roaring.inline_descriptor(list(range(len(r))))
+            for n, r in ids.items()}
+
+    def add(name, dv=None):
+        a = {"path": name, "partitionValues": {}, "size": 1,
+             "modificationTime": 1700000000000, "dataChange": True}
+        return {"add": {**a, "deletionVector": dv} if dv else a}
+
+    schema = json.dumps({"type": "struct", "fields": [
+        {"name": "id", "type": "long", "nullable": True, "metadata": {}}]})
+    commits = [
+        [{"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                       "readerFeatures": ["deletionVectors"],
+                       "writerFeatures": ["deletionVectors"]}},
+         {"metaData": {"id": "full-dv", "format": {"provider": "parquet",
+                                                   "options": {}},
+                       "schemaString": schema, "partitionColumns": [],
+                       "configuration": {}}},
+         add("a.parquet"), add("b.parquet", full["b.parquet"])],
+        [{"remove": {"path": "a.parquet", "dataChange": True,
+                     "deletionTimestamp": 1700000001000}},
+         add("a.parquet", full["a.parquet"])],
+    ]
+    for v, actions in enumerate(commits):
+        with open(os.path.join(root, "_delta_log", f"{v:020d}.json"),
+                  "w") as fh:
+            fh.writelines(json.dumps(a) + "\n" for a in actions)
+    return root
+
+
+def test_fully_deleted_files_read_as_empty(spark, tmp_path):
+    """A vector over every row of a file leaves no live row to read:
+    batch time travel and a stream over a file born with such a vector
+    both skip the file instead of failing on it."""
+    register_delta_stream_source(spark)
+    root = _fully_deleted_fixture(str(tmp_path / "delta"))
+
+    def ids(version):
+        return sorted(r["id"] for r in spark.read.format("standard_delta")
+                      .option("path", root)
+                      .option("versionAsOf", str(version)).load().collect())
+
+    assert ids(0) == [0, 1, 2, 3, 4]
+    assert ids(1) == []
+    out = _run(spark, root, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+               ignore_changes=True)
+    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2, 3, 4]

@@ -17,7 +17,11 @@ from tests.oracle_util import compare_to_oracle
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 QUERIES = entrymod.queries()
-ORACLES = entrymod.oracle_sql()
+
+
+@pytest.fixture(scope="module")
+def oracles():
+    return entrymod.oracle_sql()
 
 
 def test_entry_smoke(spark):
@@ -27,16 +31,45 @@ def test_entry_smoke(spark):
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_vs_oracle(spark, name):
+def test_query_vs_oracle(spark, oracles, name):
+    if name == "delta_read" and (absent := entrymod._ref_delta_absent()):
+        pytest.skip(absent)
     df = QUERIES[name](spark, SF_DIR)
-    if name not in ORACLES:
+    if name not in oracles:
         assert df.count() >= 0  # rows-only check (non-SQL-expressible op)
         return
-    compare_to_oracle(df, ORACLES[name], SF_DIR)
+    compare_to_oracle(df, oracles[name], SF_DIR)
+
+
+def test_absent_reference_delta_costs_only_delta_read(
+        spark, tmp_path, monkeypatch):
+    """The reference Delta table is the fixture of one query: without
+    it oracle_sql() still builds, lacks exactly delta_read and the
+    reason names the missing path; a standard Delta table in its place
+    brings delta_read's oracle back."""
+    from deltalake_poc_spark.tables import VersionedTable
+    from deltalake_poc_spark.tables.deltaexport import export_standard_delta
+
+    missing = str(tmp_path / "absent")
+    monkeypatch.setattr(entrymod, "_REF_DELTA", missing)
+    without = entrymod.oracle_sql()
+    reason = entrymod._ref_delta_absent()
+    assert reason is not None and missing in reason
+
+    present = str(tmp_path / "ref")
+    t = VersionedTable.create(spark, str(tmp_path / "src"),
+                              spark.createDataFrame([], "id long").schema)
+    export_standard_delta(t, os.path.join(present, "customers"))  # v0 only
+    monkeypatch.setattr(entrymod, "_REF_DELTA", present)
+    assert entrymod._ref_delta_absent() is None
+    with_fixture = entrymod.oracle_sql()
+    assert "delta_read" not in without
+    assert set(with_fixture) == set(without) | {"delta_read"}
+    assert all(with_fixture[k] == sql for k, sql in without.items())
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
-def test_tf_idf_ln_agreement_pinned(spark, sf):
+def test_tf_idf_ln_agreement_pinned(spark, oracles, sf):
     """tf_idf is the one gate query whose hash depends on cross-engine
     transcendental agreement: ROUND(tf*(ln((n+1)/(df+1))+1), 4) only
     matches DuckDB if a <=1-ulp ln() difference cannot flip the 4dp
@@ -46,7 +79,7 @@ def test_tf_idf_ln_agreement_pinned(spark, sf):
     the property that makes (1) robust rather than lucky."""
     sf_dir = f"/root/testdata/{sf}"
     df = QUERIES["tf_idf"](spark, sf_dir)
-    compare_to_oracle(df, ORACLES["tf_idf"], sf_dir)
+    compare_to_oracle(df, oracles["tf_idf"], sf_dir)
 
     from pyspark.sql import functions as F
 
@@ -67,7 +100,7 @@ def test_tf_idf_ln_agreement_pinned(spark, sf):
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
-def test_dsir_ln_agreement_pinned(spark, sf):
+def test_dsir_ln_agreement_pinned(spark, oracles, sf):
     """dsir_select hashes on ROUND(Σ per-gram ln-ratio, 4): both
     engines fold the same doubles in the same (sorted-bucket,
     left-assoc) order, so only ≤1-ulp ln() differences can diverge —
@@ -82,7 +115,7 @@ def test_dsir_ln_agreement_pinned(spark, sf):
 
     sf_dir = f"/root/testdata/{sf}"
     compare_to_oracle(QUERIES["dsir_select"](spark, sf_dir),
-                      ORACLES["dsir_select"], sf_dir)
+                      oracles["dsir_select"], sf_dir)
 
     un = dsir_weights(load_table(spark, sf_dir, "documents"), "src0",
                       n_buckets=1024, rounded=False)
@@ -93,7 +126,7 @@ def test_dsir_ln_agreement_pinned(spark, sf):
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
-def test_bm25_ln_agreement_pinned(spark, sf):
+def test_bm25_ln_agreement_pinned(spark, oracles, sf):
     """bm25_search hashes on ROUND(fixed-order float chain, 4); the
     only cross-engine wiggle is ≤1-ulp ln() per idf. Pin the oracle
     comparison AND the margin invariant at every SF (measured margins
@@ -105,7 +138,7 @@ def test_bm25_ln_agreement_pinned(spark, sf):
 
     sf_dir = f"/root/testdata/{sf}"
     compare_to_oracle(QUERIES["bm25_search"](spark, sf_dir),
-                      ORACLES["bm25_search"], sf_dir)
+                      oracles["bm25_search"], sf_dir)
 
     un = bm25_topk(load_table(spark, sf_dir, "documents"),
                    "fast table scan query", rounded=False)
@@ -134,7 +167,7 @@ def test_bm25_ranks_term_density(spark):
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
-def test_lm_perplexity_ln_agreement_pinned(spark, sf):
+def test_lm_perplexity_ln_agreement_pinned(spark, oracles, sf):
     """lm_perplexity hashes on ROUND(−Σ ln p / n, 4) with the sum
     folded in sorted-bigram order; pin the oracle comparison and the
     rounding-margin invariant at every SF."""
@@ -145,7 +178,7 @@ def test_lm_perplexity_ln_agreement_pinned(spark, sf):
 
     sf_dir = f"/root/testdata/{sf}"
     compare_to_oracle(QUERIES["lm_perplexity"](spark, sf_dir),
-                      ORACLES["lm_perplexity"], sf_dir)
+                      oracles["lm_perplexity"], sf_dir)
 
     un = (lm_bigram_score(load_table(spark, sf_dir, "documents"),
                           rounded=False)
@@ -383,7 +416,7 @@ def test_dsir_selects_target_domain(spark):
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
-def test_quality_classifier_margins_pinned(spark, sf):
+def test_quality_classifier_margins_pinned(spark, oracles, sf):
     """quality_classifier's keep decides on the raw margin z
     (bit-deterministic double chain), but z and score are ROUNDED
     outputs (6dp / 4dp) and score passes through exp(). Pin the margin
@@ -397,7 +430,7 @@ def test_quality_classifier_margins_pinned(spark, sf):
 
     sf_dir = f"/root/testdata/{sf}"
     compare_to_oracle(QUERIES["quality_classifier"](spark, sf_dir),
-                      ORACLES["quality_classifier"], sf_dir)
+                      oracles["quality_classifier"], sf_dir)
 
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens_col()
