@@ -254,4 +254,8 @@ def warmup(spark, sf_dir: str, cpus: str) -> None:
 
 
 if __name__ == "__main__":
-    main()
+    from deltalake_poc_spark.cdc import pglive
+
+    # wal_cdc_pipeline starts the shared PostgreSQL fixture on first use
+    with pglive.stopped_after():
+        main()

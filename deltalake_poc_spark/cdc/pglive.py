@@ -13,11 +13,15 @@ The server is shared per-machine under a fixture dir and reused
 across invocations/processes: first caller initdbs into a scratch dir
 and atomically renames it into place; everyone pg_ctl-starts
 idempotently (a concurrent/second start fails benignly when already
-running). Callers isolate by table/slot name, never by server.
+running). Callers isolate by table/slot name, never by server. A
+process that should leave no server behind runs under
+``stopped_after()``, which stops the server on exit unless it was
+already up on entry (bench.py does).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import subprocess
@@ -47,6 +51,33 @@ def _su(cmd: str, check: bool = True) -> subprocess.CompletedProcess:
     return r
 
 
+def running(root: str = FIXTURE) -> bool:
+    """Whether a server is up on the fixture dir ``root``."""
+    data = os.path.join(root, "data")
+    return os.path.isdir(data) and _su(
+        f"{PG_BIN}/pg_ctl -D {data} status", check=False).returncode == 0
+
+
+def stop(root: str = FIXTURE) -> None:
+    """Stop the server on ``root`` if one is up (fast shutdown: open
+    sessions are disconnected)."""
+    if running(root):
+        _su(f"{PG_BIN}/pg_ctl -D {os.path.join(root, 'data')} -m fast stop")
+
+
+@contextlib.contextmanager
+def stopped_after(root: str = FIXTURE):
+    """On exit, stop the server on ``root`` unless it was already up on
+    entry: a run that starts the shared server leaves none behind, and
+    a run that found it up leaves it up for whoever started it."""
+    was_up = running(root)
+    try:
+        yield
+    finally:
+        if not was_up:
+            stop(root)
+
+
 class EphemeralPostgres:
     """Get-or-start the shared local server; run SQL through psql."""
 
@@ -67,16 +98,14 @@ class EphemeralPostgres:
                 os.rename(build, self.root)
             except OSError:
                 shutil.rmtree(build, ignore_errors=True)  # lost the race
-        if _su(f"{PG_BIN}/pg_ctl -D {self.data} status",
-               check=False).returncode != 0:
-            # not running; a concurrent start racing us fails benignly
+        if not running(self.root):
+            # a concurrent start racing us fails benignly
             _su(f"{PG_BIN}/pg_ctl -D {self.data} "
                 f"-o \"-k {self.sock} -c listen_addresses='' "
                 f"-c wal_level=logical -c max_replication_slots=8 "
                 f"-c max_wal_senders=8 -c timezone=UTC\" "
                 f"-l {self.root}/log start", check=False)
-            if _su(f"{PG_BIN}/pg_ctl -D {self.data} status",
-                   check=False).returncode != 0:
+            if not running(self.root):
                 raise RuntimeError("postgres fixture failed to start")
 
     def sql(self, statement: str, db: str = "postgres",

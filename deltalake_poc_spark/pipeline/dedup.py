@@ -373,8 +373,11 @@ def winnow_pairs(docs: DataFrame, n: int = 4, window: int = 4,
         # n-gram hash, window minima) plus the df-cap window shuffle
         # (the image_neardup dhash rule; 16 B/row cache vs triple
         # recompute at any scale)
-        posting = scratch_persist(f"dedup.winnow.posting.{portable}",
-                                  posting)
+        # keyed by every parameter that shapes the posting, so calls
+        # with different ones keep their own cache
+        posting = scratch_persist(
+            f"dedup.winnow.posting.{n}.{window}.{max_df}.{portable}",
+            posting)
         counts = posting.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("n_fps"))
     else:
@@ -463,7 +466,7 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
     # (tokenize + 64 hash folds per doc) — the winnow/dhash rule
     from deltalake_poc_spark.analytics.scratch import scratch_persist
     banded = scratch_persist(
-        f"dedup.minhash.banded.{num_hashes}.{bands}", banded)
+        f"dedup.minhash.banded.{num_hashes}.{bands}.{shingle_n}", banded)
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
         a.join(b, (F.col("a.band") == F.col("b.band"))

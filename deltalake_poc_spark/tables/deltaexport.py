@@ -144,25 +144,6 @@ def _needs_protocol(emitted: tuple | None, want: tuple) -> bool:
             or not want[2] <= emitted[2] or not want[3] <= emitted[3])
 
 
-def _sidecar_positions(root: str, dv_rel: str,
-                       cache: dict) -> dict[str, list[int]]:
-    """Engine DV sidecar (parquet of file, pos — consolidated across
-    files) -> {data-file rel path: sorted positions}. Driver-side
-    pyarrow read: sidecars are metadata-sized by design (active
-    deleted positions only; tables purge before they grow large)."""
-    if dv_rel not in cache:
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(os.path.join(root, dv_rel),
-                            columns=["file", "pos"])
-        by_file: dict[str, set[int]] = {}
-        for f, p in zip(tbl.column("file").to_pylist(),
-                        tbl.column("pos").to_pylist()):
-            by_file.setdefault(f, set()).add(int(p))
-        cache[dv_rel] = {f: sorted(ps) for f, ps in by_file.items()}
-    return cache[dv_rel]
-
-
 def _stale_stats(stats_json: str | None) -> str | None:
     """A file under a deletion vector keeps its physical stats but the
     bounds are no longer tight (deleted rows may hold the min/max)."""
@@ -371,7 +352,6 @@ def export_standard_delta(table: VersionedTable, dest: str,
     # (path, DV uniqueId), so removes must echo the exact descriptor)
     exported_dvs: dict[str, dict] = {}
     dv_used = False
-    sidecar_cache: dict = {}
 
     for v in versions:
         c: Commit = log.read_commit(v)
@@ -457,17 +437,12 @@ def export_standard_delta(table: VersionedTable, dest: str,
         if c.dv_updates and live:
             from deltalake_poc_spark.tables import roaring
 
-            new_positions: dict[str, list[int]] = {}
-            cleared: list[str] = []
-            for path, dv_rel in sorted(c.dv_updates.items()):
-                if dv_rel is None:
-                    cleared.append(path)
-                else:
-                    new_positions[path] = _sidecar_positions(
-                        log.root, dv_rel, sidecar_cache).get(path, [])
-            paths = sorted(new_positions)
+            live_dvs = {p: d for p, d in c.dv_updates.items() if d}
+            positions = log.dv_positions(live_dvs)
+            cleared = sorted(set(c.dv_updates) - set(live_dvs))
+            paths = sorted(live_dvs)
             descriptors = roaring.write_dv_file(
-                dest, [new_positions[p] for p in paths]) if paths else []
+                dest, [positions.get(p, []) for p in paths]) if paths else []
             for path, desc in list(zip(paths, descriptors)) + [
                     (p, None) for p in cleared]:
                 if path not in active:

@@ -33,8 +33,17 @@ from __future__ import annotations
 import json
 import os
 import time
+import urllib.parse
 import uuid
 from dataclasses import dataclass, field
+
+
+def partition_values(rel: str) -> dict[str, str]:
+    """Hive partition values from a path's ``k=v`` segments, unquoted
+    as Spark quotes them when it writes partition directories."""
+    return {k: urllib.parse.unquote(v)
+            for k, eq, v in (seg.partition("=") for seg in rel.split("/"))
+            if eq}
 
 
 @dataclass
@@ -187,6 +196,46 @@ class TableLog:
 
     def abs_path(self, rel: str) -> str:
         return os.path.join(self.root, rel)
+
+    def change_feed(self, c: Commit) -> list[tuple[str | None, list[str]]]:
+        """What commit ``c`` contributes to the change data feed, as
+        (``_change_type``, rel paths) groups. Row-appending writes derive
+        their inserts from their added files (no change files are
+        written, as in Delta); OVERWRITE/RESTORE add a delete of every
+        removed file; MERGE/DELETE/UPDATE contribute their change-file
+        directory, whose rows carry their own ``_change_type`` (type
+        None). OPTIMIZE, VACUUM and property commits change no row."""
+        if c.operation in ("MERGE", "DELETE", "UPDATE"):
+            cd = self.commit_changes_dir(c)
+            if os.path.isdir(cd) and any(
+                    f.endswith(".parquet") for f in os.listdir(cd)):
+                return [(None, [os.path.relpath(cd, self.root)])]
+            return []
+        groups: list[tuple[str | None, list[str]]] = []
+        if c.operation in ("WRITE", "APPEND", "CREATE TABLE",
+                           "OVERWRITE", "RESTORE"):
+            groups.append(("insert", [a.path for a in c.add]))
+        if c.operation in ("OVERWRITE", "RESTORE"):
+            groups.append(("delete", list(c.remove)))
+        return [(t, paths) for t, paths in groups if paths]
+
+    def dv_positions(self, dvs: dict[str, str]) -> dict[str, list[int]]:
+        """Deleted row positions per data file, sorted: ``dvs`` maps a
+        data file to the deletion-vector sidecar (a ``file``, ``pos``
+        parquet directory, consolidated across files) holding its
+        vector. Read driver-side with pyarrow, each sidecar once: the
+        sidecars hold only active deleted positions, and tables purge
+        before they grow large."""
+        import pyarrow.parquet as pq
+
+        out: dict[str, set[int]] = {}
+        for d in sorted(set(dvs.values())):
+            rows = pq.read_table(self.abs_path(d),
+                                 columns=["file", "pos"]).to_pydict()
+            for f, p in zip(rows["file"], rows["pos"]):
+                if dvs.get(f) == d:
+                    out.setdefault(f, set()).add(p)
+        return {f: sorted(ps) for f, ps in out.items()}
 
     def new_data_file_dir(self) -> str:
         """A unique staging directory for Spark to write new data files into."""

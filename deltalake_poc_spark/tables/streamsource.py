@@ -1,4 +1,8 @@
-"""Versioned tables as Structured Streaming SOURCES.
+"""Versioned tables as Spark data sources, batch and streaming, for both
+log formats: ``versioned_table`` (the engine's own ``_log``) and
+``standard_delta`` (a standard ``_delta_log``, so a delta-spark
+``readStream.format("delta")`` user can switch formats and keep
+streaming without the delta-spark package).
 
 Delta tables are streamable sources (each commit's added files become
 a micro-batch); the reference only ever streams INTO Delta, but a
@@ -11,11 +15,30 @@ is the set of files ADDED between two versions, and files are read on
 EXECUTORS with pyarrow (one InputPartition per data file — the scan
 parallelism is the file count, like any parquet source).
 
-Semantics match Delta's default streaming source: append-only.
-Commits that remove files (MERGE/DELETE/OVERWRITE/OPTIMIZE) raise
-unless ``ignoreChanges`` is set, in which case their added files are
-skipped (OPTIMIZE) or emitted as re-written rows (MERGE) — the same
-caveats Delta documents for ignoreChanges.
+One stream reader, one batch reader, one row emitter and one option
+parser serve both formats. Everything format-specific sits in a small
+log adapter (``_PrivateLog``, ``_DeltaLog``) with four methods: the
+latest version, the schema, a snapshot's file partitions, and the
+stream partitions between two versions. Options (keys are
+case-insensitive):
+
+- ``startingVersion``: the first commit streamed, inclusive (Delta's
+  rule); default 0;
+- ``ignoreChanges``/``ignoreDeletes``: by default a commit that
+  removes files or deletion-vector-hides rows raises (append-only
+  streaming); with either option set the stream goes on;
+- ``readChangeFeed`` (``versioned_table`` only; ``standard_delta``
+  raises): the change rows with ``_change_type``/``_commit_version``/
+  ``_commit_timestamp``, streamed per commit or read in batch from
+  ``startingVersion`` to the latest version;
+- ``versionAsOf``/``timestampAsOf`` (batch): time travel.
+
+What ``ignoreChanges`` emits differs by log. The private log re-emits
+a rewritten file's rows (MERGE) and skips OPTIMIZE's compacted files —
+the caveats Delta documents. A standard Delta log skips re-adds of an
+existing path (file rewrites and deletion-vector updates re-add the
+same path, whose rows were already emitted) and dataChange=false adds,
+and a file born WITH a deletion vector streams only its live rows.
 
 Usage:
     register_stream_source(spark)
@@ -34,11 +57,14 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql.datasource import (
     DataSource, DataSourceReader, DataSourceStreamReader, InputPartition,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    LongType, StringType, StructField, StructType, TimestampType,
+)
 
-from deltalake_poc_spark.tables.log import TableLog
-
-FORMAT_NAME = "versioned_table"
+from deltalake_poc_spark.tables import roaring
+from deltalake_poc_spark.tables.deltareader import DeltaLakeReader
+from deltalake_poc_spark.tables.log import TableLog, partition_values
+from deltalake_poc_spark.tables.table import CDF_PROP
 
 
 # Hive partition-path values are strings; cast back to the declared
@@ -59,6 +85,12 @@ _PARTITION_CASTS = {
     "decimal": decimal.Decimal,
 }
 
+_CDF_FIELDS = [
+    StructField("_change_type", StringType()),
+    StructField("_commit_version", LongType()),
+    StructField("_commit_timestamp", TimestampType()),
+]
+
 
 def _cast_partition_value(raw: str, typ: str):
     """decimal's simpleString carries precision/scale — normalize the
@@ -67,26 +99,20 @@ def _cast_partition_value(raw: str, typ: str):
     return cast(raw) if cast else raw
 
 
-def _fields_of(schema: StructType) -> list[tuple[str, str, str]]:
-    """(logical, type, physical) triples; physical falls back to the
-    logical name when no column-mapping metadata is present."""
-    return [
-        (f.name, f.dataType.simpleString(),
-         (f.metadata or {}).get("physicalName", f.name))
-        for f in schema.fields
-    ]
+def _utc(v):
+    """Parquet instants can read tz-naive (INT96); TimestampType is an
+    instant, so pin UTC (timestamp_ntz columns never come here)."""
+    if isinstance(v, datetime.datetime) and v.tzinfo is None:
+        return v.replace(tzinfo=datetime.timezone.utc)
+    return v
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, abs_path: str, fields: list[tuple[str, str, str]],
-                 partition_values: dict[str, str],
+    def __init__(self, abs_path: str, partition_values: dict[str, str],
                  constants: dict[str, object] | None = None,
                  drop_positions: list[int] | None = None):
         self.abs_path = abs_path
-        # [(logical name, simpleString type, physical name)] — the type
-        # drives partition-value casting, the physical name resolves
-        # column-mapping renames against the parquet columns
-        self.fields = fields
+        # physical column name -> raw partition value
         self.partition_values = partition_values
         # column -> fixed value (CDF stamps: _change_type for derived
         # commits, _commit_version/_commit_timestamp always)
@@ -95,21 +121,6 @@ class _FilePartition(InputPartition):
         # the snapshot's sidecars, or decoded from a standard Delta
         # table's vectors)
         self.drop_positions = drop_positions or []
-
-
-def _dv_positions(root: str, dvs: dict[str, str]) -> dict[str, list[int]]:
-    """Active deletion-vector positions per data file: ``dvs`` maps a
-    file to the (file, pos) parquet sidecar dir holding its vector."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, list[int]] = {}
-    for d in sorted(set(dvs.values())):
-        rows = pq.read_table(os.path.join(root, d),
-                             columns=["file", "pos"]).to_pydict()
-        for f, p in zip(rows["file"], rows["pos"]):
-            if dvs.get(f) == d:
-                out.setdefault(f, []).append(p)
-    return out
 
 
 def _read_live(partition: _FilePartition):
@@ -128,38 +139,90 @@ def _read_live(partition: _FilePartition):
     return table
 
 
-class VersionedTableStreamReader(DataSourceStreamReader):
-    def __init__(self, schema: StructType, options: dict):
+def _rows(partition: _FilePartition,
+          fields: list[tuple[str, str, str]]) -> Iterator[tuple]:
+    """The one row emitter: each (logical, type, physical) field comes
+    from a constant, the file's physical column, a typed partition
+    value, or null (a column the file predates)."""
+    table = _read_live(partition)
+    n = table.num_rows
+    present = set(table.schema.names)
+    cols = []
+    for name, typ, phys in fields:
+        if name in partition.constants:
+            vals = [partition.constants[name]] * n
+        elif phys in present:
+            vals = table.column(phys).to_pylist()
+            if typ == "timestamp":
+                vals = [_utc(v) for v in vals]
+        elif phys in partition.partition_values:
+            raw = partition.partition_values[phys]
+            vals = [_cast_partition_value(raw, typ)
+                    if isinstance(raw, str) else raw] * n
+        else:
+            vals = [None] * n
+        cols.append(vals)
+    return zip(*cols)
+
+
+class _Options:
+    """The option surface both formats share."""
+
+    def __init__(self, options: dict):
+        def flag(key: str) -> bool:
+            return str(options.get(key, "false")).lower() == "true"
+
         self.root = options["path"]
-        self.schema_fields = _fields_of(schema)
-        self.schema = schema
-        self.ignore_changes = str(
-            options.get("ignorechanges", "false")).lower() == "true"
-        self.read_change_feed = str(
-            options.get("readchangefeed", "false")).lower() == "true"
-        self.starting_version = int(options.get("startingversion", -1))
+        self.ignore_changes = flag("ignorechanges") or flag("ignoredeletes")
+        self.read_change_feed = flag("readchangefeed")
+        # startingVersion is inclusive: the stream's initial offset is
+        # the version before it
+        self.start_offset = int(options.get("startingversion", 0)) - 1
+        self.version = (int(options["versionasof"])
+                        if "versionasof" in options else None)
+        self.timestamp_ms = (int(options["timestampasof"])
+                             if "timestampasof" in options else None)
 
-    def _log(self) -> TableLog:
-        return TableLog(self.root)
 
-    def initialOffset(self) -> dict:
-        return {"version": self.starting_version}
+class _PrivateLog:
+    """Adapter over the engine's own log (tables/log.py)."""
 
-    def latestOffset(self) -> dict:
-        log = self._log()
-        try:
-            return {"version": log.latest_version()}
-        except FileNotFoundError:
-            return {"version": self.starting_version}
+    physical_key = "physicalName"
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        if self.read_change_feed:
-            return self._cdf_partitions(start, end)
-        log = self._log()
-        parts: list[InputPartition] = []
-        for c in log.commits(start["version"] + 1, end["version"]):
+    def __init__(self, root: str):
+        self.log = TableLog(root)
+
+    def latest_version(self) -> int:
+        return self.log.latest_version()
+
+    def schema(self, opts: _Options) -> StructType:
+        snap = self.log.snapshot(opts.version, opts.timestamp_ms)
+        if not snap.schema_json:
+            raise ValueError("table has no declared schema")
+        base = StructType.fromJson(json.loads(snap.schema_json))
+        if not opts.read_change_feed:
+            return base
+        # without the property MERGE/DELETE/UPDATE write no change
+        # files: a feed would silently miss them
+        if str(snap.properties.get(CDF_PROP, "false")).lower() != "true":
+            raise ValueError(f"{CDF_PROP} is not set on table {self.log.root}")
+        return StructType(base.fields + _CDF_FIELDS)
+
+    def snapshot_partitions(self, opts: _Options) -> list[_FilePartition]:
+        snap = self.log.snapshot(opts.version, opts.timestamp_ms)
+        dead = self.log.dv_positions(snap.dvs)
+        return [_FilePartition(self.log.abs_path(e.path), e.partition,
+                               drop_positions=dead.get(e.path))
+                for e in snap.files]
+
+    def stream_partitions(self, start: int, end: int,
+                          opts: _Options) -> list[_FilePartition]:
+        if opts.read_change_feed:
+            return self._change_partitions(start, end)
+        parts = []
+        for c in self.log.commits(start + 1, end):
             # a DV commit hides rows without removing a file
-            if (c.remove or c.dv_updates) and not self.ignore_changes:
+            if (c.remove or c.dv_updates) and not opts.ignore_changes:
                 raise ValueError(
                     f"commit v{c.version} ({c.operation}) rewrites data; "
                     "streaming a versioned table requires append-only "
@@ -167,148 +230,177 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 )
             if c.operation == "OPTIMIZE":
                 continue  # pure compaction: no new logical rows
-            for a in c.add:
-                parts.append(_FilePartition(
-                    os.path.join(self.root, a.path),
-                    self.schema_fields,
-                    dict(a.partition) if a.partition else {}))
+            parts += [_FilePartition(self.log.abs_path(a.path), a.partition)
+                      for a in c.add]
         return parts
 
-    def _cdf_partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        """Change-feed mode: each commit contributes its change rows
-        (derived inserts for append commits, explicit change files for
-        merge/update/delete, insert+delete pairs for overwrite/restore)
-        — the streaming twin of VersionedTable.read_change_feed (S8)."""
-        log = self._log()
-        parts: list[InputPartition] = []
-        for c in log.commits(start["version"] + 1, end["version"]):
+    def _change_partitions(self, start: int,
+                           end: int) -> list[_FilePartition]:
+        """Each commit's change rows (TableLog.change_feed, the rule
+        VersionedTable.read_change_feed reads by) stamped with its
+        version and time; a change-file directory is one partition."""
+        parts = []
+        for c in self.log.commits(start + 1, end):
             stamps = {
                 "_commit_version": c.version,
-                # tz-aware UTC: a naive datetime would be reinterpreted
-                # in the session timezone (and utcfromtimestamp is
-                # deprecated in 3.12) — must match the batch CDF path's
-                # timestamp_millis semantics
+                # tz-aware UTC, like the batch path's timestamp_millis
                 "_commit_timestamp": datetime.datetime.fromtimestamp(
                     c.timestamp / 1000.0, tz=datetime.timezone.utc),
             }
-
-            def fp(path, change_type=None, pv=None):
-                consts = dict(stamps)
-                if change_type is not None:
-                    consts["_change_type"] = change_type
-                if pv is None:  # recover partition values from k=v path segs
-                    pv = {seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                          for seg in path.split("/") if "=" in seg}
-                return _FilePartition(os.path.join(self.root, path),
-                                      self.schema_fields, pv, consts)
-
-            if c.operation in ("WRITE", "APPEND", "CREATE TABLE"):
-                for a in c.add:
-                    parts.append(fp(a.path, "insert",
-                                    dict(a.partition) if a.partition else {}))
-            elif c.operation in ("OVERWRITE", "RESTORE"):
-                for a in c.add:
-                    parts.append(fp(a.path, "insert",
-                                    dict(a.partition) if a.partition else {}))
-                for r in c.remove:
-                    parts.append(fp(r, "delete"))
-            elif c.operation in ("MERGE", "DELETE", "UPDATE"):
-                cd = log.commit_changes_dir(c)
-                cd_rel = os.path.relpath(cd, self.root)
-                if os.path.isdir(cd):
-                    for name in sorted(os.listdir(cd)):
-                        if name.endswith(".parquet"):
-                            parts.append(fp(os.path.join(cd_rel, name)))
+            for change_type, paths in self.log.change_feed(c):
+                consts = (stamps if change_type is None
+                          else {**stamps, "_change_type": change_type})
+                parts += [_FilePartition(self.log.abs_path(p),
+                                         partition_values(p), consts)
+                          for p in paths]
         return parts
 
+
+class _DeltaLog:
+    """Adapter over a standard Delta log (tables/deltareader.py): its
+    driver-side replay handles column mapping, typed partition values
+    and checkpoints."""
+
+    physical_key = "delta.columnMapping.physicalName"
+
+    def __init__(self, root: str):
+        # log replay needs no SparkSession
+        self.reader = DeltaLakeReader(None, root)
+
+    def latest_version(self) -> int:
+        return self.reader.latest_version()
+
+    def schema(self, opts: _Options) -> StructType:
+        if opts.read_change_feed:
+            raise ValueError(
+                "standard_delta has no readChangeFeed option; read a "
+                "standard Delta change feed with "
+                "DeltaLakeReader.read_change_feed")
+        return self.reader.snapshot(opts.version, opts.timestamp_ms).schema
+
+    def _partition(self, path: str, pvals: dict | None,
+                   dv: dict | None) -> _FilePartition:
+        return _FilePartition(
+            self.reader._data_path(path), dict(pvals or {}),
+            drop_positions=(roaring.read_descriptor(self.reader.root, dv)
+                            if dv and dv.get("storageType") else None))
+
+    def snapshot_partitions(self, opts: _Options) -> list[_FilePartition]:
+        snap = self.reader.snapshot(opts.version, opts.timestamp_ms)
+        return [self._partition(p, pv, snap.dvs.get(p))
+                for p, pv in snap.files.items()]
+
+    def stream_partitions(self, start: int, end: int,
+                          opts: _Options) -> list[_FilePartition]:
+        r = self.reader
+        parts = []
+        for v in range(start + 1, end + 1):
+            if not os.path.exists(r._commit_file(v)):
+                continue  # vacuumed prefix before startingVersion
+            actions = r._commit_actions(v)
+            removed = {a["remove"]["path"] for a in actions
+                       if "remove" in a
+                       and a["remove"].get("dataChange", True)}
+            if removed and not opts.ignore_changes:
+                raise ValueError(
+                    f"Delta commit v{v} changes or deletes existing rows; "
+                    "streaming requires append-only history or "
+                    ".option('ignoreChanges','true')")
+            # a re-add of a removed path (rewrite or DV update) carries
+            # rows already emitted; dataChange=false adds are compaction
+            adds = [a["add"] for a in actions if "add" in a]
+            parts += [self._partition(a["path"], a.get("partitionValues"),
+                                      a.get("deletionVector"))
+                      for a in adds if a.get("dataChange", True)
+                      and a["path"] not in removed]
+        return parts
+
+
+class _Reader:
+    """What both readers share: the options, the output fields, a
+    fresh log adapter per driver call, and the row emitter."""
+
+    def __init__(self, log_type: type, schema: StructType, options: dict):
+        self.log_type = log_type
+        self.opts = _Options(options)
+        # (logical name, simpleString type, physical name): the type
+        # drives partition-value casting and the UTC pin, the physical
+        # name resolves column-mapping renames against the files
+        self.fields = [
+            (f.name, f.dataType.simpleString(),
+             (f.metadata or {}).get(log_type.physical_key, f.name))
+            for f in schema.fields]
+
+    def _log(self):
+        return self.log_type(self.opts.root)
+
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        table = _read_live(partition)
-        cols = {}
-        n = table.num_rows
-        present = set(table.schema.names)
-        for name, typ, phys in partition.fields:
-            if name in partition.constants:
-                cols[name] = [partition.constants[name]] * n
-            elif phys in present:
-                cols[name] = table.column(phys).to_pylist()
-            elif name in partition.partition_values:
-                raw = partition.partition_values[name]
-                val = (_cast_partition_value(raw, typ)
-                       if isinstance(raw, str) else raw)
-                cols[name] = [val] * n
-            else:
-                cols[name] = [None] * n
-        order = [name for name, _, _ in partition.fields]
-        for i in range(n):
-            yield tuple(cols[name][i] for name in order)
+        yield from _rows(partition, self.fields)
+
+
+class TableStreamReader(_Reader, DataSourceStreamReader):
+    def initialOffset(self) -> dict:
+        return {"version": self.opts.start_offset}
+
+    def latestOffset(self) -> dict:
+        try:
+            return {"version": self._log().latest_version()}
+        except FileNotFoundError:
+            return {"version": self.opts.start_offset}
+
+    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+        return self._log().stream_partitions(
+            start["version"], end["version"], self.opts)
 
     def commit(self, end: dict) -> None:
         pass  # progress tracking lives in the query checkpoint
 
 
-class VersionedTableBatchReader(DataSourceReader):
-    """Batch reads through the same format, with the reference's
+class TableBatchReader(_Reader, DataSourceReader):
+    """Batch reads through the same formats, with the reference's
     time-travel option surface (S6/S7: spark.read.format('delta')
     .option('versionAsOf'/'timestampAsOf', ...) —
     spark_delta_handler.py:253-267)."""
 
-    def __init__(self, schema: StructType, options: dict):
-        self.root = options["path"]
-        self.schema_fields = _fields_of(schema)
-        self.version = (int(options["versionasof"])
-                        if "versionasof" in options else None)
-        self.timestamp_ms = (int(options["timestampasof"])
-                             if "timestampasof" in options else None)
-
     def partitions(self) -> Sequence[InputPartition]:
-        snap = TableLog(self.root).snapshot(self.version, self.timestamp_ms)
-        dead = _dv_positions(self.root, snap.dvs)
-        return [
-            _FilePartition(os.path.join(self.root, e.path),
-                           self.schema_fields,
-                           dict(e.partition) if e.partition else {},
-                           drop_positions=dead.get(e.path))
-            for e in snap.files
-        ]
-
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        yield from VersionedTableStreamReader.read(self, partition)
+        log = self._log()
+        if self.opts.read_change_feed:
+            return log.stream_partitions(
+                self.opts.start_offset, log.latest_version(), self.opts)
+        return log.snapshot_partitions(self.opts)
 
 
-class VersionedTableDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return FORMAT_NAME
-
-    def _snapshot(self):
-        log = TableLog(self.options["path"])
-        v = (int(self.options["versionasof"])
-             if "versionasof" in self.options else None)
-        ts = (int(self.options["timestampasof"])
-              if "timestampasof" in self.options else None)
-        return log.snapshot(v, ts)
+class _TableSource(DataSource):
+    log_type: type
 
     def schema(self) -> StructType:
-        from pyspark.sql.types import LongType, StringType, StructField, TimestampType
+        opts = _Options(self.options)
+        return self.log_type(opts.root).schema(opts)
 
-        snap = self._snapshot()
-        if not snap.schema_json:
-            raise ValueError("table has no declared schema")
-        base = StructType.fromJson(json.loads(snap.schema_json))
-        if str(self.options.get("readchangefeed", "false")).lower() == "true":
-            return StructType(base.fields + [
-                StructField("_change_type", StringType()),
-                StructField("_commit_version", LongType()),
-                StructField("_commit_timestamp", TimestampType()),
-            ])
-        return base
+    def reader(self, schema: StructType) -> TableBatchReader:
+        return TableBatchReader(self.log_type, schema, dict(self.options))
 
-    def reader(self, schema: StructType) -> VersionedTableBatchReader:
-        return VersionedTableBatchReader(schema, dict(self.options))
+    def streamReader(self, schema: StructType) -> TableStreamReader:
+        return TableStreamReader(self.log_type, schema, dict(self.options))
 
-    def streamReader(self, schema: StructType) -> VersionedTableStreamReader:
-        return VersionedTableStreamReader(schema, dict(self.options))
+
+class VersionedTableDataSource(_TableSource):
+    log_type = _PrivateLog
+
+    @classmethod
+    def name(cls) -> str:
+        return "versioned_table"
+
+
+class StandardDeltaDataSource(_TableSource):
+    log_type = _DeltaLog
+
+    @classmethod
+    def name(cls) -> str:
+        return "standard_delta"
 
 
 def register_stream_source(spark) -> None:
+    """Register both formats, ``versioned_table`` and ``standard_delta``."""
     spark.dataSource.register(VersionedTableDataSource)
+    spark.dataSource.register(StandardDeltaDataSource)

@@ -32,6 +32,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from deltalake_poc_spark.tables.log import (
     Commit, ConcurrentWriteError, FileEntry, Snapshot, TableLog,
+    partition_values,
 )
 from deltalake_poc_spark.tables.stats import (BLOOM_COLS_PROP, BLOOM_FPP_PROP,
                                                collect_blooms_distributed,
@@ -291,10 +292,10 @@ class VersionedTable:
         """Change Data Feed read (S8; reference: notebook cells 25-26,
         54, 62 — option('readChangeFeed','true').option('startingVersion',v)).
 
-        insert-only commits are derived from their add-files (no extra
-        change files written — same trick as Delta); MERGE/DELETE/
-        UPDATE commits read explicit change files from _changes/v=N.
-        Output: table columns + _change_type/_commit_version/_commit_timestamp.
+        Which files each commit contributes, and with which
+        ``_change_type``, is TableLog.change_feed (shared with the
+        ``versioned_table`` streaming source). Output: table columns +
+        _change_type/_commit_version/_commit_timestamp.
         """
         snap = self.snapshot()
         if not self.cdf_enabled(snap):
@@ -305,35 +306,22 @@ class VersionedTable:
         # vectors) under the current schema
         whole = dataclasses.replace(snap, dvs={})
 
-        def _files(paths: list[str], change_type: str, c: Commit) -> DataFrame:
-            return self._stamp(self._read_files(paths, whole), change_type, c)
+        def _group(change_type: str | None, paths: list[str],
+                   c: Commit) -> DataFrame:
+            if change_type is not None:
+                return self._stamp(self._read_files(paths, whole),
+                                   change_type, c)
+            ch = self._scan([self.log.abs_path(p) for p in paths], schema,
+                            extra=(StructField("_change_type", StringType(),
+                                               True),))
+            return (ch.withColumn("_commit_version", F.lit(c.version))
+                    .withColumn("_commit_timestamp",
+                                F.timestamp_millis(F.lit(c.timestamp))))
 
         pieces: list[DataFrame] = []
         for c in self.log.commits(starting_version, end):
-            piece = None
-            if c.operation in ("WRITE", "APPEND", "CREATE TABLE"):
-                if c.add:
-                    piece = _files([a.path for a in c.add], "insert", c)
-            elif c.operation in ("OVERWRITE", "RESTORE"):
-                parts = []
-                if c.add:
-                    parts.append(_files([a.path for a in c.add], "insert", c))
-                if c.remove:
-                    parts.append(_files(list(c.remove), "delete", c))
-                piece = self._union(parts)
-            elif c.operation in ("MERGE", "DELETE", "UPDATE"):
-                cd = self.log.commit_changes_dir(c)
-                if os.path.isdir(cd) and any(
-                    f.endswith(".parquet") for f in os.listdir(cd)
-                ):
-                    ch = self._scan([cd], schema, extra=(
-                        StructField("_change_type", StringType(), True),))
-                    piece = (
-                        ch.withColumn("_commit_version", F.lit(c.version))
-                        .withColumn("_commit_timestamp",
-                                    F.timestamp_millis(F.lit(c.timestamp)))
-                    )
-            # OPTIMIZE / VACUUM / SET TBLPROPERTIES: no logical change
+            piece = self._union([_group(t, paths, c)
+                                 for t, paths in self.log.change_feed(c)])
             if piece is not None:
                 pieces.append(piece)
         if not pieces:
@@ -373,8 +361,6 @@ class VersionedTable:
         created); its properties pick the bloom columns. With
         ``partition_by``, files land in Hive-style k=v directories under
         data/ and carry their partition values in the log entry."""
-        import urllib.parse
-
         staging = self.log.new_data_file_dir()
         # column mapping: data files store PHYSICAL names; stats are
         # re-keyed back to logical below so pruning stays logical.
@@ -434,12 +420,7 @@ class VersionedTable:
         os.makedirs(self.log.data_dir(), exist_ok=True)
         for dirpath, _dirs, files in os.walk(staging):
             subdir = os.path.relpath(dirpath, staging)
-            part_vals: dict[str, str] = {}
-            if subdir != ".":
-                for seg in subdir.split(os.sep):
-                    if "=" in seg:
-                        k, v = seg.split("=", 1)
-                        part_vals[k] = urllib.parse.unquote(v)
+            part_vals = partition_values(subdir)
             for name in sorted(files):
                 if not name.endswith(".parquet"):
                     continue
@@ -1137,29 +1118,13 @@ class VersionedTable:
         """Metadata-only COUNT(*): per-file numRecords from the commit
         log minus the cardinality of active deletion vectors — no data
         scan, no Spark job (Delta answers count(*) from stats the same
-        way). The DV sidecars are tiny positional parquets, read
-        driver-side with pyarrow; at 100 TB this is O(log) arithmetic
+        way). The DV sidecars are tiny positional parquets
+        (TableLog.dv_positions); at 100 TB this is O(log) arithmetic
         against a full-corpus scan."""
-        import pyarrow.parquet as pq_
-
         if snap is None:
             snap = self.snapshot()
-        total = sum(e.num_records for e in snap.files)
-        if snap.dvs:
-            by_dir: dict[str, set] = {}
-            for data_rel, dv_rel in snap.dvs.items():
-                by_dir.setdefault(dv_rel, set()).add(data_rel)
-            for dv_rel, data_files in by_dir.items():
-                base = self.log.abs_path(dv_rel)
-                for dirpath, _dirs, files in os.walk(base):
-                    for name in files:
-                        if not name.endswith(".parquet"):
-                            continue
-                        t = pq_.read_table(os.path.join(dirpath, name),
-                                           columns=["file"])
-                        col = t.column("file").to_pylist()
-                        total -= sum(1 for f in col if f in data_files)
-        return total
+        return (sum(e.num_records for e in snap.files)
+                - sum(map(len, self.log.dv_positions(snap.dvs).values())))
 
     def detail(self) -> dict:
         """DESCRIBE DETAIL parity: one metadata-only dict of table

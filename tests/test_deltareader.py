@@ -13,14 +13,14 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import _REF_DELTA as REF
+from __spark_entry__ import _ref_delta_absent
 from deltalake_poc_spark.tables.deltareader import DeltaLakeReader
-
-REF = "/root/reference/deltalake"
 
 # only the tests that read the reference tables need them; the rest
 # synthesize their own logs
-needs_ref = pytest.mark.skipif(
-    not os.path.isdir(REF), reason="reference Delta fixtures not present")
+needs_ref = pytest.mark.skipif(_ref_delta_absent() is not None,
+                               reason=str(_ref_delta_absent()))
 
 
 def _log_stats_rows(table: str, version: int) -> int:

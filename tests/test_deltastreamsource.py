@@ -11,14 +11,12 @@ import os
 import pytest
 
 
+from __spark_entry__ import _REF_DELTA as REF
+from __spark_entry__ import _ref_delta_absent
 from deltalake_poc_spark.tables import VersionedTable
 from deltalake_poc_spark.tables.deltaexport import export_standard_delta
 from deltalake_poc_spark.tables.deltareader import DeltaLakeReader
-from deltalake_poc_spark.tables.deltastreamsource import (
-    register_delta_stream_source,
-)
-
-REF = "/root/reference/deltalake"
+from deltalake_poc_spark.tables.streamsource import register_stream_source
 
 
 def _run(spark, root, out_dir, ckpt, ignore_changes=False,
@@ -37,7 +35,7 @@ def _run(spark, root, out_dir, ckpt, ignore_changes=False,
 
 
 def test_stream_appends_and_incremental_resume(spark, tmp_path):
-    register_delta_stream_source(spark)
+    register_stream_source(spark)
     schema = spark.createDataFrame([], "id long, v string").schema
     src_root = str(tmp_path / "src")
     t = VersionedTable.create(spark, src_root, schema)
@@ -60,7 +58,7 @@ def test_stream_appends_and_incremental_resume(spark, tmp_path):
 
 
 def test_stream_rejects_row_changes_without_ignore(spark, tmp_path):
-    register_delta_stream_source(spark)
+    register_stream_source(spark)
     schema = spark.createDataFrame([], "id long, v string").schema
     t = VersionedTable.create(spark, str(tmp_path / "src"), schema)
     t.write(spark.createDataFrame([(1, "a"), (2, "b")], schema))
@@ -75,7 +73,7 @@ def test_dv_update_commits_emit_nothing_new(spark, tmp_path):
     """A deletion-vector delete re-adds the SAME data file with a new
     descriptor; with ignoreChanges the stream must skip it (the rows
     were already emitted) rather than duplicate the whole file."""
-    register_delta_stream_source(spark)
+    register_stream_source(spark)
     schema = spark.createDataFrame([], "id long, v string").schema
     t = VersionedTable.create(
         spark, str(tmp_path / "src"), schema,
@@ -97,7 +95,7 @@ def test_born_with_dv_file_streams_live_rows_only(spark, tmp_path):
     vector (odd ids dead): only live rows may stream."""
     import __spark_entry__ as entrymod
 
-    register_delta_stream_source(spark)
+    register_stream_source(spark)
     root = entrymod._dv_fixture_root()
     out = _run(spark, root, str(tmp_path / "out"), str(tmp_path / "ckpt"),
                ignore_changes=True)
@@ -110,7 +108,7 @@ def test_born_with_dv_file_streams_live_rows_only(spark, tmp_path):
 def test_batch_format_read_with_time_travel_and_dvs(spark, tmp_path):
     import __spark_entry__ as entrymod
 
-    register_delta_stream_source(spark)
+    register_stream_source(spark)
     root = entrymod._dv_fixture_root()
     r = DeltaLakeReader(spark, root)
     for v in (0, 1, 2):
@@ -125,14 +123,15 @@ def test_batch_format_read_with_time_travel_and_dvs(spark, tmp_path):
     assert latest == sorted(x["id"] for x in r.read().collect())
 
 
-@pytest.mark.skipif(not os.path.isdir(REF), reason="reference absent")
+@pytest.mark.skipif(_ref_delta_absent() is not None,
+                    reason=str(_ref_delta_absent()))
 def test_stream_reference_table_with_ignore_changes(spark, tmp_path):
     """The reference's delta-spark-committed customers table (WRITE at
     v0, MERGE at v1) streams end-to-end; row count equals the sum of
     numRecords over every dataChange add in the log (MERGE rewrites
     land as new paths, re-emitted — delta's documented ignoreChanges
     semantics)."""
-    register_delta_stream_source(spark)
+    register_stream_source(spark)
     root = f"{REF}/customers"
     expected = 0
     log = os.path.join(root, "_delta_log")
@@ -199,7 +198,7 @@ def test_fully_deleted_files_read_as_empty(spark, tmp_path):
     """A vector over every row of a file leaves no live row to read:
     batch time travel and a stream over a file born with such a vector
     both skip the file instead of failing on it."""
-    register_delta_stream_source(spark)
+    register_stream_source(spark)
     root = _fully_deleted_fixture(str(tmp_path / "delta"))
 
     def ids(version):

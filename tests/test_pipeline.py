@@ -613,6 +613,28 @@ def test_winnow_guarantee_and_pairs(spark):
         assert all(2 not in k for k in pairs), portable
 
 
+def test_dedup_scratch_caches_keyed_by_parameters(spark):
+    """Calls with different tuning parameters keep separate scratch
+    caches: the second call must not release the first call's (a
+    shared key would unpersist a frame the first caller still reads)."""
+    from deltalake_poc_spark.analytics import scratch
+
+    docs = spark.createDataFrame(
+        [(0, "a b c d e f g h"), (1, "a b c d e f g h i")],
+        "doc_id long, text string")
+    scratch.release_scratch()  # start from no caches left by other tests
+    dedup.winnow_pairs(docs, n=5, window=4)
+    dedup.winnow_pairs(docs, n=4, window=3)
+    dedup.minhash_lsh_pairs(docs, shingle_n=3)
+    dedup.minhash_lsh_pairs(docs, shingle_n=2)
+    try:
+        for prefix in ("dedup.winnow.posting.", "dedup.minhash.banded."):
+            keys = [k for k in scratch._SCRATCH if k.startswith(prefix)]
+            assert len(keys) == 2, (prefix, keys)
+    finally:
+        scratch.release_scratch()
+
+
 def test_winnow_fingerprints_shape(spark):
     docs = spark.createDataFrame(
         [(0, "a b c d e f g h i j"), (1, "short doc")],

@@ -222,3 +222,124 @@ def test_stream_rejects_dv_commit_without_ignore_changes(spark, tmp_path):
     out = _run(spark, root, str(tmp_path / "o2"), str(tmp_path / "c2"),
                ignore_changes=True)
     assert out.count() == 10
+
+
+def _cdc_snapshot_table(spark, base):
+    """The CDC applier's customers snapshot after one batch of 5
+    creates: timestamp columns (created_at, __cdc_timestamp,
+    __processed_at) on an append-only history."""
+    from deltalake_poc_spark.cdc import CDCApplier, parse_debezium
+    from deltalake_poc_spark.cdc.synth import raw_kafka_frame
+
+    ids = spark.range(1, 6)
+    raw = raw_kafka_frame(
+        ids, op=F.lit("c"), key=F.col("id"), lsn=F.col("id"),
+        ts_ms=F.lit(1700000000000) + F.col("id"),
+        after=F.struct(
+            F.col("id"), F.lit("x@y").alias("email"),
+            (F.lit(1700000000_000000) + F.col("id")).alias("created_at")))
+    applier = CDCApplier(spark, base)
+    applier.apply_batch(parse_debezium(raw), tables=["customers"])
+    return applier.snapshot_table("customers")
+
+
+def test_cdc_snapshot_table_reads_like_the_table(spark, tmp_path):
+    """Batch and stream reads of a table with timestamp columns return
+    what VersionedTable.read() returns."""
+    register_stream_source(spark)
+    t = _cdc_snapshot_table(spark, str(tmp_path / "cdc"))
+    root = t.log.root
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.select(*t.read().columns)
+                       .collect()), key=lambda r: r[0])
+
+    want = rows(t.read())
+    assert len(want) == 5 and want[0][-1] is not None
+    batch = spark.read.format("versioned_table").option("path", root).load()
+    assert rows(batch) == want
+    assert rows(_run(spark, root, str(tmp_path / "o"),
+                     str(tmp_path / "c"))) == want
+
+
+def test_starting_version_is_inclusive_on_both_formats(spark, tmp_path):
+    """startingVersion=N streams commit N onward (Delta's rule) on a
+    table and on its standard Delta export alike."""
+    from deltalake_poc_spark.tables.deltaexport import export_standard_delta
+
+    register_stream_source(spark)
+    schema = spark.createDataFrame([], "id long, v string").schema
+    t = VersionedTable.create(spark, str(tmp_path / "t"), schema)
+    for v in (1, 2, 3):
+        t.write(spark.range(v * 10, v * 10 + 10).select(
+            "id", F.lit(str(v)).alias("v")))
+    dest = str(tmp_path / "delta")
+    export_standard_delta(t, dest)
+
+    got = {}
+    for fmt, root in (("versioned_table", t.log.root),
+                      ("standard_delta", dest)):
+        q = (spark.readStream.format(fmt).option("path", root)
+             .option("startingVersion", "2").load()
+             .writeStream.format("parquet")
+             .option("path", str(tmp_path / f"o_{fmt}"))
+             .option("checkpointLocation", str(tmp_path / f"c_{fmt}"))
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        got[fmt] = sorted((r["id"], r["v"]) for r in spark.read.parquet(
+            str(tmp_path / f"o_{fmt}")).collect())
+    assert got["versioned_table"] == [(i, str(i // 10)) for i in range(20, 40)]
+    assert got["standard_delta"] == got["versioned_table"]
+
+
+def test_standard_delta_rejects_read_change_feed(spark, tmp_path):
+    """A standard Delta table has no change feed through this source:
+    the option raises instead of streaming plain appends."""
+    import __spark_entry__ as entrymod
+
+    register_stream_source(spark)
+    root = entrymod._dv_fixture_root()
+    for reader in (spark.read, spark.readStream):
+        with pytest.raises(Exception, match="readChangeFeed"):
+            (reader.format("standard_delta").option("path", root)
+             .option("readChangeFeed", "true").load())
+
+
+def test_batch_change_feed_read_from_starting_version(spark, tmp_path):
+    """readChangeFeed in a batch read returns the change rows from
+    startingVersion on, as VersionedTable.read_change_feed does."""
+    register_stream_source(spark)
+    schema = spark.createDataFrame([], "id long, v string").schema
+    root = str(tmp_path / "t")
+    t = VersionedTable.create(spark, root, schema,
+                              properties={"enableChangeDataFeed": "true"})
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], schema))      # v1
+    t.update({"v": "'B'"}, "id = 2")                                  # v2
+    t.write(spark.createDataFrame([(3, "c")], schema), "overwrite")   # v3
+
+    def changes(df):
+        return sorted((r["_commit_version"], r["_change_type"], r["id"],
+                       r["v"]) for r in df.collect())
+
+    got = changes(spark.read.format("versioned_table").option("path", root)
+                  .option("readChangeFeed", "true")
+                  .option("startingVersion", "2").load())
+    assert got == changes(t.read_change_feed(2))
+    assert {c[1] for c in got} == {"update_preimage", "update_postimage",
+                                   "insert", "delete"}
+
+
+def test_change_feed_requires_cdf_enabled(spark, tmp_path):
+    """Without enableChangeDataFeed a DELETE writes no change files, so
+    a change-feed read would silently miss it: batch and stream both
+    raise, as VersionedTable.read_change_feed does."""
+    register_stream_source(spark)
+    schema = spark.createDataFrame([], "id long, v string").schema
+    root = str(tmp_path / "t")
+    t = VersionedTable.create(spark, root, schema)
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], schema))
+    t.delete("id = 1")
+    for reader in (spark.read, spark.readStream):
+        with pytest.raises(Exception, match="enableChangeDataFeed"):
+            (reader.format("versioned_table").option("path", root)
+             .option("readChangeFeed", "true").load())
