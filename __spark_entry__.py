@@ -14,8 +14,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deltalake_poc_spark.analytics import events, tpch
 from deltalake_poc_spark.analytics import queries as Q
 from deltalake_poc_spark.analytics.io import load_table
+from deltalake_poc_spark.pipeline import (bpe, cluster, dedup, pca, retrieval,
+                                          sample, shard, text)
+
+Builder = Callable[[SparkSession, str], DataFrame]
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -24,52 +29,21 @@ def entry(spark: SparkSession) -> DataFrame:
     customer_order_summary: the reference's central analytics query
     (notebook cell 30 + RisingWave MV init-risingwave.sql:84-94).
     """
-    sf_dir = "/root/testdata/sf0.001"
-    return Q.customer_order_summary(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
+    return queries()["customer_order_summary"](spark, "/root/testdata/sf0.001")
+
+
+def _loaded(fn: Callable[..., DataFrame], *tables: str, **kwargs) -> Builder:
+    """The builder for a query that is one library call: ``fn`` over
+    ``tables`` loaded from the sf dir, in order, with ``kwargs``.
+    ``load_table`` resolves through this module at call time, so
+    rebinding ``__spark_entry__.load_table`` (perfbench's lake reads)
+    redirects every such builder."""
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(*(load_table(spark, sf_dir, t) for t in tables), **kwargs)
+    return build
 
 
 # --- query callables --------------------------------------------------------
-
-def _customer_order_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.customer_order_summary(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
-
-
-def _product_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.product_popularity(
-        load_table(spark, sf_dir, "part"), load_table(spark, sf_dir, "lineitem")
-    )
-
-
-def _order_line_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.order_line_summary(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
-
-
-def _order_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.order_analytics(load_table(spark, sf_dir, "orders"))
-
-
-def _priority_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.priority_stats(load_table(spark, sf_dir, "orders"))
-
-
-def _event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.event_stats(load_table(spark, sf_dir, "events"))
-
-
-def _cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-analytics cohort matrix: users bucketed by
-    first-activity week (integer weeks since 2024-01-01 — engine-
-    portable, no week-start convention), counted at each later active
-    week offset. Two exchanges end-to-end: DISTINCT (user, week) then
-    the cohort min-window rides the same user_id partitioning."""
-    return Q.cohort_retention(load_table(spark, sf_dir, "events"))
-
 
 def _props_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured analytics: the events table's ``props`` JSON
@@ -122,15 +96,6 @@ def _skewed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("max_q_max").alias("max_units"))
 
 
-def _funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential funnel over events (view -> click -> purchase, each
-    step strictly after the user's previous-step completion): one
-    user_id shuffle collecting slim (ts, type) pairs, then row-local
-    HOF folds — no per-stage self-join. The oracle computes the same
-    strict-order minima with a join per stage."""
-    return Q.funnel_counts(load_table(spark, sf_dir, "events"))
-
-
 def _analytics_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = {
         "customer": "c_custkey",
@@ -141,10 +106,6 @@ def _analytics_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     tables = {n: load_table(spark, sf_dir, n) for n in keys}
     return Q.analytics_summary(tables, keys)
-
-
-def _change_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.change_type_counts(load_table(spark, sf_dir, "events"))
 
 
 def _customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,26 +185,6 @@ def _intersect_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return first.intersect(second)
 
 
-def _order_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.order_rollup(load_table(spark, sf_dir, "orders"))
-
-
-def _order_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.order_cube(load_table(spark, sf_dir, "orders"))
-
-
-def _price_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.price_ranks(load_table(spark, sf_dir, "orders"))
-
-
-def _stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.stats_moments(load_table(spark, sf_dir, "lineitem"))
-
-
-def _top_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.top_value_events(load_table(spark, sf_dir, "events"))
-
-
 def _version_diff_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cutoff = "1995-01-01"
@@ -310,152 +251,6 @@ def _cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snap.select("id", F.round("val", 4).alias("val"), "name")
 
 
-def _inventory_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.inventory_status(load_table(spark, sf_dir, "part"))
-
-
-def _scalar_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return Q.scalar_showcase(load_table(spark, sf_dir, "events"))
-
-
-def _q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.analytics.tpch import q1_pricing_summary
-
-    return q1_pricing_summary(load_table(spark, sf_dir, "lineitem"))
-
-
-def _q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.analytics.tpch import q6_forecast_revenue
-
-    return q6_forecast_revenue(load_table(spark, sf_dir, "lineitem"))
-
-
-def _q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.analytics.tpch import q3_shipping_priority
-
-    return q3_shipping_priority(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.analytics.tpch import q5_local_supplier_volume
-
-    return q5_local_supplier_volume(
-        load_table(spark, sf_dir, "region"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _tpch_q(spark: SparkSession, sf_dir: str, fn_name: str,
-            *tables: str) -> DataFrame:
-    """Shared wrapper for the round-4 TPC-H completions: load the named
-    tables and apply analytics/tpch.py's query function."""
-    import deltalake_poc_spark.analytics.tpch as tpch
-
-    return getattr(tpch, fn_name)(
-        *(load_table(spark, sf_dir, t) for t in tables))
-
-
-def _q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q2_min_cost_supplier",
-                   "region", "nation", "supplier", "part", "lineitem")
-
-
-def _q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q4_order_priority", "orders", "lineitem")
-
-
-def _q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q7_volume_shipping",
-                   "supplier", "lineitem", "orders", "customer", "nation")
-
-
-def _q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q8_market_share", "region", "nation",
-                   "customer", "supplier", "orders", "lineitem", "part")
-
-
-def _q9_product_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q9_product_revenue",
-                   "nation", "supplier", "part", "orders", "lineitem")
-
-
-def _q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q10_returned_items",
-                   "customer", "orders", "lineitem", "nation")
-
-
-def _q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q11_important_parts",
-                   "nation", "supplier", "lineitem")
-
-
-def _q12_priority_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q12_priority_lateness",
-                   "orders", "lineitem")
-
-
-def _q13_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q13_cust_distribution",
-                   "customer", "orders")
-
-
-def _q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q14_promo_revenue", "lineitem", "part")
-
-
-def _q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q15_top_supplier", "supplier", "lineitem")
-
-
-def _q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q16_supplier_cnt",
-                   "part", "lineitem", "supplier")
-
-
-def _q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q17_small_qty_revenue",
-                   "lineitem", "part")
-
-
-def _q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q18_large_volume",
-                   "customer", "orders", "lineitem")
-
-
-def _q19_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q19_bracket_revenue", "lineitem", "part")
-
-
-def _q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q20_promo_suppliers",
-                   "supplier", "nation", "lineitem", "part")
-
-
-def _q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q21_waiting_suppliers",
-                   "supplier", "lineitem", "orders", "nation")
-
-
-def _q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tpch_q(spark, sf_dir, "q22_idle_customers",
-                   "customer", "orders")
-
-
-def _range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketized time-range self-join (no nested-loop explosion)."""
-    from deltalake_poc_spark.analytics.events import range_join_pairs
-
-    return range_join_pairs(load_table(spark, sf_dir, "events"))
-
-
 def _asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed as-of join (union+window, no range explosion):
     attach to every purchase/error event the latest prior click value
@@ -479,21 +274,6 @@ def _asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     value_cols=["click_value"])
     return out.select("event_id", "user_id", "ts_ms",
                       F.col("click_value_asof").alias("last_click_value"))
-
-
-def _event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation (streaming twin lives in
-    streaming/stateful.py; batch is the oracle)."""
-    from deltalake_poc_spark.analytics.events import event_windows
-
-    return event_windows(load_table(spark, sf_dir, "events"))
-
-
-def _user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization via gaps-and-islands window functions."""
-    from deltalake_poc_spark.analytics.events import user_sessions
-
-    return user_sessions(load_table(spark, sf_dir, "events"))
 
 
 def _mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -850,21 +630,6 @@ def _cdf_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- training-data pipeline ops (dedup / similarity / text) -----------------
 
-def _dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.dedup import exact_duplicates
-
-    return exact_duplicates(load_table(spark, sf_dir, "documents"))
-
-
-def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.dedup import ngram_jaccard_pairs
-
-    # max_df mirrors the oracle's dfc CTE: grams in >100 docs are
-    # boilerplate and would blow up the self-join quadratically at scale
-    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"),
-                               n=3, threshold=0.15, max_df=100)
-
-
 def _dedup_group_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs -> groups: connected components (driver union-find at the
     gate's pair count) over the exact n-gram Jaccard pairs, then every
@@ -903,35 +668,6 @@ def _dedup_groups_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup_groups(docs, ngram_jaccard_pairs(docs, threshold=0.15),
                         driver_threshold=0)
-
-
-def _minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH candidates, verified with exact Jaccard >= 0.3.
-
-    Oracle contract: because every candidate is re-scored with EXACT
-    Jaccard, the output equals the exact all-pairs result whenever LSH
-    banding recall is 1.0 at the threshold — with 32 bands x 2 rows the
-    miss probability at the corpus's weakest true pair (J=0.89) is
-    ~1e-18, and signatures are deterministic (fixed seeds). So the
-    DuckDB oracle is the exact all-pairs Jaccard query itself: any
-    recall miss fails the row-count gate, which is precisely the claim
-    worth checking about an LSH implementation."""
-    from deltalake_poc_spark.pipeline.dedup import minhash_lsh_pairs
-
-    return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"),
-                             bands=32, threshold=0.3)
-
-
-def _simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with a FULL recompute oracle: portable
-    polynomial token hashes make the 62-bit signature SQL-expressible,
-    and 16-bit pigeonhole blocking is exact (hamming<=3 implies a
-    shared chunk), so the output is precisely the all-pairs
-    hamming<=3 set — which the DuckDB oracle recomputes from text."""
-    from deltalake_poc_spark.pipeline.dedup import simhash_pairs
-
-    return simhash_pairs(load_table(spark, sf_dir, "documents"),
-                         max_hamming=3, portable=True)
 
 
 def _skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1081,18 +817,6 @@ def _incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_minhash_dedup(
         VersionedTable(spark, work), docs.filter(F.col("doc_id") % 2 == 1),
         bands=32, threshold=0.3, rescore_texts=docs)
-
-
-def _span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document repeated-substring spans at arbitrary alignment
-    (exact-substring dedup, the boundary-free complement of
-    chunk_dedup): per document, the maximal 8-token-window spans whose
-    content occurs earlier in the corpus, as exact integers. The
-    oracle replays windowing, first-occurrence ranking, and the
-    gaps-and-islands span merge in SQL."""
-    from deltalake_poc_spark.pipeline.dedup import repeated_spans
-
-    return repeated_spans(load_table(spark, sf_dir, "documents"), n=8)
 
 
 def _canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1250,72 +974,10 @@ def _wal_cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                     units("acctbal").alias("acctbal_cents")))
 
 
-def _sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable-sketch vocabulary accounting: per-source HLL token
-    sketches + a union rollup that re-scans NOTHING (kilobyte sketch
-    merge instead of a second token shuffle). Gate rows are the EXACT
-    integer distincts (HLL estimates are not bit-portable across
-    engines); the sketch path is self-checking — the query RAISES if
-    any per-source estimate or the union estimate drifts >5% from
-    exact, so a green driver row certifies the sketch machinery the
-    same way skipping_read certifies pruning."""
-    from deltalake_poc_spark.pipeline.text import sketch_distinct_rollup
-
-    return sketch_distinct_rollup(load_table(spark, sf_dir, "documents"))
-
-
-def _text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.text import quality_scores
-
-    return quality_scores(load_table(spark, sf_dir, "documents"))
-
-
-def _lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.text import language_id
-
-    return language_id(load_table(spark, sf_dir, "documents"))
-
-
 def _doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deltalake_poc_spark.pipeline.text import fingerprint
 
     return fingerprint(load_table(spark, sf_dir, "documents")).drop("fp_xx64")
-
-
-def _top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.text import top_tokens
-
-    return top_tokens(load_table(spark, sf_dir, "documents"), k=10)
-
-
-def _length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-length distribution profile (p25/p50/p90/p99 per source +
-    corpus): returned columns are EXACT discrete quantiles via pure
-    integer rank arithmetic (gate-safe); the mergeable-summary path
-    (percentile_approx, the map-side-combinable GK sketch a 100 TB
-    profile actually runs) self-checks its rank error against the GK
-    guarantee inside the query and raises on violation."""
-    from deltalake_poc_spark.pipeline.text import length_quantiles
-
-    return length_quantiles(load_table(spark, sf_dir, "documents"))
-
-
-def _heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k tokens per source + corpus rollup: exact integer counts
-    (gate-safe), corpus row rolled up from the per-source aggregate
-    with no second corpus scan; the Count-Min path (per-source KB
-    sketches merged driver-side, the bloom-filter transport pattern)
-    self-checks every reported token against the CMS bounds
-    exact <= est <= exact + ceil(eps*N) and raises on violation."""
-    from deltalake_poc_spark.pipeline.text import heavy_hitters
-
-    return heavy_hitters(load_table(spark, sf_dir, "documents"), k=5)
-
-
-def _repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.text import repetition_signals
-
-    return repetition_signals(load_table(spark, sf_dir, "documents"))
 
 
 def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1328,26 +990,6 @@ def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.filter(F.col("doc_id") % 23 == 0)
     cands = docs.filter(F.col("doc_id") % 23 != 0)
     return contamination_counts(cands, bench, n=5)
-
-
-def _quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distilled linear quality filter applied corpus-wide (row-local
-    map pass). keep decides on the raw margin z (bit-deterministic
-    fixed-order double chain over exact integer counts); score is the
-    4dp sigmoid."""
-    from deltalake_poc_spark.pipeline.text import quality_classifier
-
-    return quality_classifier(load_table(spark, sf_dir, "documents"))
-
-
-def _pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-budget sequence packing, shard-parallel (doc_id % 32
-    shards; window cumsum within shard — the distributed deployment
-    of the inherently-sequential greedy packer)."""
-    from deltalake_poc_spark.pipeline.text import pack_sequences
-
-    return pack_sequences(load_table(spark, sf_dir, "documents"),
-                          budget=256, n_shards=32)
 
 
 def _dv_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1401,37 +1043,6 @@ def _dv_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-level winnowing (MOSS) verbatim-span candidates: 5-gram
-    hashes, window 4 — any shared run of >= 8 consecutive tokens is
-    guaranteed a shared fingerprint. Portable polynomial hash so the
-    oracle recomputes every fingerprint from raw text in SQL."""
-    from deltalake_poc_spark.pipeline.dedup import winnow_pairs
-
-    return winnow_pairs(load_table(spark, sf_dir, "documents"),
-                        n=5, window=4, min_shared=1, max_df=100,
-                        portable=True)
-
-
-def _doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.text import chunk_documents
-
-    return chunk_documents(load_table(spark, sf_dir, "documents"),
-                           chunk_tokens=16, overlap=4)
-
-
-def _tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.text import tf_idf
-
-    return tf_idf(load_table(spark, sf_dir, "documents"))
-
-
-def _scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.text import scrub_pii
-
-    return scrub_pii(load_table(spark, sf_dir, "documents"))
-
-
 # k-means / semantic-dedup gate parameters (shared by the Spark
 # queries and the generated oracle SQL below)
 _KMEANS_K = 8
@@ -1452,88 +1063,6 @@ def _shard_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shard_plan(load_table(spark, sf_dir, "documents"),
                       n_shards=_N_SHARDS,
                       payload_cols=("source", "n_chars"))
-
-
-def _shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-shard export manifest: row count, exact int64 order-hash
-    checksum (layout verification without payload reads), token-proxy
-    totals for balance monitoring."""
-    from deltalake_poc_spark.pipeline.shard import shard_manifest
-
-    return shard_manifest(load_table(spark, sf_dir, "documents"),
-                          n_shards=_N_SHARDS, token_col="n_chars")
-
-
-def _kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd k-means, hash-matched as an ITERATIVE
-    algorithm: 2 rounds over quantized embeddings (exact int64
-    centroid sums; the only floats are fixed-order distance folds),
-    profiled as (cluster, n_members, centroid_sum) — all integers.
-    The DuckDB oracle re-runs both Lloyd rounds in chained CTEs from
-    the same parquet, so assignment, update, tie-breaks, and the
-    empty-cluster rule must all agree exactly."""
-    from deltalake_poc_spark.pipeline.cluster import kmeans_profile
-
-    return kmeans_profile(load_table(spark, sf_dir, "embeddings"),
-                          k=_KMEANS_K, iters=_KMEANS_ITERS)
-
-
-def _kmeans_ivf_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME iterative Lloyd contract as ``kmeans_clusters``, but at
-    k=64 = cluster.ARROW_MIN_K — forcing every assignment (both
-    Lloyd rounds and the final profile) through the large-k production
-    path (Arrow-batched vectorized brute force; identical arithmetic
-    in identical order, see cluster._assign_arrow). The oracle is the
-    plain flat-argmin Lloyd at k=64: hash equality IS the proof that
-    the fast path changes nothing — the property that lets SemDeDup
-    grow k ∝ n (k≈n/10⁴) without the interpreted-HOF assignment wall
-    measured in SCALE.md (746 s at k=800, sf10)."""
-    from deltalake_poc_spark.pipeline.cluster import (ARROW_MIN_K,
-                                                      kmeans_profile)
-
-    return kmeans_profile(load_table(spark, sf_dir, "embeddings"),
-                          k=ARROW_MIN_K, iters=_KMEANS_ITERS)
-
-
-def _semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (arXiv:2303.09540): k-means clusters as the blocking
-    structure, exact int64-dot cosine pairs WITHIN clusters only,
-    connected-components keeper per duplicate group. One row per
-    vector: (vec_id, cluster, keep_vec_id, is_kept). The oracle
-    recomputes the full chain — both Lloyd rounds, the within-cluster
-    pair set at ROUND(cosine,4) >= tau, and the transitive closure —
-    from the raw parquet."""
-    from deltalake_poc_spark.pipeline.cluster import semantic_dedup
-
-    return semantic_dedup(load_table(spark, sf_dir, "embeddings"),
-                          k=_KMEANS_K, iters=_KMEANS_ITERS,
-                          threshold=_SEMDEDUP_TAU)
-
-
-def _pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed PCA by power iteration, hash-matched end-to-end:
-    one exploded-moment pass builds exact int64 Σqqᵀ/Σq, the centered
-    eigen-solve runs in exact big-integer arithmetic (max-norm
-    rescaling, integer rounding — zero floats), and every vector's
-    projection onto the top component is an exact int64. The oracle
-    replays the full chain in HUGEINT CTEs — moments, all twelve
-    matvec rounds, projection."""
-    from deltalake_poc_spark.pipeline.pca import pca_project
-
-    return pca_project(load_table(spark, sf_dir, "embeddings"), iters=12)
-
-
-def _hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive hard-negative mining over the k-means clusters:
-    per anchor, the most-similar non-near-duplicate in its cluster —
-    one map-side-combinable max_by over the within-cluster pairs. The
-    oracle replays the clustering and picks the same negatives with a
-    ROW_NUMBER window (ties: lowest candidate id)."""
-    from deltalake_poc_spark.pipeline.cluster import hard_negatives
-
-    return hard_negatives(load_table(spark, sf_dir, "embeddings"),
-                          k=_KMEANS_K, iters=_KMEANS_ITERS,
-                          dup_threshold=0.99)
 
 
 def _embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1689,13 +1218,6 @@ def _pq_encode_oracle() -> str:
     """
 
 
-def _embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deltalake_poc_spark.pipeline.dedup import embedding_neardup_pairs
-
-    return embedding_neardup_pairs(load_table(spark, sf_dir, "embeddings"),
-                                   threshold=0.4, block_col="label")
-
-
 def _corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone composition — the shape of a real training-data prep
     job: quality filter -> exact dedup (keep earliest) -> deterministic
@@ -1723,37 +1245,7 @@ def _corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token budgeting: whitespace words + BPE-ish pre-token pieces +
-    estimated subword count (the regex is restricted to constructs
-    with identical Java-regex/RE2 semantics, so DuckDB runs it too)."""
-    from deltalake_poc_spark.pipeline.text import bpe_token_stats
-
-    return bpe_token_stats(load_table(spark, sf_dir, "documents"))
-
-
 _BPE_N_MERGES = 8
-
-
-def _bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer TRAINING (Sennrich arXiv:1508.07909;
-    no reference counterpart — the reference budgets with a fixed
-    tokenizer, a 100 TB pipeline also fits one). Corpus collapses to a
-    word-frequency table in one distributed pass (the only corpus-wide
-    work); the 8-merge loop then runs driver-side over that table via
-    the incremental heap fit (bpe_learn_local — the production path;
-    merge-identical to the distributed per-iteration loop, both pinned
-    equal in tests/test_bpe.py, which r12 dropped from the gate plan
-    along with its 8 sequential argmax jobs). ORACLE CONTRACT: segmentations are delimiter-
-    wrapped strings, so each greedy merge is one literal replace()
-    with identical left-to-right non-overlap semantics in Spark and
-    DuckDB — the oracle replays the ENTIRE fit (all pair counts, all
-    argmaxes with the count-DESC/lhs/rhs tie-break, all merges) from
-    the raw parquet in an unrolled 8-stage CTE chain."""
-    from deltalake_poc_spark.pipeline.bpe import bpe_learn
-
-    return bpe_learn(load_table(spark, sf_dir, "documents"),
-                     n_merges=_BPE_N_MERGES)
 
 
 def _bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2116,18 +1608,6 @@ def _split_safety_oracle() -> str:
     """
 
 
-def _lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram-LM perplexity quality scoring (CCNet-style filter):
-    add-one-smoothed in-corpus bigram model, per-document per-token
-    negative log-likelihood. Vocabulary-bounded count shuffles, a
-    broadcast log-prob map, map-only scoring in canonical
-    sorted-bigram fold order. The oracle retrains the identical model
-    and refolds the identical doubles from the raw parquet."""
-    from deltalake_poc_spark.pipeline.text import lm_bigram_score
-
-    return lm_bigram_score(load_table(spark, sf_dir, "documents"))
-
-
 def _lm_perplexity_oracle() -> str:
     return """
         WITH toks AS (
@@ -2170,19 +1650,6 @@ def _lm_perplexity_oracle() -> str:
 _TRI_MC3, _TRI_MC2 = 2, 3  # model pruning: keeps all three backoff
 # levels LIVE on the gate corpus (unpruned in-corpus training would
 # make the trigram branch always win — see lm_trigram_backoff_score)
-
-
-def _lm_perplexity3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trigram stupid-backoff NLL (Brants et al. 2007) over the
-    documents corpus with pruned tri/bi models so every backoff
-    level fires; see pipeline/text.py lm_trigram_backoff_score for
-    the scale shape (three vocabulary-bounded count shuffles +
-    broadcast-joined scoring, no per-row Python)."""
-    from deltalake_poc_spark.pipeline.text import lm_trigram_backoff_score
-
-    return lm_trigram_backoff_score(
-        load_table(spark, sf_dir, "documents"),
-        min_count3=_TRI_MC3, min_count2=_TRI_MC2)
 
 
 def _lm_perplexity3_oracle() -> str:
@@ -2256,21 +1723,6 @@ _BM25_QUERY = "fast table scan query"
 _BM25_K = 25
 
 
-def _bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 lexical retrieval: top-k documents for a fixed
-    query (Lucene-style robust idf, k1=1.2, b=0.75). Two map-only
-    corpus passes around ONE map-side-combined stats row (N, total
-    length, per-term dfs — a few longs at any corpus size) broadcast
-    back for row-local scoring, finished by TakeOrderedAndProject.
-    The oracle recomputes the identical fixed-order float chain from
-    the raw parquet; ROUND(·,4) + the margin-invariant test absorb
-    ≤1-ulp ln() differences."""
-    from deltalake_poc_spark.pipeline.retrieval import bm25_topk
-
-    return bm25_topk(load_table(spark, sf_dir, "documents"),
-                     query=_BM25_QUERY, k=_BM25_K)
-
-
 def _bm25_oracle() -> str:
     terms = sorted(set(_BM25_QUERY.split()))
     tf_sel = ",\n                   ".join(
@@ -2318,25 +1770,6 @@ def _bm25_oracle() -> str:
 _DSIR_TARGET = "src0"   # designated high-quality target domain
 _DSIR_BUCKETS = 1024
 _DSIR_BUDGET = 100
-
-
-def _dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR data selection (Xie et al. 2023, arXiv:2302.03169): score
-    every document by the add-1-smoothed log-likelihood ratio of its
-    hashed unigram+bigram bag under the target domain vs the raw
-    corpus, return the ``budget`` most target-like (ties: lowest
-    doc_id). One KB-sized profile shuffle + a broadcast log-ratio row
-    + a map-only scoring pass — the shape that scales the paper to
-    trillion-token corpora. The oracle recomputes the full chain
-    (portable polynomial gram hash, dense bucket profile, ln ratios,
-    canonical sorted-bucket fold) from the raw parquet; ROUND(·,4)
-    absorbs ≤1-ulp cross-engine ln() differences, pinned by the
-    margin-invariant test in tests/test_entry_oracle.py."""
-    from deltalake_poc_spark.pipeline.sample import dsir_select
-
-    return dsir_select(load_table(spark, sf_dir, "documents"),
-                       target_source=_DSIR_TARGET, budget=_DSIR_BUDGET,
-                       n_buckets=_DSIR_BUCKETS)
 
 
 def _dsir_oracle() -> str:
@@ -2394,18 +1827,6 @@ def _dsir_oracle() -> str:
         ORDER BY dsir_logw DESC, doc_id
         LIMIT {budget}
     """
-
-
-def _chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document chunk-level dedup with reconstruction
-    (RefinedWeb-style): 32-token chunks, first occurrence by
-    (doc_id, idx) wins, documents reassembled from surviving chunks.
-    The window shuffle keys on md5(chunk) — uniform, skew-free at any
-    scale."""
-    from deltalake_poc_spark.pipeline.dedup import chunk_dedup
-
-    return chunk_dedup(load_table(spark, sf_dir, "documents"),
-                       chunk_tokens=32)
 
 
 def _multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2956,7 +2377,7 @@ def _multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_a", "doc_b"))
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def queries() -> dict[str, Builder]:
     """One entry per implemented operator from SURVEY.md §2.
 
     ORDER MATTERS: the driver's correctness gate checks the FIRST 50
@@ -3012,37 +2433,63 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # === r13 gate window (first 50) ===
         # --- the 32 remaining r10-green in dict order (r10 -> r13 is
         # the freshness limit):
-        "lm_perplexity": _lm_perplexity,             # bigram-LM quality scoring
-        "heavy_hitters": _heavy_hitters,             # count-min top-k rollup
+        "lm_perplexity": _loaded(  # bigram-LM quality scoring
+            text.lm_bigram_score, "documents"),
+        "heavy_hitters": _loaded(  # count-min top-k rollup
+            text.heavy_hitters, "documents", k=5),
         "wal_cdc_pipeline": _wal_cdc_pipeline,       # LIVE postgres WAL CDC
         "mixture_sample": _mixture_sample,           # domain mixing
         "source_overlap": _source_overlap,           # overlap matrix
-        "chunk_dedup": _chunk_dedup,                 # chunk-level dedup
+        "chunk_dedup": _loaded(  # chunk-level dedup
+            dedup.chunk_dedup, "documents", chunk_tokens=32),
         "bloom_lookup": _bloom_lookup,               # bloom skipping
-        "q11_important_parts": _q11_important_parts, # fraction HAVING
-        "q15_top_supplier": _q15_top_supplier,       # view + max probe
+        "q11_important_parts": _loaded(  # fraction HAVING
+            tpch.q11_important_parts, "nation", "supplier", "lineitem"),
+        "q15_top_supplier": _loaded(  # view + max probe
+            tpch.q15_top_supplier, "supplier", "lineitem"),
         "pq_stream_ingest": _pq_stream_ingest,       # streaming PQ ingest
-        "span_dedup": _span_dedup,                   # repeated substrings
-        "sketch_rollup": _sketch_rollup,             # HLL union rollup
-        "cohort_retention": _cohort_retention,       # retention matrix
+        "span_dedup": _loaded(  # repeated substrings
+            dedup.repeated_spans, "documents", n=8),
+        "sketch_rollup": _loaded(  # HLL union rollup
+            text.sketch_distinct_rollup, "documents"),
+        "cohort_retention": _loaded(Q.cohort_retention, "events"),  # retention matrix
         "skewed_agg": _skewed_agg,                   # salted hot-key agg
-        "minhash_dedup_prod": _minhash_dedup_prod,   # 16x4 banding, exact oracle
-        "ngram_jaccard_nocap": _ngram_jaccard_nocap, # capless, exact oracle
+        # 16x4 banding (the s-curve knee near J=0.5) verified at 0.3:
+        # candidates are re-scored with exact Jaccard, so output equals
+        # the exact all-pairs oracle iff banding surfaces every >=0.3
+        # pair — MEASURED 1.0 at sf0.001/sf0.01 (planted near-dups sit
+        # >=0.5 where P(candidate) >= 98.8%); a miss is a recall
+        # regression the gate should catch
+        "minhash_dedup_prod": _loaded(  # 16x4 banding, exact oracle
+            dedup.minhash_lsh_pairs, "documents", bands=16, threshold=0.3),
+        # the df cap OFF isolates the cap's cost and gives capless
+        # semantics their own exact oracle; not a production config:
+        # boilerplate grams blow the self-join up quadratically (267x
+        # bogus pairs on contaminated corpora, SCALE.md)
+        "ngram_jaccard_nocap": _loaded(  # capless, exact oracle
+            dedup.ngram_jaccard_pairs, "documents", threshold=0.15,
+            max_df=None),
         "ivf_kmeans_topk": _ivf_kmeans_topk,         # fitted IVF, exact-probe oracle
         "props_analytics": _props_analytics,         # JSON extraction agg
         "customers_without_orders": _customers_without_orders,# anti join
-        "change_type_counts": _change_type_counts,   # A6
+        "change_type_counts": _loaded(Q.change_type_counts, "events"),  # A6
         "intersect_keys": _intersect_keys,           # INTERSECT
         "string_funcs": _string_funcs,               # string surface
         "date_parts": _date_parts,                   # date extraction
         "time_travel_diff": _time_travel_diff,       # S6 U3
-        "tf_idf": _tf_idf,                           # corpus TF-IDF
-        "dedup_exact_groups": _dedup_exact_groups,   # exact dedup
-        "ngram_jaccard": _ngram_jaccard,             # n-gram Jaccard
+        "tf_idf": _loaded(text.tf_idf, "documents"),  # corpus TF-IDF
+        "dedup_exact_groups": _loaded(  # exact dedup
+            dedup.exact_duplicates, "documents"),
+        # max_df mirrors the oracle's dfc CTE: grams in >100 docs are
+        # boilerplate and would blow up the self-join at scale
+        "ngram_jaccard": _loaded(  # n-gram Jaccard
+            dedup.ngram_jaccard_pairs, "documents", n=3, threshold=0.15,
+            max_df=100),
         "dedup_group_assign": _dedup_group_assign,   # connected components
-        "top_tokens": _top_tokens,                   # token counting
-        "doc_chunks": _doc_chunks,                   # chunking w/ overlap
-        "scrub_pii": _scrub_pii,                     # PII scrubbing
+        "top_tokens": _loaded(text.top_tokens, "documents", k=10),  # token counting
+        "doc_chunks": _loaded(  # chunking w/ overlap
+            text.chunk_documents, "documents", chunk_tokens=16, overlap=4),
+        "scrub_pii": _loaded(text.scrub_pii, "documents"),  # PII scrubbing
         "embedding_topk": _embedding_topk,           # brute-force ANN baseline
         # --- 18 r11-green: split_safety and canonical_selection
         # hoisted FIRST (both r12-touched via the ngram_jaccard_pairs
@@ -3050,76 +2497,132 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "split_safety": _split_safety,               # dedup-aware leak-free split
         "canonical_selection": _canonical_selection, # quality-aware dedup
         "incremental_dedup_prod": _incremental_dedup_prod,# sig-agreement, exact-decision oracle
-        "bpe_learn": _bpe_learn,                     # BPE tokenizer training
-        "priority_stats": _priority_stats,           # A5 P8
-        "event_stats": _event_stats,                 # A7
+        # segmentations are delimiter-wrapped strings, so each merge is
+        # one literal replace() with the same semantics in both
+        # engines: the oracle replays the ENTIRE fit (pair counts,
+        # argmaxes with the count-DESC/lhs/rhs tie-break, merges) in an
+        # unrolled 8-stage CTE chain
+        "bpe_learn": _loaded(  # BPE tokenizer training
+            bpe.bpe_learn, "documents", n_merges=_BPE_N_MERGES),
+        "priority_stats": _loaded(Q.priority_stats, "orders"),  # A5 P8
+        "event_stats": _loaded(Q.event_stats, "events"),  # A7
         "customer_order_lists": _customer_order_lists,# array_agg
-        "scalar_showcase": _scalar_showcase,         # F2-F10
+        "scalar_showcase": _loaded(Q.scalar_showcase, "events"),  # F2-F10
         "suppliers_with_lineitems": _suppliers_with_lineitems,# semi join
-        "top_value_events": _top_value_events,       # O1 O4
-        "inventory_status": _inventory_status,       # F8
-        "customer_order_summary": _customer_order_summary,# J1 A2 F10
-        "product_popularity": _product_popularity,   # J2 A3 O1
-        "order_line_summary": _order_line_summary,   # J3 A4
-        "order_analytics": _order_analytics,         # A1 F9
+        "top_value_events": _loaded(Q.top_value_events, "events"),  # O1 O4
+        "inventory_status": _loaded(Q.inventory_status, "part"),  # F8
+        "customer_order_summary": _loaded(  # J1 A2 F10
+            Q.customer_order_summary, "customer", "orders"),
+        "product_popularity": _loaded(  # J2 A3 O1
+            Q.product_popularity, "part", "lineitem"),
+        "order_line_summary": _loaded(  # J3 A4
+            Q.order_line_summary, "orders", "lineitem"),
+        "order_analytics": _loaded(Q.order_analytics, "orders"),  # A1 F9
         "analytics_summary": _analytics_summary,     # A8 A9 U1
-        "order_rollup": _order_rollup,               # ROLLUP subtotals
-        "order_cube": _order_cube,                   # CUBE subtotals
+        "order_rollup": _loaded(Q.order_rollup, "orders"),  # ROLLUP subtotals
+        "order_cube": _loaded(Q.order_cube, "orders"),  # CUBE subtotals
         # --- positions 51+: outside the driver's 50-query gate
         # window. FIRST the remaining 32 r11-green (due r14):
-        "price_ranks": _price_ranks,                 # rank/ntile windows
+        "price_ranks": _loaded(Q.price_ranks, "orders"),  # rank/ntile windows
         "version_diff_keys": _version_diff_keys,     # U3 P6
-        "q1_pricing_summary": _q1_pricing_summary,   # wide-scan computed agg
-        "q6_forecast_revenue": _q6_forecast_revenue, # selective scan-agg
-        "q3_shipping_priority": _q3_shipping_priority,# 3-way join top-k
-        "q5_local_supplier": _q5_local_supplier_volume,# 5-way join bcast dims
+        "q1_pricing_summary": _loaded(  # wide-scan computed agg
+            tpch.q1_pricing_summary, "lineitem"),
+        "q6_forecast_revenue": _loaded(  # selective scan-agg
+            tpch.q6_forecast_revenue, "lineitem"),
+        "q3_shipping_priority": _loaded(  # 3-way join top-k
+            tpch.q3_shipping_priority, "customer", "orders", "lineitem"),
+        "q5_local_supplier": _loaded(  # 5-way join bcast dims
+            tpch.q5_local_supplier_volume, "region", "nation", "customer",
+            "supplier", "orders", "lineitem"),
         "simhash_dedup_prod": _simhash_dedup_prod,   # xxhash64, identity-set oracle
         "winnow_dedup_prod": _winnow_dedup_prod,     # xxhash64, exact-8gram oracle
         "pq_fitted_topk": _pq_fitted_topk,           # fitted PQ, exact-topk oracle
-        "kmeans_ivf_clusters": _kmeans_ivf_clusters, # Arrow large-k assignment
-        "dsir_select": _dsir_select,                 # DSIR importance selection
-        "bm25_search": _bm25_search,                 # Okapi BM25 retrieval
+        # kmeans_clusters' contract at k = ARROW_MIN_K: every assignment
+        # takes the Arrow large-k path, and the oracle is the plain
+        # flat-argmin Lloyd at k=64, so hash equality proves the fast
+        # path changes nothing
+        "kmeans_ivf_clusters": _loaded(  # Arrow large-k assignment
+            cluster.kmeans_profile, "embeddings", k=cluster.ARROW_MIN_K,
+            iters=_KMEANS_ITERS),
+        "dsir_select": _loaded(  # DSIR importance selection
+            sample.dsir_select, "documents", target_source=_DSIR_TARGET,
+            budget=_DSIR_BUDGET, n_buckets=_DSIR_BUCKETS),
+        "bm25_search": _loaded(  # Okapi BM25 retrieval
+            retrieval.bm25_topk, "documents", query=_BM25_QUERY, k=_BM25_K),
         "dataset_split": _dataset_split,             # deterministic train/val/test
         "shard_layout": _shard_layout,               # deterministic global shuffle
-        "shard_manifest": _shard_manifest,           # export manifest rollup
-        "hard_negatives": _hard_negatives,           # contrastive mining
-        "pca_project": _pca_project,                 # exact power-iteration PCA
-        "length_quantiles": _length_quantiles,       # mergeable quantile profile
-        "lang_id": _lang_id,                         # language ID
-        "text_quality": _text_quality,               # quality scoring
+        "shard_manifest": _loaded(  # export manifest rollup
+            shard.shard_manifest, "documents", n_shards=_N_SHARDS,
+            token_col="n_chars"),
+        "hard_negatives": _loaded(  # contrastive mining
+            cluster.hard_negatives, "embeddings", k=_KMEANS_K,
+            iters=_KMEANS_ITERS, dup_threshold=0.99),
+        "pca_project": _loaded(  # exact power-iteration PCA
+            pca.pca_project, "embeddings", iters=12),
+        "length_quantiles": _loaded(  # mergeable quantile profile
+            text.length_quantiles, "documents"),
+        "lang_id": _loaded(text.language_id, "documents"),  # language ID
+        "text_quality": _loaded(text.quality_scores, "documents"),  # quality scoring
         "doc_fingerprint": _doc_fingerprint,         # fingerprinting
         "asof_join": _asof_join,                     # as-of join
-        "range_join": _range_join,                   # band/range join
-        "event_windows": _event_windows,             # windowed agg
-        "user_sessions": _user_sessions,             # sessionization
-        "funnel_steps": _funnel_steps,               # sequential funnel
-        "q2_min_cost_supplier": _q2_min_cost_supplier,# correlated min
-        "q4_order_priority": _q4_order_priority,     # EXISTS semi join
-        "q8_market_share": _q8_market_share,         # share quotient
-        "q13_cust_distribution": _q13_cust_distribution,# outer-join hist
-        "q16_supplier_cnt": _q16_supplier_cnt,       # anti + distinct
-        "q17_small_qty_revenue": _q17_small_qty_revenue,# correlated avg
+        "range_join": _loaded(events.range_join_pairs, "events"),  # band/range join
+        "event_windows": _loaded(events.event_windows, "events"),  # windowed agg
+        "user_sessions": _loaded(events.user_sessions, "events"),  # sessionization
+        "funnel_steps": _loaded(Q.funnel_counts, "events"),  # sequential funnel
+        "q2_min_cost_supplier": _loaded(  # correlated min
+            tpch.q2_min_cost_supplier, "region", "nation", "supplier", "part",
+            "lineitem"),
+        "q4_order_priority": _loaded(  # EXISTS semi join
+            tpch.q4_order_priority, "orders", "lineitem"),
+        "q8_market_share": _loaded(  # share quotient
+            tpch.q8_market_share, "region", "nation", "customer", "supplier",
+            "orders", "lineitem", "part"),
+        "q13_cust_distribution": _loaded(  # outer-join hist
+            tpch.q13_cust_distribution, "customer", "orders"),
+        "q16_supplier_cnt": _loaded(  # anti + distinct
+            tpch.q16_supplier_cnt, "part", "lineitem", "supplier"),
+        "q17_small_qty_revenue": _loaded(  # correlated avg
+            tpch.q17_small_qty_revenue, "lineitem", "part"),
         # --- then the 50 r12-green (due r15; r14 takes the
         # r13-impl-touched members per the change-based rule first):
-        "kmeans_clusters": _kmeans_clusters,         # iterative Lloyd k-means
+        # the oracle re-runs both Lloyd rounds in chained CTEs, so
+        # assignment, update, tie-breaks and the empty-cluster rule must
+        # all agree exactly
+        "kmeans_clusters": _loaded(  # iterative Lloyd k-means
+            cluster.kmeans_profile, "embeddings", k=_KMEANS_K,
+            iters=_KMEANS_ITERS),
         "dedup_groups_distributed": _dedup_groups_distributed,# star CC regime
         "incremental_dedup": _incremental_dedup,     # signature store
         "bpe_segment": _bpe_segment,                 # corpus BPE segmentation (prod encoder)
-        "q18_large_volume": _q18_large_volume,       # IN group-having
-        "q21_waiting_suppliers": _q21_waiting_suppliers,# semi+anti self
-        "q22_idle_customers": _q22_idle_customers,   # scalar avg + anti
+        "q18_large_volume": _loaded(  # IN group-having
+            tpch.q18_large_volume, "customer", "orders", "lineitem"),
+        "q21_waiting_suppliers": _loaded(  # semi+anti self
+            tpch.q21_waiting_suppliers, "supplier", "lineitem", "orders",
+            "nation"),
+        "q22_idle_customers": _loaded(  # scalar avg + anti
+            tpch.q22_idle_customers, "customer", "orders"),
         "delta_read": _delta_read,                   # Delta-protocol interop
         "delta_dv_read": _delta_dv_read,             # standard deletion vectors
-        "stats_moments": _stats_moments,             # percentile/stddev/corr
+        "stats_moments": _loaded(Q.stats_moments, "lineitem"),  # percentile/stddev/corr
         "cdc_pipeline": _cdc_pipeline,               # S14 P1-P9 J4 J5 M1 M3
         "skipping_read": _skipping_read,             # data skipping e2e
-        "q7_volume_shipping": _q7_volume_shipping,   # dual-nation join
-        "q9_product_revenue": _q9_product_revenue,   # nation/year rollup
-        "q10_returned_items": _q10_returned_items,   # returns top-k
-        "q12_priority_lateness": _q12_priority_lateness,# conditional agg
-        "q14_promo_revenue": _q14_promo_revenue,     # promo share
-        "q19_bracket_revenue": _q19_bracket_revenue, # OR brackets
-        "q20_promo_suppliers": _q20_promo_suppliers, # nested semi
+        "q7_volume_shipping": _loaded(  # dual-nation join
+            tpch.q7_volume_shipping, "supplier", "lineitem", "orders",
+            "customer", "nation"),
+        "q9_product_revenue": _loaded(  # nation/year rollup
+            tpch.q9_product_revenue, "nation", "supplier", "part", "orders",
+            "lineitem"),
+        "q10_returned_items": _loaded(  # returns top-k
+            tpch.q10_returned_items, "customer", "orders", "lineitem",
+            "nation"),
+        "q12_priority_lateness": _loaded(  # conditional agg
+            tpch.q12_priority_lateness, "orders", "lineitem"),
+        "q14_promo_revenue": _loaded(  # promo share
+            tpch.q14_promo_revenue, "lineitem", "part"),
+        "q19_bracket_revenue": _loaded(  # OR brackets
+            tpch.q19_bracket_revenue, "lineitem", "part"),
+        "q20_promo_suppliers": _loaded(  # nested semi
+            tpch.q20_promo_suppliers, "supplier", "nation", "lineitem", "part"),
         "mv_refresh": _mv_refresh,                   # T7 S5 S11
         "cdf_changes": _cdf_changes,                 # S8 M1 M3
         "frame_sample": _frame_sample,               # video frames
@@ -3129,33 +2632,52 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_neardup": _image_neardup,             # dhash perceptual image dedup
         "multimodal_dedup": _multimodal_dedup,       # cross-modal simhash+dhash groups
         "token_drift": _token_drift,                 # corpus drift
-        "minhash_dedup": _minhash_dedup,             # MinHash+LSH vs exact oracle
-        "simhash_dedup": _simhash_dedup,             # SimHash, full SQL oracle
+        # candidates are re-scored with exact Jaccard, so the output is
+        # the exact all-pairs oracle whenever 32x2 banding has recall
+        # 1.0 at J=0.3 (miss probability ~1e-18 at the weakest true
+        # pair, J=0.89; fixed-seed signatures): a miss fails the gate
+        "minhash_dedup": _loaded(  # MinHash+LSH vs exact oracle
+            dedup.minhash_lsh_pairs, "documents", bands=32, threshold=0.3),
+        "simhash_dedup": _loaded(  # SimHash, full SQL oracle
+            dedup.simhash_pairs, "documents", max_hamming=3, portable=True),
         "pq_batch_topk": _pq_batch_topk,             # batch PQ ANN
         "ann_lsh_topk": _ann_lsh_topk,               # LSH ANN, full SQL oracle
         "ivf_topk": _ivf_topk,                       # pivot IVF, full SQL oracle
         "pq_topk": _pq_topk,                         # PQ/ADC ANN
-        "embedding_neardup": _embedding_neardup,     # cosine near-dup pairs
+        "embedding_neardup": _loaded(  # cosine near-dup pairs
+            dedup.embedding_neardup_pairs, "embeddings", threshold=0.4,
+            block_col="label"),
         "multimodal_decode": _multimodal_decode,     # binary decode + resize
         "corpus_pipeline": _corpus_pipeline,         # filter+dedup+sample+budget
-        "quality_classifier": _quality_classifier,   # distilled quality filter
-        "repetition_signals": _repetition_signals,   # Gopher repetition stats
+        "quality_classifier": _loaded(  # distilled quality filter
+            text.quality_classifier, "documents"),
+        "repetition_signals": _loaded(  # Gopher repetition stats
+            text.repetition_signals, "documents"),
         "decontaminate": _decontaminate,             # benchmark n-gram overlap
         "corpus_sample": _corpus_sample,             # deterministic sampling
-        "bpe_token_stats": _bpe_token_stats,         # token budgeting
-        "pack_sequences": _pack_sequences,           # fixed-budget packing
-        "winnow_dedup": _winnow_dedup,               # MOSS winnowing spans
+        "bpe_token_stats": _loaded(  # token budgeting
+            text.bpe_token_stats, "documents"),
+        "pack_sequences": _loaded(  # fixed-budget packing
+            text.pack_sequences, "documents", budget=256, n_shards=32),
+        # portable polynomial hash: the oracle recomputes every
+        # fingerprint from raw text in SQL
+        "winnow_dedup": _loaded(  # MOSS winnowing spans
+            dedup.winnow_pairs, "documents", n=5, window=4, min_shared=1,
+            max_df=100, portable=True),
         "dv_pipeline": _dv_pipeline,                 # deletion vectors e2e
         "webdataset_rw": _webdataset_rw,             # tar shard pack/unpack round trip
-        "lm_perplexity3": _lm_perplexity3,           # trigram stupid-backoff NLL
+        "lm_perplexity3": _loaded(  # trigram stupid-backoff NLL
+            text.lm_trigram_backoff_score, "documents", min_count3=_TRI_MC3,
+            min_count2=_TRI_MC2),
         "mp4_index": _mp4_index,                     # ISO-BMFF sample-table index
         "mp3_index": _mp3_index,                     # MPEG audio frame walk
-        "semantic_dedup": _semantic_dedup,           # SemDeDup over clusters
+        "semantic_dedup": _loaded(  # SemDeDup over clusters
+            cluster.semantic_dedup, "embeddings", k=_KMEANS_K,
+            iters=_KMEANS_ITERS, threshold=_SEMDEDUP_TAU),
     }
 
 
-def bench_extra_queries() -> dict[str, Callable[[SparkSession, str],
-                                                DataFrame]]:
+def bench_extra_queries() -> dict[str, Builder]:
     """Benched-but-not-driver-gated queries: operators whose output is
     genuinely not SQL-recomputable (an SGD fit), so a registry entry
     would permanently burn a driver window slot as err: no_oracle.
@@ -3177,23 +2699,6 @@ def bench_extra_queries() -> dict[str, Callable[[SparkSession, str],
 # recomputable surface, while the production machinery under gate
 # (xxhash64 signatures, fitted centroids/codebooks, text-free
 # signature agreement) stays on the hot path.
-
-def _minhash_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production MinHash banding: 16 bands x 4 rows (the s-curve knee
-    at threshold ~0.5) at verify threshold 0.3 — the demo gate runs
-    32x2 so banding recall is ~1 by construction. ORACLE CONTRACT:
-    candidates are re-scored with EXACT Jaccard, so output ⊆ the exact
-    all-pairs result always; equality additionally needs 16x4 banding
-    to surface every >=0.3 pair. On this corpus pair similarity is
-    bimodal (planted near-dups sit >=0.5 where P(candidate) >= 98.8%
-    per pair), and recall is MEASURED 1.0 at sf0.001 and sf0.01 — the
-    driver re-measures that equality every window round. A miss here
-    is a real recall regression, exactly what the gate should catch."""
-    from deltalake_poc_spark.pipeline.dedup import minhash_lsh_pairs
-
-    return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"),
-                             bands=16, threshold=0.3)
-
 
 def _simhash_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production simhash: xxhash64 signatures (JVM intrinsic, one
@@ -3305,18 +2810,6 @@ def _winnow_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.size("g8_b").cast("long").alias("nb8"))
             .filter(F.col("n_shared8") >= 1)
             .orderBy("doc_a", "doc_b"))
-
-
-def _ngram_jaccard_nocap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ngram_jaccard with the hot-gram document-frequency cap OFF —
-    isolates the cap's cost and gives the capless semantics their own
-    full exact oracle. NOT a production config at corpus scale:
-    boilerplate grams blow up the self-join quadratically (measured
-    267x bogus-pair growth on contaminated corpora, SCALE.md)."""
-    from deltalake_poc_spark.pipeline.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"),
-                               threshold=0.15, max_df=None)
 
 
 def _incremental_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4969,7 +4462,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # exact all-pairs Jaccard at the LSH threshold: candidates are
         # re-scored exactly, so equality holds iff banding recall = 1.0
-        # (see _minhash_dedup docstring)
+        # (see the minhash_dedup entry in queries())
         "minhash_dedup": """
             WITH toks AS (
                 SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents
@@ -4996,7 +4489,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # exact all-pairs at the production 16x4 banding's verify
         # threshold; equality = measured recall 1.0 on this corpus
-        # (bimodal pair similarity — see _minhash_dedup_prod docstring)
+        # (bimodal pair similarity — see its queries() entry)
         "minhash_dedup_prod": """
             WITH toks AS (
                 SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents

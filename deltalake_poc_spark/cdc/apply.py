@@ -164,13 +164,11 @@ class CDCApplier:
             events = events.persist()
         try:
             self.audit_table().append_batch(events, batch_id)
+            seen = None  # the tables the batch carries events for
             if tables is None:
-                seen = [r["source_table"] for r in
-                        events.select("source_table").distinct().collect()]
-                if self.infer_unknown_tables:
-                    tables = seen
-                else:
-                    tables = [t for t in seen if t in self.table_schemas]
+                seen = _source_tables(events)
+                tables = [t for t in seen if self.infer_unknown_tables
+                          or t in self.table_schemas]
             unknown = [t for t in tables if t not in self.table_schemas]
             if unknown:
                 # §1.4 mode 2: infer from this batch's payloads — but
@@ -183,11 +181,10 @@ class CDCApplier:
                 # 10k-change batch held only table 0's inserts).
                 from deltalake_poc_spark.cdc.infer import infer_table_schema
 
-                seen_now = {r["source_table"] for r in
-                            events.select("source_table")
-                            .distinct().collect()}
+                if seen is None:
+                    seen = _source_tables(events)
                 for t in unknown:
-                    if t in seen_now:
+                    if t in seen:
                         self.table_schemas[t] = infer_table_schema(
                             self.spark, events, t)
             metrics = {}
@@ -356,3 +353,9 @@ class CDCApplier:
                 n = 0
             self._merges_since_compact[name] = n
         return commit.metrics
+
+
+def _source_tables(events: DataFrame) -> list[str]:
+    """The tables a batch of parsed events carries events for (one job)."""
+    return [r["source_table"] for r in
+            events.select("source_table").distinct().collect()]

@@ -16,9 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deltalake_poc_spark.cdc.schema import (
-    CDC_EVENTS_SCHEMA, MESSAGE_TYPED_SCHEMA,
-)
+from deltalake_poc_spark.cdc.schema import MESSAGE_TYPED_SCHEMA
 
 
 def parse_debezium(raw: DataFrame) -> DataFrame:
@@ -89,10 +87,6 @@ def parse_debezium(raw: DataFrame) -> DataFrame:
         .alias("txn_collection_order"),
         F.current_timestamp().alias("processed_at"),
     )
-
-
-def audit_schema():
-    return CDC_EVENTS_SCHEMA
 
 
 def split_malformed(raw: DataFrame) -> tuple[DataFrame, DataFrame]:

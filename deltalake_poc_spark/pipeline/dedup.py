@@ -417,7 +417,8 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64,
       estimator samples the set of shingle-hashes instead of the
       shingle set; a cross-shingle collision (~n²/2⁶⁴) is negligible
       against the banding miss probability, so the exact-rescore +
-      recall-1.0 oracle contract (see _minhash_dedup) holds unchanged.
+      recall-1.0 oracle contract (see the minhash_dedup entry in
+      __spark_entry__.queries()) holds unchanged.
     - The token guard sits BELOW the n-gram chain on the materialized
       token column: a size(grams) > 0 filter above it made predicate
       pushdown re-inline the tokenizer into the condition and every

@@ -215,8 +215,11 @@ def jdbc_execute(spark: SparkSession, url: str, statements: list[str],
     try:
         conn.setAutoCommit(False)
         st = conn.createStatement()
-        for s in statements:
-            st.execute(s)
+        try:
+            for s in statements:
+                st.execute(s)
+        finally:
+            st.close()
         conn.commit()
     except Exception:
         conn.rollback()

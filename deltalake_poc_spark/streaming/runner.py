@@ -19,9 +19,11 @@ Re-implements the reference's streaming job
 Exactly-once: Spark's checkpoint gives at-least-once delivery into
 ``process_batch``; CDCApplier's MERGE is idempotent per key+lsn, so
 replays converge (same contract the reference relies on,
-docs/technical-docs.md:550-589). The audit append is the one
-at-least-once artifact (replayed batches re-append; dedup on event_id
-at read time if exactness is needed — documented divergence).
+docs/technical-docs.md:550-589). The audit append is exactly-once too:
+each micro-batch is applied as batch id ``<query_name>-<batch_id>``,
+which ``VersionedTable.append_batch`` stamps into the append commit and
+a replay of the same id skips. The dead-letter errors append is a plain
+append, so a replayed batch re-appends its malformed rows.
 """
 
 from __future__ import annotations

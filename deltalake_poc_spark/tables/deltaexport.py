@@ -481,7 +481,7 @@ def export_standard_delta(table: VersionedTable, dest: str,
         # them as the commit's complete change set, matching how they
         # were written: _stage_changes emits the full set per commit)
         changes_dir = log.commit_changes_dir(c)
-        if live and os.path.isdir(changes_dir):
+        if live and changes_dir and os.path.isdir(changes_dir):
             for name in sorted(os.listdir(changes_dir)):
                 if not name.endswith(".parquet"):
                     continue

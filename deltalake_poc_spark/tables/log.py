@@ -12,7 +12,8 @@ Layout (all paths relative to the table root):
 
     _log/00000000000000000000.json   one JSON commit per version
     data/<uuid>.parquet              data files (referenced by commits)
-    _changes/v=N/*.parquet           change-data-feed rows for version N
+    _changes/<uuid>/*.parquet        change-data-feed rows of the commit
+                                     whose changeDir names the dir
 
 Commit JSON fields:
     version, timestamp (epoch ms), operation, operationParameters,
@@ -183,16 +184,10 @@ class TableLog:
     def data_dir(self) -> str:
         return os.path.join(self.root, self.DATA_DIR)
 
-    def changes_dir(self, version: int) -> str:
-        return os.path.join(self.root, self.CHANGES_DIR, f"v={version}")
-
-    def commit_changes_dir(self, c: Commit) -> str:
-        """Absolute path of a commit's CDF change-file directory: the
-        unique dir recorded in the commit itself, falling back to the
-        legacy version-keyed layout for logs written before changeDir."""
-        if c.change_dir:
-            return self.abs_path(c.change_dir)
-        return self.changes_dir(c.version)
+    def commit_changes_dir(self, c: Commit) -> str | None:
+        """Absolute path of a commit's CDF change-file directory (the
+        unique dir the commit records), or None if it staged none."""
+        return c.change_dir and self.abs_path(c.change_dir)
 
     def abs_path(self, rel: str) -> str:
         return os.path.join(self.root, rel)
@@ -207,9 +202,9 @@ class TableLog:
         None). OPTIMIZE, VACUUM and property commits change no row."""
         if c.operation in ("MERGE", "DELETE", "UPDATE"):
             cd = self.commit_changes_dir(c)
-            if os.path.isdir(cd) and any(
+            if cd and os.path.isdir(cd) and any(
                     f.endswith(".parquet") for f in os.listdir(cd)):
-                return [(None, [os.path.relpath(cd, self.root)])]
+                return [(None, [c.change_dir])]
             return []
         groups: list[tuple[str | None, list[str]]] = []
         if c.operation in ("WRITE", "APPEND", "CREATE TABLE",

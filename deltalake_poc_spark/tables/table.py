@@ -1242,9 +1242,6 @@ class VersionedTable:
                 if rel in dv_seen:
                     ts = dv_removed_at.get(rel)
                     expired = ts is not None and ts <= cutoff
-                elif name.startswith("v="):  # legacy version-keyed dir
-                    ts = commit_ts.get(int(name[2:]))
-                    expired = ts is not None and ts <= cutoff
                 else:  # orphaned staging from an aborted writer
                     expired = _orphan_expired(os.path.join(dv_root, name))
                 if expired:
@@ -1270,19 +1267,15 @@ class VersionedTable:
         if os.path.isdir(changes_root):
             for name in os.listdir(changes_root):
                 rel = f"{TableLog.CHANGES_DIR}/{name}"
-                if name.startswith("v="):  # legacy version-keyed dir
-                    v = int(name[2:])
-                elif rel in change_dir_version:
-                    v = change_dir_version[rel]
-                else:  # orphaned staging from an aborted writer
+                v = change_dir_version.get(rel)
+                if v is None:  # orphaned staging from an aborted writer
                     if _orphan_expired(os.path.join(changes_root, name)):
                         shutil.rmtree(os.path.join(changes_root, name),
                                       ignore_errors=True)
                         deleted.append(rel)
                     continue
-                ts = commit_ts.get(v)
                 # keep the current version's changes regardless
-                if ts is not None and ts <= cutoff and v < snap.version:
+                if commit_ts[v] <= cutoff and v < snap.version:
                     shutil.rmtree(os.path.join(changes_root, name),
                                   ignore_errors=True)
                     deleted.append(rel)

@@ -403,6 +403,28 @@ def test_pgwal_messages_reuse_debezium_parse(spark):
     assert rows[1]["source_lsn"] > rows[0]["source_lsn"]
 
 
+def test_apply_batch_lists_the_batch_tables_once(spark, tmp_path):
+    """A batch that names no tables, on an applier that infers unknown
+    ones, lists its source tables once: it costs the same Spark jobs
+    as the batch that names them, which lists them for the inference."""
+    from tests.test_tables import _job_ids
+
+    msgs = [_msg("c", 1, table="lt_a", lsn=10, after=CUST),
+            _msg("c", 2, table="lt_b", lsn=11, after={**CUST, "id": 2})]
+
+    def jobs(tables, name):
+        applier = CDCApplier(spark, str(tmp_path / name),
+                             infer_unknown_tables=True)
+        events = parse_debezium(_raw(spark, msgs))
+        ids = _job_ids(spark, f"apply-{name}-{tmp_path.name}",
+                       lambda: applier.apply_batch(events, tables=tables,
+                                                   batch_id="b1"))
+        assert {"lt_a", "lt_b"} <= set(applier.table_schemas)
+        return len(ids)
+
+    assert jobs(None, "unnamed") == jobs(["lt_a", "lt_b"], "named")
+
+
 def test_apply_batch_explicit_tables_defers_absent_inference(spark, tmp_path):
     """A multi-table consumer passes its FULL table list every
     micro-batch (the 4-table WAL tier); a batch with no rows for one

@@ -8,6 +8,7 @@ size check.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -66,6 +67,28 @@ def test_absent_reference_delta_costs_only_delta_read(
     assert "delta_read" not in without
     assert set(with_fixture) == set(without) | {"delta_read"}
     assert all(with_fixture[k] == sql for k, sql in without.items())
+
+
+def test_loaded_builders_read_through_module_load_table(monkeypatch):
+    """Rebinding ``__spark_entry__.load_table`` redirects every builder
+    made by ``_loaded`` (perfbench's lakehouse_read points the TPC-H
+    and corpus builders at lake tables this way): each one, called,
+    reaches the rebound function and not a reference it captured."""
+    class Reached(Exception):
+        pass
+
+    def stub(spark, sf_dir, name):
+        raise Reached(name)
+
+    registry = {**entrymod.queries(), **entrymod.bench_extra_queries()}
+    monkeypatch.setattr(entrymod, "load_table", stub)
+    loaded = {n: b for n, b in registry.items()
+              if b.__qualname__ == "_loaded.<locals>.build"}
+    tpch = {n for n in registry if re.match(r"q\d+_", n)}
+    assert tpch | {"minhash_dedup", "kmeans_clusters"} <= set(loaded)
+    for build in loaded.values():
+        with pytest.raises(Reached):
+            build(None, SF_DIR)
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])

@@ -230,3 +230,47 @@ def test_jdbc_write_and_upsert_live_duckdb(tmp_path):
         capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stdout[-3000:] + proc.stderr[-3000:]
     assert "JDBC_WRITE_LIVE_OK" in proc.stdout
+
+
+_RELEASE_SCRIPT = r"""
+import subprocess, sys
+repo, jar, db = sys.argv[1:4]
+sys.path.insert(0, repo)
+from pyspark.sql import SparkSession
+from deltalake_poc_spark.sources import jdbc_execute
+spark = (SparkSession.builder.master("local[1]").config("spark.jars", jar)
+         .config("spark.driver.extraClassPath", jar)
+         .config("spark.ui.enabled", "false").getOrCreate())
+jdbc_execute(spark, f"jdbc:duckdb:{db}",
+             ["CREATE TABLE t (id BIGINT)", "INSERT INTO t VALUES (1)"])
+# another process can lock the file only once this JVM has released
+# the database (DuckDB locks a database file per process)
+probe = subprocess.run(
+    [sys.executable, "-c", "import duckdb, sys; print(duckdb.connect("
+     "sys.argv[1], read_only=True).execute('SELECT count(*) FROM t')"
+     ".fetchone()[0])", db], capture_output=True, text=True)
+spark.stop()
+print("PROBE", probe.returncode, probe.stdout.strip(), probe.stderr[-500:])
+"""
+
+
+@pytest.mark.skipif(_find_duckdb_jdbc_jar() is None,
+                    reason="no batch-capable JDBC driver jar in env")
+def test_jdbc_execute_releases_the_database(tmp_path):
+    """jdbc_execute closes its statement: an open DuckDB statement pins
+    the database past conn.close() until GC finalizes it, and that late
+    shutdown on the finalizer thread checkpoints the file while a new
+    connection may be opening it ("Serialization Error: Failed to
+    deserialize" in the live write test)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "duck_jdbc_release.py"
+    script.write_text(_RELEASE_SCRIPT)
+    proc = subprocess.run(
+        [sys.executable, str(script), repo, _find_duckdb_jdbc_jar(),
+         str(tmp_path / "t.duckdb")],
+        capture_output=True, text=True, timeout=600)
+    assert "PROBE 0 1" in proc.stdout, proc.stdout[-2000:] + proc.stderr[-2000:]
