@@ -5,15 +5,28 @@ transaction log the reference relies on (its tables live under
 ``deltalake/*/_delta_log/*.json`` with add/remove file actions;
 protocol evidence at ``deltalake/customers/_delta_log/
 00000000000000000000.json``). Same core ideas — ordered JSON commits,
-add/remove file actions, per-file stats, table properties — with a
-single-writer atomic-rename commit protocol.
+add/remove file actions, per-file stats, table properties — and the
+same optimistic concurrency: a commit publishes by an atomic
+fail-if-exists link of its version file, and the log numbers and
+stamps every commit when it publishes (write_commit_with_rebase),
+rebasing it past concurrent commits that left its read-set intact.
 
 Layout (all paths relative to the table root):
 
     _log/00000000000000000000.json   one JSON commit per version
-    data/<uuid>.parquet              data files (referenced by commits)
+    _log/<version>.checkpoint.json   replayed table state every
+                                     CHECKPOINT_EVERY versions
+    data/<uuid>.parquet              data files (referenced by commits;
+                                     data/k=v/... when partitioned)
+    _dv/<uuid>/*.parquet             deletion-vector sidecars (file, pos)
+                                     named by commits' dvUpdates
     _changes/<uuid>/*.parquet        change-data-feed rows of the commit
                                      whose changeDir names the dir
+    _staging/<uuid>/                 a writer's Spark output before its
+                                     files move into data/
+
+Anything under data/, _dv/, _changes/ or _staging/ that no commit
+references is invisible to readers; VACUUM reclaims it.
 
 Commit JSON fields:
     version, timestamp (epoch ms), operation, operationParameters,
@@ -21,12 +34,12 @@ Commit JSON fields:
     remove: [path, ...],
     schema: Spark StructType JSON (present when schema changes),
     properties: full table-properties map (present when it changes),
-    metrics: operation metrics (numOutputRows, numTargetRowsUpdated, ...)
+    metrics: operation metrics (numOutputRows, numTargetRowsUpdated, ...),
+    dvUpdates: {data file: DV dir or null}, changeDir: change-file dir
 
-At 100 TB the log stays tiny (one small JSON per commit; file stats
-are per-file scalars), and readers do a single driver-side replay to
-plan a distributed parquet scan — same asymptotics as Delta without
-checkpoints (add checkpointing if commit counts grow unbounded).
+At 100 TB the log stays small (one small JSON per commit; file stats
+are per-file scalars), and readers do a single driver-side replay,
+from the newest checkpoint, to plan a distributed parquet scan.
 """
 
 from __future__ import annotations
@@ -77,9 +90,10 @@ class FileEntry:
 
 @dataclass
 class Commit:
-    version: int
-    timestamp: int  # epoch ms
     operation: str
+    # set by TableLog.write_commit_with_rebase when the commit publishes
+    version: int | None = None
+    timestamp: int | None = None  # epoch ms
     operation_parameters: dict = field(default_factory=dict)
     add: list[FileEntry] = field(default_factory=list)
     remove: list[str] = field(default_factory=list)
@@ -359,23 +373,30 @@ class TableLog:
                 continue
             c = self.read_commit(v)
             ts = c.timestamp
-            for r in c.remove:
-                active.pop(r, None)
-                dvs.pop(r, None)  # file gone -> its DV is gone
-            for a in c.add:
-                active[a.path] = a
-                dvs.pop(a.path, None)  # fresh file content, no DV
-            for fp, dv in c.dv_updates.items():
-                if dv is None:  # explicit clear (RESTORE)
-                    dvs.pop(fp, None)
-                else:
-                    dvs[fp] = dv
+            self.apply(c, active, dvs)
             if c.schema_json:
                 schema_json = c.schema_json
             if c.properties is not None:
                 properties = dict(c.properties)
         return Snapshot(version, ts, list(active.values()), schema_json,
                         properties, dvs)
+
+    @staticmethod
+    def apply(c: Commit, active: dict[str, FileEntry],
+              dvs: dict[str, str]) -> None:
+        """Replay commit ``c``'s file actions onto ``active`` (data file
+        -> entry) and ``dvs`` (data file -> DV dir)."""
+        for r in c.remove:
+            active.pop(r, None)
+            dvs.pop(r, None)  # file gone -> its DV is gone
+        for a in c.add:
+            active[a.path] = a
+            dvs.pop(a.path, None)  # fresh file content, no DV
+        for fp, dv in c.dv_updates.items():
+            if dv is None:  # explicit clear (RESTORE)
+                dvs.pop(fp, None)
+            else:
+                dvs[fp] = dv
 
     # -- log writing ----------------------------------------------------------
 
@@ -384,9 +405,10 @@ class TableLog:
         return (vs[-1] + 1) if vs else 0
 
     def write_commit(self, commit: Commit) -> None:
-        """Atomically publish a commit. Single-writer: if the target
-        version file already exists the commit fails (the reference's
-        Delta writers rely on the same optimistic protocol)."""
+        """Atomically publish a commit at its version: if that version
+        file already exists the commit fails with ConcurrentWriteError
+        (the optimistic protocol the reference's Delta writers rely on;
+        write_commit_with_rebase decides what happens next)."""
         os.makedirs(self.log_path, exist_ok=True)
         target = os.path.join(self.log_path, f"{commit.version:020d}.json")
         if os.path.exists(target):
@@ -413,39 +435,35 @@ class TableLog:
                                  read_version: int | None,
                                  table_level: bool = False,
                                  max_retries: int = 20) -> Commit:
-        """Optimistic concurrency (Delta's write-serializable protocol):
-        publish ``commit``; if another writer won the version race,
-        decide between REBASE (re-issue the identical commit at the next
-        version) and CONFLICT (raise — the caller's plan is stale).
+        """Number, stamp and publish ``commit`` under optimistic
+        concurrency (Delta's write-serializable protocol).
 
         ``read_version`` is the snapshot version the operation was
-        planned against (None = the table did not exist yet).
-        ``table_level`` marks operations whose read-set is the whole
-        table (overwrite, restore): they never rebase.
+        planned against (None = the table did not exist yet). The first
+        attempt targets ``read_version + 1`` (version 0 for None), as
+        Delta attempts readVersion + 1, so every commit published since
+        the snapshot goes through the check below; each attempt takes a
+        fresh nondecreasing timestamp. If another writer won the
+        version, decide between REBASE (retry at the next version) and
+        CONFLICT (raise CommitConflictError — the caller's plan is
+        stale).
 
-        Rebase is safe iff every intervening commit left our read-set
-        intact: same schema, same properties, and no file we saw has
-        been removed (checked whenever our commit removes files — a
-        remove-bearing operation read the whole snapshot to plan its
-        rewrite). Concurrent blind APPENDS therefore never conflict
-        with appends, MERGE, DELETE, or OPTIMIZE — the standard
-        write-serializable anomaly (our rewrite does not see rows
-        appended after our snapshot) is accepted, exactly as Delta's
-        default isolation accepts it."""
-        # Plan the first publish at read_version + 1 (what Delta
-        # attempts: readVersion + 1), IGNORING whatever version the
-        # caller planned. Callers compute versions via next_version()
-        # — a fresh log listing taken after their snapshot and after
-        # multi-second Spark jobs — so a rival committing in that
-        # window would make the planned version rival+1 and the first
-        # write_commit would succeed WITHOUT any conflict check
-        # (delete-delete lost updates, stale DV consolidation
-        # resurrecting the rival's deleted rows). Anchoring to the
-        # snapshot version forces every intervening commit through the
-        # conflict/rebase path below.
-        if read_version is not None and commit.version != read_version + 1:
-            commit.version = read_version + 1
+        ``table_level`` marks operations whose read-set is the whole
+        table (overwrite, restore, add constraint): they never rebase.
+        A commit that adds, removes and changes nothing (a no-op
+        DELETE) has no read-set and always rebases. Otherwise rebase is
+        safe iff every intervening commit left the read-set intact:
+        same schema, same properties, and — when our commit removes
+        files or changes deletion vectors, having read the snapshot to
+        plan them — no file we saw removed and no vector changed.
+        Concurrent blind APPENDS therefore never conflict with appends,
+        MERGE, DELETE, or OPTIMIZE — the standard write-serializable
+        anomaly (our rewrite does not see rows appended after our
+        snapshot) is accepted, exactly as Delta's default isolation
+        accepts it."""
+        commit.version = 0 if read_version is None else read_version + 1
         for _ in range(max_retries):
+            commit.timestamp = self.monotonic_now_ms()
             try:
                 self.write_commit(commit)
                 return commit
@@ -459,37 +477,41 @@ class TableLog:
                         f"{self.root}: {commit.operation} planned at "
                         f"v{read_version} but table is at v{latest}; "
                         "table-level operations never rebase")
-                base = self.snapshot(read_version)
-                now = self.snapshot(latest)
-                if now.properties != base.properties:
-                    raise CommitConflictError(
-                        f"{self.root}: table properties changed "
-                        f"concurrently (v{read_version} -> v{latest})")
-                if now.schema_json != base.schema_json:
-                    raise CommitConflictError(
-                        f"{self.root}: schema changed concurrently "
-                        f"(v{read_version} -> v{latest})")
-                if commit.remove or commit.dv_updates:
-                    # a remove- or DV-bearing commit read the snapshot
-                    # to plan row-level effects: any concurrent commit
-                    # that removed files OR changed deletion vectors
-                    # invalidates that read-set (two DV deletes each
-                    # consolidate ALL active vectors — rebasing the
-                    # loser would silently revert the winner's rows)
-                    gone = set(base.file_paths) - set(now.file_paths)
-                    if gone:
-                        raise CommitConflictError(
-                            f"{self.root}: {len(gone)} file(s) this "
-                            f"{commit.operation} read were removed by a "
-                            "concurrent commit")
-                    if now.dvs != base.dvs:
-                        raise CommitConflictError(
-                            f"{self.root}: deletion vectors changed "
-                            f"concurrently (v{read_version} -> v{latest})")
+                if (commit.add or commit.remove or commit.dv_updates
+                        or commit.change_dir or commit.schema_json
+                        or commit.properties is not None):
+                    self._check_rebase(commit, read_version, latest)
                 commit.version = latest + 1
-                commit.timestamp = self.monotonic_now_ms()
         raise ConcurrentWriteError(
             f"{self.root}: lost the commit race {max_retries} times")
+
+    def _check_rebase(self, commit: Commit, read_version: int,
+                      latest: int) -> None:
+        """Raise CommitConflictError if the commits after
+        ``read_version`` invalidated ``commit``'s read-set."""
+        base = self.snapshot(read_version)
+        now = self.snapshot(latest)
+        if now.properties != base.properties:
+            raise CommitConflictError(
+                f"{self.root}: table properties changed "
+                f"concurrently (v{read_version} -> v{latest})")
+        if now.schema_json != base.schema_json:
+            raise CommitConflictError(
+                f"{self.root}: schema changed concurrently "
+                f"(v{read_version} -> v{latest})")
+        if commit.remove or commit.dv_updates:
+            # two DV deletes each consolidate ALL active vectors —
+            # rebasing the loser would silently revert the winner's rows
+            gone = set(base.file_paths) - set(now.file_paths)
+            if gone:
+                raise CommitConflictError(
+                    f"{self.root}: {len(gone)} file(s) this "
+                    f"{commit.operation} read were removed by a "
+                    "concurrent commit")
+            if now.dvs != base.dvs:
+                raise CommitConflictError(
+                    f"{self.root}: deletion vectors changed "
+                    f"concurrently (v{read_version} -> v{latest})")
 
     def monotonic_now_ms(self) -> int:
         """Commit timestamp, forced nondecreasing across versions so

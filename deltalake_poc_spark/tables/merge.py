@@ -371,7 +371,7 @@ def write_classified(table, snap, op: str, params: dict,
             for d in (staged, dv_rel):
                 if d:
                     shutil.rmtree(t.log.abs_path(d), ignore_errors=True)
-            return t._noop_commit(op, params)
+            return t._noop_commit(op, params, snap)
     finally:
         if shared:
             classified.unpersist()
@@ -382,8 +382,6 @@ def write_classified(table, snap, op: str, params: dict,
     if dv:
         metrics["numDeletionVectorRows"] = n_dv
     commit = Commit(
-        version=snap.version + 1,
-        timestamp=t.log.monotonic_now_ms(),
         operation=op,
         operation_parameters=params,
         add=entries,

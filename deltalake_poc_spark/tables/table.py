@@ -24,6 +24,7 @@ import json
 import os
 import re
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,15 +83,8 @@ class VersionedTable:
                 raise ValueError(f"partition columns not in schema: {missing}")
             props["partitionColumns"] = json.dumps(partition_by)
         os.makedirs(t.log.data_dir(), exist_ok=True)
-        t.log.write_commit(
-            Commit(
-                version=t.log.next_version(),
-                timestamp=t.log.monotonic_now_ms(),
-                operation="CREATE TABLE",
-                schema_json=schema.json(),
-                properties=props,
-            )
-        )
+        t._publish(Commit(operation="CREATE TABLE", schema_json=schema.json(),
+                          properties=props), None)
         return t
 
     def partition_columns(self, snap: Snapshot | None = None) -> list[str]:
@@ -138,6 +132,15 @@ class VersionedTable:
         logical name (Delta column mapping, reference README.md:149-162:
         renames/drops change metadata only, never rewrite parquet)."""
         return (f.metadata or {}).get("physicalName", f.name)
+
+    @staticmethod
+    def _to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
+        """``df`` with its columns renamed by ``mapping`` (logical ->
+        physical), as data and change files store them."""
+        if all(k == v for k, v in mapping.items()):
+            return df
+        return df.select(*[F.col(c).alias(mapping.get(c, c))
+                           for c in df.columns])
 
     def column_mapping(self, snap: Snapshot | None = None) -> dict[str, str]:
         """logical -> physical name map for a snapshot's schema."""
@@ -368,13 +371,10 @@ class VersionedTable:
         # that schema's mapping — the snapshot's mapping lags one commit
         if mapping is None:
             mapping = self.column_mapping(snap) if snap else {}
-        nontrivial = {k: v for k, v in mapping.items() if k != v}
         inv = {v: k for k, v in mapping.items()}
-        if nontrivial:
-            df = df.select(*[
-                F.col(c).alias(nontrivial.get(c, c)) for c in df.columns])
-            if stats_cols:
-                stats_cols = [nontrivial.get(c, c) for c in stats_cols]
+        df = self._to_physical(df, mapping)
+        if stats_cols:
+            stats_cols = [mapping.get(c, c) for c in stats_cols]
         props = snap.properties if snap else {}
         bloom_cols = [c.strip()
                       for c in str(props.get(BLOOM_COLS_PROP, "")).split(",")
@@ -414,7 +414,7 @@ class VersionedTable:
         if bloom_cols:
             staged_blooms = collect_blooms_distributed(
                 self.spark, staging,
-                [nontrivial.get(c, c) for c in bloom_cols],
+                [mapping.get(c, c) for c in bloom_cols],
                 fpp=bloom_fpp)
         entries: list[FileEntry] = []
         os.makedirs(self.log.data_dir(), exist_ok=True)
@@ -478,15 +478,38 @@ class VersionedTable:
         merged = StructType(current.fields + new_fields)
         return merged.json()
 
+    def _check_types(self, df: DataFrame, snap: Snapshot) -> None:
+        """The column-type contract at commit: a column the table
+        already has must arrive as its declared type or as one Spark
+        up-casts to it without loss (``Cast.canUpCast``: int into long,
+        which the declared-schema read widens). Any other type (string
+        into long, long into int, nullable elements into a non-null
+        array) would commit files that no read of the table can
+        decode, so it raises before anything is staged."""
+        declared = {f.name: f.dataType for f in self.schema(snap).fields}
+        sql = self.spark._jvm.org.apache.spark.sql
+        for f in df.schema.fields:
+            want = declared.get(f.name, f.dataType)
+            if want == f.dataType or sql.catalyst.expressions.Cast.canUpCast(
+                    sql.types.DataType.fromJson(f.dataType.json()),
+                    sql.types.DataType.fromJson(want.json())):
+                continue
+            have, want = f.dataType.simpleString(), want.simpleString()
+            if have == want:  # they differ in nullability only
+                have, want = f.dataType.json(), declared[f.name].json()
+            raise TypeError(f"column {f.name!r}: cannot write {have} "
+                            f"into the table's {want}")
+
     def _publish(self, c: Commit, snap: Snapshot | None,
                  table_level: bool = False,
                  cleanup_on_fail: tuple[str, ...] = ()) -> Commit:
-        """Publish a commit under optimistic concurrency
-        (TableLog.write_commit_with_rebase). CDF change files and DV
-        sidecars are staged in unique directories recorded IN the
-        commit (c.change_dir / c.dv_updates), so rebase needs no file
-        moves and racing writers can never clobber each other's staged
-        output. ``cleanup_on_fail`` lists rel dirs this operation
+        """Publish a commit planned against ``snap`` (None: the table
+        did not exist): the log numbers and stamps it under optimistic
+        concurrency (TableLog.write_commit_with_rebase). CDF change
+        files and DV sidecars are staged in unique directories recorded
+        IN the commit (c.change_dir / c.dv_updates), so rebase needs no
+        file moves and racing writers can never clobber each other's
+        staged output. ``cleanup_on_fail`` lists rel dirs this operation
         staged — removed if the commit loses a conflict so aborted
         writers leave no orphans."""
         try:
@@ -509,6 +532,8 @@ class VersionedTable:
             raise ValueError(f"bad mode {mode}")
         exists = self.log.exists()
         snap = self.snapshot() if exists else None
+        if snap is not None:
+            self._check_types(df, snap)
         schema_json = self._merged_schema_json(df, snap)
         pb = self.partition_columns(snap) if snap else []
         committed = StructType.fromJson(json.loads(schema_json))
@@ -526,8 +551,6 @@ class VersionedTable:
             "OVERWRITE" if exists else "WRITE")
         os.makedirs(self.log.data_dir(), exist_ok=True)
         commit = Commit(
-            version=self.log.next_version(),
-            timestamp=self.log.monotonic_now_ms(),
             operation=op,
             operation_parameters={"mode": mode, **(extra_params or {})},
             add=entries,
@@ -608,8 +631,6 @@ class VersionedTable:
         merged = dict(snap.properties)
         merged.update(props)
         c = Commit(
-            version=self.log.next_version(),
-            timestamp=self.log.monotonic_now_ms(),
             operation="SET TBLPROPERTIES",
             operation_parameters={"properties": props},
             properties=merged,
@@ -640,8 +661,6 @@ class VersionedTable:
         merged = dict(snap.properties)
         merged[f"{CONSTRAINT_PREFIX}{name}"] = expr
         c = Commit(
-            version=self.log.next_version(),
-            timestamp=self.log.monotonic_now_ms(),
             operation="ADD CONSTRAINT",
             operation_parameters={"name": name, "expr": expr},
             properties=merged,
@@ -663,8 +682,6 @@ class VersionedTable:
             raise ValueError(f"no such constraint: {name}")
         remaining = {k: v for k, v in snap.properties.items() if k != key}
         c = Commit(
-            version=self.log.next_version(),
-            timestamp=self.log.monotonic_now_ms(),
             operation="DROP CONSTRAINT",
             operation_parameters={"name": name},
             properties=remaining,
@@ -724,8 +741,6 @@ class VersionedTable:
                 new if cc.strip() == old else cc.strip()
                 for cc in str(props[BLOOM_COLS_PROP]).split(","))
         c = Commit(
-            version=self.log.next_version(),
-            timestamp=self.log.monotonic_now_ms(),
             operation="RENAME COLUMN",
             operation_parameters={"oldName": old, "newName": new},
             schema_json=StructType(fields).json(),
@@ -752,8 +767,6 @@ class VersionedTable:
         props = dict(snap.properties)
         props[self.COLUMN_MAPPING_PROP] = "name"
         c = Commit(
-            version=self.log.next_version(),
-            timestamp=self.log.monotonic_now_ms(),
             operation="DROP COLUMN",
             operation_parameters={"name": name},
             schema_json=StructType(fields).json(),
@@ -811,7 +824,7 @@ class VersionedTable:
         cand = (self._candidate_paths(snap, predicate)
                 if predicate is not None else snap.file_paths)
         if not cand:
-            return self._noop_commit(op, params)
+            return self._noop_commit(op, params, snap)
         hit = F.lit(True) if predicate is None else F.coalesce(
             F.expr(predicate) if isinstance(predicate, str) else predicate,
             F.lit(False))
@@ -824,7 +837,7 @@ class VersionedTable:
             touched = [r["file"] for r in rows.filter(hit).select(
                 self._rel_path().alias("file")).distinct().collect()]
             if not touched:
-                return self._noop_commit(op, params)
+                return self._noop_commit(op, params, snap)
             rows = self._read_files(touched, snap)
         schema = self.schema(snap)
         pre = [F.col(f.name) for f in schema.fields]
@@ -893,31 +906,14 @@ class VersionedTable:
         return dv_rel, dv_files, int(stats["n"]), int(stats["new"])
 
     def purge_deletion_vectors(self, target_file_rows: int = 1_000_000) -> Commit:
-        """REORG TABLE ... APPLY (PURGE) parity: rewrite every DV'd
-        file without its deleted rows and drop the vectors. Run when
-        DVs grow past broadcast size or before deltaexport (standard
-        Delta's DV encoding is a different binary format)."""
+        """REORG TABLE ... APPLY (PURGE) parity: the OPTIMIZE rewrite of
+        every DV'd file, which drops its deleted rows and its vector.
+        Run when DVs grow past broadcast size or before deltaexport
+        (standard Delta's DV encoding is a different binary format)."""
         snap = self.snapshot()
-        if not snap.dvs:
-            return self._noop_commit("PURGE", {})
-        rels = sorted(snap.dvs)
-        live = self._read_files(rels, snap)
-        total = sum(e.num_records for e in snap.files if e.path in snap.dvs)
-        nparts = max(1, (total + target_file_rows - 1) // target_file_rows)
-        entries = self._materialize(
-            live.repartition(nparts), snap,
-            partition_by=self.partition_columns(snap) or None)
-        c = Commit(
-            version=self.log.next_version(),
-            timestamp=self.log.monotonic_now_ms(),
-            operation="PURGE",
-            operation_parameters={"purgedFiles": len(rels)},
-            add=entries,
-            remove=rels,
-            metrics={"numRemovedFiles": len(rels),
-                     "numAddedFiles": len(entries)},
-        )
-        return self._publish(c, snap)
+        files = [e for e in snap.files if e.path in snap.dvs]
+        return self._rewrite(snap, files, target_file_rows, "PURGE",
+                             {"purgedFiles": len(files)})
 
     def _rel_path(self):
         """Column: the log-relative path of each row's ``__file`` URI
@@ -940,23 +936,11 @@ class VersionedTable:
             F.concat(F.lit("data file outside the table root: "),
                      F.col("__file"))))
 
-    def _noop_commit(self, op: str, params: dict) -> Commit:
-        # no data effects, so losing a version race just replans
-        for _ in range(20):
-            c = Commit(
-                version=self.log.next_version(),
-                timestamp=self.log.monotonic_now_ms(),
-                operation=op,
-                operation_parameters=params,
-                metrics={"numDeletedRows": 0},
-            )
-            try:
-                self.log.write_commit(c)
-                return c
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"{self.log.root}: lost the no-op commit race 20 times")
+    def _noop_commit(self, op: str, params: dict, snap: Snapshot) -> Commit:
+        """Record an operation that changed nothing: with no read-set,
+        its commit rebases past any concurrent commit."""
+        return self._publish(Commit(operation=op, operation_parameters=params,
+                                    metrics={"numDeletedRows": 0}), snap)
 
     def _stage_changes(self, change_df: DataFrame,
                        mapping: dict[str, str]) -> str:
@@ -966,16 +950,11 @@ class VersionedTable:
         is load-bearing for OCC: two writers racing for one version
         would otherwise mode('overwrite') the same contested directory
         and the winner's committed change files could be the loser's."""
-        # change files use PHYSICAL names too (like data files; mapping
-        # is logical -> physical), so CDF reads across later renames
-        # realign via the same mapping
-        nontrivial = {k: v for k, v in mapping.items() if k != v}
-        if nontrivial:
-            change_df = change_df.select(*[
-                F.col(c).alias(nontrivial.get(c, c))
-                for c in change_df.columns])
+        # change files use PHYSICAL names too (like data files), so CDF
+        # reads across later renames realign via the same mapping
         rel = f"{TableLog.CHANGES_DIR}/{uuid.uuid4().hex}"
-        change_df.write.mode("overwrite").parquet(self.log.abs_path(rel))
+        self._to_physical(change_df, mapping).write.mode("overwrite").parquet(
+            self.log.abs_path(rel))
         return rel
 
     # ----------------------------------------------------------- maintenance
@@ -1016,31 +995,34 @@ class VersionedTable:
             files = [e for e in files
                      if all(e.partition.get(k) == str(v)
                             for k, v in partitions.items())]
+        return self._rewrite(snap, files, target_file_rows, "OPTIMIZE",
+                             {"zorderBy": zorder_by or [],
+                              "partitions": partitions or {}}, zorder_by)
+
+    def _rewrite(self, snap: Snapshot, files: list[FileEntry],
+                 target_file_rows: int, op: str, params: dict,
+                 zorder_by: list[str] | None = None) -> Commit:
+        """The OPTIMIZE rewrite: ``files``' live rows (deletion vectors
+        applied) re-materialize into ~``target_file_rows``-row files,
+        Z-ordered by ``zorder_by`` if given, and replace ``files``."""
         if not files:
-            return self._noop_commit("OPTIMIZE", {})
+            return self._noop_commit(op, {}, snap)
         df = self._read_files([e.path for e in files], snap)
-        total = sum(e.num_records for e in files)
-        nparts = max(1, (total + target_file_rows - 1) // target_file_rows)
-        pb = self.partition_columns(snap) or None
+        nparts = max(1, -(-sum(e.num_records for e in files)
+                          // target_file_rows))
         if zorder_by:
             from deltalake_poc_spark.tables.zorder import apply_zorder
 
             df = apply_zorder(df, zorder_by, nparts)
         else:
             df = df.repartition(nparts)
-        entries = self._materialize(df, snap, partition_by=pb)
-        c = Commit(
-            version=self.log.next_version(),
-            timestamp=self.log.monotonic_now_ms(),
-            operation="OPTIMIZE",
-            operation_parameters={"zorderBy": zorder_by or [],
-                                  "partitions": partitions or {}},
-            add=entries,
+        entries = self._materialize(
+            df, snap, partition_by=self.partition_columns(snap) or None)
+        return self._publish(Commit(
+            operation=op, operation_parameters=params, add=entries,
             remove=[e.path for e in files],
             metrics={"numRemovedFiles": len(files),
-                     "numAddedFiles": len(entries)},
-        )
-        return self._publish(c, snap)
+                     "numAddedFiles": len(entries)}), snap)
 
     def clone(self, new_root: str, version: int | None = None,
               timestamp_ms: int | None = None) -> "VersionedTable":
@@ -1056,7 +1038,8 @@ class VersionedTable:
         link is gone). CDF history does not carry over (the clone's
         change feed starts at its own v0), matching Delta clones."""
         snap = self.snapshot(version, timestamp_ms)
-        new_log = TableLog(new_root)
+        clone = VersionedTable(self.spark, new_root)
+        new_log = clone.log
         if new_log.exists():
             raise FileExistsError(f"table already exists at {new_root}")
         linked = copied = 0
@@ -1090,9 +1073,7 @@ class VersionedTable:
                         dp = new_log.abs_path(rel)
                         os.makedirs(os.path.dirname(dp), exist_ok=True)
                         _link_or_copy(sp, dp)
-            new_log.write_commit(Commit(
-                version=0,
-                timestamp=new_log.monotonic_now_ms(),
+            clone._publish(Commit(
                 operation="CLONE",
                 operation_parameters={"source": self.log.root,
                                       "sourceVersion": snap.version},
@@ -1102,7 +1083,7 @@ class VersionedTable:
                 dv_updates=dict(snap.dvs),
                 metrics={"numCopiedFiles": copied,
                          "numLinkedFiles": linked},
-            ))
+            ), None)
         except BaseException:
             # never leave a half-built table (files but no v0 commit)
             if created_root:
@@ -1112,7 +1093,7 @@ class VersionedTable:
                     shutil.rmtree(os.path.join(new_root, sub),
                                   ignore_errors=True)
             raise
-        return VersionedTable(self.spark, new_root)
+        return clone
 
     def count_rows(self, snap: Snapshot | None = None) -> int:
         """Metadata-only COUNT(*): per-file numRecords from the commit
@@ -1156,129 +1137,65 @@ class VersionedTable:
 
     def vacuum(self, retention_hours: float = 168.0) -> list[str]:
         """M4 — VACUUM (delta_handler.py:275-285; default 168h retention
-        shared/config.py:109). Physically deletes data files that are
-        not in the current snapshot and were removed longer than the
-        retention window ago, plus change-data-feed files of commits
-        older than the retention (Delta's CDF files age out with vacuum
-        the same way). Returns deleted relative paths."""
-        import time as _time
+        shared/config.py:109). One rule for every entry of data/, _dv/,
+        _changes/ and _staging/, against cutoff = now - retention:
 
-        snap = self.snapshot()
-        active = set(snap.file_paths)
-        removed_at: dict[str, int] = {}
-        commit_ts: dict[int, int] = {}
-        # replay DV references so uuid-named sidecar dirs age from the
-        # commit that last dropped them out of the active set (every
-        # DV commit consolidates, so prior dirs fall out at the next
-        # DV commit / purge / restore)
-        dv_active: dict[str, str] = {}  # data file -> dv dir
-        dv_removed_at: dict[str, int] = {}  # dv dir -> ts it went inactive
-        dv_seen: set[str] = set()
-        ever_added: set[str] = set()  # data files any commit referenced
-        change_dir_version: dict[str, int] = {}  # change dir rel -> version
-        for c in self.log.commits():
-            commit_ts[c.version] = c.timestamp
-            for r in c.remove:
-                removed_at[r] = c.timestamp
-                dv_active.pop(r, None)
-            for a in c.add:  # re-added (e.g. RESTORE) -> no longer removed
-                removed_at.pop(a.path, None)
-                dv_active.pop(a.path, None)
-                ever_added.add(a.path)
-            for fp, dv in c.dv_updates.items():
-                if dv is None:
-                    dv_active.pop(fp, None)
-                else:
-                    dv_active[fp] = dv
-                    dv_seen.add(dv)
-            live_dirs = set(dv_active.values())
-            for d in dv_seen - live_dirs:
-                dv_removed_at.setdefault(d, c.timestamp)
-            for d in live_dirs:
-                dv_removed_at.pop(d, None)  # re-referenced (RESTORE)
+        - referenced by the current version: kept;
+        - released by the log: deleted iff released at or before the
+          cutoff. A data file or DV dir is released by the commit that
+          drops its last reference (RESTORE can reference it again); a
+          change dir by its own commit, except that the latest
+          commit's dir stays live (Delta's CDF files age out with
+          vacuum the same way);
+        - referenced by no commit (staged by a writer that crashed or
+          lost a conflict): deleted iff its mtime is at or before the
+          cutoff, so an in-flight writer's fresh files survive.
+
+        Returns deleted relative paths."""
+        commits = self.log.commits()
+        active: dict[str, FileEntry] = {}
+        dvs: dict[str, str] = {}
+        released: dict[str, int] = {}
+        held: set[str] = set()  # DV dirs the replayed version references
+        for c in commits:
+            released.update(dict.fromkeys(c.remove, c.timestamp))
+            TableLog.apply(c, active, dvs)
+            now = set(dvs.values())
+            released.update(dict.fromkeys(held - now, c.timestamp))
+            held = now
             if c.change_dir:
-                change_dir_version[c.change_dir] = c.version
-        cutoff = int(_time.time() * 1000) - int(retention_hours * 3600 * 1000)
-
-        def _orphan_expired(path: str) -> bool:
-            # staged by a writer that lost its commit race and crashed
-            # before cleanup: never referenced by any commit — age it
-            # by filesystem mtime so an in-flight writer's fresh
-            # staging is never swept
-            try:
-                return int(os.path.getmtime(path) * 1000) <= cutoff
-            except OSError:
-                return False
+                released[c.change_dir] = c.timestamp
+        live = set(active) | held | {commits[-1].change_dir}
+        cutoff = int(time.time() * 1000) - int(retention_hours * 3600 * 1000)
         deleted = []
-        data_dir = self.log.data_dir()
-        if os.path.isdir(data_dir):
-            for dirpath, _dirs, files in os.walk(data_dir):
-                for name in files:
-                    abs_p = os.path.join(dirpath, name)
-                    rel = os.path.relpath(abs_p, self.log.root)
-                    if rel in active:
+        for top in (TableLog.DATA_DIR, DV_DIR, TableLog.CHANGES_DIR,
+                    TableLog.STAGING_DIR):
+            base = self.log.abs_path(top)
+            if top == TableLog.DATA_DIR:
+                found = [os.path.join(d, f)
+                         for d, _, fs in os.walk(base) for f in fs]
+            else:
+                found = ([os.path.join(base, n) for n in os.listdir(base)]
+                         if os.path.isdir(base) else [])
+            for p in found:
+                rel = os.path.relpath(p, self.log.root)
+                if rel in live:
+                    continue
+                if rel not in released:  # never referenced: age by mtime
+                    try:
+                        released[rel] = int(os.path.getmtime(p) * 1000)
+                    except OSError:
                         continue
-                    ts = removed_at.get(rel)
-                    # <=: a removal in the same millisecond as the
-                    # cutoff is still "older than the retention window"
-                    if ts is not None and ts <= cutoff:
-                        os.unlink(abs_p)
-                        deleted.append(rel)
-                    elif ts is None and rel not in ever_added \
-                            and _orphan_expired(abs_p):
-                        # materialized by a writer whose commit lost a
-                        # conflict: referenced by no commit, aged by
-                        # mtime (an in-flight writer's fresh files
-                        # always survive)
-                        os.unlink(abs_p)
-                        deleted.append(rel)
-        dv_root = os.path.join(self.log.root, DV_DIR)
-        if os.path.isdir(dv_root):
-            referenced = set(snap.dvs.values())
-            for name in os.listdir(dv_root):
-                rel = f"{DV_DIR}/{name}"
-                if rel in referenced:
-                    continue
-                if rel in dv_seen:
-                    ts = dv_removed_at.get(rel)
-                    expired = ts is not None and ts <= cutoff
-                else:  # orphaned staging from an aborted writer
-                    expired = _orphan_expired(os.path.join(dv_root, name))
-                if expired:
-                    shutil.rmtree(os.path.join(dv_root, name),
-                                  ignore_errors=True)
+                if released[rel] <= cutoff:
+                    if os.path.isdir(p):
+                        shutil.rmtree(p, ignore_errors=True)
+                    else:
+                        os.unlink(p)
                     deleted.append(rel)
-        # staging dirs abandoned by crashed writers (a crash between
-        # the staging write and the commit leaves <root>/_staging/<id>
-        # with full data files): age by mtime like the other orphans —
-        # fresh dirs of in-flight writers are never swept
-        staging_root = os.path.join(self.log.root, TableLog.STAGING_DIR)
-        if os.path.isdir(staging_root):
-            for name in os.listdir(staging_root):
-                if _orphan_expired(os.path.join(staging_root, name)):
-                    shutil.rmtree(os.path.join(staging_root, name),
-                                  ignore_errors=True)
-                    deleted.append(f"{TableLog.STAGING_DIR}/{name}")
-            try:
-                os.rmdir(staging_root)  # remove the parent if now empty
-            except OSError:
-                pass
-        changes_root = os.path.join(self.log.root, TableLog.CHANGES_DIR)
-        if os.path.isdir(changes_root):
-            for name in os.listdir(changes_root):
-                rel = f"{TableLog.CHANGES_DIR}/{name}"
-                v = change_dir_version.get(rel)
-                if v is None:  # orphaned staging from an aborted writer
-                    if _orphan_expired(os.path.join(changes_root, name)):
-                        shutil.rmtree(os.path.join(changes_root, name),
-                                      ignore_errors=True)
-                        deleted.append(rel)
-                    continue
-                # keep the current version's changes regardless
-                if commit_ts[v] <= cutoff and v < snap.version:
-                    shutil.rmtree(os.path.join(changes_root, name),
-                                  ignore_errors=True)
-                    deleted.append(rel)
+        try:  # the shared _staging parent goes once it is empty
+            os.rmdir(self.log.abs_path(TableLog.STAGING_DIR))
+        except OSError:
+            pass
         return deleted
 
     def restore(self, version: int) -> Commit:
@@ -1294,8 +1211,6 @@ class VersionedTable:
             if p_ in current.dvs and p_ not in target.dvs:
                 dv_updates[p_] = None
         c = Commit(
-            version=self.log.next_version(),
-            timestamp=self.log.monotonic_now_ms(),
             operation="RESTORE",
             operation_parameters={"version": version},
             add=[f for f in target.files if f.path not in cur_paths],

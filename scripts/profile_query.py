@@ -8,8 +8,10 @@ Usage: python3 scripts/profile_query.py <query>[,<query>...] [reps]
 Prints, per query: rep walls, then for the LAST rep the job timeline
 (duration, gap since previous job end, tasks run, job id). Each rep
 runs under its own job group, and the event log is read with
-perfbench.eventlog. Gaps between jobs = driver-side work (planning,
-commit bookkeeping, collects); job time = cluster work.
+perfbench.eventlog. Job time = cluster work: the union of the job
+intervals inside the rep (AQE runs jobs concurrently, so a per-job gap
+can be negative); driver gap = the rep wall minus that union
+(planning, commit bookkeeping, collects).
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from perfbench import eventlog  # noqa: E402
+from perfbench.trace import union_length  # noqa: E402
 
 EVDIR = "/tmp/spark_graft_eventlogs"
 PREFIX = "__PROF__"  # job group of every timed rep
@@ -88,22 +91,29 @@ def main() -> None:
             print(f"  ({n_other} jobs inside the rep window carry other "
                   "job groups)")
         prev_end = None
-        tot_job = 0.0
-        tot_gap = 0.0
         for j in sorted(sel, key=lambda j: j.submit_ms):
             dur = (j.end_ms - j.submit_ms) / 1000
             gap = ((j.submit_ms - prev_end) / 1000
                    if prev_end is not None else 0.0)
-            tot_job += dur
-            tot_gap += max(gap, 0)
             tasks = sum(log.stage_tasks.get(s, {}).get("tasks", 0)
                         for s in j.stages)
             other = "" if j.group == tag else f" group {j.group}"
             print(f"  job {dur*1000:7.0f}ms gap {gap*1000:6.0f}ms "
                   f"tasks {tasks:4.0f} id {j.job_id}{other}")
             prev_end = j.end_ms
-        print(f"  sum(job)={tot_job:.2f}s sum(gap)={tot_gap:.2f}s "
+        job_s, gap_s = rep_split(sel, lo, hi)
+        print(f"  job={job_s:.2f}s driver_gap={gap_s:.2f}s "
               f"wall={walls[-1]}s jobs={len(sel)}")
+
+
+def rep_split(jobs, lo_ms: float, hi_ms: float) -> tuple[float, float]:
+    """(job, driver gap) seconds of the rep window [lo_ms, hi_ms]: job
+    time is the union of the jobs' [submit, end] intervals clipped to
+    the window, so overlapping jobs count once; the driver gap is the
+    rest of the window. Neither exceeds the wall."""
+    job = union_length([(j.submit_ms, j.end_ms) for j in jobs],
+                       lo_ms, hi_ms) / 1000
+    return job, (hi_ms - lo_ms) / 1000 - job
 
 
 def _group(name: str, rep: int) -> str:
