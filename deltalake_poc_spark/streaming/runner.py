@@ -13,7 +13,11 @@ Re-implements the reference's streaming job
   The reference fans out 5 concurrent queries (1 append + 4 merge,
   spark_streaming.py:454-463), which re-reads Kafka 5x and gives 5
   independent commit points; one foreachBatch is strictly less work
-  and keeps the audit/snapshot tables in per-batch lockstep.
+  and keeps the audit/snapshot tables in per-batch lockstep. Inside
+  it, ``apply_batch`` still runs the audit append and the table
+  MERGEs concurrently, on one bounded thread pool over the batch's
+  one cached frame, so the reference's parallelism is kept without
+  its extra reads.
 - graceful stop (T9; spark_streaming.py:429-444)
 
 Exactly-once: Spark's checkpoint gives at-least-once delivery into

@@ -42,13 +42,13 @@ window).
 
 from __future__ import annotations
 
-import functools
 import shutil
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deltalake_poc_spark.tables.log import Commit
+from deltalake_poc_spark.tables.sizing import sized_files
 
 
 def change_detection_condition(columns: list[str],
@@ -254,7 +254,8 @@ class MergeBuilder:
 # operation -> {count: commit metric}: Delta's metric names for each
 # operation, filled from one set of counts. U/I/D/C are rows by
 # action, "out" rows written, "removed"/"added" data files. Names
-# only: what an operation writes follows its classification.
+# only: what an operation writes follows its classification. A no-op
+# commit stamps the same names with zeros.
 _METRICS = {
     "MERGE": {"U": "numTargetRowsUpdated", "I": "numTargetRowsInserted",
               "D": "numTargetRowsDeleted", "C": "numTargetRowsCopied",
@@ -264,6 +265,8 @@ _METRICS = {
                "removed": "numRemovedFiles", "added": "numAddedFiles"},
     "UPDATE": {"U": "numUpdatedRows", "C": "numCopiedRows",
                "removed": "numRemovedFiles", "added": "numAddedFiles"},
+    "OPTIMIZE": {"removed": "numRemovedFiles", "added": "numAddedFiles"},
+    "PURGE": {"removed": "numRemovedFiles", "added": "numAddedFiles"},
 }
 
 
@@ -330,48 +333,56 @@ def write_classified(table, snap, op: str, params: dict,
     staged, dv_rel, dv_files, n_dv, entries = None, None, [], 0, []
     n = dict.fromkeys("UIDC", 0)
     try:
-        if cdf and changes:
-            legs = [classified.filter(act == a).select(*cols)
-                    .withColumn("_change_type", F.lit(ct))
-                    for a, cols, ct in (("I", post, "insert"),
-                                        ("D", pre, "delete"),
-                                        ("U", pre, "update_preimage"),
-                                        ("U", post, "update_postimage"))
-                    if a in changes]
-            staged = t._stage_changes(
-                functools.reduce(DataFrame.unionByName, legs), mapping)
-        if write_rows:
-            # only this write reads the observed node: its filters and
-            # projections sit above it, so it sees every classified
-            # row, and no exchange above it can be dropped from the
-            # executed plan
-            obs = Observation()
-            counted = classified.observe(obs, *[
-                F.coalesce(F.sum(F.when(act == a, 1)), F.lit(0)).alias(a)
-                for a in ("U", "I", "D", "C")])
-            if dv:
-                rows = counted.filter(act.isin("U", "I")).select(*post)
-            else:
-                rows = counted.filter(act.isin("C", "U", "I")).select(*[
-                    F.when(act.isin("U", "I"), b).otherwise(a).alias(f.name)
-                    for a, b, f in zip(pre, post, schema.fields)])
-            # CHECK/NOT NULL guards ride the same pass (no extra job);
-            # rows that violate fail the write
-            entries = t._materialize(
-                enforce(rows, snap.properties, schema), snap,
-                partition_by=t.partition_columns(snap) or None,
-                mapping=mapping)
-            n = dict(obs.get)
-        if write_dv and (not write_rows or n["U"] or n["D"]):
-            dv_rel, dv_files, n_dv, n_new = t._dv_sidecar_from(
-                classified.filter(act.isin("U", "D")), snap)
-            if not write_rows:  # DV DELETE: each new position is a delete
-                n["D"] = n_new
-        if dv and not (n["U"] or n["I"] or n["D"]):
-            for d in (staged, dv_rel):
-                if d:
-                    shutil.rmtree(t.log.abs_path(d), ignore_errors=True)
-            return t._noop_commit(op, params, snap)
+        # one file-sizing scope over the change-file, data-file and
+        # sidecar writes: their file counts follow this operation alone
+        with sized_files(classified.sparkSession):
+            if cdf and changes:
+                # every change image from one pass over the changed
+                # rows: a union of per-image legs writes a file per leg
+                images = {"I": [(post, "insert")], "D": [(pre, "delete")],
+                          "U": [(pre, "update_preimage"),
+                                (post, "update_postimage")]}
+                rows = F.filter(F.array(*[
+                    F.when(act == a, F.struct(
+                        *cols, F.lit(ct).alias("_change_type")))
+                    for a in changes for cols, ct in images[a]]),
+                    lambda image: image.isNotNull())
+                staged = t._stage_changes(
+                    classified.filter(act.isin(*changes))
+                    .select(F.inline(rows)), mapping)
+            if write_rows:
+                # only this write reads the observed node: its filters and
+                # projections sit above it, so it sees every classified
+                # row, and no exchange above it can be dropped from the
+                # executed plan
+                obs = Observation()
+                counted = classified.observe(obs, *[
+                    F.coalesce(F.sum(F.when(act == a, 1)), F.lit(0)).alias(a)
+                    for a in ("U", "I", "D", "C")])
+                if dv:
+                    rows = counted.filter(act.isin("U", "I")).select(*post)
+                else:
+                    rows = counted.filter(act.isin("C", "U", "I")).select(*[
+                        F.when(act.isin("U", "I"), b).otherwise(a)
+                        .alias(f.name)
+                        for a, b, f in zip(pre, post, schema.fields)])
+                # CHECK/NOT NULL guards ride the same pass (no extra job);
+                # rows that violate fail the write
+                entries = t._materialize(
+                    enforce(rows, snap.properties, schema), snap,
+                    partition_by=t.partition_columns(snap) or None,
+                    mapping=mapping)
+                n = dict(obs.get)
+            if write_dv and (not write_rows or n["U"] or n["D"]):
+                dv_rel, dv_files, n_dv, n_new = t._dv_sidecar_from(
+                    classified.filter(act.isin("U", "D")), snap)
+                if not write_rows:  # DV DELETE: each new position is a delete
+                    n["D"] = n_new
+            if dv and not (n["U"] or n["I"] or n["D"]):
+                for d in (staged, dv_rel):
+                    if d:
+                        shutil.rmtree(t.log.abs_path(d), ignore_errors=True)
+                return t._noop_commit(op, params, snap)
     finally:
         if shared:
             classified.unpersist()

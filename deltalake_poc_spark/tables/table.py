@@ -29,12 +29,15 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import (ArrayType, DecimalType, MapType, StringType,
+                               StructField, StructType)
 
 from deltalake_poc_spark.tables.log import (
     Commit, ConcurrentWriteError, FileEntry, Snapshot, TableLog,
     partition_values,
 )
+from deltalake_poc_spark.tables.merge import _METRICS
+from deltalake_poc_spark.tables.sizing import sized_files
 from deltalake_poc_spark.tables.stats import (BLOOM_COLS_PROP, BLOOM_FPP_PROP,
                                                collect_blooms_distributed,
                                                collect_file_stats)
@@ -43,6 +46,58 @@ CDF_PROP = "enableChangeDataFeed"
 DV_PROP = "enableDeletionVectors"
 DV_DIR = "_dv"
 CDF_COLS = ("_change_type", "_commit_version", "_commit_timestamp")
+
+
+# written type -> the other declared types the declared-schema parquet
+# read decodes it as (Spark 4's vectorized reader, probed per pair).
+# Spark's Cast.canUpCast admits more, e.g. long into string and date
+# into timestamp, whose files then fail every read.
+_WIDENINGS = {
+    "tinyint": {"smallint", "int", "bigint", "double"},
+    "smallint": {"int", "bigint", "double"},
+    "int": {"bigint", "double"},
+    "float": {"double"},
+    "date": {"timestamp_ntz"},
+    "timestamp": {"timestamp_ntz"},
+    "timestamp_ntz": {"timestamp"},
+    "binary": {"string"},
+}
+# integer digits a decimal needs to read an integral column: its
+# parquet physical width (INT32 or INT64), not its declared range
+_INT_DIGITS = {"tinyint": 10, "smallint": 10, "int": 10, "bigint": 20}
+
+
+def _decodes_as(have, want) -> bool:
+    """Whether files written with data type ``have`` read back as the
+    declared type ``want``: equal types, a widening in _WIDENINGS, a
+    decimal with room for every digit, or nested types whose parts
+    each decode and whose nullability only widens. Struct fields match
+    by name, as the parquet read resolves them."""
+    if have == want:
+        return True
+    if isinstance(want, ArrayType):
+        return (isinstance(have, ArrayType)
+                and (want.containsNull or not have.containsNull)
+                and _decodes_as(have.elementType, want.elementType))
+    if isinstance(want, MapType):
+        return (isinstance(have, MapType)
+                and (want.valueContainsNull
+                     or not have.valueContainsNull)
+                and _decodes_as(have.keyType, want.keyType)
+                and _decodes_as(have.valueType, want.valueType))
+    if isinstance(want, StructType):
+        return (isinstance(have, StructType)
+                and have.names == want.names
+                and all((w.nullable or not h.nullable)
+                        and _decodes_as(h.dataType, w.dataType)
+                        for h, w in zip(have.fields, want.fields)))
+    if isinstance(want, DecimalType):
+        if isinstance(have, DecimalType):
+            return (have.scale <= want.scale and have.precision - have.scale
+                    <= want.precision - want.scale)
+        digits = _INT_DIGITS.get(have.simpleString())
+        return digits is not None and want.precision - want.scale >= digits
+    return want.simpleString() in _WIDENINGS.get(have.simpleString(), ())
 
 
 class VersionedTable:
@@ -383,29 +438,12 @@ class VersionedTable:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        # Size-targeted output files: AQE's parallelismFirst default
-        # refuses to coalesce below defaultParallelism, so a 172-row
-        # MERGE output lands as 32 near-empty files — each one a footer
-        # stats read now and a scan task forever after. Scoped to the
-        # staging write: shuffle-derived frames (merge sources, MV
-        # aggregations) coalesce to the 64MB advisory target; frames
-        # without a live shuffle (plain appends of scan-partitioned
-        # data) keep their scan parallelism. Set on the frame's session:
-        # a foreachBatch frame runs in the stream's clone of self.spark.
-        conf = df.sparkSession.conf
-        pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-        try:
-            old_pf = conf.get(pf_key)
-        except Exception:
-            old_pf = None
-        try:
-            conf.set(pf_key, "false")
+        # Size-targeted output files (tables/sizing.py), on the frame's
+        # session: a foreachBatch frame runs in the stream's clone of
+        # self.spark. The scope nests, so a row-level write holds it
+        # across its change-file, data-file and sidecar writes.
+        with sized_files(df.sparkSession):
             writer.parquet(staging)
-        finally:
-            if old_pf is None:
-                conf.unset(pf_key)
-            else:
-                conf.set(pf_key, old_pf)
         # Per-file blooms are computed by ONE distributed job over the
         # staging dir BEFORE the files move to their final names —
         # write tasks read the data, the driver receives only the
@@ -480,19 +518,16 @@ class VersionedTable:
 
     def _check_types(self, df: DataFrame, snap: Snapshot) -> None:
         """The column-type contract at commit: a column the table
-        already has must arrive as its declared type or as one Spark
-        up-casts to it without loss (``Cast.canUpCast``: int into long,
-        which the declared-schema read widens). Any other type (string
-        into long, long into int, nullable elements into a non-null
-        array) would commit files that no read of the table can
-        decode, so it raises before anything is staged."""
+        already has must arrive as its declared type or as one the
+        declared-schema read widens to it (:func:`_decodes_as`: int
+        into long). Any other type (string into long, long into int,
+        long into string, nullable elements into a non-null array)
+        would commit files that no read of the table can decode, so it
+        raises before anything is staged."""
         declared = {f.name: f.dataType for f in self.schema(snap).fields}
-        sql = self.spark._jvm.org.apache.spark.sql
         for f in df.schema.fields:
             want = declared.get(f.name, f.dataType)
-            if want == f.dataType or sql.catalyst.expressions.Cast.canUpCast(
-                    sql.types.DataType.fromJson(f.dataType.json()),
-                    sql.types.DataType.fromJson(want.json())):
+            if _decodes_as(f.dataType, want):
                 continue
             have, want = f.dataType.simpleString(), want.simpleString()
             if have == want:  # they differ in nullability only
@@ -597,8 +632,8 @@ class VersionedTable:
         Fallback: a plan with no estimate (its ``sizeInBytes``, or any
         leaf's, >= ``spark.sql.defaultSizeInBytes``, e.g. an RDD-backed
         or Kafka frame) takes ``df.hint("rebalance")``, which AQE sizes
-        to the same advisory target inside the write's
-        ``parallelismFirst=false`` scope. Callers that need their own
+        to the same advisory target inside the write's file-sizing
+        scope (tables/sizing.py). Callers that need their own
         partitioning use :meth:`write`."""
         extra = None
         if batch_id is not None:
@@ -938,9 +973,11 @@ class VersionedTable:
 
     def _noop_commit(self, op: str, params: dict, snap: Snapshot) -> Commit:
         """Record an operation that changed nothing: with no read-set,
-        its commit rebases past any concurrent commit."""
-        return self._publish(Commit(operation=op, operation_parameters=params,
-                                    metrics={"numDeletedRows": 0}), snap)
+        its commit rebases past any concurrent commit. Its metrics are
+        the operation's own, all zero."""
+        return self._publish(Commit(
+            operation=op, operation_parameters=params,
+            metrics=dict.fromkeys(_METRICS[op].values(), 0)), snap)
 
     def _stage_changes(self, change_df: DataFrame,
                        mapping: dict[str, str]) -> str:
@@ -1021,8 +1058,8 @@ class VersionedTable:
         return self._publish(Commit(
             operation=op, operation_parameters=params, add=entries,
             remove=[e.path for e in files],
-            metrics={"numRemovedFiles": len(files),
-                     "numAddedFiles": len(entries)}), snap)
+            metrics={_METRICS[op]["removed"]: len(files),
+                     _METRICS[op]["added"]: len(entries)}), snap)
 
     def clone(self, new_root: str, version: int | None = None,
               timestamp_ms: int | None = None) -> "VersionedTable":

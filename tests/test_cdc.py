@@ -5,9 +5,13 @@ reference never automated (SURVEY.md §5)."""
 from __future__ import annotations
 
 import json
+import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from deltalake_poc_spark.cdc import CDCApplier, parse_debezium
 from deltalake_poc_spark.cdc import schema as S
@@ -448,3 +452,149 @@ def test_apply_batch_explicit_tables_defers_absent_inference(spark, tmp_path):
     assert applier.snapshot_table("mt_b").read().count() == 1
     a_rows = applier.snapshot_table("mt_a").read().collect()
     assert len(a_rows) == 1 and a_rows[0]["email"] == "upd@x"
+
+
+# ------------------------------------------------- concurrent table apply
+
+FANOUT = {f"fo_{k}": StructType([StructField("id", LongType()),
+                                 StructField("v", StringType()),
+                                 StructField("n", LongType())])
+          for k in range(4)}
+SEED = {t: {i: (i, f"{t}-{i}", i) for i in range(50)} for t in FANOUT}
+
+
+def _fanout_applier(spark, path, tables=tuple(FANOUT)):
+    """An applier over ``tables``, each seeded with its SEED rows by a
+    plain write (cheaper than a first MERGE)."""
+    applier = CDCApplier(spark, path, table_schemas=FANOUT)
+    for t in tables:
+        table = applier.snapshot_table(t)
+        table.write(spark.createDataFrame(
+            [(*r, "c", None, None) for r in SEED[t].values()],
+            table.schema()))
+    return applier
+
+
+def _fanout_batch():
+    """One batch over the FANOUT tables, per table 20 updates (n +
+    1000), 10 deletes and 10 inserts of new keys."""
+    lsn = iter(range(10, 10_000))
+    batch = []
+    for t in FANOUT:
+        batch += [_msg("u", i, table=t, lsn=next(lsn),
+                       after={"id": i, "v": f"{t}-{i}u", "n": i + 1000})
+                  for i in range(0, 40, 2)]
+        batch += [_msg("d", i, table=t, lsn=next(lsn), before={"id": i})
+                  for i in range(1, 20, 2)]
+        batch += [_msg("c", i, table=t, lsn=next(lsn),
+                       after={"id": i, "v": f"{t}-{i}", "n": i})
+                  for i in range(50, 60)]
+    return batch
+
+
+def _expected(batch):
+    """table -> sorted (id, v, n) rows of SEED after ``batch``."""
+    state = {t: dict(rows) for t, rows in SEED.items()}
+    for _key, value, *_ in batch:
+        p = json.loads(value)["payload"]
+        t, row = p["source"]["table"], p.get("after")
+        if p["op"] == "d":
+            state[t].pop(p["before"]["id"], None)
+        else:
+            state[t][row["id"]] = (row["id"], row["v"], row["n"])
+    return {t: sorted(rows.values()) for t, rows in state.items()}
+
+
+def _snapshot_rows(applier, t):
+    return sorted((r["id"], r["v"], r["n"])
+                  for r in applier.snapshot_table(t).read().collect())
+
+
+def test_fanout_matches_one_table_at_a_time(spark, tmp_path):
+    """A batch applied to four tables at once commits what applying
+    the tables one at a time commits: the same rows, the same MERGE
+    metrics and the same data files per commit, with one change file
+    per MERGE (the change rows are sized like the data files). Every
+    Spark job the pool's threads start runs under the caller's job
+    group: no job started during the call is outside it."""
+    from tests.test_tables import _job_ids
+
+    batch = _fanout_batch()
+    events = parse_debezium(_raw(spark, batch))
+    together = _fanout_applier(spark, str(tmp_path / "together"))
+    for t in FANOUT:  # the same seeded tables, hard-linked
+        together.snapshot_table(t).clone(str(tmp_path / "apart" / t))
+    apart = CDCApplier(spark, str(tmp_path / "apart"), table_schemas=FANOUT)
+    tag = f"fanout-{tmp_path.name}"
+
+    def probe(name):
+        # the status tracker fills from the listener bus, in order:
+        # once a probe job shows, every earlier job shows too
+        deadline = time.monotonic() + 30
+        while True:
+            ids = _job_ids(spark, f"{tag}-{name}",
+                           lambda: spark.range(1).collect())
+            if ids or time.monotonic() > deadline:
+                return ids
+            time.sleep(0.2)
+
+    got = {}
+    first = max(probe("before"))
+    group = _job_ids(spark, tag, lambda: got.update(
+        together.apply_batch(events, batch_id="b0")))
+    last = min(probe("after"))
+    assert len(group) > len(FANOUT)
+    assert sorted(group) == list(range(first + 1, last))
+
+    events = events.persist()
+    try:  # the same tables applied serially, with no pool and no audit
+        assert got == {t: apart._apply_table(events, t)
+                       for t in sorted(FANOUT)}
+    finally:
+        events.unpersist()
+    want = _expected(batch)
+    for t in FANOUT:
+        assert _snapshot_rows(together, t) == _snapshot_rows(apart, t) \
+            == want[t]
+        added = []
+        for applier in (together, apart):
+            table = applier.snapshot_table(t)
+            c = table.log.commits()[-1]
+            assert c.operation == "MERGE"
+            added.append(len(c.add))
+            changes = os.listdir(table.log.abs_path(c.change_dir))
+            assert len([f for f in changes
+                        if f.endswith(".parquet")]) == 1, changes
+        assert added[0] == added[1]
+
+
+def test_fanout_error_waits_for_every_table_and_replays(spark, tmp_path):
+    """A CHECK violation in two of three tables raises the first one's
+    error in table order, after every task ended; the other table and
+    the audit append stay committed, and a replay of the same batch id
+    (once the constraints are gone) converges without re-appending
+    audit rows."""
+    batch = _fanout_batch()
+    names = sorted(FANOUT)[:3]
+    applier = _fanout_applier(spark, str(tmp_path), names)
+    bad = {names[0]: "cap_zero", names[2]: "cap_two"}
+    for t, label in bad.items():
+        applier.snapshot_table(t).add_constraint(label, "n < 1000")
+    before = {t: applier.snapshot_table(t).version() for t in names}
+    events = parse_debezium(_raw(spark, batch))
+    with pytest.raises(Exception, match="cap_zero"):
+        applier.apply_batch(events, tables=names, batch_id="b0")
+    assert not [th.name for th in threading.enumerate()
+                if th.name.startswith("cdc-apply")]
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    after = {t: applier.snapshot_table(t).version() for t in names}
+    assert after == {t: v + (t not in bad) for t, v in before.items()}
+    assert applier.audit_table().read().count() == len(batch)
+
+    for t, label in bad.items():
+        applier.snapshot_table(t).drop_constraint(label)
+    applier.apply_batch(events, tables=names, batch_id="b0")
+    assert applier.audit_table().read().count() == len(batch)
+    want = _expected(batch)
+    assert {t: _snapshot_rows(applier, t) for t in names} == {
+        t: want[t] for t in names}

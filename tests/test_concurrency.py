@@ -15,6 +15,8 @@ writer commit first, then publish the planned commit.
 from __future__ import annotations
 
 import os
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -428,3 +430,104 @@ def test_concurrent_incremental_dedup_batches(spark, tmp_path):
                                        bands=16, threshold=0.5)
     assert replay.filter("kept").count() == 0
     assert store.read().count() == 40
+
+
+# ------------------------------------------------ the file-sizing scope
+
+PF_KEY = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+
+
+@pytest.mark.parametrize("found", [None, "true"], ids=["unset", "set"])
+def test_concurrent_writes_leave_parallelism_first_as_found(
+        spark, tmp_path, monkeypatch, found):
+    """Two writers of one session overlap: the second enters the
+    file-sizing scope while the first is writing, and the first leaves
+    before the second writes. Each writes with parallelismFirst=false,
+    and afterwards the conf is exactly as it was before (unset or
+    set)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    original = spark.conf.get(PF_KEY, None)
+    tables = [VersionedTable.create(spark, str(tmp_path / f"w{i}"), SCHEMA)
+              for i in range(2)]
+    inside = [threading.Event() for _ in tables]
+    go = [threading.Event() for _ in tables]
+    seen = {}
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        i = int(threading.current_thread().name.rsplit("-", 1)[1])
+        inside[i].set()
+        assert go[i].wait(60)
+        seen[i] = spark.conf.get(PF_KEY, None)
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    threads = [threading.Thread(target=t.write, args=(rows_df(spark, i),),
+                                name=f"sized-writer-{i}")
+               for i, t in enumerate(tables)]
+    try:
+        if found is None:
+            spark.conf.unset(PF_KEY)
+        else:
+            spark.conf.set(PF_KEY, found)
+        for i, th in enumerate(threads):
+            th.start()
+            assert inside[i].wait(60)
+        for i, th in enumerate(threads):
+            go[i].set()
+            th.join(60)
+            assert not th.is_alive()
+        assert seen == {0: "false", 1: "false"}
+        assert spark.conf.get(PF_KEY, None) == found
+    finally:
+        for g in go:
+            g.set()
+        if original is None:
+            spark.conf.unset(PF_KEY)
+        else:
+            spark.conf.set(PF_KEY, original)
+    assert [t.version() for t in tables] == [1, 1]
+
+
+def test_sized_files_scope_under_thread_churn():
+    """Many threads enter and leave the scope at random points, with a
+    short switch interval: inside it the conf always reads false, and
+    the last one out restores the value found."""
+    from deltalake_poc_spark.tables.sizing import sized_files
+
+    class Conf(dict):
+        def get(self, key, default):
+            return dict.get(self, key, default)
+
+        def set(self, key, value):
+            self[key] = value
+
+        def unset(self, key):
+            self.pop(key, None)
+
+    class Session:
+        _jsparkSession = "session"
+        conf = Conf({PF_KEY: "true"})
+
+    wrong = []
+
+    def churn():
+        for _ in range(300):
+            with sized_files(Session):
+                if Session.conf.get(PF_KEY, None) != "false":
+                    wrong.append(Session.conf.get(PF_KEY, None))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=churn) for _ in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(60)
+            assert not th.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert not wrong
+    assert Session.conf == {PF_KEY: "true"}

@@ -348,7 +348,9 @@ def test_dv_delete_without_match_commits_noop(spark, dvt, cdf):
     def assert_noop(pred):
         before = listing()
         c = dvt.delete(pred)
-        assert c.metrics == {"numDeletedRows": 0} and not c.dv_updates
+        assert c.metrics == dict.fromkeys(
+            ["numDeletedRows", "numCopiedRows", "numRemovedFiles",
+             "numAddedFiles"], 0) and not c.dv_updates
         assert listing() == before
 
     assert_noop("id % 100 = 99")  # no vectors yet; stats cannot prune it
@@ -447,3 +449,30 @@ def test_count_rows_metadata_only(spark, tmp_path):
     assert t.count_rows() == 899 == t.read().count()
     t.restore(1)
     assert t.count_rows() == 1000 == t.read().count()
+
+
+def test_noop_commits_carry_their_operations_metrics(spark, dvt, tmp_path):
+    """history_df() of a commit that changed nothing shows the
+    operation's own metric names, all zero: an OPTIMIZE of an empty
+    table, a PURGE of a table without vectors, and a DV MERGE whose
+    clauses match nothing."""
+    import json
+
+    empty = VersionedTable.create(spark, str(tmp_path / "empty"), SCHEMA)
+    empty.optimize()
+    dvt.purge_deletion_vectors()
+    dvt.merge(df_of(spark, 1, 2), "id").when_matched_delete(
+        "s.id > 100").execute()
+
+    def history(t):
+        return [(r["operation"], json.loads(r["operationMetrics"]))
+                for r in t.history_df().orderBy("version").collect()]
+
+    files = {"numRemovedFiles": 0, "numAddedFiles": 0}
+    assert history(empty)[-1] == ("OPTIMIZE", files)
+    assert history(dvt)[-2:] == [
+        ("PURGE", files),
+        ("MERGE", dict.fromkeys(
+            ["numTargetRowsUpdated", "numTargetRowsInserted",
+             "numTargetRowsDeleted", "numTargetRowsCopied", "numOutputRows",
+             "numTargetFilesRemoved", "numTargetFilesAdded"], 0))]

@@ -13,13 +13,16 @@ every staged orphan.
 
 from __future__ import annotations
 
+import datetime
 import os
 import time
 import uuid
 
 import pytest
 from pyspark.sql.types import (
+    ArrayType, DataType, DateType, DecimalType, DoubleType, FloatType,
     IntegerType, LongType, StringType, StructField, StructType,
+    TimestampNTZType, TimestampType,
 )
 
 from deltalake_poc_spark.tables import VersionedTable
@@ -223,7 +226,9 @@ def test_noop_delete_rebases_past_a_property_change(spark, tmp_path,
     c = t.delete("id = 999")
     assert raced
     assert c.version == t.version() == 3
-    assert c.metrics == {"numDeletedRows": 0}
+    assert c.metrics == dict.fromkeys(
+        ["numDeletedRows", "numCopiedRows", "numRemovedFiles",
+         "numAddedFiles"], 0)
     assert [x.operation for x in t.log.commits()] == [
         "CREATE TABLE", "APPEND", "SET TBLPROPERTIES", "DELETE"]
     assert t.properties()["owner"] == "rival"
@@ -254,6 +259,38 @@ def test_write_rejects_a_conflicting_column_type(spark, tmp_path,
     assert table_type.simpleString() in msg
     assert t.version() == 1 and artifacts(t) == before
     assert [(r["id"], r["n"]) for r in t.read().collect()] == [(1, 1)]
+
+
+@pytest.mark.parametrize("table_type, frame_type, value, decodes", [
+    (StringType(), LongType(), 7, False),
+    (TimestampType(), DateType(), datetime.date(2024, 1, 2), False),
+    (ArrayType(TimestampType()), ArrayType(DateType()),
+     [datetime.date(2024, 1, 2)], False),
+    (DoubleType(), IntegerType(), 7, True),
+    (DoubleType(), FloatType(), 7.5, True),
+    (DecimalType(12, 2), IntegerType(), 7, True),
+    (TimestampType(), TimestampNTZType(), datetime.datetime(2024, 1, 2, 3),
+     True),
+], ids=lambda x: x.simpleString() if isinstance(x, DataType) else None)
+def test_write_admits_only_types_the_read_decodes(spark, tmp_path,
+                                                  table_type, frame_type,
+                                                  value, decodes):
+    """A column written with another type than its declared one commits
+    only when the declared-schema read decodes it (and then reads
+    back); otherwise the write raises before staging anything."""
+    t = VersionedTable.create(spark, str(tmp_path / "ty"), StructType([
+        StructField("n", table_type)]))
+    frame = spark.createDataFrame([(value,)], StructType([
+        StructField("n", frame_type)]))
+    if decodes:
+        t.write(frame, "append")
+        assert t.read().collect() == frame.select(
+            frame["n"].cast(table_type).alias("n")).collect()
+    else:
+        with pytest.raises(TypeError) as e:
+            t.write(frame, "append")
+        assert frame_type.simpleString() in str(e.value)
+        assert t.version() == 0 and artifacts(t) == set()
 
 
 def test_write_widens_int_into_long(spark, tmp_path):
