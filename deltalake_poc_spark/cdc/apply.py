@@ -115,16 +115,8 @@ class CDCApplier:
 
     def snapshot_table(self, name: str) -> VersionedTable:
         base = self.table_schemas[name]
-        full = StructType(
-            base.fields
-            + [
-                # metadata columns every snapshot carries (SURVEY.md §1.5)
-                S.StructField(S.META_OPERATION, S.StringType()),
-                S.StructField(S.META_TIMESTAMP, TimestampType()),
-                S.StructField(S.META_PROCESSED, TimestampType()),
-            ]
-        )
-        return self._get_or_create(name, full)
+        return self._get_or_create(
+            name, StructType(base.fields + list(S.META_FIELDS)))
 
     def _get_or_create(self, name: str, schema: StructType,
                        partition_by: list[str] | None = None) -> VersionedTable:
@@ -276,14 +268,9 @@ class CDCApplier:
         table = self.snapshot_table(name)
         # schema-only commit: append an empty frame carrying the evolved
         # shape; _merged_schema_json extends the table schema, no data
-        meta_fields = [
-            S.StructField(S.META_OPERATION, S.StringType()),
-            S.StructField(S.META_TIMESTAMP, TimestampType()),
-            S.StructField(S.META_PROCESSED, TimestampType()),
-        ]
         table.write(
             self.spark.createDataFrame(
-                [], StructType(evolved.fields + meta_fields)),
+                [], StructType(evolved.fields + list(S.META_FIELDS))),
             "append",
         )
 

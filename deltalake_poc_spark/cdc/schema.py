@@ -96,6 +96,13 @@ META_OPERATION = "__cdc_operation"
 META_TIMESTAMP = "__cdc_timestamp"
 META_PROCESSED = "__processed_at"
 META_COLS = (META_OPERATION, META_TIMESTAMP, META_PROCESSED)
+# the metadata columns every snapshot table carries after its data
+# columns (SURVEY.md §1.5)
+META_FIELDS = (
+    StructField(META_OPERATION, StringType()),
+    StructField(META_TIMESTAMP, TimestampType()),
+    StructField(META_PROCESSED, TimestampType()),
+)
 
 OP_NAMES = {"c": "INSERT", "u": "UPDATE", "d": "DELETE", "r": "SNAPSHOT"}
 

@@ -9,6 +9,23 @@ protocol (https://github.com/delta-io/delta/blob/master/PROTOCOL.md)
 so those tables are readable — snapshot, time travel, history, and
 change-data-feed — without the delta-spark package.
 
+Replay rule (a table is one replay of its action log):
+
+- each ``_delta_log`` commit file is parsed ONCE per reader into a
+  ``DeltaCommit`` (``commit(v)``). A commit file never changes once
+  written; its presence is still checked on every replay, so a
+  vacuumed log raises instead of replaying from memory;
+- ONE reconciliation step, ``_Replay.apply``, folds a commit (or the
+  checkpoint) into the table state, keyed by path and deletion-vector
+  id. ``snapshot()`` is that step over the checkpoint plus the JSON
+  commits after it;
+- ``read_change_feed()`` replays one snapshot to ``start - 1`` and
+  drives the same step forward through the range, reading each
+  commit's changes against the state just before it; a commit missing
+  from the range raises ``FileNotFoundError``;
+- the ``standard_delta`` data source (tables/streamsource.py) takes
+  each commit's adds and removes from the same ``DeltaCommit``.
+
 Scope and scale notes:
 
 - Log replay (JSON actions + parquet checkpoint) is DRIVER-side, like
@@ -23,18 +40,22 @@ Scope and scale notes:
   deletionVectors, v2Checkpoint-absent}.
 - Deletion vectors (readerVersion 3 tables, increasingly delta-spark's
   default for DELETE/UPDATE/MERGE): the ``deletionVector`` field of
-  add actions is decoded driver-side (``tables/roaring.py`` — Z85 +
-  portable RoaringBitmapArray + CRC-checked sidecar layout, all from
-  the public protocol spec) and applied distributed as a broadcast
-  anti-join of ``_metadata.row_index`` against the deleted positions —
-  the same mechanism the engine's own private-log DVs use
-  (tables/table.py:_read_files). The DV side is metadata-sized
-  (deleted positions per file, bounded by purge/OPTIMIZE policy), so
-  the data scan stays one distributed pass.
+  add actions decodes through ``tables/roaring.py`` (Z85 + portable
+  RoaringBitmapArray + CRC-checked sidecar layout, all from the public
+  protocol spec). Every read leg — snapshot, time travel and each
+  change-feed leg — applies vectors the same way: ``_dv_pairs`` builds
+  (file, row index) pair frames, and the leg keeps the rows of a
+  ``keep`` frame (semi-join) and drops those of a ``drop`` frame
+  (anti-join) over ``_metadata.row_index``. The total cardinality
+  picks the regime for every frame: up to ``dv_driver_positions_max``
+  positions decode driver-side into a broadcast frame, so the data
+  scan stays one distributed pass; above it only the descriptors ship
+  and the executors decode them.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import urllib.parse
@@ -42,7 +63,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from . import roaring
 
@@ -51,6 +72,8 @@ LOG_DIR = "_delta_log"
 # reader-version-3 table features this replayer actually implements
 _SUPPORTED_READER_FEATURES = {"columnMapping", "timestampNtz",
                               "vacuumProtocolCheck", "deletionVectors"}
+
+_PAIRS_SCHEMA = "__dvf string, __dvp long"
 
 
 @dataclass
@@ -96,8 +119,133 @@ def _parse_add_stats(raw) -> dict:
     return out
 
 
+@dataclass
+class FileAction:
+    """One add or remove action of the log."""
+    path: str  # log-relative and URL-encoded, per the protocol
+    partition_values: dict[str, str]
+    dv: dict | None  # deletionVector descriptor
+    data_change: bool
+    stats: dict  # {column: [min, max]}; adds only
+
+    @classmethod
+    def parse(cls, a: dict) -> FileAction:
+        dv = a.get("deletionVector")
+        return cls(a["path"], dict(a.get("partitionValues") or {}),
+                   # checkpoint parquet rows materialize an absent
+                   # descriptor as a struct of all-None fields
+                   dv if dv and dv.get("storageType") else None,
+                   bool(a.get("dataChange", True)),
+                   _parse_add_stats(a.get("stats")))
+
+    @property
+    def dv_id(self) -> str | None:
+        dv = self.dv
+        return (f"{dv['storageType']}{dv['pathOrInlineDv']}"
+                f"@{dv.get('offset') or 0}") if dv else None
+
+
+@dataclass
+class DeltaCommit:
+    """One commit file (or the checkpoint), parsed once: the input of
+    the reconciliation step."""
+    version: int
+    actions: list[dict]  # the raw action lines, in log order
+    timestamp_ms: int = 0
+    info: dict = field(default_factory=dict)  # commitInfo
+    metadata: dict | None = None
+    protocol: dict | None = None
+    adds: list[FileAction] = field(default_factory=list)
+    removes: list[FileAction] = field(default_factory=list)
+    # change-data file -> partitionValues
+    cdc: dict[str, dict[str, str]] = field(default_factory=dict)
+
+    @classmethod
+    def parse(cls, version: int, actions: list[dict],
+              mtime_ms=lambda: 0) -> DeltaCommit:
+        c = cls(version, actions)
+        for a in actions:
+            if "commitInfo" in a:
+                c.info = c.info or a["commitInfo"]
+            elif "metaData" in a:
+                c.metadata = a["metaData"]
+            elif "protocol" in a:
+                c.protocol = a["protocol"]
+            elif "add" in a:
+                c.adds.append(FileAction.parse(a["add"]))
+            elif "remove" in a:
+                c.removes.append(FileAction.parse(a["remove"]))
+            elif "cdc" in a:
+                c.cdc[a["cdc"]["path"]] = dict(
+                    a["cdc"].get("partitionValues") or {})
+        # commitInfo.timestamp when present, else log-file mtime — the
+        # same fallback order delta-spark uses for time travel
+        c.timestamp_ms = (int(c.info["timestamp"]) if "timestamp" in c.info
+                          else mtime_ms())
+        return c
+
+
+class _Replay:
+    """Table state as the log replays; ``apply`` is the one
+    reconciliation step."""
+
+    def __init__(self, root: str):
+        self.root = root
+        self.version = -1
+        self.metadata: dict | None = None
+        self.protocol: dict = {}
+        self.live: dict[str, FileAction] = {}  # path -> its live add
+
+    def apply(self, c: DeltaCommit) -> None:
+        """A file's identity is (path, DV id), per PROTOCOL.md "Action
+        Reconciliation": a DV update commits remove(path, old DV) +
+        add(path, new DV), and the remove only tombstones the
+        incarnation it names. A commit's removes and adds never share
+        an identity, so removes apply first; in a checkpoint that also
+        keeps a live add whose identity matches a retained tombstone."""
+        if c.metadata is not None:
+            self.metadata = c.metadata
+        if c.protocol is not None:
+            self.protocol = c.protocol
+        for rm in c.removes:
+            cur = self.live.get(rm.path)
+            if cur is not None and cur.dv_id == rm.dv_id:
+                del self.live[rm.path]
+        for ad in c.adds:
+            self.live[ad.path] = ad
+        self.version = c.version
+
+    def snapshot(self) -> DeltaSnapshot:
+        md, proto = self.metadata, self.protocol
+        if md is None:
+            raise ValueError(f"Delta log has no metaData action: {self.root}")
+        min_reader = int(proto.get("minReaderVersion", 1))
+        reader_features = set(proto.get("readerFeatures") or [])
+        unsupported = reader_features - _SUPPORTED_READER_FEATURES
+        if min_reader > 3 or (min_reader == 3 and unsupported):
+            raise NotImplementedError(
+                f"unsupported Delta reader requirement: version {min_reader}, "
+                f"features {sorted(unsupported)}")
+        live = self.live.values()
+        return DeltaSnapshot(
+            self.version, StructType.fromJson(json.loads(md["schemaString"])),
+            list(md.get("partitionColumns") or []),
+            dict(md.get("configuration") or {}), min_reader, reader_features,
+            {a.path: a.partition_values for a in live},
+            {a.path: a.dv for a in live if a.dv},
+            {a.path: a.stats for a in live if a.stats})
+
+
 class DeltaLakeReader:
     """Replays ``_delta_log`` and reads standard Delta tables."""
+
+    # above this many total deleted positions (descriptor cardinality,
+    # known without decoding) a pair frame is decoded on the executors
+    # and joined as the planner chooses, instead of decoded driver-side
+    # and broadcast: a 100 TB table with pervasive DVs has O(deleted
+    # rows) positions, which must not hit driver memory or a
+    # broadcast. 4M positions ~= 64 MB as (file, pos) pairs.
+    dv_driver_positions_max: int = 4_000_000
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -105,6 +253,8 @@ class DeltaLakeReader:
         self.log_dir = os.path.join(root, LOG_DIR)
         if not os.path.isdir(self.log_dir):
             raise FileNotFoundError(f"not a Delta table (no {LOG_DIR}): {root}")
+        # version -> parsed commit; checkpoints under (version, parts)
+        self._parsed: dict = {}
 
     # ------------------------------------------------------------- log scan
 
@@ -129,33 +279,36 @@ class DeltaLakeReader:
         with open(p) as f:
             return json.load(f)
 
-    def _commit_file(self, version: int) -> str:
-        return os.path.join(self.log_dir, f"{version:020d}.json")
-
-    def _commit_actions(self, version: int) -> list[dict]:
-        with open(self._commit_file(version)) as f:
-            return [json.loads(line) for line in f if line.strip()]
+    def commit(self, version: int) -> DeltaCommit:
+        """Commit ``version``, parsed once per reader."""
+        path = os.path.join(self.log_dir, f"{version:020d}.json")
+        if not os.path.exists(path):
+            raise FileNotFoundError(
+                f"missing Delta log version {version} (vacuumed?): {self.root}")
+        if version not in self._parsed:
+            with open(path) as f:
+                actions = [json.loads(line) for line in f if line.strip()]
+            self._parsed[version] = DeltaCommit.parse(
+                version, actions, lambda: int(os.path.getmtime(path) * 1000))
+        return self._parsed[version]
 
     def _commit_timestamp_ms(self, version: int) -> int:
-        """commitInfo.timestamp when present, else log-file mtime —
-        the same fallback order delta-spark uses for time travel."""
-        for a in self._commit_actions(version):
-            if "commitInfo" in a and "timestamp" in a["commitInfo"]:
-                return int(a["commitInfo"]["timestamp"])
-        return int(os.path.getmtime(self._commit_file(version)) * 1000)
+        return self.commit(version).timestamp_ms
 
-    def _checkpoint_actions(self, ck: dict) -> list[dict]:
-        """Checkpoint parquet rows -> action dicts (add/remove/metaData/
-        protocol columns, one non-null per row)."""
+    def _checkpoint(self, ck: dict) -> DeltaCommit:
+        """Checkpoint parquet rows -> one commit of add/remove/metaData/
+        protocol actions (one non-null per row)."""
         import pyarrow.parquet as pq
 
-        v = ck["version"]
-        if ck.get("parts"):
+        v, parts = ck["version"], ck.get("parts")
+        if (v, parts) in self._parsed:
+            return self._parsed[(v, parts)]
+        if parts:
             paths = [
                 os.path.join(
                     self.log_dir,
-                    f"{v:020d}.checkpoint.{i + 1:010d}.{ck['parts']:010d}.parquet")
-                for i in range(ck["parts"])
+                    f"{v:020d}.checkpoint.{i + 1:010d}.{parts:010d}.parquet")
+                for i in range(parts)
             ]
         else:
             paths = [os.path.join(self.log_dir, f"{v:020d}.checkpoint.parquet")]
@@ -165,9 +318,24 @@ class DeltaLakeReader:
                 for kind in ("metaData", "protocol", "add", "remove"):
                     if row.get(kind) is not None:
                         actions.append({kind: row[kind]})
-        return actions
+        self._parsed[(v, parts)] = DeltaCommit.parse(v, actions)
+        return self._parsed[(v, parts)]
 
     # ------------------------------------------------------------- snapshot
+
+    def _replay(self, target: int) -> _Replay:
+        """The table state at ``target`` (-1: before the first commit):
+        the checkpoint when it is not past ``target``, then every JSON
+        commit after it, through the one reconciliation step."""
+        state = _Replay(self.root)
+        ck = self._last_checkpoint()
+        first = 0
+        if ck is not None and ck["version"] <= target:
+            state.apply(self._checkpoint(ck))
+            first = ck["version"] + 1
+        for v in range(first, target + 1):
+            state.apply(self.commit(v))
+        return state
 
     def snapshot(self, version: int | None = None,
                  timestamp_ms: int | None = None) -> DeltaSnapshot:
@@ -175,103 +343,19 @@ class DeltaLakeReader:
             raise ValueError("pass version OR timestamp, not both")
         if timestamp_ms is not None:
             eligible = [v for v in self.versions()
-                        if self._commit_timestamp_ms(v) <= timestamp_ms]
+                        if self.commit(v).timestamp_ms <= timestamp_ms]
             if not eligible:
                 raise ValueError(
                     f"no commit at or before timestamp {timestamp_ms}")
             version = max(eligible)
         target = self.latest_version() if version is None else version
-
-        ck = self._last_checkpoint()
-        start = 0
-        actions: list[dict] = []
-        if ck is not None and ck["version"] <= target:
-            actions.extend(self._checkpoint_actions(ck))
-            start = ck["version"] + 1
-        for v in range(start, target + 1):
-            if not os.path.exists(self._commit_file(v)):
-                raise FileNotFoundError(
-                    f"missing Delta log version {v} (vacuumed?): {self.root}")
-            actions.extend(self._commit_actions(v))
-
-        schema = None
-        part_cols: list[str] = []
-        conf: dict[str, str] = {}
-        min_reader = 1
-        reader_features: set[str] = set()
-        # Action reconciliation is keyed by (path, DV uniqueId), NOT by
-        # path alone (PROTOCOL.md "Action Reconciliation"): a DV update
-        # commits remove(path, oldDV) + add(path, newDV) atomically, and
-        # the remove must only tombstone the OLD incarnation even when
-        # it follows the add within the same commit file.
-        entries: dict[tuple[str, str | None],
-                      tuple[dict, dict | None, dict]] = {}
-
-        def _norm_dv(dv: dict | None) -> dict | None:
-            # checkpoint parquet rows materialize an absent descriptor
-            # as a struct of all-None fields — treat that as no DV
-            return dv if dv and dv.get("storageType") else None
-
-        def _dv_uid(dv: dict | None) -> str | None:
-            if not dv:
-                return None
-            return (f"{dv['storageType']}{dv['pathOrInlineDv']}"
-                    f"@{dv.get('offset') or 0}")
-
-        for a in actions:
-            if "metaData" in a:
-                md = a["metaData"]
-                schema = StructType.fromJson(json.loads(md["schemaString"]))
-                part_cols = list(md.get("partitionColumns") or [])
-                conf = dict(md.get("configuration") or {})
-            elif "protocol" in a:
-                p = a["protocol"]
-                min_reader = int(p.get("minReaderVersion", 1))
-                reader_features = set(p.get("readerFeatures") or [])
-            elif "add" in a:
-                ad = a["add"]
-                dv = _norm_dv(ad.get("deletionVector"))
-                entries[(ad["path"], _dv_uid(dv))] = (
-                    dict(ad.get("partitionValues") or {}), dv,
-                    _parse_add_stats(ad.get("stats")))
-            elif "remove" in a:
-                rm = a["remove"]
-                entries.pop(
-                    (rm["path"], _dv_uid(_norm_dv(rm.get("deletionVector")))),
-                    None)
-        files: dict[str, dict[str, str]] = {}
-        dvs: dict[str, dict] = {}
-        stats: dict[str, dict] = {}
-        for (path, _uid), (pvals, dv, st) in entries.items():
-            files[path] = pvals
-            if st:
-                stats[path] = st
-            if dv:
-                dvs[path] = dv
-            else:
-                dvs.pop(path, None)
-        if schema is None:
-            raise ValueError(f"Delta log has no metaData action: {self.root}")
-        unsupported = reader_features - _SUPPORTED_READER_FEATURES
-        if min_reader > 3 or (min_reader == 3 and unsupported):
-            raise NotImplementedError(
-                f"unsupported Delta reader requirement: version {min_reader}, "
-                f"features {sorted(unsupported)}")
-        return DeltaSnapshot(target, schema, part_cols, conf,
-                             min_reader, reader_features, files, dvs, stats)
+        return self._replay(target).snapshot()
 
     def history(self) -> list[dict]:
         """commitInfo per version, newest first (M6 parity for foreign
         Delta tables)."""
-        out = []
-        for v in sorted(self.versions(), reverse=True):
-            info = {}
-            for a in self._commit_actions(v):
-                if "commitInfo" in a:
-                    info = a["commitInfo"]
-                    break
-            out.append({"version": v, **info})
-        return out
+        return [{"version": v, **self.commit(v).info}
+                for v in sorted(self.versions(), reverse=True)]
 
     # ----------------------------------------------------------------- read
 
@@ -318,49 +402,47 @@ class DeltaLakeReader:
                     if partition_may_match(pv, preds)
                     and file_may_match(snap.stats.get(p, {}), preds)
                 }
-        dv_sub = {p: d for p, d in snap.dvs.items() if p in files}
-        total_card = sum(int(d.get("cardinality", 0)) for d in dv_sub.values())
-        if dv_sub and total_card > self.dv_driver_positions_max:
-            # pervasive DVs: O(deleted rows) positions neither decode
-            # on the driver nor broadcast — descriptors (O(files))
-            # ship to executors, decode distributed, and the anti-join
-            # strategy is left to the planner (guide §3/§5)
-            out = self._read_files(snap, files, drop_descriptors=dv_sub)
-        else:
-            out = self._read_files(
-                snap, files, drop_positions=self._dv_positions(dv_sub))
+        out = self._read_files(snap, files, drop=self._dv_pairs(
+            {p: d for p, d in snap.dvs.items() if p in files}))
         return out.filter(where) if where is not None else out
 
-    # above this many total deleted positions (descriptor cardinality,
-    # known without decoding) the read switches from driver-decoded
-    # broadcast position frames to executor-side sidecar decode + a
-    # planner-chosen join: a 100 TB table with pervasive DVs has
-    # O(deleted rows) positions, which must not hit driver memory or a
-    # broadcast. 4M positions ~= 64 MB as (file, pos) pairs.
-    dv_driver_positions_max: int = 4_000_000
+    def data_path(self, rel: str) -> str:
+        """Absolute path of a log ``path`` field (URL-encoded per the
+        protocol)."""
+        return os.path.join(self.root, urllib.parse.unquote(rel))
 
-    def _dv_positions(self, dvs: dict[str, dict]) -> dict[str, list[int]]:
-        """Decode each file's DV descriptor to its deleted row indexes
-        (driver-side metadata work, like every Delta client)."""
-        return {path: roaring.read_descriptor(self.root, d)
-                for path, d in dvs.items()}
+    def _dv_pairs(self, dvs: dict[str, dict] | None) -> DataFrame | None:
+        """(file basename ``__dvf``, row index ``__dvp``) pairs of the
+        deletion vectors ``dvs`` (log-relative path -> descriptor); None
+        without vectors. Every read leg's ``keep``/``drop`` frame comes
+        from here. Basenames are unique within a table (uuid-named part
+        files) and, unlike full ``_metadata.file_path`` URIs, carry no
+        URL-encodable characters.
 
-    def _descriptor_pairs_df(self, dvs: dict[str, dict]) -> DataFrame:
-        """(file basename, deleted row index) pairs decoded ON THE
-        EXECUTORS: the driver ships only the descriptor dicts
-        (O(files), ~hundreds of bytes each); each task reads its
-        sidecar bytes / inline payload and explodes to positions.
-        This is the scale regime of DV application — the pair count
-        is O(deleted rows) and never exists driver-side."""
-        import json as _json
-
+        Up to ``dv_driver_positions_max`` total positions the vectors
+        decode driver-side into a frame with a broadcast hint: Catalyst
+        has no size estimate for local relations and planned
+        SortMergeJoins, shuffling and sorting the DATA by (file, pos)
+        just to drop a handful of rows (delta_dv_read: 10 SMJs ->
+        broadcast hash joins). Above it only the descriptors (O(files),
+        ~hundreds of bytes each) ship; each task reads its sidecar bytes
+        or inline payload and explodes it to positions, so the O(deleted
+        rows) pairs never exist driver-side, and the planner picks the
+        join from measured sizes."""
+        if not dvs:
+            return None
+        names = {p: os.path.basename(urllib.parse.unquote(p)) for p in dvs}
+        total = sum(int(d.get("cardinality", 0)) for d in dvs.values())
+        if total <= self.dv_driver_positions_max:
+            return F.broadcast(self.spark.createDataFrame(
+                [(names[p], i) for p, d in dvs.items()
+                 for i in roaring.read_descriptor(self.root, d)],
+                _PAIRS_SCHEMA))
         root = self.root
-        rows = [(os.path.basename(urllib.parse.unquote(p)), _json.dumps(d))
-                for p, d in dvs.items()]
-        par = max(1, min(len(rows),
-                         self.spark.sparkContext.defaultParallelism))
+        par = max(1, min(len(dvs), self.spark.sparkContext.defaultParallelism))
         desc = self.spark.createDataFrame(
-            rows, "__dvf string, __desc string").repartition(par)
+            [(names[p], json.dumps(d)) for p, d in dvs.items()],
+            "__dvf string, __desc string").repartition(par)
 
         def _decode(batches):
             import pandas as pd
@@ -368,76 +450,52 @@ class DeltaLakeReader:
             from deltalake_poc_spark.tables import roaring as _r
             for pdf in batches:
                 for f, dj in zip(pdf["__dvf"], pdf["__desc"]):
-                    pos = _r.read_descriptor(root, _json.loads(dj))
+                    pos = _r.read_descriptor(root, json.loads(dj))
                     yield pd.DataFrame(
                         {"__dvf": pd.Series([f] * len(pos), dtype="object"),
                          "__dvp": pd.Series(pos, dtype="int64")})
 
-        return desc.mapInPandas(_decode, "__dvf string, __dvp long")
-
-    def _data_path(self, rel: str, subdir: str = "") -> str:
-        """Log ``path`` fields are URL-encoded per the protocol."""
-        return os.path.join(self.root, subdir, urllib.parse.unquote(rel))
+        return desc.mapInPandas(_decode, _PAIRS_SCHEMA)
 
     @staticmethod
     def _basename_col(col):
         return F.element_at(F.split(col, "/"), -1)
 
-    def _positions_df(self, positions: dict[str, list[int]]) -> DataFrame:
-        """(file basename, row index) pairs for the join side of DV
-        filtering. Basenames are unique within a table (uuid-named part
-        files) and, unlike full ``_metadata.file_path`` URIs, carry no
-        URL-encodable characters. The pair count is the deleted-row
-        count of the touched files — metadata-sized, so AQE broadcasts
-        it and the data scan stays a single pass."""
-        rows = [(os.path.basename(urllib.parse.unquote(p)), int(i))
-                for p, idxs in positions.items() for i in idxs]
-        return self.spark.createDataFrame(
-            rows, "__dvf string, __dvp long")
-
     def _read_files(self, snap: DeltaSnapshot,
                     files: dict[str, dict[str, str]],
-                    subdir: str = "",
-                    drop_positions: dict[str, list[int]] | None = None,
-                    keep_positions: dict[str, list[int]] | None = None,
-                    drop_descriptors: dict[str, dict] | None = None,
-                    ) -> DataFrame:
-        """``drop_positions``: per-file row indexes to EXCLUDE (deletion
-        vectors). ``keep_positions``: per-file row indexes to KEEP
-        (CDF replay of a DV delta). ``drop_descriptors``: per-file DV
-        DESCRIPTORS to exclude — decoded on the executors for tables
-        whose total DV cardinality is too large for driver decode +
-        broadcast. All keyed by log-relative path."""
+                    keep: DataFrame | None = None,
+                    drop: DataFrame | None = None,
+                    change_files: bool = False) -> DataFrame:
+        """``files`` (log-relative path -> partition values) as
+        ``snap``'s logical schema. ``keep`` and ``drop`` are
+        ``_dv_pairs`` frames: a row survives only if its (file, row
+        index) is in ``keep`` (when given) and not in ``drop``.
+        ``change_files``: the files are a commit's ``cdc`` files, whose
+        ``_change_type`` column is read along; a partition column the
+        cdc action gives no value for comes from the file itself (the
+        engine's export writes change files holding every column)."""
         fields = self._physical_fields(snap)
         types = {f_.name: f_.dataType for f_ in snap.schema.fields}
         if not files:
             return self.spark.createDataFrame([], snap.schema)
-        drop_positions = {p: v for p, v in (drop_positions or {}).items()
-                          if p in files and v}
-        drop_descriptors = {p: d for p, d in (drop_descriptors or {}).items()
-                            if p in files}
-        keep_positions = ({p: v for p, v in keep_positions.items()
-                           if p in files}
-                          if keep_positions is not None else None)
-        with_pos = (bool(drop_positions) or bool(drop_descriptors)
-                    or keep_positions is not None)
+        with_pos = keep is not None or drop is not None
         # group by partition values: each group is one distributed scan
         # with its literal partition columns; groups then union (at
         # scale the group count is the partition count, not file count)
         groups: dict[tuple, list[str]] = {}
         for path, pvals in files.items():
             key = tuple(pvals.get(c) for c in snap.partition_columns)
-            groups.setdefault(key, []).append(self._data_path(path, subdir))
+            groups.setdefault(key, []).append(self.data_path(path))
         # explicit PHYSICAL read schema (non-partition fields): no
         # schema-inference footer job per partition group — the log
         # already declares the schema, and files missing a column
         # (add-only evolution) read it as null natively
-        from pyspark.sql.types import StructField as _SF
-        from pyspark.sql.types import StructType as _ST
-        read_schema = _ST([
-            _SF(phys, types[logical], True)
+        read_schema = StructType([
+            StructField(phys, types[logical], True)
             for logical, phys in fields
-            if logical not in snap.partition_columns])
+            if change_files or logical not in snap.partition_columns])
+        if change_files:
+            read_schema.add("_change_type", StringType())
         parts = []
         for key, paths in sorted(groups.items()):
             df = self.spark.read.schema(read_schema).parquet(*paths)
@@ -445,51 +503,32 @@ class DeltaLakeReader:
             cols = []
             for logical, phys in fields:
                 if logical in snap.partition_columns:
-                    val = key[snap.partition_columns.index(logical)]
-                    cols.append(F.lit(val).cast(types[logical]).alias(logical))
+                    val = F.lit(key[snap.partition_columns.index(logical)]
+                                ).cast(types[logical])
+                    if change_files:
+                        val = F.coalesce(val, F.col(phys).cast(types[logical]))
+                    cols.append(val.alias(logical))
                 elif phys in present:
                     cols.append(F.col(phys).cast(types[logical]).alias(logical))
                 else:
                     cols.append(F.lit(None).cast(types[logical]).alias(logical))
+            if change_files:
+                cols.append(F.col("_change_type"))
             if with_pos:
                 cols.append(self._basename_col(
                     F.col("_metadata.file_path")).alias("__dvfile"))
                 cols.append(F.col("_metadata.row_index").alias("__dvpos"))
             parts.append(df.select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if with_pos:
-            # broadcast the position frames: they are createDataFrame
-            # products of driver-decoded roaring bitmaps — bounded by
-            # construction (they already fit on the driver) — but
-            # Catalyst has no size estimate for local relations and
-            # planned SortMergeJoins, shuffling and sorting the DATA
-            # table by (file, pos) just to drop a handful of rows
-            # (delta_dv_read: 10 SMJs -> broadcast hash joins).
-            if keep_positions is not None:
-                pairs = self._positions_df(keep_positions)
-                out = out.join(
-                    F.broadcast(pairs),
-                    (F.col("__dvfile") == F.col("__dvf"))
-                    & (F.col("__dvpos") == F.col("__dvp")), "left_semi")
-            if drop_positions:
-                pairs = self._positions_df(drop_positions)
-                out = out.join(
-                    F.broadcast(pairs),
-                    (F.col("__dvfile") == F.col("__dvf"))
-                    & (F.col("__dvpos") == F.col("__dvp")), "left_anti")
-            if drop_descriptors:
-                # executor-decoded pairs: O(deleted rows) — NO
-                # broadcast hint; the planner picks the join from
-                # measured sizes (SMJ/shuffled-hash once it is big)
-                pairs = self._descriptor_pairs_df(drop_descriptors)
-                out = out.join(
-                    pairs,
-                    (F.col("__dvfile") == F.col("__dvf"))
-                    & (F.col("__dvpos") == F.col("__dvp")), "left_anti")
-            out = out.drop("__dvfile", "__dvpos")
-        return out
+        out = functools.reduce(DataFrame.unionByName, parts)
+        if not with_pos:
+            return out
+        on = ((F.col("__dvfile") == F.col("__dvf"))
+              & (F.col("__dvpos") == F.col("__dvp")))
+        if keep is not None:
+            out = out.join(keep, on, "left_semi")
+        if drop is not None:
+            out = out.join(drop, on, "left_anti")
+        return out.drop("__dvfile", "__dvpos")
 
     # ------------------------------------------------------------------ CDF
 
@@ -497,127 +536,82 @@ class DeltaLakeReader:
                          ending_version: int | None = None) -> DataFrame:
         """Delta CDF semantics: commits carrying ``cdc`` actions emit
         exactly those files (they already contain _change_type).
-        Otherwise the change set is derived from add/remove actions,
-        deletion-vector aware:
-
-        - a dataChange add of a NEW file emits its live rows (minus its
-          DV, if born with one) as inserts;
-        - a dataChange add that RE-adds a path active in the previous
-          snapshot is a DV update (the data file itself is immutable):
-          rows at ``new DV minus old DV`` positions are deletes, rows at
-          ``old DV minus new DV`` are re-inserts (restores);
-        - a dataChange remove of a path NOT re-added in the same commit
-          emits the file's surviving rows (minus its old DV) as deletes;
-          removes of re-added paths are part of the DV update above.
-        """
+        Otherwise the change set is derived from dataChange add/remove
+        actions against the table state just before the commit,
+        deletion-vector aware (``_derived_changes``). A commit missing
+        from the range raises ``FileNotFoundError``."""
         end = self.latest_version() if ending_version is None else ending_version
+        # the whole range first, so a gap raises before any replay
+        commits = [self.commit(v) for v in range(starting_version, end + 1)]
+        # a first commit with cdc files needs no prior state: replaying
+        # through it lets a checkpoint AT the start serve a log vacuumed
+        # below it
+        first_cdc = bool(commits and commits[0].cdc)
+        state = self._replay(starting_version - 1 + first_cdc)
         frames = []
-        prev_snap: DeltaSnapshot | None = None
-        for v in range(starting_version, end + 1):
-            if not os.path.exists(self._commit_file(v)):
-                continue
-            snap_v = self.snapshot(v)
-            actions = self._commit_actions(v)
-            ts = self._commit_timestamp_ms(v)
-            cdc_files = {a["cdc"]["path"]: dict(a["cdc"].get("partitionValues")
-                                                or {})
-                         for a in actions if "cdc" in a}
-            if cdc_files:
-                # cdc parquet carries _change_type alongside the data
-                # columns, so read it directly (not via _read_files,
-                # which projects exactly the declared schema); explicit
-                # schema skips the footer-inference job (same rule as
-                # _read_files)
-                from pyspark.sql.types import StringType as _St
-                from pyspark.sql.types import StructField as _SF
-                from pyspark.sql.types import StructType as _ST
-                paths = [self._data_path(p) for p in cdc_files]
-                phys = dict(self._physical_fields(snap_v))
-                raw = self.spark.read.schema(_ST(
-                    [_SF(phys[f_.name], f_.dataType, True)
-                     for f_ in snap_v.schema.fields
-                     if f_.name not in snap_v.partition_columns]
-                    + [_SF("_change_type", _St(), True)])).parquet(*paths)
-                cols = [F.col(phys[f_.name]).cast(f_.dataType).alias(f_.name)
-                        for f_ in snap_v.schema.fields
-                        if phys[f_.name] in raw.columns]
-                df = raw.select(*cols, F.col("_change_type"))
+        for c in commits:
+            if c.cdc:
+                if c.version > state.version:
+                    state.apply(c)
+                df = self._read_files(state.snapshot(), c.cdc,
+                                      change_files=True)
             else:
-                if prev_snap is None and v > 0:
-                    prev_snap = self.snapshot(v - 1)
-                prev_files = prev_snap.files if prev_snap else {}
-                prev_dvs = prev_snap.dvs if prev_snap else {}
-                adds = {a["add"]["path"]:
-                        (dict(a["add"].get("partitionValues") or {}),
-                         a["add"].get("deletionVector"))
-                        for a in actions
-                        if "add" in a and a["add"].get("dataChange", True)}
-                rems = {a["remove"]["path"]:
-                        dict(a["remove"].get("partitionValues") or {})
-                        for a in actions
-                        if "remove" in a
-                        and a["remove"].get("dataChange", True)}
-                new_files: dict[str, dict[str, str]] = {}
-                new_file_dvs: dict[str, dict] = {}
-                del_rows: dict[str, list[int]] = {}   # DV-update deletes
-                ins_rows: dict[str, list[int]] = {}   # DV-update restores
-                upd_pvals: dict[str, dict[str, str]] = {}
-                for path, (pvals, dv) in adds.items():
-                    if path in prev_files:
-                        old = set(roaring.read_descriptor(self.root,
-                                                          prev_dvs[path])
-                                  if path in prev_dvs else [])
-                        new = set(roaring.read_descriptor(self.root, dv)
-                                  if dv else [])
-                        if new - old:
-                            del_rows[path] = sorted(new - old)
-                        if old - new:
-                            ins_rows[path] = sorted(old - new)
-                        upd_pvals[path] = pvals
-                    else:
-                        new_files[path] = pvals
-                        if dv:
-                            new_file_dvs[path] = dv
-                full_rems = {p: pv for p, pv in rems.items() if p not in adds}
-                subs = []
-                if new_files:
-                    subs.append(self._read_files(
-                        snap_v, new_files,
-                        drop_positions=self._dv_positions(new_file_dvs),
-                    ).withColumn("_change_type", F.lit("insert")))
-                if del_rows:
-                    subs.append(self._read_files(
-                        snap_v, {p: upd_pvals[p] for p in del_rows},
-                        keep_positions=del_rows,
-                    ).withColumn("_change_type", F.lit("delete")))
-                if ins_rows:
-                    subs.append(self._read_files(
-                        snap_v, {p: upd_pvals[p] for p in ins_rows},
-                        keep_positions=ins_rows,
-                    ).withColumn("_change_type", F.lit("insert")))
-                if full_rems:
-                    subs.append(self._read_files(
-                        snap_v, full_rems,
-                        drop_positions={
-                            p: roaring.read_descriptor(self.root,
-                                                       prev_dvs[p])
-                            for p in full_rems if p in prev_dvs},
-                    ).withColumn("_change_type", F.lit("delete")))
-                if not subs:
-                    prev_snap = snap_v
-                    continue
-                df = subs[0]
-                for s in subs[1:]:
-                    df = df.unionByName(s)
-            prev_snap = snap_v
-            frames.append(
-                df.withColumn("_commit_version", F.lit(v).cast("long"))
-                .withColumn("_commit_timestamp",
-                            F.timestamp_millis(F.lit(ts))))
+                df = self._derived_changes(state, c)
+            if df is not None:
+                frames.append(
+                    df.withColumn("_commit_version",
+                                  F.lit(c.version).cast("long"))
+                    .withColumn("_commit_timestamp",
+                                F.timestamp_millis(F.lit(c.timestamp_ms))))
         if not frames:
             raise ValueError(
                 f"no change data between versions {starting_version}..{end}")
-        out = frames[0]
-        for f_ in frames[1:]:
-            out = out.unionByName(f_)
-        return out
+        return functools.reduce(DataFrame.unionByName, frames)
+
+    def _derived_changes(self, state: _Replay,
+                         c: DeltaCommit) -> DataFrame | None:
+        """Change rows of a commit without ``cdc`` actions, from its
+        dataChange adds and removes against ``state``, the table just
+        before it (which this applies ``c`` to). Each leg is one
+        ``_read_files`` with ``keep``/``drop`` pair frames:
+
+        - an add of a NEW file: its rows as inserts, ``drop`` = the
+          vector it is born with;
+        - an add that RE-adds a live path is a DV update (the data file
+          itself is immutable): rows at new-vector positions the old one
+          lacks are deletes (``keep`` = new, ``drop`` = old), rows at
+          old-vector positions the new one lacks are restores
+          (``keep`` = old, ``drop`` = new);
+        - a remove of a path NOT re-added in the same commit: the file's
+          surviving rows as deletes, ``drop`` = its old vector."""
+        adds = {a.path: a for a in c.adds if a.data_change}
+        rems = {r.path: r for r in c.removes if r.data_change}
+        before = {p: state.live.get(p) for p in adds.keys() | rems.keys()}
+        state.apply(c)
+        snap = state.snapshot()
+        born = {p: a for p, a in adds.items() if before[p] is None}
+        gone = {p: before[p] or r for p, r in rems.items() if p not in adds}
+        updated = [p for p in adds if before[p] is not None]
+        new = {p: adds[p].dv for p in updated if adds[p].dv}
+        old = {p: before[p].dv for p in updated if before[p].dv}
+        pvals = {p: a.partition_values
+                 for p, a in list(gone.items()) + list(adds.items())}
+        # one frame per vector set: the two DV-update legs share theirs,
+        # so each set is decoded and broadcast once (a pair matches only
+        # rows of its own file)
+        new_pairs, old_pairs = self._dv_pairs(new), self._dv_pairs(old)
+        legs = [  # (files, keep, drop, change type)
+            (born, None,
+             self._dv_pairs({p: a.dv for p, a in born.items() if a.dv}),
+             "insert"),
+            (new, new_pairs, old_pairs, "delete"),
+            (old, old_pairs, new_pairs, "insert"),
+            (gone, None,
+             self._dv_pairs({p: a.dv for p, a in gone.items() if a.dv}),
+             "delete"),
+        ]
+        subs = [self._read_files(snap, {p: pvals[p] for p in files},
+                                 keep=keep, drop=drop)
+                .withColumn("_change_type", F.lit(change_type))
+                for files, keep, drop, change_type in legs if files]
+        return functools.reduce(DataFrame.unionByName, subs) if subs else None

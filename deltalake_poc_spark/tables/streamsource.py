@@ -51,7 +51,6 @@ from __future__ import annotations
 import datetime
 import decimal
 import json
-import os
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -278,12 +277,12 @@ class _DeltaLog:
                 "DeltaLakeReader.read_change_feed")
         return self.reader.snapshot(opts.version, opts.timestamp_ms).schema
 
-    def _partition(self, path: str, pvals: dict | None,
+    def _partition(self, path: str, pvals: dict[str, str],
                    dv: dict | None) -> _FilePartition:
         return _FilePartition(
-            self.reader._data_path(path), dict(pvals or {}),
+            self.reader.data_path(path), pvals,
             drop_positions=(roaring.read_descriptor(self.reader.root, dv)
-                            if dv and dv.get("storageType") else None))
+                            if dv else None))
 
     def snapshot_partitions(self, opts: _Options) -> list[_FilePartition]:
         snap = self.reader.snapshot(opts.version, opts.timestamp_ms)
@@ -292,15 +291,13 @@ class _DeltaLog:
 
     def stream_partitions(self, start: int, end: int,
                           opts: _Options) -> list[_FilePartition]:
-        r = self.reader
+        present = set(self.reader.versions())
         parts = []
         for v in range(start + 1, end + 1):
-            if not os.path.exists(r._commit_file(v)):
+            if v not in present:
                 continue  # vacuumed prefix before startingVersion
-            actions = r._commit_actions(v)
-            removed = {a["remove"]["path"] for a in actions
-                       if "remove" in a
-                       and a["remove"].get("dataChange", True)}
+            c = self.reader.commit(v)
+            removed = {a.path for a in c.removes if a.data_change}
             if removed and not opts.ignore_changes:
                 raise ValueError(
                     f"Delta commit v{v} changes or deletes existing rows; "
@@ -308,11 +305,9 @@ class _DeltaLog:
                     ".option('ignoreChanges','true')")
             # a re-add of a removed path (rewrite or DV update) carries
             # rows already emitted; dataChange=false adds are compaction
-            adds = [a["add"] for a in actions if "add" in a]
-            parts += [self._partition(a["path"], a.get("partitionValues"),
-                                      a.get("deletionVector"))
-                      for a in adds if a.get("dataChange", True)
-                      and a["path"] not in removed]
+            parts += [self._partition(a.path, a.partition_values, a.dv)
+                      for a in c.adds
+                      if a.data_change and a.path not in removed]
         return parts
 
 

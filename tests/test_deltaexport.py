@@ -221,6 +221,51 @@ def test_checkpoint_written_and_replayed(spark, tmp_path):
     assert snap.configuration.get("delta.enableChangeDataFeed") == "true"
 
 
+def test_change_feed_raises_on_a_gap_in_its_range(spark, tmp_path):
+    """A change feed whose range reaches a vacuumed commit raises
+    instead of silently dropping that commit's changes: here the
+    deletes of v1..v4 would vanish from read_change_feed(1). A range
+    that starts at the checkpoint still reads."""
+    t, schema = _mk(spark, str(tmp_path / "src"))
+    t.write(spark.createDataFrame([(4, "d", 40.0)], schema))
+    t.delete("id = 1")
+    t.write(spark.createDataFrame([(5, "e", 50.0)], schema))
+    t.delete("id = 2")  # v5 carries cdc actions
+    assert t.version() == 5
+    dest = str(tmp_path / "out")
+    export_standard_delta(t, dest, checkpoint=True)
+    for i in range(3):
+        t.write(spark.createDataFrame([(100 + i, "y", 2.0)], schema))
+    assert export_standard_delta(t, dest, incremental=True) == 8
+    log_dir = os.path.join(dest, "_delta_log")
+    for v in range(5):
+        os.remove(os.path.join(log_dir, f"{v:020d}.json"))
+    r = DeltaLakeReader(spark, dest)
+    with pytest.raises(FileNotFoundError, match="missing Delta log version 1"):
+        r.read_change_feed(1)
+    assert sorted(x["_commit_version"] for x in r.read_change_feed(5)
+                  .select("_commit_version").distinct().collect()) \
+        == [5, 6, 7, 8]
+
+
+def test_partitioned_change_feed_keeps_partition_columns(spark, tmp_path):
+    """The export writes a partitioned table's change files with every
+    column and a cdc action naming no partition value: the change feed
+    takes the partition column from the file then, so change-file
+    commits keep it and union with derived ones."""
+    t, _ = _mk(spark, str(tmp_path / "src"), partition_by=["name"])
+    t.delete("id = 1")
+    dest = str(tmp_path / "out")
+    export_standard_delta(t, dest)
+    feed = DeltaLakeReader(spark, dest).read_change_feed(0)
+    got = sorted((x.id, x.name, x._change_type, x._commit_version)
+                 for x in feed.select("id", "name", "_change_type",
+                                      "_commit_version").collect())
+    v = t.version()
+    assert got == [(1, "a", "delete", v), (1, "a", "insert", v - 1),
+                   (2, "b", "insert", v - 1), (3, "c", "insert", v - 1)]
+
+
 def test_incremental_sync_matches_full_export(spark, tmp_path):
     """export -> source advances (merge + delete) -> incremental sync:
     the mirror must equal a fresh full export at every version (same
@@ -255,7 +300,7 @@ def test_incremental_sync_matches_full_export(spark, tmp_path):
     # table identity is stable across syncs
     meta_ids = set()
     for v in rm.versions():
-        for a in rm._commit_actions(v):
+        for a in rm.commit(v).actions:
             if "metaData" in a:
                 meta_ids.add(a["metaData"]["id"])
     assert len(meta_ids) == 1
@@ -331,7 +376,7 @@ def test_deletion_vectors_exported_as_standard(spark, tmp_path):
     assert "deletionVectors" in snap.reader_features
     assert len(snap.dvs) == 2  # both files carry a vector at HEAD
     # stats on DV'd adds are marked non-tight
-    for a in r._commit_actions(4):
+    for a in r.commit(4).actions:
         if "add" in a and a["add"].get("deletionVector"):
             assert json.loads(a["add"]["stats"])["tightBounds"] is False
     # data files were linked once, never rewritten

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from __spark_entry__ import _REF_DELTA as REF
 from __spark_entry__ import _ref_delta_absent
+from deltalake_poc_spark.tables import roaring
 from deltalake_poc_spark.tables.deltareader import DeltaLakeReader
 
 # only the tests that read the reference tables need them; the rest
@@ -341,10 +342,13 @@ def test_deletion_vector_read_and_time_travel(spark, tmp_path):
     assert sorted(x.id for x in r.read(version=0).collect()) == list(range(10))
 
 
-def test_deletion_vector_distributed_decode_matches_driver(spark, tmp_path):
+def test_deletion_vector_distributed_decode_matches_driver(
+        spark, tmp_path, monkeypatch):
     """Above the cardinality threshold the read decodes DV sidecars on
     the executors and applies them with a planner-chosen join; the
-    visible rows must equal the driver-decoded broadcast path."""
+    visible rows must equal the driver-decoded broadcast path. The
+    change feed's DV legs follow the same regime: none decodes a
+    vector on the driver."""
     root = str(tmp_path / "dvdist")
     _dv_table(spark, root)
     r = DeltaLakeReader(spark, root)
@@ -356,6 +360,86 @@ def test_deletion_vector_distributed_decode_matches_driver(spark, tmp_path):
     # time travel crosses the threshold branch too (u-storage sidecar)
     exp_v1 = sorted(x.id for x in r.read(version=1).collect())
     assert sorted(x.id for x in r2.read(version=1).collect()) == exp_v1
+
+    def feed(reader):
+        return sorted((x.id, x.v, x._change_type, x._commit_version)
+                      for x in reader.read_change_feed(1).collect())
+
+    exp_feed = feed(r)
+
+    def driver_decode(*_args):
+        raise AssertionError("deletion vector decoded on the driver")
+
+    # the driver's module only: Python workers import their own copy
+    monkeypatch.setattr(roaring, "read_descriptor", driver_decode)
+    assert feed(r2) == exp_feed
+
+
+def test_deletion_vector_legs_plan_broadcast_joins(spark, tmp_path):
+    """Under the default regime the driver-decoded pair frames carry a
+    broadcast hint on every leg: the snapshot read and the change
+    feed's DV legs plan broadcast joins, never a SortMergeJoin that
+    shuffles the data by (file, pos), on this module's DV table and on
+    the delta_dv_read fixture."""
+    import __spark_entry__ as entrymod
+
+    root = str(tmp_path / "dvplan")
+    _dv_table(spark, root)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    for r in (DeltaLakeReader(spark, root),
+              DeltaLakeReader(spark, entrymod._dv_fixture_root())):
+        for df in (r.read(), r.read_change_feed(1)):
+            plan = df._jdf.queryExecution().explainString(mode)
+            assert "BroadcastHashJoin" in plan, plan[:800]
+            assert "SortMergeJoin" not in plan, plan[:800]
+
+
+def test_one_parse_per_commit(spark, tmp_path, monkeypatch):
+    """A reader parses each _delta_log commit once: the change feed
+    drives one replay forward instead of replaying the log per version,
+    and time travel by timestamp reuses the commits it scanned for the
+    timestamp."""
+    from collections import Counter
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from deltalake_poc_spark.tables import VersionedTable
+    from deltalake_poc_spark.tables import deltareader
+    from deltalake_poc_spark.tables.deltaexport import export_standard_delta
+
+    schema = StructType([StructField("id", LongType()),
+                         StructField("v", LongType())])
+    t = VersionedTable.create(spark, str(tmp_path / "src"), schema,
+                              properties={"enableDeletionVectors": "true"})
+    for i in range(18):
+        t.write(spark.createDataFrame([(i, i), (100 + i, i)], schema))
+    t.delete("id = 3")
+    t.delete("id IN (4, 105)")
+    dest = str(tmp_path / "exported")
+    export_standard_delta(t, dest)
+    log = os.path.join(dest, "_delta_log")
+    commits = sorted(f for f in os.listdir(log) if f.endswith(".json"))
+    assert len(commits) >= 21
+    with open(os.path.join(log, commits[10])) as fh:
+        ts = next(json.loads(line)["commitInfo"]["timestamp"]
+                  for line in fh if "commitInfo" in line)
+
+    opens: Counter = Counter()
+
+    def counting_open(path, *args, **kwargs):
+        if str(path).endswith(".json"):
+            opens[os.path.basename(path)] += 1
+        return open(path, *args, **kwargs)
+
+    monkeypatch.setattr(deltareader, "open", counting_open, raising=False)
+    feed = DeltaLakeReader(spark, dest).read_change_feed(1)
+    assert set(opens) == set(commits) and max(opens.values()) == 1, opens
+    assert feed.filter("_change_type = 'delete'").count() == 3
+    opens.clear()
+    assert DeltaLakeReader(spark, dest).snapshot(timestamp_ms=ts).version \
+        == 10
+    assert set(opens) == set(commits) and max(opens.values()) == 1, opens
 
 
 def test_deletion_vector_cdf_derivation(spark, tmp_path):
