@@ -63,10 +63,12 @@ def get_spark(config: EngineConfig | None = None) -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE re-partition cached plans too: MERGE persists its
-        # classified join for the CDF double-pass, and without this the
-        # cache freezes the pre-coalesce shuffle partitioning — small
-        # merge outputs then land as shuffle_partitions near-empty files
+        # let AQE re-partition cached plans too: a deletion-vector
+        # MERGE/UPDATE/DELETE persists its classified rows for its image
+        # write and its sidecar (the CDC applier persists each batch's
+        # events), and without this the cache freezes the pre-coalesce
+        # shuffle partitioning — small outputs then land as
+        # shuffle_partitions near-empty files
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
         # Arrow for any pandas interchange (vectorized UDF path).

@@ -33,12 +33,9 @@ import os
 import shutil
 import uuid
 
-from deltalake_poc_spark.tables.log import Commit, FileEntry, TableLog
+from deltalake_poc_spark.tables.log import (HIVE_NULL, Commit, FileEntry,
+                                            TableLog, partition_values)
 from deltalake_poc_spark.tables.table import CDF_PROP, VersionedTable
-
-# Spark writes NULL partition values as this directory token; the
-# standard log stores them as JSON null in partitionValues.
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 # our property name -> standard delta property name
 _PROP_RENAMES = {
@@ -177,7 +174,8 @@ def _add_action(root: str, dest: str, entry: FileEntry,
     src = os.path.join(root, entry.path)
     if transfer:
         _transfer(src, os.path.join(dest, entry.path), link)
-    pvals = {k: (None if v == _HIVE_NULL else v)
+    # the standard log stores a NULL partition value as JSON null
+    pvals = {k: (None if v == HIVE_NULL else v)
              for k, v in (entry.partition or {}).items()}
     # file-skipping stats; keyed by PHYSICAL name (what the parquet
     # stores) per the protocol's column-mapping rules
@@ -479,20 +477,19 @@ def export_standard_delta(table: VersionedTable, dest: str,
 
         # change-data files -> cdc actions (standard readers then take
         # them as the commit's complete change set, matching how they
-        # were written: _stage_changes emits the full set per commit)
-        changes_dir = log.commit_changes_dir(c)
-        if live and changes_dir and os.path.isdir(changes_dir):
-            for name in sorted(os.listdir(changes_dir)):
-                if not name.endswith(".parquet"):
-                    continue
-                rel = f"_change_data/v={v}/{name}"
-                _transfer(os.path.join(changes_dir, name),
-                          os.path.join(dest, rel), link)
-                st = os.stat(os.path.join(changes_dir, name))
+        # were written: one row-level write stages the full set), each
+        # under its k=v path with its partition values in the action
+        for change_type, paths in log.change_feed(c) if live else ():
+            for src in paths if change_type is None else ():
+                sub = os.path.relpath(src, c.change_dir)
+                rel = f"_change_data/{sub}"  # Spark's names are unique
+                _transfer(log.abs_path(src), os.path.join(dest, rel), link)
                 actions.append({"cdc": {
                     "path": rel,
-                    "partitionValues": {},
-                    "size": st.st_size,
+                    "partitionValues": {
+                        k: (None if x == HIVE_NULL else x)
+                        for k, x in partition_values(sub).items()},
+                    "size": os.stat(log.abs_path(src)).st_size,
                     "dataChange": False,
                 }})
 

@@ -471,9 +471,9 @@ class DeltaLakeReader:
         ``_dv_pairs`` frames: a row survives only if its (file, row
         index) is in ``keep`` (when given) and not in ``drop``.
         ``change_files``: the files are a commit's ``cdc`` files, whose
-        ``_change_type`` column is read along; a partition column the
-        cdc action gives no value for comes from the file itself (the
-        engine's export writes change files holding every column)."""
+        ``_change_type`` column is read along. Their partition values
+        come from the cdc action like an add's; an action of a
+        partitioned table that names none raises ``ValueError``."""
         fields = self._physical_fields(snap)
         types = {f_.name: f_.dataType for f_ in snap.schema.fields}
         if not files:
@@ -484,6 +484,10 @@ class DeltaLakeReader:
         # scale the group count is the partition count, not file count)
         groups: dict[tuple, list[str]] = {}
         for path, pvals in files.items():
+            missing = [c for c in snap.partition_columns if c not in pvals]
+            if change_files and missing:
+                raise ValueError(f"cdc action {path} has no partition "
+                                 f"value for {missing}")
             key = tuple(pvals.get(c) for c in snap.partition_columns)
             groups.setdefault(key, []).append(self.data_path(path))
         # explicit PHYSICAL read schema (non-partition fields): no
@@ -493,7 +497,7 @@ class DeltaLakeReader:
         read_schema = StructType([
             StructField(phys, types[logical], True)
             for logical, phys in fields
-            if change_files or logical not in snap.partition_columns])
+            if logical not in snap.partition_columns])
         if change_files:
             read_schema.add("_change_type", StringType())
         parts = []
@@ -503,11 +507,8 @@ class DeltaLakeReader:
             cols = []
             for logical, phys in fields:
                 if logical in snap.partition_columns:
-                    val = F.lit(key[snap.partition_columns.index(logical)]
-                                ).cast(types[logical])
-                    if change_files:
-                        val = F.coalesce(val, F.col(phys).cast(types[logical]))
-                    cols.append(val.alias(logical))
+                    cols.append(F.lit(key[snap.partition_columns.index(
+                        logical)]).cast(types[logical]).alias(logical))
                 elif phys in present:
                     cols.append(F.col(phys).cast(types[logical]).alias(logical))
                 else:

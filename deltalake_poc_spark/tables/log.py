@@ -52,6 +52,10 @@ import uuid
 from dataclasses import dataclass, field
 
 
+# Spark writes a NULL partition value as this directory name
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
 def partition_values(rel: str) -> dict[str, str]:
     """Hive partition values from a path's ``k=v`` segments, unquoted
     as Spark quotes them when it writes partition directories."""
@@ -211,15 +215,17 @@ class TableLog:
         (``_change_type``, rel paths) groups. Row-appending writes derive
         their inserts from their added files (no change files are
         written, as in Delta); OVERWRITE/RESTORE add a delete of every
-        removed file; MERGE/DELETE/UPDATE contribute their change-file
-        directory, whose rows carry their own ``_change_type`` (type
-        None). OPTIMIZE, VACUUM and property commits change no row."""
+        removed file; MERGE/DELETE/UPDATE contribute their change
+        files, whose rows carry their own ``_change_type`` (type None;
+        a partitioned table's sit in k=v subdirectories of the commit's
+        change dir). OPTIMIZE, VACUUM and property commits change no
+        row."""
         if c.operation in ("MERGE", "DELETE", "UPDATE"):
             cd = self.commit_changes_dir(c)
-            if cd and os.path.isdir(cd) and any(
-                    f.endswith(".parquet") for f in os.listdir(cd)):
-                return [(None, [c.change_dir])]
-            return []
+            files = sorted(os.path.relpath(os.path.join(d, f), self.root)
+                           for d, _, fs in os.walk(cd or "")
+                           for f in fs if f.endswith(".parquet"))
+            return [(None, files)] if files else []
         groups: list[tuple[str | None, list[str]]] = []
         if c.operation in ("WRITE", "APPEND", "CREATE TABLE",
                            "OVERWRITE", "RESTORE"):

@@ -26,9 +26,11 @@ by MERGE, DELETE and UPDATE:
    untouched files cannot contain source keys, not-matched detection
    only needs the touched rows.
 3. **One executor** (``write_classified``) over the operation's one
-   pinned snapshot: rewrites the touched files (copy-on-write) or
-   records deletion vectors, stages CDF change rows, counts every
-   action with one ``observe()`` and publishes one atomic commit with
+   pinned snapshot: ONE Spark write stores each row's data image
+   (rewriting the touched files copy-on-write, or appending the
+   post-images beside a deletion vector) and its CDF change images,
+   counts every action with one ``observe()`` and publishes one
+   atomic commit with
    Delta-style metrics (numTargetRowsUpdated/Inserted/Deleted/Copied
    for MERGE — the reference reads these from history, notebook cells
    11/22/27; numDeletedRows/numUpdatedRows/numCopiedRows for
@@ -48,7 +50,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deltalake_poc_spark.tables.log import Commit
-from deltalake_poc_spark.tables.sizing import sized_files
 
 
 def change_detection_condition(columns: list[str],
@@ -270,11 +271,21 @@ _METRICS = {
 }
 
 
+def _image(cols: list[Column], change_type: str | None,
+           cdc: bool) -> Column:
+    """One image of a classified row. Under CDF it carries
+    ``_change_type`` (null on a data image) and the ``__cdc`` flag
+    that routes it to a change file."""
+    stamp = [F.lit(change_type).cast("string").alias("_change_type"),
+             F.lit(change_type is not None).alias("__cdc")]
+    return F.struct(*cols, *(stamp if cdc else []))
+
+
 def write_classified(table, snap, op: str, params: dict,
                      classified: DataFrame, changes: str, schema,
                      pre: list[Column], post: list[Column],
-                     touched: list[str], schema_json: str | None = None,
-                     cache: bool = True) -> Commit:
+                     touched: list[str],
+                     schema_json: str | None = None) -> Commit:
     """The one row-level write behind MERGE, DELETE and UPDATE.
 
     ``classified`` holds the touched target rows (plus MERGE's source
@@ -285,25 +296,27 @@ def write_classified(table, snap, op: str, params: dict,
     being written); in DV mode the frame also carries the target's
     ``__file``/``__pos``. ``touched`` lists the files a copy-on-write
     commit replaces. Everything reads ``snap``, the operation's pinned
-    snapshot. ``cache=False`` marks a frame that re-reads cheaper than
-    it caches: every row of plain file scans (copy-on-write
-    DELETE/UPDATE). Otherwise a frame that a second job reads is
-    persisted: MERGE's join, and the DV DELETE/UPDATE matches, which
-    are a few rows filtered out of whole-file scans.
+    snapshot.
 
-    - Copy-on-write: the C/U/I rows (post-image for U/I) are
-      materialized and replace ``touched``.
-    - Deletion vectors (``enableDeletionVectors``): the U/I
-      post-images append as new files and the U/D rows' positions go
-      into a consolidated sidecar; nothing is rewritten (copies count
-      0). A DV write that changes no row commits a no-op.
-    - With ``enableChangeDataFeed`` the D, U-pre, U-post and I rows are
-      staged as change files first.
+    Each classified row projects, in one pass, into its images:
 
-    One observe() on the data-file write counts U/I/D/C; a DV DELETE
-    writes no data file and takes its count from the sidecar write's
-    own observe, so no job exists just to count. The commit carries dv_updates + add + remove so readers flip
-    atomically; staged change files and sidecar are removed if it
+    - a data image: copy-on-write writes the C rows and the U/I
+      post-images, which replace ``touched``; with deletion vectors
+      (``enableDeletionVectors``) only the U/I post-images append as
+      new files, nothing is rewritten (copies count 0) and the U/D
+      rows' positions go into a consolidated sidecar;
+    - with ``enableChangeDataFeed``, change images carrying
+      ``_change_type``: D and U pre-images, U and I post-images.
+
+    One Spark write stores both (VersionedTable._write_files): data
+    files move into data/, change files into the commit's unique
+    _changes/ dir. One observe() on it counts U/I/D/C. The DV sidecar
+    is the only second reader of ``classified``, which is persisted
+    just then; a DV DELETE without CDF writes no data or change file
+    and takes its count from the sidecar write's own observe, so no
+    job exists just to count. A DV write that changes no row commits a
+    no-op. The commit carries dv_updates + add + remove so readers
+    flip atomically; staged change files and sidecar are removed if it
     loses a conflict."""
     from pyspark.sql import Observation
 
@@ -311,78 +324,66 @@ def write_classified(table, snap, op: str, params: dict,
 
     t = table
     dv = t._dv_enabled(snap)
-    cdf = t.cdf_enabled(snap)
+    cdc = t.cdf_enabled(snap) and bool(changes)
     if dv:
         params = {**params, "deletionVectors": True}
     act = F.col("__action")
-    # the jobs that read the frame: CDF staging, the data-file write
-    # (DV mode writes post-images only) and the DV sidecar
-    write_rows = not dv or bool(set(changes) & {"U", "I"})
+    # (actions, columns, _change_type) of every image a row can project
+    # into; a data image has no change type
+    images = [("UI", post, None)] + ([] if dv else [("C", pre, None)])
+    if cdc:
+        images += [("I", post, "insert"), ("D", pre, "delete"),
+                   ("U", pre, "update_preimage"),
+                   ("U", post, "update_postimage")]
+    images = [i for i in images if set(i[0]) & set(changes + "C")]
     write_dv = dv and bool(set(changes) & {"U", "D"})
-    # a single reader never persists: the cache fill is pure overhead
-    # there AND freezes a join's partitioning (cached plans skip AQE
-    # output coalescing), which turned a 172-row merge output into 32
-    # near-empty files. Medians of 6 runs, local[4], 4M rows in 8
-    # files, 1% of rows changed, CDF on: copy-on-write DELETE 5.4 s
-    # cached against 2.9 s re-read (UPDATE 5.5 against 3.2); DV UPDATE
-    # 1.8 s cached against 2.4 s for three scans (DELETE 1.3 against 1.4)
-    shared = cache and cdf + write_rows + write_dv > 1
+    # the DV sidecar is the only second reader: a DV write's rows are a
+    # few matches filtered out of whole-file scans, cheaper cached than
+    # scanned twice. A frame with one reader never persists: the cache
+    # fill is pure overhead there AND freezes a join's partitioning
+    # (cached plans skip AQE output coalescing)
+    shared = write_dv and bool(images)
     if shared:
         classified = classified.persist()
     mapping = {f.name: t._physical(f) for f in schema.fields}
     staged, dv_rel, dv_files, n_dv, entries = None, None, [], 0, []
     n = dict.fromkeys("UIDC", 0)
     try:
-        # one file-sizing scope over the change-file, data-file and
-        # sidecar writes: their file counts follow this operation alone
-        with sized_files(classified.sparkSession):
-            if cdf and changes:
-                # every change image from one pass over the changed
-                # rows: a union of per-image legs writes a file per leg
-                images = {"I": [(post, "insert")], "D": [(pre, "delete")],
-                          "U": [(pre, "update_preimage"),
-                                (post, "update_postimage")]}
-                rows = F.filter(F.array(*[
-                    F.when(act == a, F.struct(
-                        *cols, F.lit(ct).alias("_change_type")))
-                    for a in changes for cols, ct in images[a]]),
-                    lambda image: image.isNotNull())
-                staged = t._stage_changes(
-                    classified.filter(act.isin(*changes))
-                    .select(F.inline(rows)), mapping)
-            if write_rows:
-                # only this write reads the observed node: its filters and
-                # projections sit above it, so it sees every classified
-                # row, and no exchange above it can be dropped from the
-                # executed plan
-                obs = Observation()
-                counted = classified.observe(obs, *[
-                    F.coalesce(F.sum(F.when(act == a, 1)), F.lit(0)).alias(a)
-                    for a in ("U", "I", "D", "C")])
-                if dv:
-                    rows = counted.filter(act.isin("U", "I")).select(*post)
-                else:
-                    rows = counted.filter(act.isin("C", "U", "I")).select(*[
-                        F.when(act.isin("U", "I"), b).otherwise(a)
-                        .alias(f.name)
-                        for a, b, f in zip(pre, post, schema.fields)])
-                # CHECK/NOT NULL guards ride the same pass (no extra job);
-                # rows that violate fail the write
-                entries = t._materialize(
-                    enforce(rows, snap.properties, schema), snap,
-                    partition_by=t.partition_columns(snap) or None,
-                    mapping=mapping)
-                n = dict(obs.get)
-            if write_dv and (not write_rows or n["U"] or n["D"]):
-                dv_rel, dv_files, n_dv, n_new = t._dv_sidecar_from(
-                    classified.filter(act.isin("U", "D")), snap)
-                if not write_rows:  # DV DELETE: each new position is a delete
-                    n["D"] = n_new
-            if dv and not (n["U"] or n["I"] or n["D"]):
-                for d in (staged, dv_rel):
-                    if d:
-                        shutil.rmtree(t.log.abs_path(d), ignore_errors=True)
-                return t._noop_commit(op, params, snap)
+        if images:
+            # only this write reads the observed node: its filters
+            # and projections sit above it, so it sees every
+            # classified row, and no exchange above it can be dropped
+            # from the executed plan
+            obs = Observation()
+            counted = classified.observe(obs, *[
+                F.coalesce(F.sum(F.when(act == a, 1)), F.lit(0)).alias(a)
+                for a in ("U", "I", "D", "C")])
+            # every row kept has an image, so inline_outer emits no
+            # null row (and plans no filter re-evaluating the array)
+            rows = counted.filter(act.isin(*"".join(
+                a for a, _, _ in images))).select(F.inline_outer(
+                    F.filter(F.array(*[
+                        F.when(act.isin(*a), _image(cols, ct, cdc))
+                        for a, cols, ct in images]),
+                        lambda image: image.isNotNull())))
+            # CHECK/NOT NULL guards ride the same pass (no extra job);
+            # rows that violate fail the write. Change rows are data
+            # rows or rows the table already holds.
+            entries, staged = t._write_files(
+                enforce(rows, snap.properties, schema), snap,
+                partition_by=t.partition_columns(snap) or None,
+                mapping=mapping)
+            n = dict(obs.get)
+        if write_dv and (not images or n["U"] or n["D"]):
+            dv_rel, dv_files, n_dv, n_new = t._dv_sidecar_from(
+                classified.filter(act.isin("U", "D")), snap)
+            if not images:  # DV DELETE: each new position is a delete
+                n["D"] = n_new
+        if dv and not (n["U"] or n["I"] or n["D"]):
+            for d in (staged, dv_rel):
+                if d:
+                    shutil.rmtree(t.log.abs_path(d), ignore_errors=True)
+            return t._noop_commit(op, params, snap)
     finally:
         if shared:
             classified.unpersist()

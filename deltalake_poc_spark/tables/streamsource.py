@@ -62,7 +62,8 @@ from pyspark.sql.types import (
 
 from deltalake_poc_spark.tables import roaring
 from deltalake_poc_spark.tables.deltareader import DeltaLakeReader
-from deltalake_poc_spark.tables.log import TableLog, partition_values
+from deltalake_poc_spark.tables.log import (HIVE_NULL, TableLog,
+                                            partition_values)
 from deltalake_poc_spark.tables.table import CDF_PROP
 
 
@@ -91,9 +92,13 @@ _CDF_FIELDS = [
 ]
 
 
-def _cast_partition_value(raw: str, typ: str):
+def _cast_partition_value(raw: str | None, typ: str):
     """decimal's simpleString carries precision/scale — normalize the
-    lookup key; unknown types fall through as strings."""
+    lookup key; unknown types fall through as strings. A null value
+    (JSON null in a Delta log, Spark's NULL directory name in a path)
+    stays null."""
+    if raw is None or raw == HIVE_NULL:
+        return None
     cast = _PARTITION_CASTS.get("decimal" if typ.startswith("decimal") else typ)
     return cast(raw) if cast else raw
 
@@ -155,9 +160,8 @@ def _rows(partition: _FilePartition,
             if typ == "timestamp":
                 vals = [_utc(v) for v in vals]
         elif phys in partition.partition_values:
-            raw = partition.partition_values[phys]
-            vals = [_cast_partition_value(raw, typ)
-                    if isinstance(raw, str) else raw] * n
+            vals = [_cast_partition_value(
+                partition.partition_values[phys], typ)] * n
         else:
             vals = [None] * n
         cols.append(vals)
@@ -237,7 +241,8 @@ class _PrivateLog:
                            end: int) -> list[_FilePartition]:
         """Each commit's change rows (TableLog.change_feed, the rule
         VersionedTable.read_change_feed reads by) stamped with its
-        version and time; a change-file directory is one partition."""
+        version and time; each file is one partition, with the
+        partition values of its k=v path like a data file."""
         parts = []
         for c in self.log.commits(start + 1, end):
             stamps = {

@@ -188,15 +188,6 @@ class VersionedTable:
         renames/drops change metadata only, never rewrite parquet)."""
         return (f.metadata or {}).get("physicalName", f.name)
 
-    @staticmethod
-    def _to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-        """``df`` with its columns renamed by ``mapping`` (logical ->
-        physical), as data and change files store them."""
-        if all(k == v for k, v in mapping.items()):
-            return df
-        return df.select(*[F.col(c).alias(mapping.get(c, c))
-                           for c in df.columns])
-
     def column_mapping(self, snap: Snapshot | None = None) -> dict[str, str]:
         """logical -> physical name map for a snapshot's schema."""
         schema = self.schema(snap)
@@ -366,13 +357,19 @@ class VersionedTable:
 
         def _group(change_type: str | None, paths: list[str],
                    c: Commit) -> DataFrame:
-            if change_type is not None:
-                return self._stamp(self._read_files(paths, whole),
-                                   change_type, c)
-            ch = self._scan([self.log.abs_path(p) for p in paths], schema,
-                            extra=(StructField("_change_type", StringType(),
-                                               True),))
-            return (ch.withColumn("_commit_version", F.lit(c.version))
+            if change_type is None:
+                # change files carry their own _change_type and sit in
+                # k=v dirs under their commit's dir, like data files
+                # under data/
+                df = self._scan(
+                    [self.log.abs_path(p) for p in paths], schema,
+                    extra=(StructField("_change_type", StringType(), True),),
+                    base_path=self.log.commit_changes_dir(c))
+            else:
+                df = self._read_files(paths, whole).withColumn(
+                    "_change_type", F.lit(change_type))
+            return (df.withColumn("_commit_version",
+                                  F.lit(c.version).cast("long"))
                     .withColumn("_commit_timestamp",
                                 F.timestamp_millis(F.lit(c.timestamp))))
 
@@ -391,13 +388,6 @@ class VersionedTable:
                         .withColumn("_commit_timestamp", F.timestamp_millis(F.lit(0))))
         return self._union(pieces)
 
-    def _stamp(self, df: DataFrame, change_type: str, c: Commit) -> DataFrame:
-        return (
-            df.withColumn("_change_type", F.lit(change_type))
-            .withColumn("_commit_version", F.lit(c.version).cast("long"))
-            .withColumn("_commit_timestamp", F.timestamp_millis(F.lit(c.timestamp)))
-        )
-
     @staticmethod
     def _union(parts: list[DataFrame]) -> DataFrame | None:
         if not parts:
@@ -413,21 +403,43 @@ class VersionedTable:
                      stats_cols: list[str] | None = None,
                      partition_by: list[str] | None = None,
                      mapping: dict[str, str] | None = None) -> list[FileEntry]:
-        """Write df's rows as new parquet files under data/ and return
-        their FileEntries (with footer-derived min/max stats). ``snap``
-        is the operation's pinned snapshot (None: the table is being
-        created); its properties pick the bloom columns. With
-        ``partition_by``, files land in Hive-style k=v directories under
-        data/ and carry their partition values in the log entry."""
+        """The data files of :meth:`_write_files` over a frame of table
+        rows (no change rows)."""
+        return self._write_files(df, snap, stats_cols, partition_by,
+                                 mapping)[0]
+
+    def _write_files(self, df: DataFrame, snap: Snapshot | None,
+                     stats_cols: list[str] | None = None,
+                     partition_by: list[str] | None = None,
+                     mapping: dict[str, str] | None = None
+                     ) -> tuple[list[FileEntry], str | None]:
+        """Write df's rows as new parquet files in ONE Spark write and
+        return the data files' FileEntries (with footer-derived min/max
+        stats) and the rel path of the change-file dir (None: no change
+        rows). ``snap`` is the operation's pinned snapshot (None: the
+        table is being created); its properties pick the bloom columns.
+        With ``partition_by``, files land in Hive-style k=v directories
+        and data files carry their partition values in the log entry.
+
+        A row-level write (merge.write_classified) tags each row
+        ``__cdc``: its false rows are data files under data/, its true
+        rows (with ``_change_type``) change files under a UNIQUE
+        _changes/ dir. Unique naming (not v=<planned>) is load-bearing
+        for OCC: two writers racing for one version would otherwise
+        overwrite the same contested directory and the winner's
+        committed change files could be the loser's."""
         staging = self.log.new_data_file_dir()
-        # column mapping: data files store PHYSICAL names; stats are
-        # re-keyed back to logical below so pruning stays logical.
-        # Callers committing a NEW schema (write() with evolution) pass
-        # that schema's mapping — the snapshot's mapping lags one commit
+        # column mapping: data and change files store PHYSICAL names;
+        # stats are re-keyed back to logical below so pruning stays
+        # logical. Callers committing a NEW schema (write() with
+        # evolution) pass that schema's mapping — the snapshot's
+        # mapping lags one commit
         if mapping is None:
             mapping = self.column_mapping(snap) if snap else {}
         inv = {v: k for k, v in mapping.items()}
-        df = self._to_physical(df, mapping)
+        if any(k != v for k, v in mapping.items()):
+            df = df.select(*[F.col(c).alias(mapping.get(c, c))
+                             for c in df.columns])
         if stats_cols:
             stats_cols = [mapping.get(c, c) for c in stats_cols]
         props = snap.properties if snap else {}
@@ -435,29 +447,35 @@ class VersionedTable:
                       for c in str(props.get(BLOOM_COLS_PROP, "")).split(",")
                       if c.strip()]
         bloom_fpp = float(props.get(BLOOM_FPP_PROP, 0.01))
+        cdc = "__cdc" in df.columns
+        partition_by = (["__cdc"] if cdc else []) + (partition_by or [])
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         # Size-targeted output files (tables/sizing.py), on the frame's
         # session: a foreachBatch frame runs in the stream's clone of
-        # self.spark. The scope nests, so a row-level write holds it
-        # across its change-file, data-file and sidecar writes.
+        # self.spark.
         with sized_files(df.sparkSession):
             writer.parquet(staging)
+        data_root = os.path.join(staging, "__cdc=false") if cdc else staging
+        change_rel, changed = None, os.path.join(staging, "__cdc=true")
+        if cdc and os.path.isdir(changed):
+            change_rel = f"{TableLog.CHANGES_DIR}/{uuid.uuid4().hex}"
+            os.renames(changed, self.log.abs_path(change_rel))
         # Per-file blooms are computed by ONE distributed job over the
-        # staging dir BEFORE the files move to their final names —
+        # staged data files BEFORE they move to their final names —
         # write tasks read the data, the driver receives only the
         # serialized filters (keyed by staged path).
         staged_blooms: dict[str, dict] = {}
-        if bloom_cols:
+        if bloom_cols and os.path.isdir(data_root):
             staged_blooms = collect_blooms_distributed(
-                self.spark, staging,
+                self.spark, data_root,
                 [mapping.get(c, c) for c in bloom_cols],
                 fpp=bloom_fpp)
         entries: list[FileEntry] = []
         os.makedirs(self.log.data_dir(), exist_ok=True)
-        for dirpath, _dirs, files in os.walk(staging):
-            subdir = os.path.relpath(dirpath, staging)
+        for dirpath, _dirs, files in os.walk(data_root):
+            subdir = os.path.relpath(dirpath, data_root)
             part_vals = partition_values(subdir)
             for name in sorted(files):
                 if not name.endswith(".parquet"):
@@ -490,7 +508,7 @@ class VersionedTable:
             os.rmdir(os.path.dirname(staging))
         except OSError:
             pass
-        return entries
+        return entries, change_rel
 
     def _merged_schema_json(self, df: DataFrame, snap: Snapshot | None) -> str:
         """Schema-merge an incoming frame with the schema of ``snap``
@@ -584,7 +602,6 @@ class VersionedTable:
                                     partition_by=pb or None, mapping=mapping)
         op = "APPEND" if (mode == "append" and exists) else (
             "OVERWRITE" if exists else "WRITE")
-        os.makedirs(self.log.data_dir(), exist_ok=True)
         commit = Commit(
             operation=op,
             operation_parameters={"mode": mode, **(extra_params or {})},
@@ -887,8 +904,7 @@ class VersionedTable:
         classified = rows.withColumn(
             "__action", F.when(hit, F.lit(change)).otherwise(F.lit("C")))
         return write_classified(self, snap, op, params, classified, change,
-                                schema, pre, post, touched,
-                                cache=self._dv_enabled(snap))
+                                schema, pre, post, touched)
 
     def _dv_sidecar_from(self, matches: DataFrame, snap: Snapshot
                          ) -> tuple[str | None, list[str], int, int]:
@@ -978,21 +994,6 @@ class VersionedTable:
         return self._publish(Commit(
             operation=op, operation_parameters=params,
             metrics=dict.fromkeys(_METRICS[op].values(), 0)), snap)
-
-    def _stage_changes(self, change_df: DataFrame,
-                       mapping: dict[str, str]) -> str:
-        """Write CDF change files into a UNIQUE staging dir under
-        _changes/ and return its rel path — the caller records it in
-        the commit (Commit.change_dir). Unique naming (not v=<planned>)
-        is load-bearing for OCC: two writers racing for one version
-        would otherwise mode('overwrite') the same contested directory
-        and the winner's committed change files could be the loser's."""
-        # change files use PHYSICAL names too (like data files), so CDF
-        # reads across later renames realign via the same mapping
-        rel = f"{TableLog.CHANGES_DIR}/{uuid.uuid4().hex}"
-        self._to_physical(change_df, mapping).write.mode("overwrite").parquet(
-            self.log.abs_path(rel))
-        return rel
 
     # ----------------------------------------------------------- maintenance
 

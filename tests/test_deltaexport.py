@@ -249,14 +249,19 @@ def test_change_feed_raises_on_a_gap_in_its_range(spark, tmp_path):
 
 
 def test_partitioned_change_feed_keeps_partition_columns(spark, tmp_path):
-    """The export writes a partitioned table's change files with every
-    column and a cdc action naming no partition value: the change feed
-    takes the partition column from the file then, so change-file
-    commits keep it and union with derived ones."""
+    """The export writes a partitioned table's change files under their
+    k=v paths with their values in the cdc action, as the protocol
+    reads them: the change feed takes the partition column from the
+    action, so change-file commits keep it and union with derived
+    ones."""
     t, _ = _mk(spark, str(tmp_path / "src"), partition_by=["name"])
     t.delete("id = 1")
     dest = str(tmp_path / "out")
     export_standard_delta(t, dest)
+    cdc = [a["cdc"] for a in DeltaLakeReader(spark, dest).commit(
+        t.version()).actions if "cdc" in a]
+    assert cdc and all(a["partitionValues"] == {"name": "a"}
+                       and "/name=a/" in a["path"] for a in cdc)
     feed = DeltaLakeReader(spark, dest).read_change_feed(0)
     got = sorted((x.id, x.name, x._change_type, x._commit_version)
                  for x in feed.select("id", "name", "_change_type",
@@ -264,6 +269,26 @@ def test_partitioned_change_feed_keeps_partition_columns(spark, tmp_path):
     v = t.version()
     assert got == [(1, "a", "delete", v), (1, "a", "insert", v - 1),
                    (2, "b", "insert", v - 1), (3, "c", "insert", v - 1)]
+
+
+def test_cdc_action_without_partition_values_raises(spark, tmp_path):
+    """A partitioned table's cdc action that names no partition value is
+    malformed outside input: the change feed raises instead of reading
+    the column as null or guessing it."""
+    t, _ = _mk(spark, str(tmp_path / "src"), partition_by=["name"])
+    t.delete("id = 1")
+    dest = str(tmp_path / "out")
+    export_standard_delta(t, dest)
+    path = os.path.join(dest, "_delta_log", f"{t.version():020d}.json")
+    with open(path) as fh:
+        actions = [json.loads(line) for line in fh]
+    for a in actions:
+        if "cdc" in a:
+            a["cdc"]["partitionValues"] = {}
+    with open(path, "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    with pytest.raises(ValueError, match="no partition value for"):
+        DeltaLakeReader(spark, dest).read_change_feed(t.version())
 
 
 def test_incremental_sync_matches_full_export(spark, tmp_path):

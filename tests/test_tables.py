@@ -284,9 +284,10 @@ def _row_level_op(spark, t, op):
 # before DELETE, UPDATE and MERGE shared one executor. COW MERGE (what
 # the CDC applier runs) must stay equal; the others may only drop jobs.
 # COW MERGE dropped from 14 when its change rows became one pass over
-# the classified rows instead of a union of one leg per change image.
+# the classified rows instead of a union of one leg per change image,
+# and from 11 when its data and change files became one write.
 BASELINE_JOBS = {("delete", "cow"): 4, ("update", "cow"): 4,
-               ("merge", "cow"): 11, ("delete", "dv"): 4,
+               ("merge", "cow"): 9, ("delete", "dv"): 4,
                ("update", "dv"): 8, ("merge", "dv"): 16}
 
 
@@ -312,6 +313,26 @@ def test_row_level_job_counts(spark, tmp_path, op, mode):
         assert jobs == BASELINE_JOBS[op, mode]
     else:
         assert jobs <= BASELINE_JOBS[op, mode]
+
+
+# Spark jobs of the CDC applier's MERGE shape (copy-on-write, CDF on,
+# no duplicate-key check) on _row_level_table: 9 while the change
+# files were a second write over a persisted join.
+CDC_MERGE_JOBS = 7
+
+
+def test_cdc_merge_shape_job_count(spark, tmp_path):
+    t = _row_level_table(spark, tmp_path, False)
+    src = spark.createDataFrame(
+        [(2, "N2", "n2@x", False), (3, "n3", "n3@x", True),
+         (40, "n40", "n40@x", False)],
+        "id long, name string, email string, __delete boolean")
+    jobs = _job_ids(spark, f"cdc-merge-{tmp_path.name}", lambda: (
+        t.merge(src, on="id").without_source_validation()
+        .when_matched_delete(condition=F.col("s.__delete"))
+        .when_matched_update_all().when_not_matched_insert_all()
+        .execute()))
+    assert len(jobs) == CDC_MERGE_JOBS
 
 
 # Spark jobs for one committing incremental_minhash_dedup call below,
@@ -342,7 +363,7 @@ def test_incremental_dedup_commit_job_count(spark, tmp_path):
 # UPDATE and MERGE shared one executor. Job counts miss a second scan
 # of the same files inside one job or a job that replaced another.
 BASELINE_ROWS_READ = {
-    (True, "delete", "cow"): 30, (True, "update", "cow"): 40,
+    (True, "delete", "cow"): 20, (True, "update", "cow"): 20,
     (True, "merge", "cow"): 15, (True, "delete", "dv"): 20,
     (True, "update", "dv"): 15, (True, "merge", "dv"): 17,
     (False, "delete", "cow"): 20, (False, "update", "cow"): 20,
