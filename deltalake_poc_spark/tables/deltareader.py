@@ -42,15 +42,18 @@ Scope and scale notes:
   default for DELETE/UPDATE/MERGE): the ``deletionVector`` field of
   add actions decodes through ``tables/roaring.py`` (Z85 + portable
   RoaringBitmapArray + CRC-checked sidecar layout, all from the public
-  protocol spec). Every read leg — snapshot, time travel and each
-  change-feed leg — applies vectors the same way: ``_dv_pairs`` builds
-  (file, row index) pair frames, and the leg keeps the rows of a
-  ``keep`` frame (semi-join) and drops those of a ``drop`` frame
-  (anti-join) over ``_metadata.row_index``. The total cardinality
-  picks the regime for every frame: up to ``dv_driver_positions_max``
-  positions decode driver-side into a broadcast frame, so the data
-  scan stays one distributed pass; above it only the descriptors ship
-  and the executors decode them.
+  protocol spec). Every read — snapshot, time travel and a commit's
+  derived changes — applies one liveness rule: a row is live in a
+  state when its file is live there and its row index is not in that
+  state's vector. The files are scanned once, left-joined over
+  ``_metadata.row_index`` to ONE ``_dv_pairs`` frame that marks each
+  listed (file, row index) dead before, dead after, or both; a row
+  live only after is an ``insert``, one live only before a
+  ``delete``, and a snapshot read is the rows live after. The total
+  cardinality picks the regime: up to ``dv_driver_positions_max``
+  positions decode driver-side into one broadcast frame, so the data
+  scan stays one distributed pass; above it only the tagged
+  descriptors ship and the executors decode them.
 """
 
 from __future__ import annotations
@@ -73,7 +76,16 @@ LOG_DIR = "_delta_log"
 _SUPPORTED_READER_FEATURES = {"columnMapping", "timestampNtz",
                               "vacuumProtocolCheck", "deletionVectors"}
 
-_PAIRS_SCHEMA = "__dvf string, __dvp long"
+_PAIRS_SCHEMA = "__dvf string, __dvp long, __dvb boolean, __dva boolean"
+
+
+def _dead_positions(root: str, before: dict | None,
+                    after: dict | None) -> list[tuple[int, bool, bool]]:
+    """(row index, dead before, dead after) of each position in either
+    deletion vector (descriptor or None) of one file."""
+    b, a = (set(roaring.read_descriptor(root, d)) if d else set()
+            for d in (before, after))
+    return [(i, i in b, i in a) for i in b | a]
 
 
 @dataclass
@@ -377,8 +389,8 @@ class DeltaLakeReader:
         """Snapshot read (optionally time-traveled): distributed parquet
         scan of the active file set; partition values come from the log
         and are attached as typed literal columns per partition group;
-        files carrying a deletion vector have their deleted row indexes
-        anti-joined out.
+        the rows kept are those live after the liveness rule of
+        ``_read_files``, so a deletion vector's row indexes drop out.
 
         ``where`` enables protocol data skipping on MIGRATED tables:
         the add actions' stats (minValues/maxValues, written by
@@ -402,8 +414,8 @@ class DeltaLakeReader:
                     if partition_may_match(pv, preds)
                     and file_may_match(snap.stats.get(p, {}), preds)
                 }
-        out = self._read_files(snap, files, drop=self._dv_pairs(
-            {p: d for p, d in snap.dvs.items() if p in files}))
+        out = self._read_files(snap, files, {}, {
+            p: snap.dvs.get(p) for p in files}).drop("_change_type")
         return out.filter(where) if where is not None else out
 
     def data_path(self, rel: str) -> str:
@@ -411,65 +423,71 @@ class DeltaLakeReader:
         protocol)."""
         return os.path.join(self.root, urllib.parse.unquote(rel))
 
-    def _dv_pairs(self, dvs: dict[str, dict] | None) -> DataFrame | None:
-        """(file basename ``__dvf``, row index ``__dvp``) pairs of the
-        deletion vectors ``dvs`` (log-relative path -> descriptor); None
-        without vectors. Every read leg's ``keep``/``drop`` frame comes
-        from here. Basenames are unique within a table (uuid-named part
-        files) and, unlike full ``_metadata.file_path`` URIs, carry no
-        URL-encodable characters.
+    def _dv_pairs(self, before: dict[str, dict | None],
+                  after: dict[str, dict | None]) -> DataFrame | None:
+        """The one pair frame of a read: (file basename ``__dvf``, row
+        index ``__dvp``, dead before ``__dvb``, dead after ``__dva``) for
+        each position in the deletion vectors of ``before`` and ``after``
+        (log-relative path -> descriptor or None, per file live in the
+        state before and after); None without vectors. Basenames are
+        unique within a table (uuid-named part files) and, unlike full
+        ``_metadata.file_path`` URIs, carry no URL-encodable characters.
 
-        Up to ``dv_driver_positions_max`` total positions the vectors
-        decode driver-side into a frame with a broadcast hint: Catalyst
-        has no size estimate for local relations and planned
+        Up to ``dv_driver_positions_max`` total positions the two vector
+        sets merge driver-side into one frame with a broadcast hint:
+        Catalyst has no size estimate for local relations and planned
         SortMergeJoins, shuffling and sorting the DATA by (file, pos)
         just to drop a handful of rows (delta_dv_read: 10 SMJs ->
-        broadcast hash joins). Above it only the descriptors (O(files),
-        ~hundreds of bytes each) ship; each task reads its sidecar bytes
-        or inline payload and explodes it to positions, so the O(deleted
+        broadcast hash joins). Above it only one row per file ships,
+        its before and after descriptors (O(files), ~hundreds of bytes
+        each, as one JSON pair); each task reads their sidecar bytes or
+        inline payloads and merges them to positions, so the O(deleted
         rows) pairs never exist driver-side, and the planner picks the
         join from measured sizes."""
+        dvs = {p: (before.get(p), after.get(p))
+               for p in before.keys() | after.keys()
+               if before.get(p) or after.get(p)}
         if not dvs:
             return None
         names = {p: os.path.basename(urllib.parse.unquote(p)) for p in dvs}
-        total = sum(int(d.get("cardinality", 0)) for d in dvs.values())
+        total = sum(int(d.get("cardinality", 0))
+                    for ba in dvs.values() for d in ba if d)
         if total <= self.dv_driver_positions_max:
             return F.broadcast(self.spark.createDataFrame(
-                [(names[p], i) for p, d in dvs.items()
-                 for i in roaring.read_descriptor(self.root, d)],
-                _PAIRS_SCHEMA))
+                [(names[p], *t) for p, ba in dvs.items()
+                 for t in _dead_positions(self.root, *ba)], _PAIRS_SCHEMA))
         root = self.root
         par = max(1, min(len(dvs), self.spark.sparkContext.defaultParallelism))
         desc = self.spark.createDataFrame(
-            [(names[p], json.dumps(d)) for p, d in dvs.items()],
+            [(names[p], json.dumps(ba)) for p, ba in dvs.items()],
             "__dvf string, __desc string").repartition(par)
 
         def _decode(batches):
             import pandas as pd
 
-            from deltalake_poc_spark.tables import roaring as _r
             for pdf in batches:
                 for f, dj in zip(pdf["__dvf"], pdf["__desc"]):
-                    pos = _r.read_descriptor(root, json.loads(dj))
                     yield pd.DataFrame(
-                        {"__dvf": pd.Series([f] * len(pos), dtype="object"),
-                         "__dvp": pd.Series(pos, dtype="int64")})
+                        [(f, *t) for t in _dead_positions(root,
+                                                          *json.loads(dj))],
+                        columns=["__dvf", "__dvp", "__dvb", "__dva"])
 
         return desc.mapInPandas(_decode, _PAIRS_SCHEMA)
 
-    @staticmethod
-    def _basename_col(col):
-        return F.element_at(F.split(col, "/"), -1)
-
     def _read_files(self, snap: DeltaSnapshot,
                     files: dict[str, dict[str, str]],
-                    keep: DataFrame | None = None,
-                    drop: DataFrame | None = None,
+                    before: dict[str, dict | None] | None = None,
+                    after: dict[str, dict | None] | None = None,
                     change_files: bool = False) -> DataFrame:
         """``files`` (log-relative path -> partition values) as
-        ``snap``'s logical schema. ``keep`` and ``drop`` are
-        ``_dv_pairs`` frames: a row survives only if its (file, row
-        index) is in ``keep`` (when given) and not in ``drop``.
+        ``snap``'s logical schema. With ``before`` and ``after``
+        (log-relative path -> deletion vector descriptor or None, per
+        file live in the state before and after a change) the read
+        applies the liveness rule: a row is live in a state when its
+        file is live there and its row index is not in that state's
+        vector. It keeps the rows live in exactly one state, typed by
+        ``_change_type``: ``insert`` if live only after, ``delete`` if
+        live only before.
         ``change_files``: the files are a commit's ``cdc`` files, whose
         ``_change_type`` column is read along. Their partition values
         come from the cdc action like an add's; an action of a
@@ -478,10 +496,12 @@ class DeltaLakeReader:
         types = {f_.name: f_.dataType for f_ in snap.schema.fields}
         if not files:
             return self.spark.createDataFrame([], snap.schema)
-        with_pos = keep is not None or drop is not None
-        # group by partition values: each group is one distributed scan
-        # with its literal partition columns; groups then union (at
-        # scale the group count is the partition count, not file count)
+        live = after is not None
+        pairs = self._dv_pairs(before, after) if live else None
+        # group by partition values (and file liveness before and after):
+        # each group is one distributed scan with its literal columns;
+        # groups then union (at scale the group count is the partition
+        # count, not file count)
         groups: dict[tuple, list[str]] = {}
         for path, pvals in files.items():
             missing = [c for c in snap.partition_columns if c not in pvals]
@@ -489,6 +509,8 @@ class DeltaLakeReader:
                 raise ValueError(f"cdc action {path} has no partition "
                                  f"value for {missing}")
             key = tuple(pvals.get(c) for c in snap.partition_columns)
+            if live:
+                key += (path in before, path in after)
             groups.setdefault(key, []).append(self.data_path(path))
         # explicit PHYSICAL read schema (non-partition fields): no
         # schema-inference footer job per partition group — the log
@@ -515,21 +537,26 @@ class DeltaLakeReader:
                     cols.append(F.lit(None).cast(types[logical]).alias(logical))
             if change_files:
                 cols.append(F.col("_change_type"))
-            if with_pos:
-                cols.append(self._basename_col(
-                    F.col("_metadata.file_path")).alias("__dvfile"))
-                cols.append(F.col("_metadata.row_index").alias("__dvpos"))
+            if live:
+                cols += [F.lit(key[-2]).alias("__before"),
+                         F.lit(key[-1]).alias("__after")]
+            if pairs is not None:
+                cols += [F.element_at(F.split(F.col("_metadata.file_path"),
+                                              "/"), -1).alias("__dvfile"),
+                         F.col("_metadata.row_index").alias("__dvpos")]
             parts.append(df.select(*cols))
         out = functools.reduce(DataFrame.unionByName, parts)
-        if not with_pos:
+        if not live:
             return out
-        on = ((F.col("__dvfile") == F.col("__dvf"))
-              & (F.col("__dvpos") == F.col("__dvp")))
-        if keep is not None:
-            out = out.join(keep, on, "left_semi")
-        if drop is not None:
-            out = out.join(drop, on, "left_anti")
-        return out.drop("__dvfile", "__dvpos")
+        was, now = F.col("__before"), F.col("__after")
+        if pairs is not None:
+            out = out.join(pairs, (F.col("__dvfile") == F.col("__dvf"))
+                           & (F.col("__dvpos") == F.col("__dvp")), "left")
+            was &= ~F.coalesce(F.col("__dvb"), F.lit(False))
+            now &= ~F.coalesce(F.col("__dva"), F.lit(False))
+        return out.filter(was != now).select(
+            *(logical for logical, _ in fields),
+            F.when(now, "insert").otherwise("delete").alias("_change_type"))
 
     # ------------------------------------------------------------------ CDF
 
@@ -571,48 +598,21 @@ class DeltaLakeReader:
 
     def _derived_changes(self, state: _Replay,
                          c: DeltaCommit) -> DataFrame | None:
-        """Change rows of a commit without ``cdc`` actions, from its
-        dataChange adds and removes against ``state``, the table just
-        before it (which this applies ``c`` to). Each leg is one
-        ``_read_files`` with ``keep``/``drop`` pair frames:
-
-        - an add of a NEW file: its rows as inserts, ``drop`` = the
-          vector it is born with;
-        - an add that RE-adds a live path is a DV update (the data file
-          itself is immutable): rows at new-vector positions the old one
-          lacks are deletes (``keep`` = new, ``drop`` = old), rows at
-          old-vector positions the new one lacks are restores
-          (``keep`` = old, ``drop`` = new);
-        - a remove of a path NOT re-added in the same commit: the file's
-          surviving rows as deletes, ``drop`` = its old vector."""
-        adds = {a.path: a for a in c.adds if a.data_change}
-        rems = {r.path: r for r in c.removes if r.data_change}
-        before = {p: state.live.get(p) for p in adds.keys() | rems.keys()}
+        """Change rows of a commit without ``cdc`` actions: its
+        dataChange files, read once under the liveness rule of
+        ``_read_files`` between ``state``, the table just before the
+        commit, and the same state after ``c`` applies to it. So a new
+        file's live rows are inserts, a removed file's live rows are
+        deletes, and a deletion-vector update (the data file itself is
+        immutable) deletes the rows its vector gained and inserts the
+        rows it lost."""
+        paths = {a.path for a in c.adds + c.removes if a.data_change}
+        before = {p: state.live[p] for p in paths if p in state.live}
         state.apply(c)
-        snap = state.snapshot()
-        born = {p: a for p, a in adds.items() if before[p] is None}
-        gone = {p: before[p] or r for p, r in rems.items() if p not in adds}
-        updated = [p for p in adds if before[p] is not None]
-        new = {p: adds[p].dv for p in updated if adds[p].dv}
-        old = {p: before[p].dv for p in updated if before[p].dv}
-        pvals = {p: a.partition_values
-                 for p, a in list(gone.items()) + list(adds.items())}
-        # one frame per vector set: the two DV-update legs share theirs,
-        # so each set is decoded and broadcast once (a pair matches only
-        # rows of its own file)
-        new_pairs, old_pairs = self._dv_pairs(new), self._dv_pairs(old)
-        legs = [  # (files, keep, drop, change type)
-            (born, None,
-             self._dv_pairs({p: a.dv for p, a in born.items() if a.dv}),
-             "insert"),
-            (new, new_pairs, old_pairs, "delete"),
-            (old, old_pairs, new_pairs, "insert"),
-            (gone, None,
-             self._dv_pairs({p: a.dv for p, a in gone.items() if a.dv}),
-             "delete"),
-        ]
-        subs = [self._read_files(snap, {p: pvals[p] for p in files},
-                                 keep=keep, drop=drop)
-                .withColumn("_change_type", F.lit(change_type))
-                for files, keep, drop, change_type in legs if files]
-        return functools.reduce(DataFrame.unionByName, subs) if subs else None
+        after = {p: state.live[p] for p in paths if p in state.live}
+        files = {p: a.partition_values for p, a in {**before, **after}.items()}
+        if not files:
+            return None
+        return self._read_files(state.snapshot(), files,
+                                {p: a.dv for p, a in before.items()},
+                                {p: a.dv for p, a in after.items()})

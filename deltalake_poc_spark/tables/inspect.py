@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deltalake_poc_spark.tables.log import TableLog
 from deltalake_poc_spark.tables.table import VersionedTable
 
 
@@ -20,22 +21,17 @@ def version_diff(table: VersionedTable, v_new: int, v_old: int,
 
 def version_row_counts(table: VersionedTable) -> DataFrame:
     """Row count per version (notebook cells 12/14's version-over-version
-    comparison). Computed from log metadata — no data scan."""
-    spark = table.spark
-    rows = []
-    total = 0
+    comparison). Computed from log metadata — no data scan: one pass
+    over the commits keeps the active files, so a removed file's count
+    comes from the entry that added it."""
+    rows, total, active = [], 0, {}
     for c in table.log.commits():
-        added = sum(e.num_records for e in c.add)
-        removed = 0
-        if c.remove:
-            # resolve removed counts from the file entries of prior state
-            snap_prev = table.snapshot(version=c.version - 1) if c.version else None
-            if snap_prev:
-                by_path = {e.path: e.num_records for e in snap_prev.files}
-                removed = sum(by_path.get(p, 0) for p in c.remove)
-        total = total + added - removed
+        total += sum(e.num_records for e in c.add) - sum(
+            active[p].num_records for p in c.remove if p in active)
+        TableLog.apply(c, active, {})
         rows.append((c.version, c.operation, total))
-    return spark.createDataFrame(rows, "version long, operation string, num_rows long")
+    return table.spark.createDataFrame(
+        rows, "version long, operation string, num_rows long")
 
 
 def change_timeline(table: VersionedTable, key: str, key_value) -> DataFrame:

@@ -35,15 +35,14 @@ def _scalar(v: Any) -> Any:
     return None
 
 
-def collect_file_stats(abs_path: str, stats_cols: list[str] | None = None) -> tuple[int, dict]:
-    """Return (num_records, {col: [min, max]}) for one parquet file."""
+def collect_file_stats(abs_path: str) -> tuple[int, dict]:
+    """Return (num_records, {col: [min, max]}) of the first
+    ``MAX_STATS_COLS`` columns of one parquet file."""
     md = pq.ParquetFile(abs_path).metadata
     num_records = md.num_rows
     schema = md.schema
     names = [schema.column(i).name for i in range(len(schema))]
-    if stats_cols is None:
-        stats_cols = names[:MAX_STATS_COLS]
-    wanted = {n: i for i, n in enumerate(names) if n in stats_cols}
+    wanted = {n: i for i, n in enumerate(names[:MAX_STATS_COLS])}
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
     failed: set[str] = set()

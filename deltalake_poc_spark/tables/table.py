@@ -400,16 +400,13 @@ class VersionedTable:
     # --------------------------------------------------------------- writes
 
     def _materialize(self, df: DataFrame, snap: Snapshot | None,
-                     stats_cols: list[str] | None = None,
                      partition_by: list[str] | None = None,
                      mapping: dict[str, str] | None = None) -> list[FileEntry]:
         """The data files of :meth:`_write_files` over a frame of table
         rows (no change rows)."""
-        return self._write_files(df, snap, stats_cols, partition_by,
-                                 mapping)[0]
+        return self._write_files(df, snap, partition_by, mapping)[0]
 
     def _write_files(self, df: DataFrame, snap: Snapshot | None,
-                     stats_cols: list[str] | None = None,
                      partition_by: list[str] | None = None,
                      mapping: dict[str, str] | None = None
                      ) -> tuple[list[FileEntry], str | None]:
@@ -440,8 +437,6 @@ class VersionedTable:
         if any(k != v for k, v in mapping.items()):
             df = df.select(*[F.col(c).alias(mapping.get(c, c))
                              for c in df.columns])
-        if stats_cols:
-            stats_cols = [mapping.get(c, c) for c in stats_cols]
         props = snap.properties if snap else {}
         bloom_cols = [c.strip()
                       for c in str(props.get(BLOOM_COLS_PROP, "")).split(",")
@@ -485,7 +480,7 @@ class VersionedTable:
                 staged_abs = os.path.join(dirpath, name)
                 os.makedirs(os.path.dirname(self.log.abs_path(rel)), exist_ok=True)
                 shutil.move(staged_abs, self.log.abs_path(rel))
-                n, stats = collect_file_stats(self.log.abs_path(rel), stats_cols)
+                n, stats = collect_file_stats(self.log.abs_path(rel))
                 if n == 0:
                     os.unlink(self.log.abs_path(rel))
                     continue
@@ -575,7 +570,6 @@ class VersionedTable:
             raise
 
     def write(self, df: DataFrame, mode: str = "append",
-              stats_cols: list[str] | None = None,
               extra_params: dict | None = None) -> Commit:
         """Append/overwrite (S3, S11; reference: write_deltalake mode=
         append/overwrite delta_handler.py:107-112, df.write.format('delta')).
@@ -598,8 +592,8 @@ class VersionedTable:
         df = apply_generated(df, committed)
         if snap is not None:
             df = enforce(df, snap.properties, self.schema(snap))
-        entries = self._materialize(df, snap, stats_cols,
-                                    partition_by=pb or None, mapping=mapping)
+        entries = self._materialize(df, snap, partition_by=pb or None,
+                                    mapping=mapping)
         op = "APPEND" if (mode == "append" and exists) else (
             "OVERWRITE" if exists else "WRITE")
         commit = Commit(

@@ -77,7 +77,9 @@ def test_cdc_statistics_and_sync_summary(spark):
     assert all(r["record_count"] == 1 for r in summ)
 
 
-def test_inspect_helpers(spark, tmp_path):
+def test_inspect_helpers(spark, tmp_path, monkeypatch):
+    from deltalake_poc_spark.tables.log import TableLog
+
     schema = spark.createDataFrame([], "id long, v string").schema
     t = VersionedTable.create(spark, str(tmp_path / "t"), schema,
                               properties={"enableChangeDataFeed": "true"})
@@ -89,9 +91,22 @@ def test_inspect_helpers(spark, tmp_path):
 
     diff = [r["id"] for r in version_diff(t, v_new=2, v_old=1, key="id").collect()]
     assert diff == [3]
-    counts = {r["version"]: r["num_rows"]
-              for r in version_row_counts(t).collect()}
+    # one pass over the log: no snapshot replay per removing commit
+    replays = []
+    real = TableLog.snapshot
+
+    def counting(self, *a, **kw):
+        replays.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(TableLog, "snapshot", counting)
+    rows = [tuple(r) for r in version_row_counts(t).collect()]
+    monkeypatch.undo()
+    counts = {v: n for v, _op, n in rows}
     assert counts[1] == 2 and counts[2] == 3 and counts[4] == 2
+    assert rows == [(0, "CREATE TABLE", 0), (1, "APPEND", 2),
+                    (2, "APPEND", 3), (3, "MERGE", 3), (4, "DELETE", 2)]
+    assert replays == []
     tl = change_timeline(t, "id", 1).collect()
     assert [r["_change_type"] for r in tl] == [
         "insert", "update_postimage", "update_preimage"]

@@ -23,7 +23,7 @@ from deltalake_poc_spark.tables import VersionedTable
 def _mk(spark, tmp_path, rows=((1, "a@x", 10.0), (2, "b@x", 20.0))):
     schema = spark.createDataFrame([], "id long, email string, score double").schema
     t = VersionedTable.create(spark, str(tmp_path / "t"), schema)
-    t.write(spark.createDataFrame(list(rows), schema), stats_cols=["id"])
+    t.write(spark.createDataFrame(list(rows), schema))
     return t, schema
 
 
@@ -54,8 +54,7 @@ def test_write_and_merge_after_rename(spark, tmp_path):
 
     new_schema = spark.createDataFrame(
         [], "id long, contact_email string, score double").schema
-    t.write(spark.createDataFrame([(3, "c@x", 30.0)], new_schema),
-            stats_cols=["id"])
+    t.write(spark.createDataFrame([(3, "c@x", 30.0)], new_schema))
     rows = {r["id"]: r["contact_email"] for r in t.read().collect()}
     assert rows == {1: "a@x", 2: "b@x", 3: "c@x"}
 
@@ -84,8 +83,7 @@ def test_drop_column_and_no_resurrection(spark, tmp_path):
     # dropped column's physical data back
     add_schema = spark.createDataFrame(
         [], "id long, score double, email string").schema
-    t.write(spark.createDataFrame([(3, 30.0, "fresh@x")], add_schema),
-            stats_cols=["id"])
+    t.write(spark.createDataFrame([(3, 30.0, "fresh@x")], add_schema))
     rows = {r["id"]: r["email"] for r in t.read().collect()}
     assert rows == {1: None, 2: None, 3: "fresh@x"}
 

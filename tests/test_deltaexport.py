@@ -32,8 +32,7 @@ def _mk(spark, root, cdf=True, partition_by=None):
     t = VersionedTable.create(spark, root, schema, properties=props,
                               partition_by=partition_by)
     t.write(spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], schema),
-        stats_cols=["id"])
+        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], schema))
     return t, schema
 
 
@@ -120,7 +119,7 @@ def test_column_mapping_translated(spark, tmp_path):
     t.write(spark.createDataFrame(
         [(4, "d", 40.0)],
         spark.createDataFrame([], "id long, label string, amount double")
-        .schema), stats_cols=["id"])
+        .schema))
 
     dest = str(tmp_path / "out")
     export_standard_delta(t, dest)
@@ -143,8 +142,7 @@ def test_optimize_exported_without_datachange(spark, tmp_path):
     """OPTIMIZE rewrites files without changing content: exported adds
     carry dataChange=false so standard CDF readers skip them."""
     t, schema = _mk(spark, str(tmp_path / "src"))
-    t.write(spark.createDataFrame([(4, "d", 40.0)], schema),
-            stats_cols=["id"])
+    t.write(spark.createDataFrame([(4, "d", 40.0)], schema))
     t.optimize(target_file_rows=1000)
 
     dest = str(tmp_path / "out")
@@ -373,11 +371,9 @@ def _mk_dv(spark, root, cdf=False):
         props["enableChangeDataFeed"] = "true"
     t = VersionedTable.create(spark, root, schema, properties=props)
     t.write(spark.createDataFrame(
-        [(i, chr(97 + i), 10.0 * i) for i in range(6)], schema),
-        stats_cols=["id"])
+        [(i, chr(97 + i), 10.0 * i) for i in range(6)], schema))
     t.write(spark.createDataFrame(
-        [(i, chr(97 + i), 10.0 * i) for i in range(6, 12)], schema),
-        stats_cols=["id"])
+        [(i, chr(97 + i), 10.0 * i) for i in range(6, 12)], schema))
     t.delete("id IN (1, 7)")     # v3: DVs on both files
     t.delete("id = 2")           # v4: consolidated DV grows on file 0
     return t, schema

@@ -395,6 +395,54 @@ def test_deletion_vector_legs_plan_broadcast_joins(spark, tmp_path):
             assert "SortMergeJoin" not in plan, plan[:800]
 
 
+# (Spark jobs, parquet rows read) of read_change_feed(start) on the
+# delta_dv_read fixture: each commit's data-change files are scanned
+# once against one pair frame. The change feed of one leg per kind of
+# change (born file, grown vector, restored vector, removed file), each
+# leg with its own pair frames, measured 4 jobs / 100 rows from v2 and
+# 5 jobs / 140 rows from v1, and 9 jobs for the delta_dv_read builder.
+DV_FEED_COUNTERS = {2: (2, 60), 1: (3, 100)}
+DV_BUILDER_JOBS = 7
+
+
+def _jobs_and_rows_read(spark, group, run) -> tuple[int, int]:
+    """Spark jobs and parquet rows read (stage ``inputRecords``) of
+    ``run()`` under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    ids = list(sc.statusTracker().getJobIdsForGroup(group))
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # stage metrics arrive async
+    read = 0
+    for j in ids:
+        for s in sc.statusTracker().getJobInfo(j).stageIds:
+            attempts = jsc.statusStore().stageData(s, False, None, False, None)
+            read += sum(attempts.apply(i).inputRecords()
+                        for i in range(attempts.size()))
+    return len(ids), read
+
+
+def test_deletion_vector_fixture_counters(spark):
+    import __spark_entry__ as entrymod
+
+    root = entrymod._dv_fixture_root()
+    for start, pinned in DV_FEED_COUNTERS.items():
+        got = _jobs_and_rows_read(
+            spark, f"dv-feed-{start}",
+            lambda: DeltaLakeReader(spark, root).read_change_feed(
+                start).collect())
+        assert got == pinned, (start, got)
+    jobs, _ = _jobs_and_rows_read(
+        spark, "dv-builder",
+        lambda: entrymod._delta_dv_read(spark, "").collect())
+    assert jobs == DV_BUILDER_JOBS
+
+
 def test_one_parse_per_commit(spark, tmp_path, monkeypatch):
     """A reader parses each _delta_log commit once: the change feed
     drives one replay forward instead of replaying the log per version,

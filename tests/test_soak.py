@@ -108,7 +108,7 @@ def test_soak_merge_dv_constraint_writers(spark, tmp_path):
         properties={"enableDeletionVectors": "true",
                     "enableChangeDataFeed": "true"})
     t.write(spark.createDataFrame([(i, i) for i in range(100)], schema),
-            "append", stats_cols=["id"])
+            "append")
     t.add_constraint("val_nonneg", "val >= 0")
 
     rounds = 8

@@ -538,7 +538,7 @@ def test_merge_file_pruning(spark, table):
         F.col("id"), F.concat(F.lit("n"), F.col("id")).alias("name"),
         F.lit("e@x").alias("email"))
     # write as 10 range-partitioned files -> tight id min/max per file
-    table.write(df.repartitionByRange(10, "id"), stats_cols=["id"])
+    table.write(df.repartitionByRange(10, "id"))
     files_before = {e.path for e in table.snapshot().files}
     assert len(files_before) == 10
     src = make_df(spark, [(5, "FIVE", "five@x")])

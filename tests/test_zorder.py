@@ -29,7 +29,7 @@ def test_zorder_tightens_stats_on_both_columns(spark, tmp_path):
     )
     schema = df.schema
     t = VersionedTable.create(spark, str(tmp_path / "z"), schema)
-    t.write(df.repartition(16), stats_cols=["x", "y"])
+    t.write(df.repartition(16))
 
     # random layout: every file spans nearly the full range of both cols
     before = t.snapshot().files
